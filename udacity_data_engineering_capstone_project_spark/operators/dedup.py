@@ -1140,6 +1140,57 @@ def write_minhash_index(
     (ADVICE r7).
     """
     assert n_hashes % bands == 0
+    # mode="append" folds the batch's totals into the existing stamp
+    # (the append_minhash_index rule): stamping the batch alone would
+    # undercount the whole-index bound the probe's byte gate trusts
+    prev = _read_minhash_params(path) if mode == "append" else None
+    n_docs, tot = _write_minhash_tables(
+        docs, path, mode, id_col, text_col, n, n_hashes, bands,
+        n_band_parts, n_doc_parts,
+    )
+    _write_minhash_params(
+        path,
+        {
+            **_minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
+            **_summed_stats(prev, n_docs, tot),
+        },
+    )
+
+
+def _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts) -> dict:
+    """The stamped build dials every probe and append must agree with."""
+    return {
+        "n": int(n),
+        "n_hashes": int(n_hashes),
+        "bands": int(bands),
+        "n_band_parts": int(n_band_parts),
+        "n_doc_parts": int(n_doc_parts),
+    }
+
+
+def _summed_stats(prev: dict | None, n_docs: int, tot: int) -> dict:
+    """The stamped whole-index digest totals after adding a batch's to
+    the ``prev`` stamp (None: the batch is the whole index). A pre-r13
+    stamp without totals stays without — the probe then measures its
+    verify sliver itself instead of trusting an undercount."""
+    if prev is None:
+        return {"sets_n_docs": n_docs, "sets_tot_digests": tot}
+    if "sets_n_docs" not in prev or "sets_tot_digests" not in prev:
+        return {}
+    return {
+        "sets_n_docs": int(prev["sets_n_docs"]) + n_docs,
+        "sets_tot_digests": int(prev["sets_tot_digests"]) + tot,
+    }
+
+
+def _write_minhash_tables(
+    docs, dest, mode, id_col, text_col, n, n_hashes, bands, n_band_parts,
+    n_doc_parts,
+) -> tuple[int, int]:
+    """Shingle ``docs`` and write the ``postings/`` and ``sets/`` tables
+    of the :func:`write_minhash_index` layout under ``dest``; the build
+    and the append's staging share this one definition. Returns the
+    batch's (docs, digests) totals for the stamped index stats."""
     band_keys = _minhash_band_keys_udf(n_hashes, bands)
     sets = shingle_sets(docs, id_col, text_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -1160,7 +1211,7 @@ def write_minhash_index(
         .sortWithinPartitions("band_key")
         .write.partitionBy("bp")
         .mode(mode)
-        .parquet(path + "/postings")
+        .parquet(dest + "/postings")
     )
     (
         sets.withColumn(
@@ -1170,32 +1221,21 @@ def write_minhash_index(
         .sortWithinPartitions("doc")
         .write.partitionBy("dp")
         .mode(mode)
-        .parquet(path + "/sets")
+        .parquet(dest + "/sets")
     )
-    # r13: stamp whole-index digest-set totals beside the dials. They
+    # r13: whole-index digest-set totals, stamped beside the dials. They
     # give the probe a FREE sufficient byte bound for its verify-sliver
     # collect (any sliver's bytes <= the whole index's): when
     # 8*tot + 32*n_docs fits the broadcast budget, the probe skips the
     # per-call sliver-size job entirely (measured ~0.7 s per serve at
-    # sf0.1). One narrow agg over the still-persisted sets — build-time
-    # cost, amortized. Extra stamp keys are ignored by the dials check.
+    # sf0.1). One narrow agg over the still-persisted sets — write-time
+    # cost, amortized; it also tells an append whether it was empty.
     st = sets.select(
         F.count("*").alias("n"),
         F.coalesce(F.sum(F.size("hs")), F.lit(0)).alias("tot"),
     ).first()
     sets.unpersist()
-    _write_minhash_params(
-        path,
-        {
-            "n": int(n),
-            "n_hashes": int(n_hashes),
-            "bands": int(bands),
-            "n_band_parts": int(n_band_parts),
-            "n_doc_parts": int(n_doc_parts),
-            "sets_n_docs": int(st["n"]),
-            "sets_tot_digests": int(st["tot"]),
-        },
-    )
+    return int(st["n"]), int(st["tot"])
 
 
 #: filename of the persisted index dials; underscore prefix keeps it
@@ -1298,13 +1338,7 @@ def stamp_minhash_params(
         )
     _write_minhash_params(
         path,
-        {
-            "n": int(n),
-            "n_hashes": int(n_hashes),
-            "bands": int(bands),
-            "n_band_parts": int(n_band_parts),
-            "n_doc_parts": int(n_doc_parts),
-        },
+        _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
     )
 
 
@@ -1336,35 +1370,20 @@ def _heal_pending_appends(path: str) -> None:
     for manifest in sorted(
         glob.glob(os.path.join(path, "_pending_append_*.json"))
     ):
-        # Mirror _commit_manifest_swap's tolerance (ADVICE r11): under
-        # the one-writer/many-probes contract, the WRITER that committed
-        # this manifest (or another probe's heal) may be executing the
-        # same plan concurrently — every step below can find its target
-        # already done. os.replace/os.remove raising FileNotFoundError
-        # therefore means "already executed", not failure; a manifest
-        # that vanishes between glob and open was fully replayed by
-        # whoever removed it (removal is each executor's LAST step).
+        # Replay through the writer's own executor, _commit_manifest_swap
+        # (ADVICE r11): under the one-writer/many-probes contract, the
+        # WRITER that committed this manifest (or another probe's heal)
+        # may be executing the same plan concurrently, and every step
+        # tolerates finding its target already done. A manifest that
+        # vanishes between glob and open was fully replayed by whoever
+        # removed it (removal is the plan's LAST step).
         try:
             with open(manifest) as fh:
                 m = json.load(fh)
         except FileNotFoundError:
             continue  # fully replayed + removed by a concurrent executor
-        for src, dst in m["moves"]:
-            try:
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
-            except FileNotFoundError:
-                pass  # src already moved by a concurrent executor
-        for old in m.get("delete", []):
-            try:
-                os.remove(old)
-            except FileNotFoundError:
-                pass
+        _commit_manifest_swap(manifest, m["moves"], m.get("delete", []))
         shutil.rmtree(m["tmp_dir"], ignore_errors=True)
-        try:
-            os.remove(manifest)
-        except FileNotFoundError:
-            pass
     # orphans from a crash BEFORE the manifest commit: the live index
     # never referenced them, so both are garbage — but an in-flight
     # append's staging (fresh .inprogress marker) is LIVE, not orphaned
@@ -1432,6 +1451,130 @@ def _commit_manifest_swap(manifest_path: str, moves, delete=()) -> None:
         pass
 
 
+def _open_staging(root: str) -> tuple[str, str]:
+    """Create a Spark-invisible ``_append_<tag>`` staging dir under the
+    index root, its ``.inprogress`` marker written BEFORE any staging
+    write so a concurrent probe's heal loop skips it instead of
+    sweeping a live write (ADVICE r8). Returns (tag, staging dir)."""
+    import os
+    import uuid
+
+    tag = uuid.uuid4().hex[:12]
+    tmp = os.path.join(root, f"_append_{tag}")
+    os.makedirs(tmp, exist_ok=True)
+    with open(os.path.join(tmp, ".inprogress"), "w") as fh:
+        fh.write(tag)
+    return tag, tmp
+
+
+def _commit_staging(root: str, tag: str, tmp: str, moves, delete=()) -> None:
+    """Record every move and deletion of a staged swap in ONE fsync'd,
+    atomically renamed ``_pending_append_<tag>.json`` manifest (which
+    :func:`_heal_pending_appends` replays after a crash), execute it,
+    then drop the staging dir."""
+    import json
+    import os
+    import shutil
+
+    manifest_path = os.path.join(root, f"_pending_append_{tag}.json")
+    with open(manifest_path + ".tmp", "w") as fh:
+        json.dump({"moves": moves, "tmp_dir": tmp, "delete": list(delete)}, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(manifest_path + ".tmp", manifest_path)
+    _commit_manifest_swap(manifest_path, moves, delete=delete)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _crossing_dirs(moves, threshold: int) -> list[str]:
+    """The dirs an append's moves landed in that now hold >=
+    ``threshold`` files: O(batch dirs) to count, never O(index)."""
+    import glob
+    import os
+
+    touched = {os.path.dirname(dst) for _, dst in moves}
+    return [
+        d
+        for d in sorted(touched)
+        if len(glob.glob(os.path.join(d, "*.parquet"))) >= int(threshold)
+    ]
+
+
+def _compact_partition_dirs(
+    spark, root, table, part_col, part_type, key, small_file_threshold, only_dirs
+) -> dict:
+    """Rewrite every ``part_col=`` dir of the partitioned index table
+    ``table`` (under the index dir ``root``) holding more than
+    ``small_file_threshold`` files — only those in ``only_dirs`` when
+    given — into ONE file sorted on ``key``: one partitioned write and
+    one manifest for the whole pass, not a job per dir. The files are listed on the driver
+    and read at once with ``basePath`` and an explicit schema (their
+    footer's columns plus ``part_col`` as its stored ``part_type``):
+    re-inferring the type from dir names would turn ``tri_p2=01`` into
+    ``tri_p2=1``. ``repartition(part_col)`` puts each dir in one task,
+    so the write leaves one sorted file per dir (under AQE the
+    shuffle's map stage is a job of its own). All moves and deletions
+    commit under one manifest, so after a crash every dir of the pass
+    is fully old or fully new; unselected dirs are never touched, and a
+    pass with nothing to do runs no job.
+
+    Returns {"dirs_compacted", "files_before", "files_after"}."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    only = None if only_dirs is None else {os.path.normpath(d) for d in only_dirs}
+    picked = {}
+    files_before = files_after = 0
+    for part_dir in sorted(glob.glob(os.path.join(table, f"{part_col}=*"))):
+        if not os.path.isdir(part_dir):
+            continue
+        if only is not None and os.path.normpath(part_dir) not in only:
+            continue
+        files = sorted(glob.glob(os.path.join(part_dir, "*.parquet")))
+        files_before += len(files)
+        if len(files) <= small_file_threshold:
+            files_after += len(files)
+        else:
+            picked[os.path.basename(part_dir)] = files
+    stats = {"dirs_compacted": len(picked), "files_before": files_before}
+    if not picked:
+        return {**stats, "files_after": files_after}
+
+    old = [f for fs in picked.values() for f in fs]
+    schema = from_arrow_schema(pq.read_schema(old[0])).add(part_col, part_type)
+    tag, tmp = _open_staging(root)
+    (
+        spark.read.schema(schema)
+        .option("basePath", table)
+        .parquet(*old)
+        .repartition(part_col)
+        .sortWithinPartitions(part_col, key)
+        .write.partitionBy(part_col)
+        .mode("overwrite")
+        .parquet(os.path.join(tmp, "staged"))
+    )
+    moves = []
+    for src in sorted(glob.glob(os.path.join(tmp, "staged", "*", "part-*.parquet"))):
+        part_dir = os.path.basename(os.path.dirname(src))
+        if part_dir not in picked:
+            raise RuntimeError(
+                f"compaction of {table} staged {part_dir!r}, not a selected "
+                "dir (partition values did not round-trip); nothing committed"
+            )
+        name = f"compact-{tag}-{os.path.basename(src)}"
+        moves.append((src, os.path.join(table, part_dir, name)))
+    if not os.path.exists(os.path.join(tmp, ".inprogress")):
+        raise RuntimeError(
+            f"compaction of {table}: staging dir {tmp} was swept mid-write; "
+            "nothing committed, retry (one writer per index)"
+        )
+    _commit_staging(root, tag, tmp, moves, delete=old)
+    return {**stats, "files_after": files_after + len(moves)}
+
+
 def append_minhash_index(
     docs: DataFrame,
     path: str,
@@ -1477,67 +1620,22 @@ def append_minhash_index(
     Returns {"postings_files", "sets_files", "auto_compacted"}.
     """
     import glob
-    import json
     import os
     import shutil
-    import uuid
 
     assert n_hashes % bands == 0
     _check_minhash_params(
         path,
-        {
-            "n": int(n),
-            "n_hashes": int(n_hashes),
-            "bands": int(bands),
-            "n_band_parts": int(n_band_parts),
-            "n_doc_parts": int(n_doc_parts),
-        },
+        _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
         "append_minhash_index",
     )
     _heal_pending_appends(path)
 
-    band_keys = _minhash_band_keys_udf(n_hashes, bands)
-    sets = shingle_sets(docs, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
+    tag, tmp = _open_staging(path)
+    batch_docs, batch_tot = _write_minhash_tables(
+        docs, tmp, "overwrite", id_col, text_col, n, n_hashes, bands,
+        n_band_parts, n_doc_parts,
     )
-    tag = uuid.uuid4().hex[:12]
-    tmp = os.path.join(path, f"_append_{tag}")
-    # .inprogress marker BEFORE any staging write: a concurrent probe's
-    # heal loop skips fresh-marked staging instead of sweeping the live
-    # batch out from under this append (ADVICE r8 silent-miss race)
-    os.makedirs(tmp, exist_ok=True)
-    with open(os.path.join(tmp, ".inprogress"), "w") as fh:
-        fh.write(tag)
-    postings = sets.select(
-        "doc", F.explode(band_keys("hs")).alias("band_key")
-    ).withColumn(
-        "bp", F.pmod(F.col("band_key"), F.lit(n_band_parts)).cast("int")
-    )
-    (
-        postings.repartition(n_band_parts, "bp")
-        .sortWithinPartitions("band_key")
-        .write.partitionBy("bp")
-        .mode("overwrite")
-        .parquet(tmp + "/postings")
-    )
-    (
-        sets.withColumn(
-            "dp", F.pmod(F.xxhash64("doc"), F.lit(n_doc_parts)).cast("int")
-        )
-        .repartition(n_doc_parts, "dp")
-        .sortWithinPartitions("doc")
-        .write.partitionBy("dp")
-        .mode("overwrite")
-        .parquet(tmp + "/sets")
-    )
-    # one narrow agg replaces the old isEmpty(): emptiness AND the
-    # batch's digest totals for the stamped index stats (below)
-    bst = sets.select(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.size("hs")), F.lit(0)).alias("tot"),
-    ).first()
-    sets_empty = int(bst["n"]) == 0
-    sets.unpersist()
 
     # Plan the whole swap with destination names fixed NOW (replay
     # after a crash lands the same files in the same places); appended
@@ -1566,7 +1664,7 @@ def append_minhash_index(
         # a non-empty batch whose texts all shingle to nothing (every
         # text shorter than n) legitimately stages zero files — that is
         # a true no-op append, not a lost batch.
-        if not sets_empty:
+        if batch_docs:
             raise RuntimeError(
                 f"append_minhash_index: batch with non-empty shingle "
                 f"sets staged zero files under {tmp} — refusing the "
@@ -1582,28 +1680,14 @@ def append_minhash_index(
     # migrated with stamp_minhash_params) stay absent — the probe then
     # always measures the sliver itself.
     built = _read_minhash_params(path)
-    if built is not None and "sets_n_docs" in built and "sets_tot_digests" in built:
-        built["sets_n_docs"] = int(built["sets_n_docs"]) + int(bst["n"])
-        built["sets_tot_digests"] = int(built["sets_tot_digests"]) + int(bst["tot"])
-        _write_minhash_params(path, built)
-    manifest_path = os.path.join(path, f"_pending_append_{tag}.json")
-    with open(manifest_path + ".tmp", "w") as fh:
-        json.dump({"moves": moves, "tmp_dir": tmp}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(manifest_path + ".tmp", manifest_path)
-    _commit_manifest_swap(manifest_path, moves)
-    shutil.rmtree(tmp, ignore_errors=True)
+    summed = _summed_stats(built, batch_docs, batch_tot)
+    if built is not None and summed:
+        _write_minhash_params(path, {**built, **summed})
+    _commit_staging(path, tag, tmp, moves)
     n_post = sum(1 for s, _ in moves if f"{os.sep}postings{os.sep}" in s)
     auto_compacted = False
     if auto_compact_threshold is not None:
-        touched = {os.path.dirname(dst) for _, dst in moves}
-        crossing = [
-            d
-            for d in sorted(touched)
-            if len(glob.glob(os.path.join(d, "*.parquet")))
-            >= int(auto_compact_threshold)
-        ]
+        crossing = _crossing_dirs(moves, auto_compact_threshold)
         if crossing:
             # Scope the pass to the dirs that actually crossed the
             # threshold (ADVICE r11): cost is O(crossing dirs) per
@@ -1643,13 +1727,16 @@ def compact_minhash_index(
     ``band_key IN`` filters open every appended file; after
     compaction they skip row groups again.
 
-    Crash-safe with the same fsync'd-manifest swap as the append: the
-    compacted file is staged in a Spark-invisible ``_append_*`` dir,
-    the manifest records the staged-file move AND the small-file
-    deletions, moves replay before deletes (never a missing-rows
-    window — the heal loop is shared with append). Each partition dir
-    compacts under its own manifest, so a crash mid-pass leaves every
-    dir either fully old or fully new.
+    The pass costs one partitioned write per table, not one job per
+    dir: each of ``postings/`` and ``sets/`` goes through
+    :func:`_compact_partition_dirs`, which reads every over-threshold
+    dir of the table at once, writes them back partitioned into a
+    Spark-invisible ``_append_*`` staging dir (one Spark job, plus the
+    shuffle's map-stage job under AQE), and commits every move and
+    every small-file deletion under ONE fsync'd manifest — the
+    same swap and heal loop as the append, moves replayed before
+    deletes (never a missing-rows window). A crash mid-pass leaves
+    every dir of a table fully old or fully new.
 
     ``only_dirs`` (a collection of partition-dir paths) restricts the
     pass to exactly those dirs — the append path's auto-compaction
@@ -1671,71 +1758,17 @@ def compact_minhash_index(
 
     Returns {"dirs_compacted", "files_before", "files_after"}.
     """
-    import glob
-    import json
     import os
-    import shutil
-    import uuid
 
     _heal_pending_appends(path)
-    only = (
-        None
-        if only_dirs is None
-        else {os.path.normpath(d) for d in only_dirs}
+    postings, sets = (
+        _compact_partition_dirs(
+            spark, path, os.path.join(path, rel), col, "integer", key,
+            small_file_threshold, only_dirs,
+        )
+        for rel, col, key in (("postings", "bp", "band_key"), ("sets", "dp", "doc"))
     )
-    sort_key = {"postings": "band_key", "sets": "doc"}
-    dirs_compacted = files_before = files_after = 0
-    for rel, key in sort_key.items():
-        for part_dir in sorted(glob.glob(os.path.join(path, rel, "*"))):
-            if not os.path.isdir(part_dir):
-                continue
-            if only is not None and os.path.normpath(part_dir) not in only:
-                continue
-            files = sorted(glob.glob(os.path.join(part_dir, "*.parquet")))
-            files_before += len(files)
-            if len(files) <= small_file_threshold:
-                files_after += len(files)
-                continue
-            tag = uuid.uuid4().hex[:12]
-            tmp = os.path.join(path, f"_append_{tag}")
-            os.makedirs(tmp, exist_ok=True)
-            with open(os.path.join(tmp, ".inprogress"), "w") as fh:
-                fh.write(tag)  # same GC-grace marker as the append path
-            staged_dir = os.path.join(tmp, rel, os.path.basename(part_dir))
-            (
-                spark.read.parquet(*files)
-                .coalesce(1)
-                .sortWithinPartitions(key)
-                .write.mode("overwrite")
-                .parquet(staged_dir)
-            )
-            staged = sorted(glob.glob(os.path.join(staged_dir, "part-*.parquet")))
-            moves = [
-                (
-                    s,
-                    os.path.join(
-                        part_dir, f"compact-{tag}-{os.path.basename(s)}"
-                    ),
-                )
-                for s in staged
-            ]
-            manifest_path = os.path.join(path, f"_pending_append_{tag}.json")
-            with open(manifest_path + ".tmp", "w") as fh:
-                json.dump(
-                    {"moves": moves, "tmp_dir": tmp, "delete": files}, fh
-                )
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(manifest_path + ".tmp", manifest_path)
-            _commit_manifest_swap(manifest_path, moves, delete=files)
-            shutil.rmtree(tmp, ignore_errors=True)
-            dirs_compacted += 1
-            files_after += len(moves)
-    return {
-        "dirs_compacted": dirs_compacted,
-        "files_before": files_before,
-        "files_after": files_after,
-    }
+    return {k: postings[k] + sets[k] for k in postings}
 
 
 def minhash_probe_indexed(
@@ -1793,13 +1826,7 @@ def minhash_probe_indexed(
     assert n_hashes % bands == 0
     _check_minhash_params(
         index_path,
-        {
-            "n": int(n),
-            "n_hashes": int(n_hashes),
-            "bands": int(bands),
-            "n_band_parts": int(n_band_parts),
-            "n_doc_parts": int(n_doc_parts),
-        },
+        _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
         "minhash_probe_indexed",
     )
     _heal_pending_appends(index_path)
