@@ -14,6 +14,7 @@ import os
 import shutil
 import uuid
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -374,3 +375,37 @@ def test_one_job_compaction_matches_per_dir_shape(
             col = pq.read_schema(os.path.join(new_table, d, new_dirs[d][0])).names.index(key)
             keys = [r[col] for r in new_rows]
             assert keys == sorted(keys), d
+
+
+def _ingest_docs(spark, ids, seed):
+    """Documents at the index-ingest benchmark's shape: 10-100 words
+    over an 8-word vocabulary (about 40 trigram prefix dirs)."""
+    rng = np.random.default_rng(seed)
+    vocab = np.array(["slow", "filter", "hash", "stream", "batch", "window", "a", "the"])
+    return spark.createDataFrame(
+        [(i, " ".join(vocab[rng.integers(0, 8, rng.integers(10, 101))])) for i in ids],
+        "doc_id long, text string",
+    )
+
+
+def test_build_and_append_files_sorted_on_key(spark, tmp_path):
+    """Every file a build or an uncompacted append writes is sorted on
+    its dir's key, not only the files a compaction rewrote: the planned
+    write must not re-sort a task on the partition column alone."""
+    base, batch = _ingest_docs(spark, range(400), 0), _ingest_docs(spark, range(400, 410), 1)
+    tri, mh = str(tmp_path / "tri"), str(tmp_path / "mh")
+    write_trigram_index(base, tri)
+    append_trigram_index(batch, tri, auto_compact_threshold=None)
+    write_minhash_index(base, mh, **MH_DIALS)
+    append_minhash_index(batch, mh, auto_compact_threshold=None, **MH_DIALS)
+
+    for table, part_col, key in (
+        (tri, "tri_p2", "tri"),
+        (os.path.join(mh, "postings"), "bp", "band_key"),
+        (os.path.join(mh, "sets"), "dp", "doc"),
+    ):
+        files = glob.glob(os.path.join(table, f"{part_col}=*", "*.parquet"))
+        assert any(os.path.basename(f).startswith("app-") for f in files), table
+        for f in files:
+            keys = pq.read_table(f, columns=[key]).column(key).to_pylist()
+            assert keys == sorted(keys), f

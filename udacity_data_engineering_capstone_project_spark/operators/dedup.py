@@ -514,11 +514,20 @@ def _pair_intersect_kernel(bc, a_col: str, b_col: str,
 def _observed_totals(obs) -> dict | None:
     """Read an Observation's (n, tot) metrics, or None when the
     CollectMetrics node never produced a row — an EMPTY input relation
-    is constant-folded away before execution and the metrics fetch
-    then raises inside the JVM (seen on the empty-batch probe path).
-    Callers fall back to a measured bound, which is always correct."""
+    is constant-folded away before execution (seen on the empty-batch
+    probe path). ``Observation.get`` would then block forever in
+    PySpark 4.1, so this reads the JVM Observation's
+    ``getRowOrEmpty()``, which waits at most 100 ms; metrics of an
+    executed action are already set when the action returns. Callers
+    fall back to a measured bound, which is always correct."""
+    from pyspark.serializers import CPickleSerializer
+
     try:
-        return obs.get
+        row = obs._jo.getRowOrEmpty()
+        if row.isEmpty():
+            return None
+        utils = getattr(obs._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
+        return CPickleSerializer().loads(utils.toPyRow(row.get())).asDict()
     except Exception:
         return None
 
@@ -1205,10 +1214,13 @@ def _write_minhash_tables(
     # file into every bp directory (tasks x dirs tiny files — measured
     # 5x serve-side listing/open overhead at 10x), vs ~one file per
     # directory here. At 100 TB the repartition count becomes
-    # max(n_band_parts, data_bytes / target_file_bytes).
+    # max(n_band_parts, data_bytes / target_file_bytes). Sorting on
+    # (partition column, key) satisfies the planned write's required
+    # ordering; a key-only sort gets re-sorted on the partition column
+    # alone, which loses the key order inside the files.
     (
         postings.repartition(n_band_parts, "bp")
-        .sortWithinPartitions("band_key")
+        .sortWithinPartitions("bp", "band_key")
         .write.partitionBy("bp")
         .mode(mode)
         .parquet(dest + "/postings")
@@ -1218,7 +1230,7 @@ def _write_minhash_tables(
             "dp", F.pmod(F.xxhash64("doc"), F.lit(n_doc_parts)).cast("int")
         )
         .repartition(n_doc_parts, "dp")
-        .sortWithinPartitions("doc")
+        .sortWithinPartitions("dp", "doc")
         .write.partitionBy("dp")
         .mode(mode)
         .parquet(dest + "/sets")

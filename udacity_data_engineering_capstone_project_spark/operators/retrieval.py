@@ -453,10 +453,12 @@ def write_trigram_index(
     (``_index_params.json``) so probes and appends validate the
     trigram alphabet before trusting the layout.
     """
+    # (tri_p2, tri) satisfies the planned write's ordering on tri_p2, so
+    # the write keeps the tri order instead of re-sorting on tri_p2 alone
     (
         _trigram_postings(docs, id_col, text_col)
         .repartition("tri_p2")
-        .sortWithinPartitions("tri")
+        .sortWithinPartitions("tri_p2", "tri")
         .write.partitionBy("tri_p2")
         .mode(mode)
         .parquet(path)
@@ -647,7 +649,7 @@ def append_trigram_index(
     (
         _trigram_postings(docs, id_col, text_col)
         .repartition("tri_p2")
-        .sortWithinPartitions("tri")
+        .sortWithinPartitions("tri_p2", "tri")
         .write.partitionBy("tri_p2")
         .mode("overwrite")
         .parquet(os.path.join(tmp, "staged"))

@@ -41,6 +41,14 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # Spark keeps persisted plans out of AQE partition coalescing by
+        # default, so a persist() over a 10-row batch holds all
+        # shuffle.partitions partitions and every Arrow kernel over it
+        # runs that many (mostly empty) Python tasks. Let AQE size them
+        # like any other plan: the band-key kernel over the persisted
+        # shingle sets of a 10-doc batch ran 65 tasks at 32 shuffle
+        # partitions without this, 3 with it (local[4]).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Shuffle-partition count must SCALE WITH DATA, not stay pinned
         # at the core count: the r8 1000x run OOM'd the SMJ sort in
         # star_join_agg (600M-row join / 32 partitions = 19M rows per
@@ -52,9 +60,11 @@ def get_spark(
         # for the record: setting adaptive coalescePartitions.
         # initialPartitionNum=2048 instead (the "AQE will coalesce it
         # back" shape) cost minhash_pairs 2.35 -> 40.2 s at sf0.1 —
-        # the post-shuffle stages feeding Arrow/Python kernels did NOT
-        # coalesce, and 2048-task waves of ~5 ms Python worker
-        # round-trips dominated. AQE coalescing starts from
+        # its Arrow/Python kernels read persisted plans, which Spark
+        # kept out of AQE coalescing, so 2048-task waves of ~5 ms
+        # Python worker round-trips dominated. The
+        # canChangeCachedPlanOutputPartitioning setting above lifts
+        # that exclusion. AQE coalescing starts from
         # shuffle.partitions here, so the env dial keeps fixture plans
         # identical while scale runs raise the ceiling explicitly.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -100,12 +110,16 @@ def prep_session(spark: SparkSession) -> SparkSession:
 
     Only touches conf that is safe to flip at runtime: session timezone
     (UTC, so collected timestamps agree with DuckDB's UTC-naive ones),
-    AQE, and Arrow collection.
+    AQE (including coalescing of persisted plans), and Arrow collection.
     """
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # let AQE coalesce persisted plans too (see get_spark)
+        spark.conf.set(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
         # an externally-built session usually still carries the 200
         # default — wrong in both directions (local smoke and huge
