@@ -1,4 +1,5 @@
-"""Cleaning operators (SURVEY.md §2.2 P1-P15).
+"""Cleaning operators (SURVEY.md §2.2 P1-P14; P15, a derived column, is
+plain ``DataFrame.withColumns``).
 
 Thin, composable wrappers over the DataFrame API — each one maps to a
 Catalyst-native primitive (no UDFs), so filters and projections still
@@ -9,7 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,11 +53,6 @@ def rename_columns(df: DataFrame, renames: Mapping[str, str]) -> DataFrame:
     ``withColumnsRenamed`` projection. Prefer aliasing inside ``agg()``
     where possible — then there is nothing to rename."""
     return df.withColumnsRenamed(dict(renames))
-
-
-def with_columns(df: DataFrame, exprs: Mapping[str, Column]) -> DataFrame:
-    """P15: add derived columns in one projection."""
-    return df.withColumns(dict(exprs))
 
 
 def stratified_sample(

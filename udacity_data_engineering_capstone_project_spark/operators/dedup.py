@@ -42,6 +42,7 @@ from ..functions.hashing import (
     spark_hex_to_long,
 )
 from ..functions.textnorm import tokens_col
+from ..session import observed_metrics as _observed_totals
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -509,27 +510,6 @@ def _pair_intersect_kernel(bc, a_col: str, b_col: str,
             )
 
     return gen
-
-
-def _observed_totals(obs) -> dict | None:
-    """Read an Observation's (n, tot) metrics, or None when the
-    CollectMetrics node never produced a row — an EMPTY input relation
-    is constant-folded away before execution (seen on the empty-batch
-    probe path). ``Observation.get`` would then block forever in
-    PySpark 4.1, so this reads the JVM Observation's
-    ``getRowOrEmpty()``, which waits at most 100 ms; metrics of an
-    executed action are already set when the action returns. Callers
-    fall back to a measured bound, which is always correct."""
-    from pyspark.serializers import CPickleSerializer
-
-    try:
-        row = obs._jo.getRowOrEmpty()
-        if row.isEmpty():
-            return None
-        utils = getattr(obs._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
-        return CPickleSerializer().loads(utils.toPyRow(row.get())).asDict()
-    except Exception:
-        return None
 
 
 def _sliver_est_bytes(sliver: DataFrame) -> int:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.dates import date_attrs, date_to_sas, sas_to_date
+from ..functions.dates import date_attrs, sas_to_date
 from ..sources.readers import from_records, parse_sas_labels
 
 #: Hard-coded visa categories (reference etl.py:232).
@@ -51,6 +51,25 @@ DEMOGRAPHICS_RENAMES = {
     "Race": "race",
     "Count": "count",
 }
+
+#: Input schemas (SURVEY.md §1.3), so no read runs a plan-time job. The
+#: I94 parquet carries every numeric as double (13 columns; 15 strings).
+I94_SCHEMA = (
+    "cicid double, i94yr double, i94mon double, i94cit double, i94res double, "
+    "i94port string, arrdate double, depdate double, i94mode double, "
+    "i94addr string, i94bir double, i94visa double, count double, "
+    "dtadfile string, visapost string, occup string, entdepa string, "
+    "entdepd string, entdepu string, matflag string, biryear double, "
+    "dtaddto string, gender string, insnum string, airline string, "
+    "admnum double, fltno string, visatype string"
+)
+#: The CSVs stay all-string, as the reference read them (etl.py:145,370);
+#: the builders cast what they use.
+DEMOGRAPHICS_CSV_SCHEMA = ", ".join(f"`{h}` string" for h in DEMOGRAPHICS_RENAMES)
+TEMPERATURES_CSV_SCHEMA = (
+    "dt string, AverageTemperature string, AverageTemperatureUncertainty string, "
+    "City string, Country string, Latitude string, Longitude string"
+)
 
 #: Pivot columns for the race counts (etl.py:182-190; FIXTURES.md §3).
 RACE_VALUES = [
@@ -297,17 +316,3 @@ def build_star_query(
         ],
     )
 
-
-def checked_sas_date_roundtrip(fact: DataFrame) -> DataFrame:
-    """Regression helper: the reference's stay (string-UDF datediff,
-    etl.py:112) equals plain SAS-day subtraction; expose both for
-    property tests."""
-    return fact.select(
-        "cicid",
-        "stay",
-        (
-            F.datediff(sas_to_date(F.col("depdate")), sas_to_date(F.col("arrdate")))
-        ).alias("stay_via_dates"),
-        date_to_sas(sas_to_date(F.col("arrdate"))).alias("arr_roundtrip"),
-        F.col("arrdate").alias("arr_orig"),
-    )

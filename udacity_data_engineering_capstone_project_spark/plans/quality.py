@@ -4,8 +4,10 @@ The reference embeds three procedural check loops that print verdicts
 (etl.py:456-558): non-empty tables, unique keys, and
 cleansing-persisted (predicate absence). Here each check is a LAZY
 one-row DataFrame ``(check_name, metric, passed)`` — checks compose
-into a suite with ``unionByName`` and run as a single Spark job, and
-the suite itself is a queryable table (no print-scraping).
+into a suite with ``unionByName``, and the suite itself is a queryable
+table (no print-scraping). A suite of per-DataFrame checks still runs
+each check's own lineage and shuffle when collected: one or more jobs
+per check. ``unique_keys_check`` runs many key checks over one shuffle.
 
 ``metric`` is the violation count (0 = healthy) except for
 ``nonempty`` where it is the row count. ``passed`` is 0/1 int for
@@ -18,6 +20,11 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+#: The report's schema, for check rows computed outside Spark (e.g. from
+#: metrics observed on a write).
+REPORT_SCHEMA = "check_name string, metric long, passed int"
 
 
 def _result(name: str, metric: Column, passed: Column) -> list[Column]:
@@ -47,6 +54,43 @@ def unique_key_check(df: DataFrame, key_cols: list[str], name: str) -> DataFrame
     dups = F.coalesce(F.sum(F.col("__n") - 1), F.lit(0))
     grouped = df.groupBy(*key_cols).agg(F.count("*").alias("__n"))
     return grouped.agg(*_result(name, dups, dups == 0))
+
+
+def unique_keys_check(tables: list[tuple[DataFrame, list[str], str]]) -> DataFrame:
+    """Check 2 over many ``(df, key_cols, name)`` tables, with the keys
+    shuffled once: one row per check, with ``unique_key_check``'s metric
+    and null semantics. Every table's key becomes one JSON string and
+    the union is grouped by ``(check_name, key)``; ``to_json`` omits
+    null fields, so keys equal up to their nulls group together, as
+    GROUP BY groups nulls. A zero-duplicate row per name keeps checks
+    over empty tables in the report."""
+    keyed = reduce(
+        DataFrame.unionByName,
+        [
+            df.select(
+                F.lit(name).alias("check_name"),
+                F.to_json(F.struct(*keys)).alias("key"),
+            )
+            for df, keys, name in tables
+        ],
+    )
+    zeros = tables[0][0].sparkSession.createDataFrame(
+        [(name, 0) for _, _, name in tables], "check_name string, dups long"
+    )
+    dups = F.col("dups")
+    return (
+        keyed.groupBy("check_name", "key")
+        .agg((F.count("*") - 1).alias("dups"))
+        .drop("key")
+        .unionByName(zeros)
+        .groupBy("check_name")
+        .agg(F.sum("dups").alias("dups"))
+        .select(
+            "check_name",
+            dups.cast("long").alias("metric"),
+            (dups == 0).cast("int").alias("passed"),
+        )
+    )
 
 
 def predicate_absent_check(df: DataFrame, bad: Column, name: str) -> DataFrame:

@@ -137,3 +137,24 @@ def prep_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # a read-only conf should never break a query
     return spark
+
+
+def observed_metrics(obs) -> dict | None:
+    """Read an ``Observation``'s metrics as a dict, or None when its
+    CollectMetrics node never produced a row: the observed subtree was
+    folded away before execution (an empty input relation), or no
+    action ran it. ``Observation.get`` would then block forever in
+    PySpark 4.1, so this reads the JVM Observation's ``getRowOrEmpty()``,
+    which waits at most 100 ms; metrics of an executed action are
+    already set when the action returns. Callers fall back to a
+    measurement on None, never to a guess."""
+    from pyspark.serializers import CPickleSerializer
+
+    try:
+        row = obs._jo.getRowOrEmpty()
+        if row.isEmpty():
+            return None
+        utils = getattr(obs._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
+        return CPickleSerializer().loads(utils.toPyRow(row.get())).asDict()
+    except Exception:
+        return None

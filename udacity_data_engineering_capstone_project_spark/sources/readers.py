@@ -65,8 +65,10 @@ def read_csv(
     header: bool = True,
 ) -> DataFrame:
     """S2/S3: CSV scan. Pass an explicit ``schema`` in production —
-    inference costs an extra pass and strings-everywhere (the
-    reference's approach, etl.py:145,370) costs a cast-per-column."""
+    without one, reading the header alone runs a Spark job when the
+    DataFrame is built (``inferSchema`` would add a full extra pass),
+    and strings-everywhere (the reference's approach, etl.py:145,370)
+    costs a cast-per-column."""
     reader = spark.read.option("header", str(header).lower()).option("sep", sep)
     if schema is not None:
         reader = reader.schema(schema)
