@@ -2,14 +2,13 @@
 
 Both ``compact_*_index`` functions rewrite every over-threshold partition
 dir of a table in one Spark job and commit the pass under one manifest
-(``operators.dedup._compact_partition_dirs``). These tests pin the job
+(``sources.index_store._compact_partition_dirs``). These tests pin the job
 count, the partition-value round trip, the crash behaviour of the
 one-manifest pass, the layout against the per-dir shape it replaced, and
 the stamped totals of ``write_minhash_index(mode="append")``.
 """
 
 import glob
-import importlib
 import os
 import shutil
 import uuid
@@ -20,8 +19,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from udacity_data_engineering_capstone_project_spark.operators.dedup import (
-    _compact_partition_dirs,
-    _read_minhash_params,
     append_minhash_index,
     compact_minhash_index,
     write_minhash_index,
@@ -32,10 +29,10 @@ from udacity_data_engineering_capstone_project_spark.operators.retrieval import 
     trigram_match_indexed,
     write_trigram_index,
 )
-
-#: the module itself (``operators.dedup`` the attribute is a function)
-dedup = importlib.import_module(
-    "udacity_data_engineering_capstone_project_spark.operators.dedup"
+from udacity_data_engineering_capstone_project_spark.sources import index_store
+from udacity_data_engineering_capstone_project_spark.sources.index_store import (
+    _compact_partition_dirs,
+    read_stamp as _read_minhash_params,
 )
 
 #: Texts with digits, so numeric prefix dirs such as ``tri_p2=01`` and
@@ -148,7 +145,7 @@ def test_write_minhash_index_append_mode_sums_stamped_totals(spark, tmp_path):
     # a stamp without totals (a migrated pre-totals index) stays
     # without: summing onto an unknown base would undercount
     pre = {k: v for k, v in got.items() if not k.startswith("sets_")}
-    dedup._write_minhash_params(path, pre)
+    index_store.write_stamp(path, pre)
     write_minhash_index(b, path, mode="append", **MH_DIALS)
     assert _read_minhash_params(path) == pre
 
@@ -217,7 +214,7 @@ def test_compaction_pass_job_count(spark, digit_corpus, tmp_path, monkeypatch):
     def no_commit(*args, **kwargs):
         raise AssertionError("a pass with nothing to compact committed a manifest")
 
-    monkeypatch.setattr(dedup, "_commit_staging", no_commit)
+    monkeypatch.setattr(index_store, "_commit_staging", no_commit)
     for fn in (
         lambda: compact_trigram_index(spark, tri, small_file_threshold=1),
         lambda: compact_minhash_index(spark, mh, small_file_threshold=1),
@@ -246,7 +243,7 @@ def test_trigram_compact_crash_after_moves_heals_before_serve(
             os.replace(src, dst)
         raise RuntimeError("simulated crash before the deletes")
 
-    monkeypatch.setattr(dedup, "_commit_manifest_swap", crash_after_moves)
+    monkeypatch.setattr(index_store, "_commit_manifest_swap", crash_after_moves)
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_trigram_index(spark, path, small_file_threshold=1)
     monkeypatch.undo()
@@ -282,7 +279,7 @@ def test_trigram_compact_orphan_staging_leaves_dirs_unchanged(
     def crash_before_commit(*args, **kwargs):
         raise RuntimeError("simulated crash before the manifest")
 
-    monkeypatch.setattr(dedup, "_commit_staging", crash_before_commit)
+    monkeypatch.setattr(index_store, "_commit_staging", crash_before_commit)
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_trigram_index(spark, path, small_file_threshold=1)
     monkeypatch.undo()
@@ -293,7 +290,7 @@ def test_trigram_compact_orphan_staging_leaves_dirs_unchanged(
     assert _matches(spark, path, docs, pats) == want
     assert _file_bytes(path, "tri_p2") == before
 
-    stale = 2 * dedup._APPEND_GC_GRACE_S
+    stale = 2 * index_store._APPEND_GC_GRACE_S
     for root, _dirs_, files in os.walk(orphans[0]):
         for f in files:
             p = os.path.join(root, f)

@@ -2069,7 +2069,7 @@ def test_minhash_append_gc_spares_live_staging_with_stale_marker(tmp_path):
     import os
     import time
 
-    from udacity_data_engineering_capstone_project_spark.operators.dedup import (
+    from udacity_data_engineering_capstone_project_spark.sources.index_store import (
         _APPEND_GC_GRACE_S,
         _heal_pending_appends,
     )
@@ -2589,11 +2589,13 @@ def test_minhash_append_auto_compacts_and_writer_tolerates_healer(
         spark_hex_to_long,
     )
     from udacity_data_engineering_capstone_project_spark.operators.dedup import (
-        _commit_manifest_swap,
-        _heal_pending_appends,
         append_minhash_index,
         minhash_probe_indexed,
         write_minhash_index,
+    )
+    from udacity_data_engineering_capstone_project_spark.sources.index_store import (
+        _commit_manifest_swap,
+        _heal_pending_appends,
     )
     from udacity_data_engineering_capstone_project_spark.plans.queries_parity import _t
 
@@ -2658,7 +2660,7 @@ def test_heal_tolerates_concurrent_executor_of_same_manifest(
     import json as _json
     import os
 
-    from udacity_data_engineering_capstone_project_spark.operators.dedup import (
+    from udacity_data_engineering_capstone_project_spark.sources.index_store import (
         _heal_pending_appends,
     )
 

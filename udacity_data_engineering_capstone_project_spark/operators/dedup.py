@@ -43,6 +43,7 @@ from ..functions.hashing import (
 )
 from ..functions.textnorm import tokens_col
 from ..session import observed_metrics as _observed_totals
+from ..sources.index_store import IndexStore, Table, read_stamp
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -322,25 +323,6 @@ def containment_pairs(
         "src", "dst", "inter_size", "src_size",
         F.expr("inter_size * 10000 DIV src_size").alias("cont_x1e4"),
     )
-
-
-def minhash_signatures(
-    shingles: DataFrame, n_hashes: int = 64
-) -> DataFrame:
-    """(doc, mh0..mh{n-1}) MinHash signature in ONE aggregation pass
-    over a :func:`hashed_shingle_table`: the top 28 bits of each
-    60-bit shingle digest are expanded through an affine family
-    ``(a*h + b) mod P`` as ``n_hashes`` min-aggregates — map-side
-    partial aggregation, a single shuffle on doc, no row blowup."""
-    coeffs = minhash_coefficients(n_hashes)
-    # h >> 32 == big-endian value of the digest's first 7 hex chars:
-    # the same 28-bit base hash as md5 prefix hashing, for free
-    hashed = shingles.select("doc", F.shiftright("h", 32).alias("h28"))
-    aggs = [
-        F.min((F.lit(a) * F.col("h28") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return hashed.groupBy("doc").agg(*aggs)
 
 
 def _affine_minhash_blocked(
@@ -1126,24 +1108,29 @@ def write_minhash_index(
     with different dials than the build would otherwise silently
     return wrong or empty pairs (wrong bp/dp pruning, different band
     keys): a silent-miss trap on a dedup/compliance-adjacent path
-    (ADVICE r7).
+    (ADVICE r7). ``mode="append"`` sums the batch's totals onto the
+    stamp (the store's merge rule, :mod:`..sources.index_store`).
     """
     assert n_hashes % bands == 0
-    # mode="append" folds the batch's totals into the existing stamp
-    # (the append_minhash_index rule): stamping the batch alone would
-    # undercount the whole-index bound the probe's byte gate trusts
-    prev = _read_minhash_params(path) if mode == "append" else None
-    n_docs, tot = _write_minhash_tables(
+    stats = _write_minhash_tables(
         docs, path, mode, id_col, text_col, n, n_hashes, bands,
         n_band_parts, n_doc_parts,
     )
-    _write_minhash_params(
-        path,
-        {
-            **_minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
-            **_summed_stats(prev, n_docs, tot),
-        },
+    MINHASH_STORE.stamp(
+        path, _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
+        stats, mode,
     )
+
+
+#: the MinHash index's tables: postings by band-key bucket, digest sets
+#: by doc bucket
+MINHASH_STORE = IndexStore(
+    "minhash",
+    (
+        Table("postings", "bp", "integer", "band_key"),
+        Table("sets", "dp", "integer", "doc"),
+    ),
+)
 
 
 def _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts) -> dict:
@@ -1157,63 +1144,29 @@ def _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts) -> dict:
     }
 
 
-def _summed_stats(prev: dict | None, n_docs: int, tot: int) -> dict:
-    """The stamped whole-index digest totals after adding a batch's to
-    the ``prev`` stamp (None: the batch is the whole index). A pre-r13
-    stamp without totals stays without — the probe then measures its
-    verify sliver itself instead of trusting an undercount."""
-    if prev is None:
-        return {"sets_n_docs": n_docs, "sets_tot_digests": tot}
-    if "sets_n_docs" not in prev or "sets_tot_digests" not in prev:
-        return {}
-    return {
-        "sets_n_docs": int(prev["sets_n_docs"]) + n_docs,
-        "sets_tot_digests": int(prev["sets_tot_digests"]) + tot,
-    }
-
-
 def _write_minhash_tables(
-    docs, dest, mode, id_col, text_col, n, n_hashes, bands, n_band_parts,
+    docs, root, mode, id_col, text_col, n, n_hashes, bands, n_band_parts,
     n_doc_parts,
-) -> tuple[int, int]:
+) -> dict:
     """Shingle ``docs`` and write the ``postings/`` and ``sets/`` tables
-    of the :func:`write_minhash_index` layout under ``dest``; the build
+    of the :func:`write_minhash_index` layout under ``root``; the build
     and the append's staging share this one definition. Returns the
-    batch's (docs, digests) totals for the stamped index stats."""
+    batch's stamped stats (docs and digests)."""
     band_keys = _minhash_band_keys_udf(n_hashes, bands)
     sets = shingle_sets(docs, id_col, text_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    postings = sets.select(
-        "doc", F.explode(band_keys("hs")).alias("band_key")
-    ).withColumn(
-        "bp", F.pmod(F.col("band_key"), F.lit(n_band_parts)).cast("int")
+    postings, doc_sets = MINHASH_STORE.tables
+    # At 100 TB the repartition counts become
+    # max(n_parts, data_bytes / target_file_bytes).
+    postings.write(
+        sets.select("doc", F.explode(band_keys("hs")).alias("band_key"))
+        .withColumn("bp", F.pmod(F.col("band_key"), F.lit(n_band_parts)).cast("int")),
+        root, mode, n_band_parts,
     )
-    # repartition on the partition column BEFORE the partitioned write:
-    # otherwise every one of the shuffle-partition write tasks emits a
-    # file into every bp directory (tasks x dirs tiny files — measured
-    # 5x serve-side listing/open overhead at 10x), vs ~one file per
-    # directory here. At 100 TB the repartition count becomes
-    # max(n_band_parts, data_bytes / target_file_bytes). Sorting on
-    # (partition column, key) satisfies the planned write's required
-    # ordering; a key-only sort gets re-sorted on the partition column
-    # alone, which loses the key order inside the files.
-    (
-        postings.repartition(n_band_parts, "bp")
-        .sortWithinPartitions("bp", "band_key")
-        .write.partitionBy("bp")
-        .mode(mode)
-        .parquet(dest + "/postings")
-    )
-    (
-        sets.withColumn(
-            "dp", F.pmod(F.xxhash64("doc"), F.lit(n_doc_parts)).cast("int")
-        )
-        .repartition(n_doc_parts, "dp")
-        .sortWithinPartitions("dp", "doc")
-        .write.partitionBy("dp")
-        .mode(mode)
-        .parquet(dest + "/sets")
+    doc_sets.write(
+        sets.withColumn("dp", F.pmod(F.xxhash64("doc"), F.lit(n_doc_parts)).cast("int")),
+        root, mode, n_doc_parts,
     )
     # r13: whole-index digest-set totals, stamped beside the dials. They
     # give the probe a FREE sufficient byte bound for its verify-sliver
@@ -1227,75 +1180,7 @@ def _write_minhash_tables(
         F.coalesce(F.sum(F.size("hs")), F.lit(0)).alias("tot"),
     ).first()
     sets.unpersist()
-    return int(st["n"]), int(st["tot"])
-
-
-#: filename of the persisted index dials; underscore prefix keeps it
-#: invisible to parquet directory readers.
-_MINHASH_PARAMS_FILE = "_index_params.json"
-
-
-def _read_minhash_params(path: str) -> dict | None:
-    """Load the persisted index dials/stats, or None if absent."""
-    import json
-    import os
-
-    src = os.path.join(path, _MINHASH_PARAMS_FILE)
-    if not os.path.exists(src):
-        return None
-    with open(src) as fh:
-        return json.load(fh)
-
-
-def _write_minhash_params(path: str, params: dict) -> None:
-    """Durably persist the index dials: temp write + fsync +
-    ``os.replace`` (the targeted_delete manifest discipline — a torn
-    write can never leave a parseable-but-wrong params file)."""
-    import json
-    import os
-
-    dst = os.path.join(path, _MINHASH_PARAMS_FILE)
-    with open(dst + ".tmp", "w") as fh:
-        json.dump(params, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(dst + ".tmp", dst)
-
-
-def _check_minhash_params(path: str, params: dict, caller: str) -> None:
-    """Validate caller dials against the persisted build dials; raise
-    on mismatch or a missing params file instead of silently probing
-    with wrong bp/dp pruning or different band keys (ADVICE r7)."""
-    import json
-    import os
-
-    src = os.path.join(path, _MINHASH_PARAMS_FILE)
-    if not os.path.exists(src):
-        raise FileNotFoundError(
-            f"{caller}: no {_MINHASH_PARAMS_FILE} under {path} — not a "
-            "write_minhash_index layout, or built before the dials were "
-            "persisted; if you know the build dials, migrate with "
-            "stamp_minhash_params(path, ...) instead of rebuilding"
-        )
-    with open(src) as fh:
-        built = json.load(fh)
-    mismatched = {
-        k: (built[k], params[k]) for k in params if built.get(k) != params[k]
-    }
-    if mismatched:
-        raise ValueError(
-            f"{caller}: index at {path} was built with different dials "
-            f"than this call (built, called): {mismatched} — a probe "
-            "with mismatched dials silently misses pairs; pass the "
-            "build's parameters or rebuild the index"
-        )
-
-
-#: staging dirs younger than this (by their ``.inprogress`` marker's
-#: mtime) are NOT garbage-collected by the heal loop — a live append
-#: may still be writing into them (ADVICE r8: the unconditional rmtree
-#: raced an in-flight append and silently dropped its batch).
-_APPEND_GC_GRACE_S = 3600.0
+    return {"sets_n_docs": int(st["n"]), "sets_tot_digests": int(st["tot"])}
 
 
 def stamp_minhash_params(
@@ -1314,257 +1199,9 @@ def stamp_minhash_params(
     there is a real error, not a migration. The caller owns the claim
     that these ARE the build dials; a wrong stamp reintroduces exactly
     the silent-miss the validation exists to prevent."""
-    import os
-
-    if os.path.exists(os.path.join(path, _MINHASH_PARAMS_FILE)):
-        raise FileExistsError(
-            f"stamp_minhash_params: {path} already has "
-            f"{_MINHASH_PARAMS_FILE}; this helper only migrates "
-            "pre-stamp indexes (delete the file first if you really "
-            "mean to re-stamp)"
-        )
-    if not os.path.isdir(os.path.join(path, "postings")):
-        raise FileNotFoundError(
-            f"stamp_minhash_params: {path} is not a minhash index "
-            "layout (no postings/ dir)"
-        )
-    _write_minhash_params(
-        path,
-        _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
+    MINHASH_STORE.migrate(
+        path, _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts)
     )
-
-
-def _heal_pending_appends(path: str) -> None:
-    """Replay any interrupted :func:`append_minhash_index` /
-    :func:`compact_minhash_index` swap before the index is read or
-    appended again. Same contract as targeted_delete's heal loop: the
-    manifest records the whole plan; moves replay FIRST (``os.replace``
-    is idempotent, so a partially-completed swap finishes exactly
-    where it stopped), THEN the compaction's small-file deletions —
-    never a missing-rows window, and the duplicate window (compacted
-    file moved, originals not yet deleted) closes before any read.
-
-    Maintenance concurrency contract: ONE writer (append/compact) at a
-    time per index — probes may run concurrently with a writer. The
-    stray-staging GC below respects an in-flight writer by skipping
-    ``_append_*`` dirs whose ``.inprogress`` marker is younger than
-    :data:`_APPEND_GC_GRACE_S`; markerless or stale dirs are crash
-    leftovers from BEFORE the manifest commit (the live index never
-    referenced them) and are garbage. Two writers racing the same
-    index is outside the contract (as for any single-writer table
-    format without a lock service)."""
-    import glob
-    import json
-    import os
-    import shutil
-    import time
-
-    for manifest in sorted(
-        glob.glob(os.path.join(path, "_pending_append_*.json"))
-    ):
-        # Replay through the writer's own executor, _commit_manifest_swap
-        # (ADVICE r11): under the one-writer/many-probes contract, the
-        # WRITER that committed this manifest (or another probe's heal)
-        # may be executing the same plan concurrently, and every step
-        # tolerates finding its target already done. A manifest that
-        # vanishes between glob and open was fully replayed by whoever
-        # removed it (removal is the plan's LAST step).
-        try:
-            with open(manifest) as fh:
-                m = json.load(fh)
-        except FileNotFoundError:
-            continue  # fully replayed + removed by a concurrent executor
-        _commit_manifest_swap(manifest, m["moves"], m.get("delete", []))
-        shutil.rmtree(m["tmp_dir"], ignore_errors=True)
-    # orphans from a crash BEFORE the manifest commit: the live index
-    # never referenced them, so both are garbage — but an in-flight
-    # append's staging (fresh .inprogress marker) is LIVE, not orphaned
-    for stray in glob.glob(os.path.join(path, "_pending_append_*.json.tmp")):
-        os.remove(stray)
-    now = time.time()
-    for stray in glob.glob(os.path.join(path, "_append_*")):
-        marker = os.path.join(stray, ".inprogress")
-        if not os.path.exists(marker):
-            # no marker: pre-marker crash leftover — garbage
-            shutil.rmtree(stray, ignore_errors=True)
-            continue
-        # liveness = the NEWEST mtime anywhere under the staging dir,
-        # not just the marker's: the marker is written ONCE at staging
-        # start, so a staging write that runs longer than the grace
-        # window (the 1000x trigram-scale writes already take ~10 min;
-        # one more decade reaches the hour) would become GC-eligible
-        # to a concurrent probe's heal loop MID-WRITE — the exact race
-        # the marker exists to close (VERDICT r9 wrong #3). A live
-        # Spark write keeps producing part/_temporary files, so its
-        # newest mtime tracks the write; only a dir whose every file
-        # has been silent for the full grace window is a crash orphan.
-        newest, churn = 0.0, False
-        for root, _dirs, files in os.walk(stray):
-            for f in files:
-                try:
-                    newest = max(newest, os.path.getmtime(os.path.join(root, f)))
-                except OSError:
-                    churn = True  # file vanished mid-walk: a live writer
-        if churn or now - newest < _APPEND_GC_GRACE_S:
-            continue
-        shutil.rmtree(stray, ignore_errors=True)
-
-
-def _commit_manifest_swap(manifest_path: str, moves, delete=()) -> None:
-    """Writer-side execution of a COMMITTED swap manifest, tolerant of
-    a concurrent probe having healed it first (ADVICE r10): the stated
-    contract allows probes to run concurrently with one writer, and a
-    probe's :func:`_heal_pending_appends` replays any manifest it sees
-    — including the one this writer just committed. An unconditional
-    ``os.replace`` / ``os.remove`` here would then raise
-    FileNotFoundError and make a SUCCESSFULLY committed append/compact
-    report failure. So the writer mirrors the heal loop exactly: a
-    missing src means the move already happened (skip), a missing
-    delete target is already gone, and the manifest itself may have
-    been removed by the healer. Idempotent by construction — the
-    manifest is the single source of truth, and every executor of it
-    (writer or healer) converges on the same final layout."""
-    import os
-
-    for src, dst in moves:
-        try:
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
-        except FileNotFoundError:
-            pass  # a concurrent probe's heal loop already moved it
-    for old in delete:
-        try:
-            os.remove(old)
-        except FileNotFoundError:
-            pass
-    try:
-        os.remove(manifest_path)
-    except FileNotFoundError:
-        pass
-
-
-def _open_staging(root: str) -> tuple[str, str]:
-    """Create a Spark-invisible ``_append_<tag>`` staging dir under the
-    index root, its ``.inprogress`` marker written BEFORE any staging
-    write so a concurrent probe's heal loop skips it instead of
-    sweeping a live write (ADVICE r8). Returns (tag, staging dir)."""
-    import os
-    import uuid
-
-    tag = uuid.uuid4().hex[:12]
-    tmp = os.path.join(root, f"_append_{tag}")
-    os.makedirs(tmp, exist_ok=True)
-    with open(os.path.join(tmp, ".inprogress"), "w") as fh:
-        fh.write(tag)
-    return tag, tmp
-
-
-def _commit_staging(root: str, tag: str, tmp: str, moves, delete=()) -> None:
-    """Record every move and deletion of a staged swap in ONE fsync'd,
-    atomically renamed ``_pending_append_<tag>.json`` manifest (which
-    :func:`_heal_pending_appends` replays after a crash), execute it,
-    then drop the staging dir."""
-    import json
-    import os
-    import shutil
-
-    manifest_path = os.path.join(root, f"_pending_append_{tag}.json")
-    with open(manifest_path + ".tmp", "w") as fh:
-        json.dump({"moves": moves, "tmp_dir": tmp, "delete": list(delete)}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(manifest_path + ".tmp", manifest_path)
-    _commit_manifest_swap(manifest_path, moves, delete=delete)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _crossing_dirs(moves, threshold: int) -> list[str]:
-    """The dirs an append's moves landed in that now hold >=
-    ``threshold`` files: O(batch dirs) to count, never O(index)."""
-    import glob
-    import os
-
-    touched = {os.path.dirname(dst) for _, dst in moves}
-    return [
-        d
-        for d in sorted(touched)
-        if len(glob.glob(os.path.join(d, "*.parquet"))) >= int(threshold)
-    ]
-
-
-def _compact_partition_dirs(
-    spark, root, table, part_col, part_type, key, small_file_threshold, only_dirs
-) -> dict:
-    """Rewrite every ``part_col=`` dir of the partitioned index table
-    ``table`` (under the index dir ``root``) holding more than
-    ``small_file_threshold`` files — only those in ``only_dirs`` when
-    given — into ONE file sorted on ``key``: one partitioned write and
-    one manifest for the whole pass, not a job per dir. The files are listed on the driver
-    and read at once with ``basePath`` and an explicit schema (their
-    footer's columns plus ``part_col`` as its stored ``part_type``):
-    re-inferring the type from dir names would turn ``tri_p2=01`` into
-    ``tri_p2=1``. ``repartition(part_col)`` puts each dir in one task,
-    so the write leaves one sorted file per dir (under AQE the
-    shuffle's map stage is a job of its own). All moves and deletions
-    commit under one manifest, so after a crash every dir of the pass
-    is fully old or fully new; unselected dirs are never touched, and a
-    pass with nothing to do runs no job.
-
-    Returns {"dirs_compacted", "files_before", "files_after"}."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    only = None if only_dirs is None else {os.path.normpath(d) for d in only_dirs}
-    picked = {}
-    files_before = files_after = 0
-    for part_dir in sorted(glob.glob(os.path.join(table, f"{part_col}=*"))):
-        if not os.path.isdir(part_dir):
-            continue
-        if only is not None and os.path.normpath(part_dir) not in only:
-            continue
-        files = sorted(glob.glob(os.path.join(part_dir, "*.parquet")))
-        files_before += len(files)
-        if len(files) <= small_file_threshold:
-            files_after += len(files)
-        else:
-            picked[os.path.basename(part_dir)] = files
-    stats = {"dirs_compacted": len(picked), "files_before": files_before}
-    if not picked:
-        return {**stats, "files_after": files_after}
-
-    old = [f for fs in picked.values() for f in fs]
-    schema = from_arrow_schema(pq.read_schema(old[0])).add(part_col, part_type)
-    tag, tmp = _open_staging(root)
-    (
-        spark.read.schema(schema)
-        .option("basePath", table)
-        .parquet(*old)
-        .repartition(part_col)
-        .sortWithinPartitions(part_col, key)
-        .write.partitionBy(part_col)
-        .mode("overwrite")
-        .parquet(os.path.join(tmp, "staged"))
-    )
-    moves = []
-    for src in sorted(glob.glob(os.path.join(tmp, "staged", "*", "part-*.parquet"))):
-        part_dir = os.path.basename(os.path.dirname(src))
-        if part_dir not in picked:
-            raise RuntimeError(
-                f"compaction of {table} staged {part_dir!r}, not a selected "
-                "dir (partition values did not round-trip); nothing committed"
-            )
-        name = f"compact-{tag}-{os.path.basename(src)}"
-        moves.append((src, os.path.join(table, part_dir, name)))
-    if not os.path.exists(os.path.join(tmp, ".inprogress")):
-        raise RuntimeError(
-            f"compaction of {table}: staging dir {tmp} was swept mid-write; "
-            "nothing committed, retry (one writer per index)"
-        )
-    _commit_staging(root, tag, tmp, moves, delete=old)
-    return {**stats, "files_after": files_after + len(moves)}
 
 
 def append_minhash_index(
@@ -1588,113 +1225,40 @@ def append_minhash_index(
     shingled, banded and written once; the live corpus is never read,
     re-hashed or shuffled.
 
-    Layout-compatible by construction: the batch's postings/sets are
-    staged with the SAME partition scheme (bp/dp dirs, sorted within
-    partitions) into a Spark-invisible ``_append_*`` dir, then swapped
-    in with the targeted_delete crash-safety discipline — one fsync'd
-    + atomically-renamed ``_pending_append_*.json`` manifest recording
-    every (src, dst) move, replayed to completion by the heal loop in
-    this function and in :func:`minhash_probe_indexed` after any
-    crash. A crash BEFORE the manifest commit leaves the live index
-    untouched (staging is invisible; orphans are GC'd); a crash
-    mid-moves finishes on the next call before anything probes.
+    The batch's postings and sets are staged with the SAME partition
+    scheme (bp/dp dirs, sorted within partitions) and swapped in by the
+    index store's crash-safe staged append; the crash-safety and
+    concurrency contract is stated once in :mod:`..sources.index_store`.
+    The stamped digest totals are summed onto the stamp.
 
     Caller contract (same as the probe's): batch doc ids are disjoint
     from the index's — dedup pipelines split before ingest. Repeated
     appends accumulate one file per batch per touched partition dir;
     when any touched dir reaches ``auto_compact_threshold`` files,
-    :func:`compact_minhash_index` runs automatically after the commit
-    (pass ``None`` to manage compaction manually) — the same bounded-
-    serve-latency policy as the trigram index (VERDICT r10 missing #3:
-    without a trigger, a long-running ingest loop degrades
-    monotonically until someone compacts by hand).
+    :func:`compact_minhash_index` runs on those dirs after the commit
+    (pass ``None`` to manage compaction manually), so a long-running
+    ingest loop's serve latency stays bounded (VERDICT r10 missing #3).
 
     Returns {"postings_files", "sets_files", "auto_compacted"}.
     """
-    import glob
-    import os
-    import shutil
-
     assert n_hashes % bands == 0
-    _check_minhash_params(
+    (n_post, n_sets), auto_compacted = MINHASH_STORE.append(
         path,
         _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
-        "append_minhash_index",
+        lambda root: _write_minhash_tables(
+            docs, root, "overwrite", id_col, text_col, n, n_hashes, bands,
+            n_band_parts, n_doc_parts,
+        ),
+        # a batch whose texts all shingle to nothing is a true no-op
+        lambda stats: stats["sets_n_docs"] > 0,
+        lambda dirs: compact_minhash_index(
+            docs.sparkSession, path, small_file_threshold=1, only_dirs=dirs
+        ),
+        auto_compact_threshold,
     )
-    _heal_pending_appends(path)
-
-    tag, tmp = _open_staging(path)
-    batch_docs, batch_tot = _write_minhash_tables(
-        docs, tmp, "overwrite", id_col, text_col, n, n_hashes, bands,
-        n_band_parts, n_doc_parts,
-    )
-
-    # Plan the whole swap with destination names fixed NOW (replay
-    # after a crash lands the same files in the same places); appended
-    # part names carry the batch tag so repeated batches never collide.
-    moves = []
-    for rel in ("postings", "sets"):
-        for src in sorted(
-            glob.glob(os.path.join(tmp, rel, "*", "part-*.parquet"))
-        ):
-            part_dir = os.path.basename(os.path.dirname(src))  # bp=X / dp=Y
-            name = os.path.basename(src)
-            moves.append(
-                (src, os.path.join(path, rel, part_dir, f"app-{tag}-{name}"))
-            )
-    if not os.path.exists(os.path.join(tmp, ".inprogress")):
-        raise RuntimeError(
-            f"append_minhash_index: staging dir {tmp} was swept while "
-            "this append was writing (a concurrent writer's heal loop "
-            "past the GC grace, or manual cleanup) — the batch was NOT "
-            "appended; retry. Maintenance contract is one writer per "
-            "index at a time."
-        )
-    if not moves:
-        # Gate the success-shaped-empty check on whether any SETS were
-        # derivable, not on the raw batch being non-empty (ADVICE r10):
-        # a non-empty batch whose texts all shingle to nothing (every
-        # text shorter than n) legitimately stages zero files — that is
-        # a true no-op append, not a lost batch.
-        if batch_docs:
-            raise RuntimeError(
-                f"append_minhash_index: batch with non-empty shingle "
-                f"sets staged zero files under {tmp} — refusing the "
-                "success-shaped empty commit"
-            )
-        shutil.rmtree(tmp, ignore_errors=True)
-        return {"postings_files": 0, "sets_files": 0, "auto_compacted": False}
-    # Update the stamped whole-index digest totals BEFORE the commit:
-    # the stats are a sufficient UPPER bound for the probe's sliver
-    # collect, so on a crash between this write and the swap they
-    # OVERCOUNT (conservative — the probe at worst runs its per-call
-    # sliver-size job), never undercount. Absent keys (pre-r13 layout
-    # migrated with stamp_minhash_params) stay absent — the probe then
-    # always measures the sliver itself.
-    built = _read_minhash_params(path)
-    summed = _summed_stats(built, batch_docs, batch_tot)
-    if built is not None and summed:
-        _write_minhash_params(path, {**built, **summed})
-    _commit_staging(path, tag, tmp, moves)
-    n_post = sum(1 for s, _ in moves if f"{os.sep}postings{os.sep}" in s)
-    auto_compacted = False
-    if auto_compact_threshold is not None:
-        crossing = _crossing_dirs(moves, auto_compact_threshold)
-        if crossing:
-            # Scope the pass to the dirs that actually crossed the
-            # threshold (ADVICE r11): cost is O(crossing dirs) per
-            # trigger, not a whole-index rewrite. Untouched dirs are
-            # never rewritten — pinned by the convergence pytest.
-            compact_minhash_index(
-                docs.sparkSession,
-                path,
-                small_file_threshold=1,
-                only_dirs=crossing,
-            )
-            auto_compacted = True
     return {
         "postings_files": n_post,
-        "sets_files": len(moves) - n_post,
+        "sets_files": n_sets,
         "auto_compacted": auto_compacted,
     }
 
@@ -1719,48 +1283,17 @@ def compact_minhash_index(
     ``band_key IN`` filters open every appended file; after
     compaction they skip row groups again.
 
-    The pass costs one partitioned write per table, not one job per
-    dir: each of ``postings/`` and ``sets/`` goes through
-    :func:`_compact_partition_dirs`, which reads every over-threshold
-    dir of the table at once, writes them back partitioned into a
-    Spark-invisible ``_append_*`` staging dir (one Spark job, plus the
-    shuffle's map-stage job under AQE), and commits every move and
-    every small-file deletion under ONE fsync'd manifest — the
-    same swap and heal loop as the append, moves replayed before
-    deletes (never a missing-rows window). A crash mid-pass leaves
-    every dir of a table fully old or fully new.
-
+    Each of ``postings/`` and ``sets/`` is one partitioned write
+    committed under one manifest (the index store's compaction; its
+    crash and concurrency contract is in :mod:`..sources.index_store`).
     ``only_dirs`` (a collection of partition-dir paths) restricts the
-    pass to exactly those dirs — the append path's auto-compaction
-    trigger passes the TOUCHED dirs that crossed its threshold, so one
-    threshold-crossing batch pays O(crossing dirs), never a whole-index
-    rewrite (ADVICE r11: at bench shapes the difference was amortized
-    noise, but a wide index whose appends touch most band dirs would
-    pay a near-full rewrite inside ``append_minhash_index``). ``None``
-    (the default, manual maintenance) sweeps every dir as before.
-
-    Concurrency note (ADVICE r11): compaction DELETES the small files
-    it replaced. A probe that planned its scan before the swap can
-    observe those deletes (Spark reads fail on vanished input files on
-    retry-exhaustion) — appends alone are purely additive, so an
-    ingest loop that enables auto-compaction accepts this window, the
-    same one any manual ``compact_*_index`` call opens. Probes re-plan
-    on next call (the heal loop runs first) and see the compacted
-    layout.
+    pass to exactly those dirs — the append's auto-compaction trigger
+    passes the touched dirs that crossed its threshold; ``None`` (the
+    default, manual maintenance) sweeps every dir.
 
     Returns {"dirs_compacted", "files_before", "files_after"}.
     """
-    import os
-
-    _heal_pending_appends(path)
-    postings, sets = (
-        _compact_partition_dirs(
-            spark, path, os.path.join(path, rel), col, "integer", key,
-            small_file_threshold, only_dirs,
-        )
-        for rel, col, key in (("postings", "bp", "band_key"), ("sets", "dp", "doc"))
-    )
-    return {k: postings[k] + sets[k] for k in postings}
+    return MINHASH_STORE.compact(spark, path, small_file_threshold, only_dirs)
 
 
 def minhash_probe_indexed(
@@ -1816,12 +1349,11 @@ def minhash_probe_indexed(
     one-shot operators here do.
     """
     assert n_hashes % bands == 0
-    _check_minhash_params(
+    MINHASH_STORE.open(
         index_path,
         _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
         "minhash_probe_indexed",
     )
-    _heal_pending_appends(index_path)
     from pyspark.sql import Observation
 
     band_keys_udf = _minhash_band_keys_udf(n_hashes, bands)
@@ -1914,7 +1446,7 @@ def minhash_probe_indexed(
     # prerequisite of that scan, so it cannot fuse further.
     est_bytes = None
     if n_cand <= broadcast_max_rows:
-        stamped = _read_minhash_params(index_path) or {}
+        stamped = read_stamp(index_path) or {}
         if (
             bat_tot is not None
             and "sets_n_docs" in stamped

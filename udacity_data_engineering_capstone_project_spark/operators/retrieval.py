@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textnorm import tokens_col
+from ..sources.index_store import IndexStore, Table
 
 #: Okapi BM25 defaults, kept as exact decimal literals that parse to
 #: identical doubles in Spark and DuckDB (oracles cast to DOUBLE —
@@ -437,7 +438,7 @@ def write_trigram_index(
     the corpus-wide dedup the query-time path was explicitly
     restructured to avoid (SCALE.md round-5 probe) — and a
     ``repartition`` ON THE PARTITION KEY before the partitioned
-    write, the write_minhash_index discipline (dedup.py): without it
+    write (:meth:`..sources.index_store.Table.write`): without it
     every task holds every prefix, so each of up-to-shuffle-partitions
     tasks writes a file into every populated ``tri_p2=`` dir —
     tasks x dirs files. The r8 1000x run measured that explosion:
@@ -453,17 +454,8 @@ def write_trigram_index(
     (``_index_params.json``) so probes and appends validate the
     trigram alphabet before trusting the layout.
     """
-    # (tri_p2, tri) satisfies the planned write's ordering on tri_p2, so
-    # the write keeps the tri order instead of re-sorting on tri_p2 alone
-    (
-        _trigram_postings(docs, id_col, text_col)
-        .repartition("tri_p2")
-        .sortWithinPartitions("tri_p2", "tri")
-        .write.partitionBy("tri_p2")
-        .mode(mode)
-        .parquet(path)
-    )
-    _write_trigram_params(path, dict(_TRIGRAM_PARAMS))
+    _TRIGRAM_TABLE.write(_trigram_postings(docs, id_col, text_col), path, mode)
+    TRIGRAM_STORE.stamp(path, _TRIGRAM_PARAMS, {}, mode)
 
 
 #: The build dials a probe must agree with: the normalization that
@@ -479,7 +471,11 @@ _TRIGRAM_PARAMS = {
     "norm": "lower_trim_single_space",
     "prefix_len": 2,
 }
-_TRIGRAM_PARAMS_FILE = "_index_params.json"
+
+#: the trigram index's one table: postings at the index root, one dir
+#: per 2-char prefix
+_TRIGRAM_TABLE = Table("", "tri_p2", "string", "tri")
+TRIGRAM_STORE = IndexStore("trigram", (_TRIGRAM_TABLE,))
 
 
 def _trigram_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -515,50 +511,6 @@ def _trigram_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _write_trigram_params(path: str, params: dict) -> None:
-    import json
-    import os
-
-    dst = os.path.join(path, _TRIGRAM_PARAMS_FILE)
-    with open(dst + ".tmp", "w") as fh:
-        json.dump(params, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(dst + ".tmp", dst)
-
-
-def _check_trigram_params(path: str, caller: str) -> None:
-    """Validate the layout's persisted build dials against this
-    module's serving/append expectations; raise on mismatch or a
-    missing stamp instead of silently probing an index whose trigram
-    alphabet differs (VERDICT r9 missing #1)."""
-    import json
-    import os
-
-    src = os.path.join(path, _TRIGRAM_PARAMS_FILE)
-    if not os.path.exists(src):
-        raise FileNotFoundError(
-            f"{caller}: no {_TRIGRAM_PARAMS_FILE} under {path} — not a "
-            "write_trigram_index layout, or built before the dials were "
-            "persisted; if you know the build dials, migrate with "
-            "stamp_trigram_params(path) instead of rebuilding"
-        )
-    with open(src) as fh:
-        built = json.load(fh)
-    mismatched = {
-        k: (built.get(k), v) for k, v in _TRIGRAM_PARAMS.items()
-        if built.get(k) != v
-    }
-    if mismatched:
-        raise ValueError(
-            f"{caller}: index at {path} was built with different dials "
-            f"than this serve/append (built, expected): {mismatched} — "
-            "a probe under a different normalization or prefix scheme "
-            "silently misses matches; rebuild or serve with the "
-            "matching module version"
-        )
-
-
 def stamp_trigram_params(path: str) -> None:
     """One-time migration for a trigram layout built before the dials
     were persisted: stamp the CURRENT module dials so probes/appends
@@ -566,22 +518,7 @@ def stamp_trigram_params(path: str) -> None:
     stamp (a mismatch there is a real error, not a migration); the
     caller owns the claim that the layout really was built under
     these dials — a wrong stamp reintroduces the silent miss."""
-    import glob
-    import os
-
-    if os.path.exists(os.path.join(path, _TRIGRAM_PARAMS_FILE)):
-        raise FileExistsError(
-            f"stamp_trigram_params: {path} already has "
-            f"{_TRIGRAM_PARAMS_FILE}; this helper only migrates "
-            "pre-stamp layouts (delete the file first if you really "
-            "mean to re-stamp)"
-        )
-    if not glob.glob(os.path.join(path, "tri_p2=*")):
-        raise FileNotFoundError(
-            f"stamp_trigram_params: {path} is not a trigram index "
-            "layout (no tri_p2= partition dirs)"
-        )
-    _write_trigram_params(path, dict(_TRIGRAM_PARAMS))
+    TRIGRAM_STORE.migrate(path, _TRIGRAM_PARAMS)
 
 
 #: Per-dir file count past which append_trigram_index triggers
@@ -612,94 +549,32 @@ def append_trigram_index(
     Cost is proportional to the BATCH: only the batch is normalized,
     exploded and written; the live index is never read or shuffled.
 
-    The write_minhash_index append discipline, ported whole: the
-    batch's postings are staged with the SAME partition scheme into a
-    Spark-invisible ``_append_*`` dir carrying an ``.inprogress``
-    marker (a concurrent probe's heal-GC judges liveness by the
-    newest mtime under the dir, so stagings longer than the grace
-    window survive), then swapped in under one fsync'd, atomically
-    renamed ``_pending_append_*.json`` manifest that the shared heal
-    loop replays to completion after any crash. Batch doc ids must be
-    disjoint from the index's (the ingest split's contract) so the
-    layout-wide (doc, tri) distinctness is preserved without reading
-    the live side. Repeated appends leave one file per batch per
-    touched prefix dir; when any touched dir reaches
-    ``auto_compact_threshold`` files, :func:`compact_trigram_index`
-    runs automatically after the commit (pass ``None`` to manage
-    compaction manually) — the ingest loop's serve latency is then
-    bounded by the threshold instead of degrading monotonically
-    (VERDICT r10 missing #3). Returns {"postings_files": n,
-    "auto_compacted": bool}.
+    The batch's postings are staged with the SAME partition scheme and
+    swapped in by the index store's crash-safe staged append (contract
+    in :mod:`..sources.index_store`). Batch doc ids must be disjoint
+    from the index's (the ingest split's contract) so the layout-wide
+    (doc, tri) distinctness is preserved without reading the live
+    side. Repeated appends leave one file per batch per touched prefix
+    dir; when any touched dir reaches ``auto_compact_threshold`` files,
+    :func:`compact_trigram_index` runs on those dirs after the commit
+    (pass ``None`` to manage compaction manually), so the ingest loop's
+    serve latency stays bounded (VERDICT r10 missing #3). Returns
+    {"postings_files": n, "auto_compacted": bool}.
     """
-    import glob
-    import os
-    import shutil
-
-    from .dedup import (
-        _commit_staging,
-        _crossing_dirs,
-        _heal_pending_appends,
-        _open_staging,
+    (n_post,), auto_compacted = TRIGRAM_STORE.append(
+        path,
+        _TRIGRAM_PARAMS,
+        lambda root: _TRIGRAM_TABLE.write(
+            _trigram_postings(docs, id_col, text_col), root, "overwrite"
+        ),
+        # a batch whose texts all normalize below 3 chars is a true no-op
+        lambda stats: not _trigram_postings(docs, id_col, text_col).isEmpty(),
+        lambda dirs: compact_trigram_index(
+            docs.sparkSession, path, small_file_threshold=1, only_dirs=dirs
+        ),
+        auto_compact_threshold,
     )
-
-    _check_trigram_params(path, "append_trigram_index")
-    _heal_pending_appends(path)
-
-    tag, tmp = _open_staging(path)
-    (
-        _trigram_postings(docs, id_col, text_col)
-        .repartition("tri_p2")
-        .sortWithinPartitions("tri_p2", "tri")
-        .write.partitionBy("tri_p2")
-        .mode("overwrite")
-        .parquet(os.path.join(tmp, "staged"))
-    )
-    moves = []
-    for src in sorted(
-        glob.glob(os.path.join(tmp, "staged", "tri_p2=*", "part-*.parquet"))
-    ):
-        part_dir = os.path.basename(os.path.dirname(src))
-        name = os.path.basename(src)
-        moves.append(
-            (src, os.path.join(path, part_dir, f"app-{tag}-{name}"))
-        )
-    if not os.path.exists(os.path.join(tmp, ".inprogress")):
-        raise RuntimeError(
-            f"append_trigram_index: staging dir {tmp} was swept while "
-            "this append was writing — the batch was NOT appended; "
-            "retry. Maintenance contract is one writer per index."
-        )
-    if not moves:
-        # Gate the success-shaped-empty check on whether any POSTINGS
-        # were derivable, not on the raw batch being non-empty (ADVICE
-        # r10): a non-empty batch whose texts all normalize below 3
-        # chars legitimately yields zero trigrams — a true no-op
-        # append, not a lost batch.
-        if not _trigram_postings(docs, id_col, text_col).isEmpty():
-            raise RuntimeError(
-                f"append_trigram_index: batch with non-empty postings "
-                f"staged zero files under {tmp} — refusing the "
-                "success-shaped empty commit"
-            )
-        shutil.rmtree(tmp, ignore_errors=True)
-        return {"postings_files": 0, "auto_compacted": False}
-    _commit_staging(path, tag, tmp, moves)
-    auto_compacted = False
-    if auto_compact_threshold is not None:
-        crossing = _crossing_dirs(moves, auto_compact_threshold)
-        if crossing:
-            # Compact ONLY the dirs that crossed (ADVICE r11): the
-            # trigger's cost is O(crossing dirs), never the whole
-            # index; untouched dirs are never rewritten (pinned by
-            # the convergence pytest's files-rewritten assertion).
-            compact_trigram_index(
-                docs.sparkSession,
-                path,
-                small_file_threshold=1,
-                only_dirs=crossing,
-            )
-            auto_compacted = True
-    return {"postings_files": len(moves), "auto_compacted": auto_compacted}
+    return {"postings_files": n_post, "auto_compacted": auto_compacted}
 
 
 def compact_trigram_index(
@@ -714,32 +589,15 @@ def compact_trigram_index(
     min/max pruning the build's sortWithinPartitions bought (appended
     files are each internally sorted but their ranges overlap, so a
     pushed ``tri IN`` opens every batch file until compaction). The
-    whole pass is one partitioned write and one fsync'd manifest
-    (:func:`~..dedup._compact_partition_dirs`, shared with the MinHash
-    store), not a job per dir: every over-threshold dir is read and
-    rewritten at once, moves replay before deletes (never a
-    missing-rows window), and a crash mid-pass leaves every dir of the
-    pass fully old or fully new.
-
+    whole pass is one partitioned write under one manifest, the index
+    store's compaction (contract in :mod:`..sources.index_store`).
     ``only_dirs`` restricts the pass to exactly those ``tri_p2=`` dirs
-    — the append trigger passes the touched dirs that crossed its
-    threshold so auto-compaction costs O(crossing dirs), never a
-    whole-index rewrite (ADVICE r11); ``None`` sweeps every dir.
-    Compaction DELETES the replaced small files: a probe that planned
-    its scan before the swap can observe the deletes — appends alone
-    are purely additive; enabling auto-compaction accepts the same
-    window any manual compact call opens (see
-    :func:`~..dedup.compact_minhash_index` for the full contract).
+    (the append trigger passes the touched dirs that crossed its
+    threshold); ``None`` sweeps every dir.
 
     Returns {"dirs_compacted", "files_before", "files_after"}."""
-    from .dedup import _compact_partition_dirs, _heal_pending_appends
-
-    _check_trigram_params(path, "compact_trigram_index")
-    _heal_pending_appends(path)
-    return _compact_partition_dirs(
-        spark, path, path, "tri_p2", "string", "tri", small_file_threshold,
-        only_dirs,
-    )
+    TRIGRAM_STORE.check(path, _TRIGRAM_PARAMS, "compact_trigram_index")
+    return TRIGRAM_STORE.compact(spark, path, small_file_threshold, only_dirs)
 
 
 def trigram_match_indexed(
@@ -779,12 +637,9 @@ def trigram_match_indexed(
     matches) and heals any interrupted append/compact swap before
     reading — the MinHash index's probe contract (VERDICT r9 #3).
     """
-    from .dedup import _heal_pending_appends
-
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-    _check_trigram_params(index_path, "trigram_match_indexed")
-    _heal_pending_appends(index_path)
+    TRIGRAM_STORE.open(index_path, _TRIGRAM_PARAMS, "trigram_match_indexed")
     pats, tri_by_pat, pid_type = _pattern_trigrams(patterns)
     tri_list = sorted({t for ts in tri_by_pat.values() for t in ts})
     p2_list = sorted({t[:2] for t in tri_list})

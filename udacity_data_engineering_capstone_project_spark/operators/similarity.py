@@ -1875,25 +1875,23 @@ def ivf_topk_from_index(
     centroid_id_col: str = "centroid_id",
     k: int = 5,
     nprobe: int = 2,
-    two_level: bool = False,
 ) -> DataFrame:
     """Serve top-k from a :func:`write_ivf_index` layout. The probed
     cell set (<= |queries| * nprobe ids — bounded driver state) is
     collected and pushed as a STATIC partition filter, so the parquet
     scan's ``PartitionFilters`` prunes every unprobed cell directory
     before a single byte is read (asserted in tests). Results are
-    identical to the in-memory :func:`ivf_topk` for the same
-    centroids (``two_level`` must match the layout's build routing —
-    a mismatch probes cells the index assigned differently). At very
-    large query batches, skip the collect and let dynamic partition
-    pruning do the same from the broadcast join.
+    identical to the in-memory flat-routed :func:`ivf_topk` for the
+    same centroids (the build assigns by flat routing). At very large
+    query batches, skip the collect and let dynamic partition pruning
+    do the same from the broadcast join.
     """
     q = _with_double_vec(queries, vec_col, "qv").select(
         F.col(id_col).alias("query_id"), "qv"
     )
     probes_raw = _nearest_cells_arrow(
         q, "query_id", "qv", centroids, centroid_id_col, vec_col,
-        nprobe=nprobe, keep_vec=True, two_level=two_level,
+        nprobe=nprobe, keep_vec=True,
     )
     probes = probes_raw.select("query_id", "qv", "centroid_id")
     cells = sorted(

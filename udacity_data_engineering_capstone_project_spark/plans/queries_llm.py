@@ -1647,36 +1647,6 @@ def embedding_near_dup_pairs(spark, sf_dir):
     )
 
 
-def _srp_oracle(threshold: float = 0.95, bands: int = 8, rows: int = 10) -> str:
-    planes = srp_planes(bands * rows, 64)
-    lits = ["[" + ", ".join(f"{v:.1f}" for v in p) + "]" for p in planes]
-    bit = lambda i: f"(CASE WHEN list_dot_product(v, {lits[i]}) > 0.0 THEN 1 ELSE 0 END)"
-    key_exprs = ", ".join(
-        f"{1 << rows} * {j} + "
-        + " + ".join(f"{1 << k} * {bit(j * rows + k)}" for k in range(rows))
-        for j in range(bands)
-    )
-    cos = sql_round_fixed("list_cosine_similarity(ca.v, cb.v)", 4)
-    return f"""
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-c AS (
-  SELECT vec_id, v FROM base
-  UNION ALL
-  SELECT vec_id + 100000, list_transform(v, x -> x + 0.01) FROM base
-),
-keys AS (SELECT vec_id, unnest([{key_exprs}]) AS band_key FROM c),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM keys a JOIN keys b ON a.band_key = b.band_key AND a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, {cos} AS cos_r
-FROM cand
-JOIN c ca ON ca.vec_id = id_a
-JOIN c cb ON cb.vec_id = id_b
-WHERE {cos} >= {threshold}
-"""
-
-
 def _srp_oracle_scaled(
     threshold: float = 0.95,
     bands: int = 16,

@@ -1,0 +1,452 @@
+"""The crash-safe store under the persisted MinHash and trigram indexes.
+
+An index is a root directory holding one or more parquet tables, each
+partitioned by one column into a FIXED fan-out of ``<col>=<value>``
+dirs and sorted on one key inside every file, plus a stamp,
+``_index_params.json``: the build dials every probe and append must
+agree with (a probe under other dials silently misses matches) and,
+for the MinHash index, whole-index totals the probe's byte gate trusts
+as an upper bound. Each index module describes its tables as
+:class:`Table` rows, derives its postings, and hands both to an
+:class:`IndexStore`, which owns everything below.
+
+Stamp
+-----
+The stamp is written durably (temp write + fsync + ``os.replace``, so
+a torn write never leaves a parseable-but-wrong file) and merged by
+one rule for every write mode: an overwrite sets the stats, an append
+sums them onto the stamp, and a stamp without stats stays without (an
+index migrated from before the stats existed: summing onto an unknown
+base would undercount). An append writes its summed stats BEFORE its
+commit, so a crash in between overcounts (conservative: the probe then
+at worst measures its sliver itself), never undercounts.
+
+Staged swap, heal order
+-----------------------
+An append or a compaction pass writes into a Spark-invisible
+``_append_<tag>`` staging dir whose ``.inprogress`` marker is written
+before any staging write. It then records every move (and, for a
+compaction, every replaced small file) in ONE fsync'd, atomically
+renamed ``_pending_append_<tag>.json`` manifest and executes it: moves
+first, then deletions, then the manifest's removal. Destination names
+are fixed in the manifest (``app-<tag>-`` / ``compact-<tag>-`` plus
+the staged part name), so every probe, append and compaction first
+replays any manifest it finds to completion (``os.replace`` is
+idempotent). Moves before deletes means a crash never opens a
+missing-rows window, and the duplicate window (compacted file moved,
+originals not yet deleted) closes before any read. A crash before the
+manifest commit leaves the live index untouched: its staging dir was
+never referenced.
+
+Concurrency: one writer, many probes
+------------------------------------
+ONE writer (append or compaction) at a time per index; probes may run
+beside it. A probe's heal may replay the manifest the writer just
+committed, so every executor of a manifest tolerates finding a step
+already done (a moved source, a deleted file, a removed manifest) and
+all of them converge on the same layout. The heal loop's garbage
+collection of staging dirs respects a live writer: a dir is an orphan
+only if it has no marker (a crash before the marker) or if every file
+under it has been silent for :data:`_APPEND_GC_GRACE_S`. Liveness is
+the NEWEST mtime under the dir, not the marker's: a staging write that
+outlives the grace window keeps producing part files, and judging by
+the marker alone would sweep it mid-write. Two writers racing one
+index are outside the contract, as for any single-writer table format
+without a lock service. Compaction DELETES the files it replaced, so a
+probe that planned its scan before the swap can see a vanished file;
+appends alone are purely additive. An ingest loop that enables
+auto-compaction accepts that window, the same one any manual
+compaction opens; probes re-plan on their next call.
+"""
+
+from __future__ import annotations
+
+import glob
+import json
+import os
+import shutil
+import time
+import uuid
+from typing import Callable, NamedTuple
+
+from pyspark.sql import DataFrame
+
+#: filename of the stamp; the underscore prefix keeps it invisible to
+#: parquet directory readers.
+PARAMS_FILE = "_index_params.json"
+
+#: staging dirs whose newest file is younger than this are NOT
+#: garbage-collected by the heal loop: a live writer may still be
+#: writing into them.
+_APPEND_GC_GRACE_S = 3600.0
+
+
+def read_stamp(path: str) -> dict | None:
+    """The index's stamped dials and stats, or None if unstamped."""
+    try:
+        with open(os.path.join(path, PARAMS_FILE)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
+def write_stamp(path: str, params: dict) -> None:
+    """Durably replace the stamp: temp write + fsync + ``os.replace``."""
+    dst = os.path.join(path, PARAMS_FILE)
+    with open(dst + ".tmp", "w") as fh:
+        json.dump(params, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(dst + ".tmp", dst)
+
+
+def _merged_stats(prev: dict | None, stats: dict) -> dict:
+    """The stamped stats after writing a batch with ``stats`` onto the
+    ``prev`` stamp (None: the batch is the whole index)."""
+    if prev is None:
+        return dict(stats)
+    if any(k not in prev for k in stats):
+        return {}
+    return {k: int(prev[k]) + v for k, v in stats.items()}
+
+
+class Table(NamedTuple):
+    """One partitioned table of an index."""
+
+    rel: str  # dir under the index root; "" is the root itself
+    part_col: str
+    part_type: str  # the partition column's stored Spark type
+    key: str  # sort key inside every file
+
+    def dir(self, root: str) -> str:
+        return os.path.join(root, self.rel) if self.rel else root
+
+    def write(self, df: DataFrame, root: str, mode: str, n_parts=None) -> None:
+        """Write ``df`` as this table under ``root``. Repartitioning on
+        the partition column BEFORE the partitioned write puts each dir
+        in one task, so a write leaves about one file per dir; without
+        it every write task emits a file into every dir (tasks x dirs
+        tiny files, measured 5x serve-side listing and open overhead).
+        Sorting on (partition column, key) satisfies the planned
+        write's required ordering; a key-only sort gets re-sorted on
+        the partition column alone, which loses the key order inside
+        the files that the probes' row-group min/max pruning relies on.
+        """
+        parts = (
+            df.repartition(self.part_col)
+            if n_parts is None
+            else df.repartition(n_parts, self.part_col)
+        )
+        (
+            parts.sortWithinPartitions(self.part_col, self.key)
+            .write.partitionBy(self.part_col)
+            .mode(mode)
+            .parquet(self.dir(root))
+        )
+
+
+class IndexStore(NamedTuple):
+    """The store of one index kind: its name (``write_<name>_index``,
+    ``stamp_<name>_params``) and its tables."""
+
+    name: str
+    tables: tuple[Table, ...]
+
+    def check(self, path: str, dials: dict, caller: str) -> None:
+        """Check ``dials`` against the stamp; raise on a mismatch or a
+        missing stamp instead of letting ``caller`` silently miss
+        matches."""
+        built = read_stamp(path)
+        if built is None:
+            raise FileNotFoundError(
+                f"{caller}: no {PARAMS_FILE} under {path} — not a "
+                f"write_{self.name}_index layout, or built before the dials "
+                "were persisted; if you know the build dials, migrate with "
+                f"stamp_{self.name}_params(path, ...) instead of rebuilding"
+            )
+        mismatched = {
+            k: (built.get(k), v) for k, v in dials.items() if built.get(k) != v
+        }
+        if mismatched:
+            raise ValueError(
+                f"{caller}: index at {path} was built with different dials "
+                f"than this call (built, called): {mismatched} — a probe "
+                "with mismatched dials silently misses matches; pass the "
+                "build's dials or rebuild the index"
+            )
+
+    def open(self, path: str, dials: dict, caller: str) -> None:
+        """Check the stamp, then heal any interrupted swap: what every
+        probe, serve and append does before it reads the index."""
+        self.check(path, dials, caller)
+        _heal_pending_appends(path)
+
+    def stamp(self, path: str, dials: dict, stats: dict, mode: str) -> None:
+        """Stamp ``dials`` and the merged ``stats`` after a build wrote
+        its tables in ``mode`` (or an append staged a batch)."""
+        prev = read_stamp(path) if mode == "append" else None
+        params = {**(prev or {}), **dials, **_merged_stats(prev, stats)}
+        if params != prev:
+            write_stamp(path, params)
+
+    def migrate(self, path: str, dials: dict) -> None:
+        """Stamp an index built before the stamp existed. Refuses to
+        overwrite a stamp: a mismatch there is a real error."""
+        caller = f"stamp_{self.name}_params"
+        if os.path.exists(os.path.join(path, PARAMS_FILE)):
+            raise FileExistsError(
+                f"{caller}: {path} already has {PARAMS_FILE}; this helper "
+                "only migrates pre-stamp indexes (delete the file first if "
+                "you really mean to re-stamp)"
+            )
+        first = self.tables[0]
+        if not glob.glob(os.path.join(first.dir(path), f"{first.part_col}=*")):
+            raise FileNotFoundError(
+                f"{caller}: {path} is not a {self.name} index layout (no "
+                f"{os.path.join(first.rel, first.part_col)}= partition dirs)"
+            )
+        write_stamp(path, dials)
+
+    def append(
+        self,
+        path: str,
+        dials: dict,
+        stage: Callable[[str], dict | None],
+        derived_any: Callable[[dict], bool],
+        compact: Callable[[list], object],
+        auto_compact_threshold: int | None,
+    ) -> tuple[list[int], bool]:
+        """Fold a batch into the index by the staged swap.
+        ``stage(root)`` writes the batch's tables under ``root`` and
+        returns its stats (None: it has none); ``derived_any(stats)``
+        says whether the batch derived any rows at all; ``compact(dirs)``
+        compacts the dirs that reached ``auto_compact_threshold`` files
+        (None: never). Returns (files appended per table, whether it
+        compacted)."""
+        caller = f"append_{self.name}_index"
+        self.open(path, dials, caller)
+        tag, tmp = _open_staging(path)
+        staged = os.path.join(tmp, "staged")
+        stats = stage(staged) or {}
+        # destination names are fixed NOW (a replay lands the same files
+        # in the same places); the batch tag keeps batches from colliding
+        moves, counts = [], []
+        for t in self.tables:
+            srcs = sorted(
+                glob.glob(os.path.join(t.dir(staged), f"{t.part_col}=*", "part-*.parquet"))
+            )
+            counts.append(len(srcs))
+            for src in srcs:
+                part_dir = os.path.basename(os.path.dirname(src))
+                name = f"app-{tag}-{os.path.basename(src)}"
+                moves.append((src, os.path.join(t.dir(path), part_dir, name)))
+        if not os.path.exists(os.path.join(tmp, ".inprogress")):
+            raise RuntimeError(
+                f"{caller}: staging dir {tmp} was swept while this append "
+                "was writing — the batch was NOT appended; retry. "
+                "Maintenance contract is one writer per index."
+            )
+        if not moves:
+            # a batch that derives no rows (every text too short) is a
+            # true no-op; one that does but staged nothing was lost
+            if derived_any(stats):
+                raise RuntimeError(
+                    f"{caller}: batch with a non-empty derivation staged "
+                    f"zero files under {tmp} — refusing the success-shaped "
+                    "empty commit"
+                )
+            shutil.rmtree(tmp, ignore_errors=True)
+            return counts, False
+        self.stamp(path, dials, stats, "append")
+        _commit_staging(path, tag, tmp, moves)
+        if auto_compact_threshold is None:
+            return counts, False
+        # only the touched dirs that crossed the threshold: the trigger
+        # costs O(crossing dirs), never a whole-index rewrite
+        crossing = _crossing_dirs(moves, auto_compact_threshold)
+        if crossing:
+            compact(crossing)
+        return counts, bool(crossing)
+
+    def compact(self, spark, path: str, small_file_threshold: int, only_dirs) -> dict:
+        """Heal, then one :func:`_compact_partition_dirs` pass per table.
+        Returns the summed {"dirs_compacted", "files_before",
+        "files_after"}."""
+        _heal_pending_appends(path)
+        passes = [
+            _compact_partition_dirs(
+                spark, path, t.dir(path), t.part_col, t.part_type, t.key,
+                small_file_threshold, only_dirs,
+            )
+            for t in self.tables
+        ]
+        return {k: sum(p[k] for p in passes) for k in passes[0]}
+
+
+def _heal_pending_appends(path: str) -> None:
+    """Replay every committed manifest under the index dir ``path`` to
+    completion, then drop staging orphans (see the module docstring for
+    the order and the grace rule)."""
+    for manifest in sorted(glob.glob(os.path.join(path, "_pending_append_*.json"))):
+        # replay through the writer's own executor: the writer or another
+        # probe may be executing the same plan right now. A manifest that
+        # vanishes between glob and open was fully replayed by whoever
+        # removed it (removal is the plan's LAST step).
+        try:
+            with open(manifest) as fh:
+                m = json.load(fh)
+        except FileNotFoundError:
+            continue
+        _commit_manifest_swap(manifest, m["moves"], m.get("delete", []))
+        shutil.rmtree(m["tmp_dir"], ignore_errors=True)
+    # orphans from a crash BEFORE the manifest commit are garbage, but an
+    # in-flight writer's staging is live, not orphaned
+    for stray in glob.glob(os.path.join(path, "_pending_append_*.json.tmp")):
+        os.remove(stray)
+    now = time.time()
+    for stray in glob.glob(os.path.join(path, "_append_*")):
+        if not os.path.exists(os.path.join(stray, ".inprogress")):
+            shutil.rmtree(stray, ignore_errors=True)  # pre-marker crash
+            continue
+        newest, churn = 0.0, False
+        for root, _dirs, files in os.walk(stray):
+            for f in files:
+                try:
+                    newest = max(newest, os.path.getmtime(os.path.join(root, f)))
+                except OSError:
+                    churn = True  # file vanished mid-walk: a live writer
+        if churn or now - newest < _APPEND_GC_GRACE_S:
+            continue
+        shutil.rmtree(stray, ignore_errors=True)
+
+
+def _commit_manifest_swap(manifest_path: str, moves, delete=()) -> None:
+    """Execute a committed manifest: moves, then deletions, then the
+    manifest's removal. Every step tolerates finding its target already
+    done by a concurrent executor (a missing source was already moved,
+    a missing delete target is already gone), so a writer never reports
+    failure for a swap a probe's heal finished first."""
+    for src, dst in moves:
+        try:
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(src, dst)
+        except FileNotFoundError:
+            pass
+    for old in delete:
+        try:
+            os.remove(old)
+        except FileNotFoundError:
+            pass
+    try:
+        os.remove(manifest_path)
+    except FileNotFoundError:
+        pass
+
+
+def _open_staging(root: str) -> tuple[str, str]:
+    """Create a Spark-invisible ``_append_<tag>`` staging dir under the
+    index root, its ``.inprogress`` marker written BEFORE any staging
+    write. Returns (tag, staging dir)."""
+    tag = uuid.uuid4().hex[:12]
+    tmp = os.path.join(root, f"_append_{tag}")
+    os.makedirs(tmp, exist_ok=True)
+    with open(os.path.join(tmp, ".inprogress"), "w") as fh:
+        fh.write(tag)
+    return tag, tmp
+
+
+def _commit_staging(root: str, tag: str, tmp: str, moves, delete=()) -> None:
+    """Record every move and deletion of a staged swap in ONE fsync'd,
+    atomically renamed ``_pending_append_<tag>.json`` manifest, execute
+    it, then drop the staging dir."""
+    manifest_path = os.path.join(root, f"_pending_append_{tag}.json")
+    with open(manifest_path + ".tmp", "w") as fh:
+        json.dump({"moves": moves, "tmp_dir": tmp, "delete": list(delete)}, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(manifest_path + ".tmp", manifest_path)
+    _commit_manifest_swap(manifest_path, moves, delete=delete)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _crossing_dirs(moves, threshold: int) -> list[str]:
+    """The dirs an append's moves landed in that now hold >=
+    ``threshold`` files: O(batch dirs) to count, never O(index)."""
+    touched = {os.path.dirname(dst) for _, dst in moves}
+    return [
+        d
+        for d in sorted(touched)
+        if len(glob.glob(os.path.join(d, "*.parquet"))) >= int(threshold)
+    ]
+
+
+def _compact_partition_dirs(
+    spark, root, table, part_col, part_type, key, small_file_threshold, only_dirs
+) -> dict:
+    """Rewrite every ``part_col=`` dir of the partitioned index table
+    ``table`` (under the index dir ``root``) holding more than
+    ``small_file_threshold`` files — only those in ``only_dirs`` when
+    given — into ONE file sorted on ``key``: one partitioned write and
+    one manifest for the whole pass, not a job per dir. The files are listed on the driver
+    and read at once with ``basePath`` and an explicit schema (their
+    footer's columns plus ``part_col`` as its stored ``part_type``):
+    re-inferring the type from dir names would turn ``tri_p2=01`` into
+    ``tri_p2=1``. ``repartition(part_col)`` puts each dir in one task,
+    so the write leaves one sorted file per dir (under AQE the
+    shuffle's map stage is a job of its own). All moves and deletions
+    commit under one manifest, so after a crash every dir of the pass
+    is fully old or fully new; unselected dirs are never touched, and a
+    pass with nothing to do runs no job.
+
+    Returns {"dirs_compacted", "files_before", "files_after"}."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    only = None if only_dirs is None else {os.path.normpath(d) for d in only_dirs}
+    picked = {}
+    files_before = files_after = 0
+    for part_dir in sorted(glob.glob(os.path.join(table, f"{part_col}=*"))):
+        if not os.path.isdir(part_dir):
+            continue
+        if only is not None and os.path.normpath(part_dir) not in only:
+            continue
+        files = sorted(glob.glob(os.path.join(part_dir, "*.parquet")))
+        files_before += len(files)
+        if len(files) <= small_file_threshold:
+            files_after += len(files)
+        else:
+            picked[os.path.basename(part_dir)] = files
+    stats = {"dirs_compacted": len(picked), "files_before": files_before}
+    if not picked:
+        return {**stats, "files_after": files_after}
+
+    old = [f for fs in picked.values() for f in fs]
+    schema = from_arrow_schema(pq.read_schema(old[0])).add(part_col, part_type)
+    tag, tmp = _open_staging(root)
+    (
+        spark.read.schema(schema)
+        .option("basePath", table)
+        .parquet(*old)
+        .repartition(part_col)
+        .sortWithinPartitions(part_col, key)
+        .write.partitionBy(part_col)
+        .mode("overwrite")
+        .parquet(os.path.join(tmp, "staged"))
+    )
+    moves = []
+    for src in sorted(glob.glob(os.path.join(tmp, "staged", "*", "part-*.parquet"))):
+        part_dir = os.path.basename(os.path.dirname(src))
+        if part_dir not in picked:
+            raise RuntimeError(
+                f"compaction of {table} staged {part_dir!r}, not a selected "
+                "dir (partition values did not round-trip); nothing committed"
+            )
+        name = f"compact-{tag}-{os.path.basename(src)}"
+        moves.append((src, os.path.join(table, part_dir, name)))
+    if not os.path.exists(os.path.join(tmp, ".inprogress")):
+        raise RuntimeError(
+            f"compaction of {table}: staging dir {tmp} was swept mid-write; "
+            "nothing committed, retry (one writer per index)"
+        )
+    _commit_staging(root, tag, tmp, moves, delete=old)
+    return {**stats, "files_after": files_after + len(moves)}
