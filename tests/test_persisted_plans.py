@@ -43,7 +43,10 @@ def _docs(spark, ids, shift=0):
 def _group_tasks(spark, fn):
     """(fn(), tasks run by every stage of every job fn ran), read from
     the status tracker. Stages a later job skips count once, at the
-    tasks they ran."""
+    tasks they ran. A stage the tracker no longer holds ran none: once
+    a session passes ``spark.ui.retainedStages``, the status store
+    evicts the stages without a completion time, the skipped ones,
+    first."""
     sc = spark.sparkContext
     group = f"persisted-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -58,7 +61,8 @@ def _group_tasks(spark, fn):
         for jid in tracker.getJobIdsForGroup(group)
         for sid in tracker.getJobInfo(jid).stageIds
     }
-    return out, sum(tracker.getStageInfo(sid).numCompletedTasks for sid in stages)
+    infos = [tracker.getStageInfo(sid) for sid in stages]
+    return out, sum(info.numCompletedTasks for info in infos if info is not None)
 
 
 def test_sessions_let_aqe_coalesce_persisted_plans(spark):
@@ -73,7 +77,8 @@ def test_band_keys_over_persisted_batch_run_one_python_task(spark, tmp_path):
     """At 32 shuffle partitions, the band-key kernel over the persisted
     shingle sets of a 10-doc batch runs in a handful of tasks (65 when
     the persisted plan kept all 32 partitions), and the indexed probe
-    in the same session still answers like the unindexed one."""
+    in the same session still answers like the unindexed one, within
+    the byte budget and over it."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:
@@ -95,9 +100,20 @@ def test_band_keys_over_persisted_batch_run_one_python_task(spark, tmp_path):
         path = str(tmp_path / "mh_idx")
         write_minhash_index(index, path, **MH_DIALS)
         rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-        got = rows(minhash_probe_indexed(spark, path, batch, **MH_DIALS))
-        want = rows(minhash_lsh_pairs_against(index, batch, "doc_id", "text"))
-        assert got == want and got
+        answers = []
+        # the default byte budget takes the id-pair kernel; a zero
+        # budget forces both operators onto the join
+        for budget in ({}, {"broadcast_max_bytes": 0}):
+            probe = minhash_probe_indexed(spark, path, batch, **MH_DIALS, **budget)
+            against = minhash_lsh_pairs_against(index, batch, "doc_id", "text", **budget)
+            got, want = rows(probe), rows(against)
+            assert got == want and got
+            answers.append(got)
+            if budget:
+                for df in (probe, against):
+                    plan = df._jdf.queryExecution().executedPlan().toString()
+                    assert "inter_size_arrow" in plan and "MapInPandas" not in plan
+        assert answers[0] == answers[1]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.catalog.clearCache()

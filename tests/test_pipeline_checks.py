@@ -156,6 +156,10 @@ def test_missing_observations_fall_back_to_written_counts(spark, tmp_path, monke
 
 def test_report_collect_jobs_and_no_state_left(spark, tmp_path):
     spark.catalog.clearCache()
+    # checkpoints that earlier tests' operators left to the ContextCleaner
+    # would otherwise vanish at its next GC-driven sweep, mid-test
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
     jsc = spark.sparkContext._jsc.sc()
     held = lambda: {i.id() for i in jsc.getRDDStorageInfo()}  # noqa: E731
     before = held()

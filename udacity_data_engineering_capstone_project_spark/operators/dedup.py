@@ -353,9 +353,13 @@ def _affine_minhash_blocked(
 def _minhash_band_keys_udf(n_hashes: int, bands: int):
     """Arrow kernel: digest-set column -> array of ``bands`` mixed
     int64 band keys (the minhash signature never materializes as
-    columns — see minhash_lsh_pairs docstring for the math)."""
+    columns — see minhash_lsh_pairs docstring for the math). Every
+    MinHash operator builds it before running a job, so a ``bands``
+    that does not divide ``n_hashes`` raises ValueError there."""
     from pyspark.sql.functions import pandas_udf
 
+    if n_hashes % bands:
+        raise ValueError(f"bands={bands} must divide n_hashes={n_hashes}")
     rows = n_hashes // bands
     coeffs = minhash_coefficients(n_hashes)
     a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)
@@ -383,8 +387,10 @@ def _minhash_band_keys_udf(n_hashes: int, bands: int):
 
 def _inter_size_udf():
     """Arrow kernel: exact per-row intersect size of two distinct-int64
-    array columns, via flat lexsort + duplicate count (see
-    minhash_lsh_pairs for why this is a UDF, not array_intersect).
+    array columns, via flat lexsort + duplicate count. A UDF, not
+    ``array_intersect``: a deterministic column expression would be
+    inlined into both the join condition and the output projection of
+    the verify join (double evaluation, measured 3-4x wall; NOTES.md).
 
     Returned ``asNondeterministic()`` (optimization guide §4.4): every
     caller filters on the kernel's output (the Jaccard threshold), and
@@ -420,23 +426,15 @@ def _pair_intersect_kernel(bc, a_col: str, b_col: str,
     """mapInPandas generator: exact intersect/union sizes for id PAIRS
     against a broadcast FLAT digest store, thresholded in-kernel.
 
-    The r12 replacement for the two broadcast hash joins that attached
-    both full digest arrays to every candidate row before
-    :func:`_inter_size_udf` (guide §2.3/§8 — shuffle keys, not
-    payloads): per candidate pair only 16 bytes of ids cross the Arrow
-    boundary (measured 165 MB of array traffic -> ~1 MB at the sf0.1
-    PPJoin's 68k candidates); the digest sets ship ONCE per executor
-    in the broadcast. r13: the broadcast payload is THREE numpy arrays
-    (sorted doc ids, offsets, flat digests) instead of a 68k-entry
-    dict of small arrays — pickling numpy buffers is a memcpy, and the
-    per-pair set gather becomes one vectorized repeat/cumsum indexing
-    expression instead of a Python list comprehension (VERDICT r12 #2:
-    the dict build + per-pair Python loop was the kernel path's fixed
-    overhead). Pairs whose doc id is MISSING from the store are
-    DROPPED, matching the old inner-join semantics (VERDICT r12 #3 /
-    ADVICE r12: ``id2set[x]`` raised KeyError and killed the task).
-    The intersect math is the identical flat lexsort + duplicate
-    count, so counts are bit-equal."""
+    Per candidate pair only 16 bytes of ids cross the Arrow boundary
+    (measured 165 MB of array traffic -> ~1 MB at the sf0.1 PPJoin's
+    68k candidates); the digest sets ship once per executor in the
+    broadcast, as three numpy arrays (sorted doc ids, offsets, flat
+    digests, plus lengths) whose pickle is a memcpy and whose per-pair
+    gather is one vectorized repeat/cumsum expression. Pairs whose doc
+    id is missing from the store are dropped, as an inner join would.
+    The intersect math is :func:`_inter_size_udf`'s flat lexsort +
+    duplicate count, so counts are bit-equal to the join path."""
 
     def gen(batches):
         doc_ids, offsets, lens, flat_store = bc.value
@@ -494,156 +492,185 @@ def _pair_intersect_kernel(bc, a_col: str, b_col: str,
     return gen
 
 
-def _sliver_est_bytes(sliver: DataFrame) -> int:
-    """Estimated broadcast bytes of a (doc, hs) sliver — the
-    _verify_candidate_pairs formula (``8*Σ|hs| + 32*rows``), computed
-    by one narrow aggregation job (only (int) size rows leave the map
-    side; the arrays themselves stay put)."""
-    st = sliver.select(
-        F.count("*").alias("n_docs"),
+#: The verify's default budgets: candidate-id rows a semi-join build may
+#: broadcast, and estimated digest-set bytes the verify may broadcast
+#: (comfortably under Spark's 8 GiB broadcast cap).
+_BROADCAST_MAX_ROWS = 5_000_000
+_BROADCAST_MAX_BYTES = 512 << 20
+
+
+def _set_bytes(n_docs: int, tot_digests: int) -> int:
+    """Estimated broadcast bytes of ``n_docs`` (doc, hs) rows holding
+    ``tot_digests`` digests in all: ``8*Σ|hs| + 32*rows``."""
+    return 8 * int(tot_digests) + 32 * int(n_docs)
+
+
+def _set_totals():
+    """The (n, tot) aggregate columns of a (doc, hs) relation: its rows
+    and its digests in all, the inputs of :func:`_set_bytes`."""
+    return (
+        F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.size("hs")), F.lit(0)).alias("tot"),
-    ).first()
-    return 8 * int(st["tot"]) + 32 * int(st["n_docs"])
+    )
 
 
-def _verify_pairs_broadcast_sets(
+def _sliver_est_bytes(sliver: DataFrame) -> int:
+    """:func:`_set_bytes` of a (doc, hs) sliver, computed by one narrow
+    aggregation job (only (int) size rows leave the map side; the
+    arrays themselves stay put)."""
+    st = sliver.select(*_set_totals()).first()
+    return _set_bytes(st["n"], st["tot"])
+
+
+def _trim_sets(sets: DataFrame, ids: DataFrame, n_rows: int,
+               broadcast_max_rows: int) -> DataFrame:
+    """The (doc, hs) rows of ``sets`` whose doc is in ``ids``; the id
+    side is broadcast while ``n_rows`` fits ``broadcast_max_rows``."""
+    if n_rows <= broadcast_max_rows:
+        ids = F.broadcast(ids)
+    return sets.join(ids, "doc", "left_semi")
+
+
+def _verify_pairs(
     candidates: DataFrame,
-    sets_filtered: DataFrame,
+    a_sets: DataFrame,
+    b_sets: DataFrame,
     a_col: str,
     b_col: str,
     threshold_num: int,
     threshold_den: int,
-    n_pairs: int | None = None,
+    n_rows: int,
+    bytes_ub: int | None,
+    path: str = "join",
+    broadcast_max_rows: int = _BROADCAST_MAX_ROWS,
+    broadcast_max_bytes: int = _BROADCAST_MAX_BYTES,
 ) -> DataFrame:
-    """Collect the candidate-filtered digest-set sliver driver-side
-    (the SAME bytes the old plan's BroadcastExchange collected to the
-    driver — callers apply their byte/row guards BEFORE choosing this
-    path), ship it once via ``SparkContext.broadcast``, and stream
-    only the candidate id pairs through :func:`_pair_intersect_kernel`.
-    The broadcast handle rides the returned DataFrame as
-    ``_centroid_broadcast`` so the bench/oracle post-action hook
-    releases it.
+    """Exact-Jaccard verify of the candidate id pairs ``(a_col, b_col)``
+    against the (doc, hs) digest-set slices ``a_sets`` and ``b_sets``
+    (the same DataFrame for a self-join), trimmed by the caller to the
+    candidate docs. Output: (a_col, b_col, inter_size, union_size) at
+    ``inter * den >= union * num``. The one verify of every near-dup
+    operator here.
 
-    r13: the sliver is pulled with Arrow (``toPandas`` — the row
-    ``collect()`` built one Row object + one numpy array per doc) and
-    broadcast as FLAT arrays (sorted ids, offsets, lengths, flat
-    digests): the driver-side build is three numpy ops, the pickle is
-    a buffer memcpy, and every reused Python worker unpickles one
-    contiguous block instead of rebuilding a dict of 68k small
-    arrays."""
-    pdf = sets_filtered.select("doc", "hs").toPandas()
-    sc = candidates.sparkSession.sparkContext
-    doc_arr = pdf["doc"].to_numpy(dtype=np.int64)
-    order = np.argsort(doc_arr, kind="stable")
-    doc_sorted = doc_arr[order]
-    hs_sorted = pdf["hs"].to_numpy()[order]
-    lens_sorted = np.fromiter(
-        (len(x) for x in hs_sorted), dtype=np.int64, count=len(hs_sorted)
-    )
-    flat_sorted = (
-        np.concatenate([np.asarray(x, dtype=np.int64) for x in hs_sorted])
-        if len(hs_sorted)
-        else np.empty(0, dtype=np.int64)
-    )
-    offsets_sorted = np.concatenate(
-        ([0], np.cumsum(lens_sorted)[:-1])
-    ).astype(np.int64)
-    bcv = sc.broadcast((doc_sorted, offsets_sorted, lens_sorted, flat_sorted))
-    # register session-level so the harness hook can release the
-    # handle even if a wrapper .select()s the attribute away
-    # (ADVICE r12); local import — similarity does not import dedup
-    from .similarity import _ROUTING_BC_REGISTRY
+    Byte gate. The slices reach the verify by broadcast only while
+    their estimated bytes, ``8*Σ|hs| + 32*rows`` (:func:`_set_bytes`),
+    fit ``broadcast_max_bytes``. A row guard would be ineffective for
+    (doc, array<long>) rows, whose size is rows x set size. The caller
+    gives an upper bound ``bytes_ub`` from numbers it already holds
+    (exact for the self-joins), or None. Before the kernel path
+    collects anything to the driver, a bound that is missing or over
+    budget is replaced by the sliver's measured bytes, one
+    :func:`_sliver_est_bytes` job, while the caller's candidate row
+    count ``n_rows`` fits ``broadcast_max_rows``. A near-dup-dense
+    corpus thus degrades to shuffle joins instead of blowing the
+    driver or executor broadcast limit.
 
-    _ROUTING_BC_REGISTRY.append(bcv)
-    # spread the pair kernel across the cluster: the candidate cache is
-    # AQE-coalesced to ~1 partition (it is tiny in bytes), which would
-    # run the whole intersect kernel in ONE task; the repartition moves
-    # only 16-byte id rows and scales with the session's parallelism,
-    # not a constant (guide §2.5 — parallelism over a keyless shuffle
-    # of small rows is essentially free). r13: bounded BY THE PAIR
-    # COUNT when the caller knows it — a 48-pair probe batch fanned to
-    # 32 near-empty partitions pays 32 Python-worker round trips +
-    # broadcast fetches for microseconds of kernel work; ~4k pairs per
-    # task keeps the worker round-trip amortized at every size.
-    n_parts = max(1, sc.defaultParallelism)
-    if n_pairs is not None:
-        n_parts = max(1, min(n_parts, -(-int(n_pairs) // 4096)))
-    out = (
-        candidates.select(a_col, b_col)
-        .repartition(n_parts)
-        .mapInPandas(
-            _pair_intersect_kernel(bcv, a_col, b_col, threshold_num, threshold_den),
-            f"{a_col} long, {b_col} long, inter_size long, union_size long",
+    Kernel or join. ``path="kernel"`` (the batch probes): within budget,
+    the sliver is pulled to the driver with Arrow, broadcast once as
+    flat arrays (sorted ids, offsets, lengths, digests) and only the
+    16-byte id pairs stream through :func:`_pair_intersect_kernel`; the
+    handle rides the result as ``_centroid_broadcast`` and sits in
+    ``_ROUTING_BC_REGISTRY`` so the bench and oracle post-action hook
+    releases it, and ``_verify_sets_df`` keeps the sliver (its pruned
+    scan is no longer in the result's plan) for plan guards. Otherwise,
+    and always for ``path="join"`` (the self-joins), both slices are
+    joined onto the candidates and :func:`_inter_size_udf` counts the
+    intersections; the slices are broadcast-hinted exactly when the
+    bytes are known and within budget. The self-joins stay on the join
+    because the id-pair kernel regressed both under ``bench.py`` at
+    sf0.1 on 32 cores (jaccard_pairs_prefix_filter 3.285 -> 4.102 s,
+    minhash_pairs 2.370 -> 2.609 s): the sliver collect is an extra job
+    ahead of the main pass, and the driver collect plus the workers'
+    unpickle sit on the critical path, spiking 2-3x under host steal
+    where the broadcast join stayed within +-10%. The batch probes'
+    sliver is batch-sized, and there the kernel measured 1.2-1.4x
+    faster."""
+    sliver = a_sets.select("doc", "hs").unionByName(b_sets.select("doc", "hs"))
+
+    def fits(n_bytes):
+        return n_bytes is not None and n_bytes <= broadcast_max_bytes
+
+    within = fits(bytes_ub) or (
+        path == "kernel"
+        and n_rows <= broadcast_max_rows
+        and fits(_sliver_est_bytes(sliver))
+    )
+    if within and path == "kernel":
+        pdf = sliver.toPandas()
+        docs = pdf["doc"].to_numpy(dtype=np.int64)
+        order = np.argsort(docs, kind="stable")
+        docs, sets = docs[order], pdf["hs"].to_numpy()[order]
+        lens = np.fromiter((len(x) for x in sets), dtype=np.int64, count=len(sets))
+        flat = (
+            np.concatenate([np.asarray(x, dtype=np.int64) for x in sets])
+            if len(sets)
+            else np.empty(0, dtype=np.int64)
+        )
+        offsets = np.concatenate(([0], np.cumsum(lens)[:-1])).astype(np.int64)
+        sc = candidates.sparkSession.sparkContext
+        bcv = sc.broadcast((docs, offsets, lens, flat))
+        # registered session-level too, so the post-action hook releases the
+        # handle even if a wrapper .select()s the attribute away; local
+        # import — similarity does not import dedup
+        from .similarity import _ROUTING_BC_REGISTRY
+
+        _ROUTING_BC_REGISTRY.append(bcv)
+        # the candidate cache is AQE-coalesced to ~1 partition; spread
+        # the kernel at ~4k pairs per task, at most one task per core
+        n_parts = max(1, min(sc.defaultParallelism, -(-int(n_rows) // 4096)))
+        out = (
+            candidates.select(a_col, b_col)
+            .repartition(n_parts)
+            .mapInPandas(
+                _pair_intersect_kernel(bcv, a_col, b_col, threshold_num, threshold_den),
+                f"{a_col} long, {b_col} long, inter_size long, union_size long",
+            )
+        )
+        out._centroid_broadcast = bcv
+        out._verify_sets_df = sliver
+        return out
+    b_sets.persist(StorageLevel.MEMORY_AND_DISK)
+    sa, sb = a_sets.alias("sa"), b_sets.alias("sb")
+    if within:
+        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    inter_size_arrow = _inter_size_udf()
+    return (
+        candidates.join(sa, F.col(a_col) == F.col("sa.doc"))
+        .join(sb, F.col(b_col) == F.col("sb.doc"))
+        .select(
+            a_col,
+            b_col,
+            inter_size_arrow("sa.hs", "sb.hs").alias("inter_size"),
+            (F.size("sa.hs") + F.size("sb.hs")).cast("long").alias("sum_sizes"),
+        )
+        .select(
+            a_col,
+            b_col,
+            "inter_size",
+            (F.col("sum_sizes") - F.col("inter_size")).cast("long").alias("union_size"),
+        )
+        .filter(
+            F.col("inter_size") * threshold_den >= F.col("union_size") * threshold_num
         )
     )
-    out._centroid_broadcast = bcv  # harness post-action hook releases it
-    # testability hook: the sliver's pruned scan (dp partition filters,
-    # semi-join trim) no longer appears in the returned plan — it was
-    # materialized by the collect above — so plan-guard tests assert
-    # the pruning on this DataFrame instead
-    out._verify_sets_df = sets_filtered
-    return out
 
 
-def _verify_candidate_pairs(
+def _self_join_verify(
     sets: DataFrame,
     candidates: DataFrame,
     threshold_num: int,
     threshold_den: int,
-    broadcast_max_rows: int = 5_000_000,
-    broadcast_max_bytes: int = 512 << 20,
 ) -> DataFrame:
-    """Exact-Jaccard verification of a candidate pair list against the
-    per-doc digest-set table, WITHOUT re-shuffling that table: the
-    candidate ids (a post-filter sliver of the corpus) are broadcast as
-    a semi-join filter on ``sets``, and the small filtered slice is
-    broadcast into both verification joins. Intersections run in ONE
-    Arrow kernel (:func:`_inter_size_udf`) — a deterministic column
-    expression here would be inlined into the join condition AND the
-    output projection (double evaluation, measured 3-4x wall; see
-    NOTES.md). Shared by :func:`minhash_lsh_pairs` (LSH candidates)
-    and :func:`jaccard_pairs_prefix` (prefix-filter candidates).
+    """:func:`_verify_pairs` for a self-join's (doc_a, doc_b) candidates
+    over the caller-persisted ``sets``, on the join path.
 
-    Broadcast size guards — exactly ONE driver action (VERDICT r4 #4:
-    the r3 version ran TWO pre-join actions, candidates.count() then a
-    stats .first(); each is ~0.3 s of fixed job-launch cost at bench
-    scale). The fused job aggregates over the per-doc digest-set
-    SIZES — ``sets.select(doc, size(hs))``, a narrow (long, int)
-    projection of the caller-persisted cache — semi-joined to the
-    candidate ids, yielding in one pass both the candidate-doc count
-    (``n_docs``, exactly the build-side row count of every later
-    broadcast) and the slice byte estimate. Only 16-byte rows ever
-    shuffle in this job; the heavy ``hs`` arrays stay put. (A first
-    fusion attempt dropped the ids hint and leaned on AQE's runtime
-    conversion instead — 2.6 s SLOWER at sf0.1, because the un-hinted
-    semi-join's map stage shuffle-writes the full array-bearing table
-    before AQE can elide anything. Hint decisions must precede the
-    first shuffle of wide rows.)
-
-    Guard semantics (unchanged from ADVICE r3): the candidate-ID
-    semi-join build is bounded by ``broadcast_max_rows`` scalar id
-    rows; the digest-set slice broadcast into the verification joins
-    is guarded BY ESTIMATED BYTES, not rows (a row guard is
-    ineffective for (doc, array<long>) relations whose size is rows x
-    per-doc set size): the hint applies only while ``8*Σ|hs| + 32*rows
-    <= broadcast_max_bytes`` (default 512 MiB, comfortably under
-    Spark's 8 GiB hard broadcast cap and typical executor memory). A
-    near-dup-DENSE corpus degrades to shuffle joins instead of blowing
-    the driver/executor broadcast limit.
-
-    r13 ADJUDICATION (VERDICT r12 #2): this function is back on the
-    r11 BROADCAST-JOIN verify. The r12 id-pair-kernel rewrite
-    (:func:`_verify_pairs_broadcast_sets`) regressed BOTH callers on
-    the driver's bench (jaccard_pairs_prefix_filter 3.285 -> 4.102 s,
-    minhash_pairs 2.370 -> 2.609 s): the sliver collect is an extra
-    per-invocation job ahead of the main pass, and the interleaved A/B
-    re-measure (7 alternating iterations, one session) showed the
-    kernel path's wall time SPIKING 2-3x under host-steal episodes
-    (driver collect + 32-worker broadcast unpickle sit on the critical
-    path) while the broadcast-join verify stayed within +-10%. The
-    kernel stays on :func:`minhash_lsh_pairs_against` /
-    :func:`minhash_probe_indexed`, where the sliver is batch-sized and
-    the driver measured it winning 1.2-1.4x."""
+    One driver action gives the bound: a fused job over the narrow
+    ``(doc, size(hs))`` projection semi-joined to the candidate ids
+    yields both the candidate-doc count (the row count of the id
+    broadcast) and the slice's exact bytes, and fills the candidate
+    caches the verify reuses. Only 16-byte rows shuffle in it; the id
+    hint must precede the first shuffle of wide rows, which is why the
+    count is taken before the slice is built."""
     candidates = candidates.persist(StorageLevel.MEMORY_AND_DISK)
     cand_ids = (
         candidates.select(F.col("doc_a").alias("doc"))
@@ -651,11 +678,6 @@ def _verify_candidate_pairs(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # ONE driver action: candidate-doc count + slice byte estimate in a
-    # single narrow-row job (fills the candidates and cand_ids caches
-    # that the verification joins reuse). Un-hinted semi-join is fine
-    # HERE: the probe side is (long, int) rows, so even the worst-case
-    # shuffle is 16 B/doc, and AQE broadcast-converts when small.
     stats = (
         sets.select("doc", F.size("hs").alias("sz"))
         .join(cand_ids, "doc", "left_semi")
@@ -666,39 +688,10 @@ def _verify_candidate_pairs(
         .first()
     )
     n_docs = int(stats["n_docs"])
-    est_bytes = 8 * int(stats["tot_digests"]) + 32 * n_docs
-
-    def _hint_ids(d):
-        return F.broadcast(d) if n_docs <= broadcast_max_rows else d
-
-    sets_f = sets.join(_hint_ids(cand_ids), "doc", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    def _hint_sets(d):
-        return F.broadcast(d) if est_bytes <= broadcast_max_bytes else d
-
-    inter_size_arrow = _inter_size_udf()
-    sa = sets_f.alias("sa")
-    sb = sets_f.alias("sb")
-    return (
-        candidates.join(_hint_sets(sa), F.col("doc_a") == F.col("sa.doc"))
-        .join(_hint_sets(sb), F.col("doc_b") == F.col("sb.doc"))
-        .select(
-            "doc_a",
-            "doc_b",
-            inter_size_arrow("sa.hs", "sb.hs").alias("inter_size"),
-            (F.size("sa.hs") + F.size("sb.hs")).cast("long").alias("sum_sizes"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter_size",
-            (F.col("sum_sizes") - F.col("inter_size")).cast("long").alias("union_size"),
-        )
-        .filter(
-            F.col("inter_size") * threshold_den >= F.col("union_size") * threshold_num
-        )
+    sets_f = _trim_sets(sets, cand_ids, n_docs, _BROADCAST_MAX_ROWS)
+    return _verify_pairs(
+        candidates, sets_f, sets_f, "doc_a", "doc_b", threshold_num,
+        threshold_den, n_docs, _set_bytes(n_docs, stats["tot_digests"]),
     )
 
 
@@ -723,15 +716,14 @@ def jaccard_pairs_prefix(
     shingle sits at the END of the order and never enters a prefix
     unless a doc is almost entirely boilerplate. Size-ratio pruning
     (``num * max(na, nb) <= den * min(na, nb)``) drops incompatible
-    pairs inside the join condition. Survivors get the same
-    candidate-filtered broadcast + Arrow-kernel verification as the
-    LSH path (:func:`_verify_candidate_pairs`) — exact, no recall
+    pairs inside the join condition. Survivors get the same exact
+    verification as the LSH path (:func:`_verify_pairs`) — no recall
     loss anywhere.
 
     Shuffle ledger: df count (digest-keyed, longs), prefix ranking
     (doc-keyed window — reuses the partitioning ``shingle_sets``
     already produced), prefix self-join (prefix digests only), then
-    broadcast-only verification."""
+    the verify, broadcast within its byte budget."""
     from pyspark.sql import Window
 
     if persist:
@@ -812,7 +804,7 @@ def jaccard_pairs_prefix(
         )
         .distinct()
     )
-    return _verify_candidate_pairs(sets, candidates, threshold_num, threshold_den)
+    return _self_join_verify(sets, candidates, threshold_num, threshold_den)
 
 
 def minhash_lsh_pairs(
@@ -833,19 +825,20 @@ def minhash_lsh_pairs(
 
     Pipeline: hashed shingles -> 64-hash signature -> 16 bands x 4 rows
     -> band-bucket self-join (candidates) -> exact Jaccard on candidate
-    pairs via array_intersect of the per-doc digest sets. With b=16,
-    r=4 the false-negative rate at j=0.8 is (1 - 0.8^4)^16 ~= 2e-4 and
-    vanishes as j -> 1, so verified output matches the exact-Jaccard
-    oracle; false positives are removed by verification.
+    pairs, counted by the :func:`_inter_size_udf` Arrow kernel over the
+    per-doc digest sets. With b=16, r=4 the false-negative rate at
+    j=0.8 is (1 - 0.8^4)^16 ~= 2e-4 and vanishes as j -> 1, so verified
+    output matches the exact-Jaccard oracle; false positives are
+    removed by verification.
 
     Scale properties: band keys are single mixed int64 longs (a
     band-key collision only adds a candidate, which verification then
     rejects — correctness is unaffected); the per-doc digest sets are
-    ~8 bytes per shingle; candidate verification is two hash joins of
-    the (small, post-LSH) candidate list against the doc-set table —
-    no re-shuffle of the full inverted index.
+    ~8 bytes per shingle; the verify (:func:`_verify_pairs`) joins the
+    (small, post-LSH) candidate list to the candidate docs' slice of
+    the doc-set table, broadcast within its byte budget — no re-shuffle
+    of the full inverted index.
     """
-    assert n_hashes % bands == 0
     # (doc, digest-set) rows: reused by band keys and verification.
     # Persisted ONCE, one narrow (long, array<long>) row per doc.
     sets = shingle_sets(df, id_col, text_col, n, hash_family).persist(
@@ -880,10 +873,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    # Verification: candidate-filtered broadcast + Arrow kernel
-    # (shared with jaccard_pairs_prefix — see _verify_candidate_pairs
-    # for why this shape, and why a UDF rather than array_intersect).
-    return _verify_candidate_pairs(sets, candidates, threshold_num, threshold_den)
+    return _self_join_verify(sets, candidates, threshold_num, threshold_den)
 
 
 def minhash_lsh_pairs_against(
@@ -896,8 +886,8 @@ def minhash_lsh_pairs_against(
     bands: int = 16,
     threshold_num: int = 4,
     threshold_den: int = 5,
-    broadcast_max_rows: int = 5_000_000,
-    broadcast_max_bytes: int = 512 << 20,
+    broadcast_max_rows: int = _BROADCAST_MAX_ROWS,
+    broadcast_max_bytes: int = _BROADCAST_MAX_BYTES,
 ) -> DataFrame:
     """Incremental near-dup detection: new ``batch_df`` documents
     against an existing ``index_df`` corpus — the continuous-ingestion
@@ -911,49 +901,37 @@ def minhash_lsh_pairs_against(
     table maintained incrementally; this operator is the per-batch
     probe against it.
 
-    Broadcast size guard (round-2 advice; BYTE gate per ADVICE r12):
-    the batch band keys and the candidate-id semi-join builds are
-    broadcast-hinted while their row counts stay under
-    ``broadcast_max_rows``; the collected digest-set sliver that feeds
-    the id-pair kernel is gated by ESTIMATED BYTES
-    (``8*Σ|hs| + 32*rows <= broadcast_max_bytes``, the
-    _verify_candidate_pairs guard — a row guard is ineffective for
-    (doc, array<long>) payloads). A large batch or a near-dup-dense
-    corpus degrades gracefully to shuffle joins instead of blowing the
-    driver/executor broadcast limit. Both guards come from ONE fused
-    driver action on narrow rows (plus the raw batch count).
+    Broadcast guards: the batch band keys and the candidate-id
+    semi-join builds are broadcast-hinted while their row counts stay
+    under ``broadcast_max_rows``; the digest sets reach the id-pair
+    kernel through :func:`_verify_pairs`'s byte gate against
+    ``broadcast_max_bytes``, and a large batch or a near-dup-dense
+    corpus degrades to shuffle joins.
 
     Output: (new_doc, index_doc, inter_size, union_size), Jaccard >=
     num/den. Ids must be disjoint across the two inputs (enforced by
     the caller's split).
     """
-    assert n_hashes % bands == 0
     band_keys = _minhash_band_keys_udf(n_hashes, bands)
     n_batch = batch_df.count()
 
     # BOTH set tables persist: idx_sets feeds two subtrees (band keys
     # and the verification semi-join) — without the persist the index
     # corpus would be tokenized and collect_set-shuffled twice. Each
-    # carries an OBSERVE node (r13): the digest totals the byte gate
-    # below needs ride the cache-fill job as accumulator metrics —
-    # zero extra scans (a dedicated totals aggregate, even a straight
-    # partial agg over the caches, measured +0.15 s per probe).
+    # carries an observe node: the digest totals the byte gate needs
+    # ride the cache-fill job as accumulator metrics.
     from pyspark.sql import Observation
 
     obs_idx = Observation("idx_sets_totals")
     obs_bat = Observation("bat_sets_totals")
-    _totals = lambda: (  # noqa: E731
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.size("hs")), F.lit(0)).alias("tot"),
-    )
     idx_sets = (
         shingle_sets(index_df, id_col, text_col, n)
-        .observe(obs_idx, *_totals())
+        .observe(obs_idx, *_set_totals())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     bat_sets = (
         shingle_sets(batch_df, id_col, text_col, n)
-        .observe(obs_bat, *_totals())
+        .observe(obs_bat, *_set_totals())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     idx_keys = idx_sets.select("doc", F.explode(band_keys("hs")).alias("band_key"))
@@ -974,90 +952,32 @@ def minhash_lsh_pairs_against(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # verification: only candidate index docs leave the map side — the
-    # id set is broadcast as a semi-join filter, then the collected
-    # digest-set sliver ships once into the id-pair kernel. ONE fused
-    # driver action (the _verify_candidate_pairs discipline): candidate
-    # count (row guard for the scalar-id semi-join builds) crossJoined
-    # with the WHOLE-INPUT digest totals (BYTE guard for the
-    # collect/broadcast — ADVICE r12: a row guard is ineffective for
-    # (doc, array<long>) payloads; a near-dup-dense corpus under 5M
-    # candidate rows could still pull multi-GB into the Python driver).
-    # The WHOLE-INPUT totals bound any sliver's bytes from above (the
-    # sliver is a subset of index ∪ batch) and arrive as OBSERVED
-    # METRICS of the cache-fill work this same action triggers — no
-    # extra scan at all. Two refinement attempts, both measured and
-    # rejected: semi-joining sizes to candidate ids (exact sliver,
-    # +0.25 s of exchange work) and a straight totals aggregate over
-    # the caches crossJoined into this action (+0.15 s) — all to
-    # refine a bound that only gates a 512 MiB budget. When the cheap
-    # bound is inconclusive, one exact sliver-size job decides before
-    # anything is collected; accumulator double-fire under cache
-    # eviction can only OVERcount, i.e. degrade conservatively.
+    # verification: only candidate docs leave the map side. ONE driver
+    # action fills the candidates cache and gives the row count; the
+    # byte gate's bound is the WHOLE-INPUT digest totals (any sliver is
+    # a subset of index ∪ batch), read as observed metrics of that same
+    # action's cache fills — no extra scan. An exact sliver size here
+    # (+0.25 s of exchange work) or a totals aggregate over the caches
+    # (+0.15 s) were measured and rejected. Accumulator double-fire
+    # under cache eviction can only overcount, i.e. degrade to the join.
     n_cand = candidates.count()
     idx_tot = _observed_totals(obs_idx)
     bat_tot = _observed_totals(obs_bat)
-    est_ub = (
-        8 * (int(idx_tot["tot"]) + int(bat_tot["tot"]))
-        + 32 * (int(idx_tot["n"]) + int(bat_tot["n"]))
+    bytes_ub = (
+        _set_bytes(idx_tot["n"] + bat_tot["n"], idx_tot["tot"] + bat_tot["tot"])
         if idx_tot is not None and bat_tot is not None
-        else None  # metrics elided (empty input relation): measure below
+        else None  # metrics elided (empty input relation)
     )
-
-    def _bc(df):
-        return F.broadcast(df) if n_cand <= broadcast_max_rows else df
-
     idx_ids = candidates.select(F.col("index_doc").alias("doc")).distinct()
-    idx_f = idx_sets.join(_bc(idx_ids), "doc", "left_semi")
-    # the batch side is filtered to candidate docs too — a batch where
+    # the batch side is trimmed to candidate docs too — a batch where
     # most docs have no LSH match should not broadcast dead arrays
     bat_ids = candidates.select(F.col("new_doc").alias("doc")).distinct()
-    bat_f = bat_sets.join(_bc(bat_ids), "doc", "left_semi")
-    est_bytes = est_ub
-    if est_ub is None or (
-        est_ub > broadcast_max_bytes and n_cand <= broadcast_max_rows
-    ):
-        # inconclusive (or elided) upper bound: measure the sliver once
-        est_bytes = _sliver_est_bytes(
-            idx_f.select("doc", "hs").unionByName(bat_f.select("doc", "hs"))
-        )
-    if est_bytes <= broadcast_max_bytes:
-        # r12 (guide §2.3/§8): ship the two candidate-filtered set
-        # slices ONCE (ids are disjoint across batch and index by the
-        # caller's contract, so one dict holds both) and stream only
-        # id pairs through the intersect kernel — the old two
-        # broadcast joins attached both full digest arrays per pair.
-        return _verify_pairs_broadcast_sets(
-            candidates,
-            bat_f.select("doc", "hs").unionByName(idx_f.select("doc", "hs")),
-            "new_doc",
-            "index_doc",
-            threshold_num,
-            threshold_den,
-            n_pairs=n_cand,
-        )
-    idx_f = idx_f.persist(StorageLevel.MEMORY_AND_DISK)
-    inter_size_arrow = _inter_size_udf()
-    sa = bat_f.alias("sa")
-    sb = idx_f.alias("sb")
-    return (
-        candidates.join(sa, F.col("new_doc") == F.col("sa.doc"))
-        .join(sb, F.col("index_doc") == F.col("sb.doc"))
-        .select(
-            "new_doc",
-            "index_doc",
-            inter_size_arrow("sa.hs", "sb.hs").alias("inter_size"),
-            (F.size("sa.hs") + F.size("sb.hs")).cast("long").alias("sum_sizes"),
-        )
-        .select(
-            "new_doc",
-            "index_doc",
-            "inter_size",
-            (F.col("sum_sizes") - F.col("inter_size")).cast("long").alias("union_size"),
-        )
-        .filter(
-            F.col("inter_size") * threshold_den >= F.col("union_size") * threshold_num
-        )
+    return _verify_pairs(
+        candidates,
+        _trim_sets(bat_sets, bat_ids, n_cand, broadcast_max_rows),
+        _trim_sets(idx_sets, idx_ids, n_cand, broadcast_max_rows),
+        "new_doc", "index_doc", threshold_num, threshold_den, n_cand,
+        bytes_ub, "kernel", broadcast_max_rows, broadcast_max_bytes,
     )
 
 
@@ -1111,7 +1031,6 @@ def write_minhash_index(
     (ADVICE r7). ``mode="append"`` sums the batch's totals onto the
     stamp (the store's merge rule, :mod:`..sources.index_store`).
     """
-    assert n_hashes % bands == 0
     stats = _write_minhash_tables(
         docs, path, mode, id_col, text_col, n, n_hashes, bands,
         n_band_parts, n_doc_parts,
@@ -1168,17 +1087,11 @@ def _write_minhash_tables(
         sets.withColumn("dp", F.pmod(F.xxhash64("doc"), F.lit(n_doc_parts)).cast("int")),
         root, mode, n_doc_parts,
     )
-    # r13: whole-index digest-set totals, stamped beside the dials. They
-    # give the probe a FREE sufficient byte bound for its verify-sliver
-    # collect (any sliver's bytes <= the whole index's): when
-    # 8*tot + 32*n_docs fits the broadcast budget, the probe skips the
-    # per-call sliver-size job entirely (measured ~0.7 s per serve at
-    # sf0.1). One narrow agg over the still-persisted sets — write-time
-    # cost, amortized; it also tells an append whether it was empty.
-    st = sets.select(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.size("hs")), F.lit(0)).alias("tot"),
-    ).first()
+    # whole-index digest-set totals, stamped beside the dials: the
+    # probe's free byte bound (see minhash_probe_indexed). One narrow
+    # agg over the still-persisted sets — write-time cost, amortized;
+    # it also tells an append whether it was empty.
+    st = sets.select(*_set_totals()).first()
     sets.unpersist()
     return {"sets_n_docs": int(st["n"]), "sets_tot_digests": int(st["tot"])}
 
@@ -1241,7 +1154,6 @@ def append_minhash_index(
 
     Returns {"postings_files", "sets_files", "auto_compacted"}.
     """
-    assert n_hashes % bands == 0
     (n_post, n_sets), auto_compacted = MINHASH_STORE.append(
         path,
         _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
@@ -1310,8 +1222,8 @@ def minhash_probe_indexed(
     n_band_parts: int = 64,
     n_doc_parts: int = 32,
     max_literal_keys: int = 50_000,
-    broadcast_max_rows: int = 5_000_000,
-    broadcast_max_bytes: int = 512 << 20,
+    broadcast_max_rows: int = _BROADCAST_MAX_ROWS,
+    broadcast_max_bytes: int = _BROADCAST_MAX_BYTES,
     eager: bool = False,
 ) -> DataFrame:
     """Probe a new batch against a :func:`write_minhash_index` layout —
@@ -1348,7 +1260,6 @@ def minhash_probe_indexed(
     query) intermediates stay cached until LRU eviction, as all
     one-shot operators here do.
     """
-    assert n_hashes % bands == 0
     MINHASH_STORE.open(
         index_path,
         _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
@@ -1362,11 +1273,7 @@ def minhash_probe_indexed(
     obs_bat = Observation("bat_sets_totals")
     bat_sets = (
         shingle_sets(batch_df, id_col, text_col, n)
-        .observe(
-            obs_bat,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.size("hs")), F.lit(0)).alias("tot"),
-        )
+        .observe(obs_bat, *_set_totals())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     bat_keys = bat_sets.select(
@@ -1402,10 +1309,8 @@ def minhash_probe_indexed(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # ONE driver action fills the candidates cache AND returns the
-    # broadcast-guard count plus the candidate dp partition list (the
-    # fused-stats discipline from _verify_candidate_pairs); the batch
-    # side's digest totals for the byte gate below arrive as observed
-    # metrics of the same job's cache-fill work (zero extra scans)
+    # candidate count plus the candidate dp partition list; the batch
+    # side's digest totals arrive as observed metrics of the same job
     stats = candidates.agg(
         F.count("*").alias("n_cand"),
         F.collect_set(
@@ -1415,99 +1320,42 @@ def minhash_probe_indexed(
     n_cand = int(stats["n_cand"])
     dps = sorted(stats["dps"])
     bat_tot = _observed_totals(obs_bat)
-
-    def _bc(d):
-        return F.broadcast(d) if n_cand <= broadcast_max_rows else d
-
+    # the byte gate's bound: the build stamps whole-index digest totals,
+    # and with the batch's totals they bound any sliver from above, so
+    # a fitting bound skips the sliver-size job (~0.7 s per serve at
+    # sf0.1); a stamp without totals leaves the gate to measure
+    stamped = read_stamp(index_path) or {}
+    bytes_ub = (
+        _set_bytes(
+            stamped["sets_n_docs"] + bat_tot["n"],
+            stamped["sets_tot_digests"] + bat_tot["tot"],
+        )
+        if bat_tot is not None and {"sets_n_docs", "sets_tot_digests"} <= stamped.keys()
+        else None
+    )
     # verification sets: only the dp directories holding candidate
     # index docs are opened (<= n_doc_parts literal values), then the
     # candidate-id semi-join trims to exactly the needed rows
     idx_ids = candidates.select(F.col("index_doc").alias("doc")).distinct()
-    idx_f = (
+    idx_f = _trim_sets(
         spark.read.parquet(index_path + "/sets")
         .filter(F.col("dp").isin(dps))
-        .select("doc", "hs")
-        .join(_bc(idx_ids), "doc", "left_semi")
+        .select("doc", "hs"),
+        idx_ids, n_cand, broadcast_max_rows,
     )
     bat_ids = candidates.select(F.col("new_doc").alias("doc")).distinct()
-    bat_f = bat_sets.join(_bc(bat_ids), "doc", "left_semi")
-    sliver = bat_f.select("doc", "hs").unionByName(idx_f)
-    # BYTE gate on the collected sliver (ADVICE r12: the r12 row guard
-    # was ineffective for (doc, array<long>) payloads — a near-dup-
-    # dense corpus under 5M candidate rows could pull multi-GB into
-    # the Python driver). Fast path: the build stamps whole-index
-    # digest totals into _index_params.json, and the batch's totals
-    # rode the fused candidates action above — their SUM bounds any
-    # sliver from above, so when it fits the budget no per-call
-    # sliver-size job runs (measured ~0.7 s per serve at sf0.1). Only
-    # when the bound is inconclusive (or the stamp predates r13) does
-    # the one narrow agg job over the dp-pruned, semi-joined sliver
-    # decide precisely; the dps literal from the first action is a
-    # prerequisite of that scan, so it cannot fuse further.
-    est_bytes = None
-    if n_cand <= broadcast_max_rows:
-        stamped = read_stamp(index_path) or {}
-        if (
-            bat_tot is not None
-            and "sets_n_docs" in stamped
-            and "sets_tot_digests" in stamped
-        ):
-            whole_ub = (
-                8 * int(stamped["sets_tot_digests"])
-                + 32 * int(stamped["sets_n_docs"])
-                + 8 * int(bat_tot["tot"])
-                + 32 * int(bat_tot["n"])
-            )
-            if whole_ub <= broadcast_max_bytes:
-                est_bytes = whole_ub
-        if est_bytes is None:
-            est_bytes = _sliver_est_bytes(sliver)
-    if est_bytes is not None and est_bytes <= broadcast_max_bytes:
-        # r12 (guide §2.3/§8): one collected sliver (batch + index
-        # candidate docs; ids disjoint by the caller's split), only id
-        # pairs through the Arrow boundary — same guard the broadcast
-        # joins used, one action fewer than the two broadcast builds.
-        result = _verify_pairs_broadcast_sets(
-            candidates,
-            sliver,
-            "new_doc",
-            "index_doc",
-            threshold_num,
-            threshold_den,
-            n_pairs=n_cand,
-        )
-        if eager:
-            result = result.persist(StorageLevel.MEMORY_AND_DISK)
-            result.count()
-            for cached in (bat_sets, bat_keys, candidates):
-                cached.unpersist()
-        return result
-    idx_f = idx_f.persist(StorageLevel.MEMORY_AND_DISK)
-    inter_size_arrow = _inter_size_udf()
-    sa = bat_f.alias("sa")
-    sb = idx_f.alias("sb")
-    result = (
-        candidates.join(sa, F.col("new_doc") == F.col("sa.doc"))
-        .join(sb, F.col("index_doc") == F.col("sb.doc"))
-        .select(
-            "new_doc",
-            "index_doc",
-            inter_size_arrow("sa.hs", "sb.hs").alias("inter_size"),
-            (F.size("sa.hs") + F.size("sb.hs")).cast("long").alias("sum_sizes"),
-        )
-        .select(
-            "new_doc",
-            "index_doc",
-            "inter_size",
-            (F.col("sum_sizes") - F.col("inter_size")).cast("long").alias("union_size"),
-        )
-        .filter(
-            F.col("inter_size") * threshold_den >= F.col("union_size") * threshold_num
-        )
+    result = _verify_pairs(
+        candidates,
+        _trim_sets(bat_sets, bat_ids, n_cand, broadcast_max_rows),
+        idx_f,
+        "new_doc", "index_doc", threshold_num, threshold_den, n_cand,
+        bytes_ub, "kernel", broadcast_max_rows, broadcast_max_bytes,
     )
     if eager:
         result = result.persist(StorageLevel.MEMORY_AND_DISK)
         result.count()
+        # idx_f is persisted only on the join path; unpersisting an
+        # uncached frame is a no-op
         for cached in (bat_sets, bat_keys, candidates, idx_f):
             cached.unpersist()
     return result

@@ -139,18 +139,35 @@ def prep_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Longest wait, in ms, for the listener bus to deliver an executed
+#: action's observed metrics (see :func:`observed_metrics`).
+_OBSERVED_DRAIN_MS = 10_000
+
+
 def observed_metrics(obs) -> dict | None:
     """Read an ``Observation``'s metrics as a dict, or None when its
     CollectMetrics node never produced a row: the observed subtree was
     folded away before execution (an empty input relation), or no
     action ran it. ``Observation.get`` would then block forever in
     PySpark 4.1, so this reads the JVM Observation's ``getRowOrEmpty()``,
-    which waits at most 100 ms; metrics of an executed action are
-    already set when the action returns. Callers fall back to a
-    measurement on None, never to a guess."""
+    which waits at most 100 ms. The metrics of an executed action reach
+    the Observation through a listener on the asynchronous listener bus,
+    which may deliver them after the action has returned (3 of 60
+    actions on an idle ``local[4]`` session, and later than 100 ms
+    when the bus is backed up), so an Observation not yet complete
+    first waits for the bus to drain, for at most
+    ``_OBSERVED_DRAIN_MS``. Callers fall back to a measurement on None,
+    never to a guess."""
+    from pyspark import SparkContext
     from pyspark.serializers import CPickleSerializer
 
     try:
+        sc = SparkContext._active_spark_context
+        if sc is not None and not obs._jo.future().isCompleted():
+            try:
+                sc._jsc.sc().listenerBus().waitUntilEmpty(_OBSERVED_DRAIN_MS)
+            except Exception:
+                pass  # not drained in time: the bounded read below decides
         row = obs._jo.getRowOrEmpty()
         if row.isEmpty():
             return None
