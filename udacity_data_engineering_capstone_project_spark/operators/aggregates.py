@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import spark_hex_to_long
+from ..sources.readers import from_records
 
 
 def group_agg(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
@@ -281,10 +282,9 @@ def heavy_hitters(
         .collect()
     )
     total = sum(r.rows for r in summary if r.value is None)
-    cand_values = [(r.value,) for r in summary if r.value is not None]
-    if not cand_values:
-        cand_values = [(None,)]  # degenerate empty input
-    candidates = spark.createDataFrame(cand_values, "value string")
+    candidates = from_records(
+        spark, [(r.value,) for r in summary if r.value is not None], "value string"
+    )
     threshold = total * frac_num  # compare count*den >= total*num
     return (
         df.join(

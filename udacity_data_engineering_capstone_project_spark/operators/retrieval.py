@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions.textnorm import tokens_col
 from ..sources.index_store import IndexStore, Table
+from ..sources.readers import from_records
 
 #: Okapi BM25 defaults, kept as exact decimal literals that parse to
 #: identical doubles in Spark and DuckDB (oracles cast to DOUBLE —
@@ -650,11 +651,13 @@ def trigram_match_indexed(
             F.col(id_col),
         ).filter(F.lit(False))
 
-    # tiny local relations (LocalTableScan — no job, no shuffle) built
-    # from the driver-side pattern prep: (pattern_id, tri, bit),
-    # (pattern_id, n_tris) and (pattern_id, pat). pattern_id keeps the
-    # caller's column type (ADVICE r12).
-    ptris = spark.createDataFrame(
+    # tiny local relations built from the driver-side pattern prep:
+    # (pattern_id, tri, bit), (pattern_id, n_tris) and (pattern_id, pat).
+    # from_records makes each a LocalTableScan, so their broadcasts run
+    # no job and no Python worker. pattern_id keeps the caller's column
+    # type (ADVICE r12).
+    ptris = from_records(
+        spark,
         [(pid, t, b) for pid, ts in tri_by_pat.items() for b, t in enumerate(ts)],
         StructType(
             [
@@ -664,7 +667,8 @@ def trigram_match_indexed(
             ]
         ),
     )
-    n_tris = spark.createDataFrame(
+    n_tris = from_records(
+        spark,
         [(pid, len(ts)) for pid, ts in tri_by_pat.items() if ts],
         StructType(
             [
@@ -673,7 +677,8 @@ def trigram_match_indexed(
             ]
         ),
     )
-    p = spark.createDataFrame(
+    p = from_records(
+        spark,
         [(pid, pat) for pid, pat in pats.items()],
         StructType(
             [

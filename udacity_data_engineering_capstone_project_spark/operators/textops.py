@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import spark_hex_to_long
 from ..functions.textnorm import tokens_col
+from ..sources.readers import from_records
 
 #: Marker stopwords per language for the n-gram-free language-ID
 #: heuristic. Deliberately tiny: language ID at corpus scale is a
@@ -52,7 +53,7 @@ def lang_id(
     groupBy, one window. Output: (doc_id, pred_lang, hits)."""
     markers = markers or LANG_MARKERS
     rows = [(lang, w) for lang, words in sorted(markers.items()) for w in words]
-    marker_df = spark.createDataFrame(rows, "lang string, word string")
+    marker_df = from_records(spark, rows, "lang string, word string")
 
     toks = df.select(
         F.col(id_col).alias("doc"), F.explode(tokens_col(text_col)).alias("word")
@@ -278,7 +279,7 @@ def lang_id_ngram(
     """
     trigrams = trigrams or LANG_TRIGRAMS
     rows = [(lang, g) for lang, grams in sorted(trigrams.items()) for g in grams]
-    gram_df = spark.createDataFrame(rows, "lang string, gram string")
+    gram_df = from_records(spark, rows, "lang string, gram string")
 
     norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     grams = (
@@ -614,10 +615,11 @@ def bpe_merges_table(
     """The learned merge table as a DataFrame:
     (merge_rank, left_sym, right_sym, pair_count)."""
     merges = train_bpe_merges(df, text_col, n_merges)
-    return spark.createDataFrame(
-        merges or [(-1, "", "", 0)],
+    return from_records(
+        spark,
+        merges,
         "merge_rank int, left_sym string, right_sym string, pair_count bigint",
-    ).filter(F.col("merge_rank") >= 0)
+    )
 
 
 def bpe_encode(
@@ -822,8 +824,8 @@ def vocab_coverage(
         F.sum(F.col("c") * F.col("n_types")).over(w).alias("cum_mass"),
         F.sum("n_types").over(w).alias("cum_types"),
     )
-    pcts = df.sparkSession.createDataFrame(
-        [(int(p),) for p in thresholds_pct], "pct int"
+    pcts = from_records(
+        df.sparkSession, [(int(p),) for p in thresholds_pct], "pct int"
     )
     qualified = (
         classes.crossJoin(F.broadcast(pcts))

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import observed_metrics
-from ..sources.readers import read_csv
+from ..sources.readers import from_records, read_csv
 from ..sources.writers import write_parquet
 from . import model
 from .quality import (
@@ -145,5 +145,5 @@ def run_pipeline(
         ]
     )
     return quality_suite(
-        [spark.createDataFrame(observed_rows, REPORT_SCHEMA), *fallbacks, keys]
+        [from_records(spark, observed_rows, REPORT_SCHEMA), *fallbacks, keys]
     )

@@ -21,6 +21,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import from_records
+
 
 #: The report's schema, for check rows computed outside Spark (e.g. from
 #: metrics observed on a write).
@@ -74,8 +76,10 @@ def unique_keys_check(tables: list[tuple[DataFrame, list[str], str]]) -> DataFra
             for df, keys, name in tables
         ],
     )
-    zeros = tables[0][0].sparkSession.createDataFrame(
-        [(name, 0) for _, _, name in tables], "check_name string, dups long"
+    zeros = from_records(
+        tables[0][0].sparkSession,
+        [(name, 0) for _, _, name in tables],
+        "check_name string, dups long",
     )
     dups = F.col("dups")
     return (

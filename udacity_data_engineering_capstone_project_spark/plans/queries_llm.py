@@ -55,6 +55,7 @@ from ..operators.textops import (
     winnow_fingerprints,
 )
 from ..operators.windows import sessionize
+from ..sources.readers import from_records
 from .queries_parity import EVENTS_US, _t
 
 _COS_QC = sql_round_fixed("list_cosine_similarity(qv, cv)", 4)
@@ -2815,7 +2816,8 @@ def stream_static_join(spark, sf_dir):
         stream_static_enrich,
     )
 
-    dim = spark.createDataFrame(
+    dim = from_records(
+        spark,
         [
             ("click", "engagement"),
             ("view", "engagement"),
@@ -3299,8 +3301,8 @@ def bm25_search_topk(spark, sf_dir):
     from ..operators.retrieval import bm25_topk
 
     docs = _t(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
-        BM25_PROBE_QUERIES, "query_id int, qtext string"
+    queries = from_records(
+        spark, BM25_PROBE_QUERIES, "query_id int, qtext string"
     )
     return bm25_topk(docs, queries, k=10)
 
@@ -5539,8 +5541,8 @@ def hybrid_rrf_retrieval(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    queries = spark.createDataFrame(
-        BM25_PROBE_QUERIES, "query_id int, qtext string"
+    queries = from_records(
+        spark, BM25_PROBE_QUERIES, "query_id int, qtext string"
     )
     lex = bm25_topk(docs, queries, k=10).select("query_id", "doc_id", "rank")
     dense = brute_force_topk(
@@ -5796,8 +5798,8 @@ def trigram_search_like(spark, sf_dir):
     from ..operators.retrieval import trigram_match
 
     docs = _t(spark, sf_dir, "documents")
-    pats = spark.createDataFrame(
-        TRIGRAM_PROBE_PATTERNS, "pattern_id int, pattern string"
+    pats = from_records(
+        spark, TRIGRAM_PROBE_PATTERNS, "pattern_id int, pattern string"
     )
     return trigram_match(docs, pats)
 
@@ -5864,8 +5866,8 @@ def trigram_search_indexed(spark, sf_dir):
     from ..operators.retrieval import trigram_match_indexed
 
     docs = _t(spark, sf_dir, "documents")
-    pats = spark.createDataFrame(
-        TRIGRAM_INDEXED_PATTERNS, "pattern_id int, pattern string"
+    pats = from_records(
+        spark, TRIGRAM_INDEXED_PATTERNS, "pattern_id int, pattern string"
     )
     return trigram_match_indexed(
         spark, _trigram_index_path(spark, sf_dir), docs, pats
@@ -5933,8 +5935,8 @@ def trigram_search_appended(spark, sf_dir):
     from ..operators.retrieval import trigram_match_indexed
 
     docs = _t(spark, sf_dir, "documents")
-    pats = spark.createDataFrame(
-        TRIGRAM_INDEXED_PATTERNS, "pattern_id int, pattern string"
+    pats = from_records(
+        spark, TRIGRAM_INDEXED_PATTERNS, "pattern_id int, pattern string"
     )
     return trigram_match_indexed(
         spark, _trigram_appended_index_path(spark, sf_dir), docs, pats
@@ -6557,7 +6559,8 @@ def pipeline_observed_metrics(spark, sf_dir):
     )
     rows = work.collect()  # bounded: |returnflag| groups; triggers the pass
     m = obs.get
-    return spark.createDataFrame(
+    return from_records(
+        spark,
         [
             (
                 int(m["n_scanned"]),
@@ -6974,8 +6977,8 @@ def embedding_top_pc_power(spark, sf_dir):
         scale=1_000,
         iters=32,
     )
-    return spark.createDataFrame(
-        [(i + 1, int(x)) for i, x in enumerate(v)], "pos int, v_x1e6 bigint"
+    return from_records(
+        spark, [(i + 1, int(x)) for i, x in enumerate(v)], "pos int, v_x1e6 bigint"
     )
 
 
@@ -7161,12 +7164,15 @@ def dpp_partitioned_join(spark, sf_dir):
     the oracle proves losslessness by recomputing from the unpruned
     view with the month list folded in."""
     fact = spark.read.parquet(_dpp_orders_path(spark, sf_dir))
-    months = [
-        (f"{y}-{m:02d}", y, (m - 1) // 3 + 1)
-        for y in range(1995, 2002)
-        for m in range(1, 13)
-    ]
-    dim = spark.createDataFrame(months, "om string, yr int, qtr int")
+    # the month dim (1995-01 .. 2001-12) is generated from a range, not
+    # built from driver rows: the optimizer folds a filter over a local
+    # relation into its rows at plan time, and with no dim-side filter
+    # left there is no dynamic pruning
+    dim = spark.range(1995 * 12, 2002 * 12).select(
+        F.expr("format_string('%d-%02d', id DIV 12, id % 12 + 1)").alias("om"),
+        F.expr("CAST(id DIV 12 AS INT)").alias("yr"),
+        F.expr("CAST(id % 12 DIV 3 + 1 AS INT)").alias("qtr"),
+    )
     sel = dim.filter((F.col("yr") == 1996) & (F.col("qtr") == 1))
     return (
         fact.join(sel, "om")
@@ -8635,8 +8641,8 @@ def retrieval_agreement_rbo(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    queries = spark.createDataFrame(
-        BM25_PROBE_QUERIES, "query_id int, qtext string"
+    queries = from_records(
+        spark, BM25_PROBE_QUERIES, "query_id int, qtext string"
     )
     lex = bm25_topk(docs, queries, k=10).select("query_id", "doc_id", "rank")
     dense = brute_force_topk(
@@ -8654,7 +8660,7 @@ def retrieval_agreement_rbo(spark, sf_dir):
             F.greatest(F.col("l.rank"), F.col("r.rank")).alias("enter_d"),
         )
     )
-    ds = spark.createDataFrame(_RBO_DS, "d int, n9 long, n10 long")
+    ds = from_records(spark, _RBO_DS, "d int, n9 long, n10 long")
     terms = (
         both.join(F.broadcast(ds), F.col("enter_d") <= F.col("d"))
         .groupBy("query_id", "d", "n9", "n10")

@@ -37,7 +37,7 @@ from ..plans.quality import (
     quality_suite,
     unique_key_check,
 )
-from ..sources.readers import read_table
+from ..sources.readers import from_records, read_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1170,7 +1170,8 @@ def range_join_tiers(spark, sf_dir):
     side is tiny; at scale the alternative is bucketizing the range key
     into an equi-join."""
     li = _t(spark, sf_dir, "lineitem")
-    tiers = spark.createDataFrame(
+    tiers = from_records(
+        spark,
         [("small", 0.0, 10.0), ("medium", 10.0, 25.0), ("large", 25.0, 51.0)],
         "tier string, lo double, hi double",
     )

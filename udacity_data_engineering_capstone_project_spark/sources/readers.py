@@ -5,7 +5,11 @@ S2  CSV scan (header)           -> read_csv (explicit schema preferred)
 S3  CSV scan (custom delimiter) -> read_csv(sep=';')
 S4  in-memory source            -> from_records (explicit schema, no
                                    ``_1``/``_2`` rename dance; reference
-                                   etl.py:234,261,288,318,339)
+                                   etl.py:234,261,288,318,339). The one
+                                   entry point for driver-built rows: it
+                                   returns a local relation, so no
+                                   Python worker runs and a broadcast
+                                   of it runs no job
 S5  SAS label-file parser       -> parse_sas_labels (driver-side parse of a
                                    KB-sized text file; reference
                                    etl.py:42-60 ``code_mapper``)
@@ -17,7 +21,10 @@ predicates into the parquet scan (check ``.explain``: ``PushedFilters``
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 #: Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
 TPCH_TABLES = [
@@ -76,12 +83,30 @@ def read_csv(
 
 
 def from_records(spark: SparkSession, records, schema) -> DataFrame:
-    """S4: in-memory lookup dim with explicit schema.
+    """S4: a DataFrame from driver-side rows, with an explicit schema.
 
-    ``records``: list of tuples; ``schema``: StructType or DDL string
-    (e.g. ``"id int, mode string"``).
+    ``records``: iterable of tuples (may be empty); ``schema``:
+    StructType or DDL string (e.g. ``"id int, mode string"``).
+
+    This is the package's one entry point for rows built on the
+    driver. The rows go to the JVM as one Arrow table, so the plan leaf
+    is a ``LocalRelation`` (``LocalTableScan``): no Python worker runs
+    to scan it, a broadcast of it runs no Spark job, and the optimizer
+    can fold filters and projections into it. ``createDataFrame`` over
+    a Python list would instead build a pickled Python RDD
+    (``Scan ExistingRDD``) that Python workers must decode. An empty
+    ``records`` gives a typed empty relation, so callers need no
+    sentinel row.
     """
-    return spark.createDataFrame(records, schema=schema)
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    rows = list(records)
+    columns = zip(*rows) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def parse_sas_labels(text: str, marker: str) -> dict[str, str]:
