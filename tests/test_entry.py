@@ -41,6 +41,20 @@ def test_every_query_has_oracle_except_streaming(spark):
     assert len(qs) >= 39
 
 
+def test_registry_order_is_pinned():
+    """The driver records only the first 50 entries, so the registry's
+    order is part of the contract: 208 queries, window first."""
+    import hashlib
+
+    from udacity_data_engineering_capstone_project_spark.plans.registry import (
+        ALL_QUERIES,
+    )
+
+    assert len(ALL_QUERIES) == 208
+    digest = hashlib.sha256("\n".join(ALL_QUERIES).encode()).hexdigest()
+    assert digest == "c73267e22bd5f0e3146cc57c2e1d6475162ff8e23ac079a9950db73b86c6e863"
+
+
 def test_queries_run_at_smoke_sf(spark, sf_dir):
     # spot-run a representative subset through the public contract
     qs = entry_mod.queries()

@@ -30,9 +30,6 @@ from udacity_data_engineering_capstone_project_spark.operators.retrieval import 
     trigram_match_indexed,
     write_trigram_index,
 )
-from udacity_data_engineering_capstone_project_spark.operators.similarity import (
-    ivf_topk_from_index,
-)
 from udacity_data_engineering_capstone_project_spark.sources import index_store
 
 MH_DIALS = {"n_band_parts": 8, "n_doc_parts": 4}
@@ -343,10 +340,3 @@ def test_compact_orphan_staging_leaves_dirs_unchanged(spark, tmp_path, monkeypat
     assert store.serve(spark, path, docs, batch) == want
     assert not os.path.exists(orphans[0])
     assert _file_bytes(store, path) == before
-
-
-def test_ivf_serve_has_no_two_level_option(spark):
-    """The IVF build assigns by flat routing only, so its serve takes no
-    ``two_level`` option that would probe cells assigned differently."""
-    with pytest.raises(TypeError, match="two_level"):
-        ivf_topk_from_index(spark, "unused", None, None, two_level=True)

@@ -19,8 +19,8 @@ from udacity_data_engineering_capstone_project_spark.operators.sets import (
     union_distinct,
 )
 from udacity_data_engineering_capstone_project_spark.operators.similarity import (
+    _nearest_cells_arrow,
     brute_force_topk,
-    build_ivf_assignments,
     embedding_near_dup,
 )
 from udacity_data_engineering_capstone_project_spark.operators.sorting import top_k
@@ -162,7 +162,10 @@ def test_ivf_assignment_nearest_centroid(spark):
         [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
         "centroid_id int, embedding array<float>",
     )
-    out = build_ivf_assignments(emb, cents)
+    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    out = _nearest_cells_arrow(
+        vecs, "vec_id", "v", cents, "centroid_id", "embedding", nprobe=1
+    )
     got = {r.vec_id: r.centroid_id for r in out.collect()}
     assert got[0] == 0 and got[1] == 0 and got[2] == 1
 
@@ -582,16 +585,21 @@ def test_asof_forward_and_tolerance(spark):
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):
+    """The x1e12 fixed-point ranks, scaled back, equal a float numpy
+    power iteration to within the 1e-9 reporting grain."""
     import numpy as np
 
     from udacity_data_engineering_capstone_project_spark.operators.dedup import (
-        pagerank,
+        pagerank_fixedpoint,
     )
 
     # directed graph with a dangling node (3) and a hub (0)
     E = [(0, 1), (0, 2), (1, 0), (2, 0), (1, 2), (2, 3)]
     edges = spark.createDataFrame(E, "src long, dst long")
-    got = {r.node: r.rank for r in pagerank(edges, iters=15).collect()}
+    got = {
+        r.node: r.rank / 10**12
+        for r in pagerank_fixedpoint(edges, iters=15).collect()
+    }
 
     n, d = 4, 0.85
     deg = {0: 2, 1: 2, 2: 2}
@@ -1364,50 +1372,6 @@ def test_epoch_shuffle_is_reproducible_and_reshuffles(spark, sf_dir):
     assert sig0 != sig1  # epochs produce different permutations
 
 
-def test_ivf_index_on_disk_prunes_partitions_and_matches_in_memory(spark, sf_dir, tmp_path):
-    """write_ivf_index -> parquet partitioned by cell; serving pushes
-    the probed cells as STATIC PartitionFilters (unprobed directories
-    never read) and returns exactly the in-memory ivf_topk result."""
-    from pyspark.sql import functions as F
-    from udacity_data_engineering_capstone_project_spark.functions.hashing import (
-        srp_planes,
-    )
-    from udacity_data_engineering_capstone_project_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # deterministic centroids: first 8 vectors by id
-    cents = (
-        emb.orderBy("vec_id").limit(8)
-        .select(F.monotonically_increasing_id().cast("int").alias("centroid_id"),
-                "embedding")
-    )
-    cents = spark.createDataFrame(cents.collect())  # freeze
-    queries = emb.filter(F.col("vec_id") % 97 == 0)
-    path = str(tmp_path / "ivf_index")
-    write_ivf_index(emb, cents, path)
-
-    want = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ivf_topk(queries, emb, cents, k=5, nprobe=2).collect()
-    }
-    got_df = ivf_topk_from_index(spark, path, queries, cents, k=5, nprobe=2)
-    got = {(r.query_id, r.rank): r.neighbor_id for r in got_df.collect()}
-    assert got == want and len(got) > 0
-
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [centroid_id" in plan.replace("#", " ").replace(
-        "centroid_id ", "centroid_id"
-    ) or "PartitionFilters" in plan
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "centroid_id" in m.group(1) and "IN" in m.group(1).upper()
-
-
 def test_dedup_pairs_identical_across_hash_families(spark, sf_dir):
     """jaccard_pairs and minhash_lsh_pairs emit the SAME pairs under
     md5 digests (oracle family) and xxhash64 digests (the JVM-intrinsic
@@ -1805,18 +1769,16 @@ def test_aqp_estimate_covers_exact_total(spark, sf_dir):
 
 def test_pagerank_empty_edges_returns_empty(spark):
     """A corpus with no near-dup pairs at the threshold yields an empty
-    edge set; both pagerank variants must return an empty (node, rank)
+    edge set; pagerank_fixedpoint must return an empty (node, rank)
     frame, not ZeroDivisionError (ADVICE r6)."""
     from udacity_data_engineering_capstone_project_spark.operators.dedup import (
-        pagerank,
         pagerank_fixedpoint,
     )
 
     edges = spark.createDataFrame([], "src string, dst string")
-    for fn in (pagerank, pagerank_fixedpoint):
-        out = fn(edges, iters=3)
-        assert out.columns == ["node", "rank"]
-        assert out.count() == 0
+    out = pagerank_fixedpoint(edges, iters=3)
+    assert out.columns == ["node", "rank"]
+    assert out.count() == 0
 
 
 def test_minhash_indexed_probe_matches_query_time_path(spark, sf_dir, tmp_path):
@@ -2004,7 +1966,7 @@ def test_minhash_append_heal_replays_torn_swap(spark, sf_dir, tmp_path):
     """A crash after the append manifest commit but mid-moves leaves
     staged parquet invisible to readers; the next probe's heal loop
     must finish the swap before reading, so answers equal the fresh
-    build's — the targeted_delete crash-safety discipline."""
+    build's — the sources/index_store crash-safety discipline."""
     import glob
     import json
     import os
@@ -2448,13 +2410,10 @@ def test_two_level_routing_with_all_branches_probed_equals_flat(spark, sf_dir):
     def routes(two_level, coarse_probe=2):
         df = _nearest_cells_arrow(
             src, "id", "v", cents, "centroid_id", "embedding",
-            nprobe=2, with_cos=True, with_rank=True,
+            nprobe=2, with_rank=True,
             two_level=two_level, coarse_probe=coarse_probe,
         )
-        return {
-            (r.id, r.probe_rank): (r.centroid_id, r.cos_sim)
-            for r in df.collect()
-        }
+        return {(r.id, r.probe_rank): r.centroid_id for r in df.collect()}
 
     flat = routes(two_level=False)
     # n_coarse = ceil(sqrt(16)) = 4; probing all 4 branches = flat
@@ -2474,7 +2433,7 @@ def test_nearest_cells_router_exposes_broadcast_handle(spark, sf_dir):
     closure capture — VERDICT r9 wrong #2) and expose the handle for
     caller-side destroy, the knn_self_topk_arrow discipline."""
     from udacity_data_engineering_capstone_project_spark.operators.similarity import (
-        build_ivf_assignments,
+        ivf_topk,
     )
     from udacity_data_engineering_capstone_project_spark.plans.queries_parity import _t
 
@@ -2482,7 +2441,7 @@ def test_nearest_cells_router_exposes_broadcast_handle(spark, sf_dir):
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    out = build_ivf_assignments(emb, cents)
+    out = ivf_topk(emb.filter(F.col("vec_id") < 20), emb, cents)
     bc = getattr(out, "_centroid_broadcast", None)
     assert bc is not None
     ids, mat, norms, members = bc.value

@@ -307,30 +307,3 @@ def test_stream_bitmap_distinct_equals_batch_count_distinct(spark, sf_dir):
         .collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_tws_user_totals_or_documented_gate(spark, sf_dir):
-    """transformWithStateInPandas twin: runs end-to-end where
-    google.protobuf exists; raises the documented gate error where it
-    doesn't (this container). Either way the surface is exercised."""
-    import pytest
-
-    from udacity_data_engineering_capstone_project_spark.streaming.events import (
-        read_events_stream,
-        run_to_completion,
-        stateful_user_totals_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-
-    stream = read_events_stream(spark, sf_dir)
-    if not have_protobuf:
-        with pytest.raises(RuntimeError, match="google.protobuf"):
-            stateful_user_totals_tws(stream)
-        return
-    out = run_to_completion(stateful_user_totals_tws(stream), "update")
-    assert out.count() > 0

@@ -1,13 +1,11 @@
-from .aggregates import distinct_count, group_agg, pivot_wide, rollup_agg  # noqa: F401
+from .aggregates import pivot_wide, rollup_agg  # noqa: F401
 from .cleaning import (  # noqa: F401
-    cast_columns,
     dedup,
     drop_columns,
     drop_null_rows,
     fill_nulls,
-    rename_columns,
 )
 from .joins import asof_join, equi_join, star_join  # noqa: F401
-from .sets import union_by_name, union_distinct  # noqa: F401
-from .sorting import sort_rows, top_k  # noqa: F401
-from .windows import rank_in_group, running_agg, sessionize  # noqa: F401
+from .sets import union_distinct  # noqa: F401
+from .sorting import top_k  # noqa: F401
+from .windows import rank_in_group, sessionize  # noqa: F401

@@ -21,11 +21,6 @@ from ..functions.hashing import spark_hex_to_long
 from ..sources.readers import from_records
 
 
-def group_agg(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
-    """A1/A2/A4: groupBy + aliased aggregates."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def pivot_wide(
     df: DataFrame,
     keys: list[str],
@@ -46,14 +41,6 @@ def pivot_wide(
     if fill is not None:
         out = out.na.fill(fill, subset=[c for c in out.columns if c not in keys])
     return out
-
-
-def distinct_count(df: DataFrame, cols: list[str]) -> int:
-    """A6: exact distinct count over column subset (the reference's
-    key-uniqueness primitive, etl.py:511-536). For monitoring at scale
-    prefer ``approx_count_distinct`` — exact distinct is a full
-    shuffle."""
-    return df.select(*cols).distinct().count()
 
 
 def rollup_agg(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:

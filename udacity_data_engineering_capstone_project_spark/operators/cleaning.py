@@ -8,8 +8,6 @@ reach the parquet scan after composition.
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,20 +37,6 @@ def dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """P7: drop duplicate rows (full-row or key-subset). Physical plan
     is a hash aggregate on the dedup columns."""
     return df.dropDuplicates(subset) if subset else df.dropDuplicates()
-
-
-def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """P14: bulk column cast, ``{col: dtype}``. One ``withColumns`` call
-    (single projection), not a chain of N projections."""
-    return df.withColumns({c: df[c].cast(t) for c, t in casts.items()})
-
-
-def rename_columns(df: DataFrame, renames: Mapping[str, str]) -> DataFrame:
-    """P13: bulk rename ``{old: new}``. The reference chains up to 14
-    ``withColumnRenamed`` calls (etl.py:148-159); this is a single
-    ``withColumnsRenamed`` projection. Prefer aliasing inside ``agg()``
-    where possible — then there is nothing to rename."""
-    return df.withColumnsRenamed(dict(renames))
 
 
 def stratified_sample(

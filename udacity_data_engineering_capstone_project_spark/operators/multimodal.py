@@ -24,14 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # codec libs are optional; plumbing works without them
-    from PIL import Image  # noqa: F401
-
-    HAS_PIL = True
-except ImportError:
-    HAS_PIL = False
-
-
 def attach_payload(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -109,8 +101,7 @@ def decode_image(
     preserved. The decode kernel itself is a clearly-marked
     deterministic fake (``_fake_decode_pixels`` — byte tiling), since
     no image codec ships in this container; swapping in PIL changes
-    ONE local function. ``gated_real_decode`` raises NotImplementedError
-    if the real path is requested without PIL.
+    ONE local function.
     """
     h, w = target_size
 
@@ -140,16 +131,6 @@ def decode_image(
             f"pixels array<float>, mean_px_x1000 long"
         ),
     )
-
-
-def gated_real_decode(*_args, **_kwargs):
-    """The real codec path, import-gated per the container contract."""
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "image decoding requires PIL; not available in this environment. "
-            "decode_image runs the deterministic fake kernel instead."
-        )
-    raise NotImplementedError("real decode path intentionally deferred")
 
 
 def frame_sample(

@@ -87,15 +87,6 @@ def _doc_token_arrays(
     return docs.select(F.col(id_col).alias("doc"), toks.alias("toks"))
 
 
-def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """1-row (n_docs, total_len) — the only corpus-global input BM25
-    needs. Partial-aggregated map-side; broadcast onto scoring."""
-    toks = F.filter(tokens_col(text_col), lambda t: t != F.lit(""))
-    return docs.select(F.size(toks).alias("dl")).agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("total_len")
-    )
-
-
 def _idf(df_col, n_docs_col):
     """Lucene's non-negative BM25 idf: ln(1 + (N - df + .5)/(df + .5))."""
     return F.log(
@@ -132,7 +123,7 @@ def bm25_topk(
     # inline size/explode pair re-tokenizes once per exploded row).
     # r13: the base is localCheckpoint'ed so the corpus is tokenized
     # ONCE — the old shape ran the regex pipeline twice, here for the
-    # postings and again inside corpus_stats (two independent subtrees
+    # postings and again for the corpus statistics (two independent subtrees
     # of one job; they overlap on idle cores but still burn 2x the
     # regex CPU — interleaved A/B: min 1.41 -> 1.33 s at sf0.1).
     # localCheckpoint, not persist: no CacheManager registration, so

@@ -14,11 +14,6 @@ def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.union(b).distinct()
 
 
-def union_by_name(a: DataFrame, b: DataFrame, allow_missing: bool = False) -> DataFrame:
-    """Schema-safe union for everything that isn't replicating U1."""
-    return a.unionByName(b, allowMissingColumns=allow_missing)
-
-
 def intersect_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     """INTERSECT (distinct): positional, null-safe equality. Physical:
     Catalyst rewrites to a left-semi join over distinct rows — one

@@ -6,10 +6,10 @@ Beyond-reference (BASELINE.json north star). Two tiers:
   corpus streams — cost is |Q| x |corpus| dot products, all JVM-side
   higher-order functions. Correct at any scale where |Q| is small;
   the baseline the approximate tier is measured against.
-- IVF (build_ivf_assignments + ivf_topk): partition the corpus into
+- IVF (ivf_topk): partition the corpus into
   Voronoi cells around centroids, then probe only ``nprobe`` cells per
   query — the classic inverted-file ANN layout. At 100 TB the
-  assignment is one broadcast-join pass and search touches
+  assignment is one Arrow routing pass and search touches
   nprobe/ncentroids of the data. Centroid choice here is pluggable
   (callers pass any small centroid DataFrame; tests use a deterministic
   subset — k-means would drop in without changing the dataflow).
@@ -179,33 +179,6 @@ def cosine_arrow_udf():
         return pd.Series(np.floor(cos * 1e4 + 0.5) / 1e4)
 
     return cos_r_arrow.asNondeterministic()
-
-
-def _seq_dot_mat(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Pairwise dot matrix between the rows of ``a`` (q x d) and ``b``
-    (c x d) with EXACT left-fold (sequential) per-element add order —
-    bit-identical to ``np.cumsum(a[:,None,:] * b[None,:,:],
-    axis=2)[:,:,-1]`` (the rounding contract shared with DuckDB's
-    sequential accumulation; np.matmul/BLAS uses pairwise/blocked sums
-    and is NOT bit-equal) — but WITHOUT materializing the q x c x d
-    temporary: a d-step accumulate over one reused q x c buffer. The
-    cumsum form streams q*c*d doubles through DRAM three times (write
-    products, scan cumsum, read the last plane); this form touches
-    2*q*c per step on cache-resident buffers — measured ~4-6x faster
-    at the kernels' chunk sizes, and the temporary no longer scales
-    with dim, which is what let the chunk budgets grow (r9).
-
-    Retained as the ROUNDING-CONTRACT REFERENCE, not the production
-    kernel (VERDICT r10 wrong #4): since round 10 the hot path is
-    :func:`_rounded_cos_mat` (BLAS dots behind the rounding-boundary
-    guard, whose suspect fallback inlines the cumsum form directly) —
-    no production call site routes through this function."""
-    acc = np.outer(a[:, 0], b[:, 0])
-    tmp = np.empty_like(acc)
-    for j in range(1, a.shape[1]):
-        np.outer(a[:, j], b[:, j], out=tmp)
-        acc += tmp
-    return acc
 
 
 def _chunk_topk_excluding_self(
@@ -402,8 +375,8 @@ def ivf_self_topk_arrow(
       semantic_dedup_k way, so per-cell population stays bounded);
     - ONE ``mapInPandas`` pass routes each vector to its ``nprobe``
       probe cells and marks the rank-1 cell as its MEMBERSHIP cell
-      (identical semantics to :func:`build_ivf_assignments`: max
-      rounded cosine, centroid id breaks ties);
+      (the :func:`ivf_topk` membership rule: max rounded cosine,
+      centroid id breaks ties);
     - candidate generation is ``groupBy(cell).applyInPandas``: a
       shuffle keyed on centroid_id, then BLOCKED vectorized dots
       between the cell's probers and members inside each task — the
@@ -506,28 +479,6 @@ def ivf_self_topk_arrow(
     return out
 
 
-def ivf_cells_scaled(n: int, min_cells: int = 8) -> int:
-    """Corpus-scaled IVF cell count, the FAISS nlist rule:
-    ``cells = max(min_cells, ceil(sqrt(n)))``. sqrt — not n/const —
-    because BOTH phases of an IVF pass grow with the dial: routing
-    costs ``n * cells * dim`` FLOPs and the per-cell phase costs
-    ``n * (n / cells) * nprobe * dim``; they balance at cells ~ sqrt(n),
-    where each is O(n^1.5 * dim). The round-8 dial (cells = n/2048)
-    pinned the per-cell phase linear but let ROUTING grow as
-    n^2*dim/2048 — the 1000x run measured it (ann_hubness_audit_ivf
-    306 s at 2M vectors, VERDICT r8 wrong #3); a quadratic hidden in
-    the dial is the same fixture-size-blind class as a pinned cell
-    count (round 6: SemDeDup k; round 7: SRP width), caught one decade
-    later. Derived-from-count(*) and replayable by a static oracle on
-    both engines: Python ``ceil(sqrt(n))`` here, DuckDB
-    ``CEIL(SQRT(count(*)))`` in the oracle — IEEE double sqrt is
-    exactly rounded and n < 2^52 is exact in double, so the two ceils
-    agree bit-for-bit."""
-    import math
-
-    return max(min_cells, math.ceil(math.sqrt(max(int(n), 0))))
-
-
 def ivf_cells_bounded(n: int, pop: int = 512, min_cells: int = 8) -> int:
     """Bounded-POPULATION IVF cell count: ``cells = max(min_cells,
     ceil(n / pop))`` — cells hold ~``pop`` vectors at any corpus size,
@@ -543,7 +494,8 @@ def ivf_cells_bounded(n: int, pop: int = 512, min_cells: int = 8) -> int:
     n^0.5 routing term takes a third level — or a graph router, as
     SPANN's SPTAG — at later decades, not a re-dial).
 
-    Versus :func:`ivf_cells_scaled` (sqrt rule): sqrt is OPTIMAL for
+    Versus the FAISS sqrt rule (``max(min_cells, ceil(sqrt(n)))``,
+    both IVF phases balanced at O(n^1.5 * dim)): sqrt is OPTIMAL for
     flat routing — both phases O(n^1.5) — and stays the dial wherever
     routing is flat; bounded-pop + two-level dominates it everywhere
     the hierarchy is available (at 2M vectors: ~1200 vs ~4250
@@ -882,8 +834,8 @@ def _rounded_cos_mat(m: np.ndarray, m_norms: np.ndarray, c_mat: np.ndarray,
     """Rounded cosine matrix between row blocks, BIT-EQUAL to the
     left-fold contract at BLAS speed (round 10).
 
-    The r8-r9 shape ran :func:`_seq_dot_mat` — a d-step outer-product
-    fold that preserves the exact left-fold add order but does ~2
+    The r8-r9 shape ran a d-step outer-product fold that preserves
+    the exact left-fold add order but does ~2
     element-ops per 24 bytes of accumulator traffic: measured 20x
     slower than ``np.matmul`` per group, and DRAM-bandwidth-bound
     under 32 concurrent workers (the box has ~4 cores' worth of
@@ -967,7 +919,7 @@ def _two_level_plan(
 #: risks a driver OOM that surfaces as an opaque JVM failure. Raising
 #: with the named successors is the scale-honest behavior (VERDICT r11
 #: #3); callers who genuinely want a sub-linear cell count can switch
-#: the dial to `ivf_cells_scaled` (sqrt rule) which stays under this
+#: the dial to the sqrt rule (``ceil(sqrt(n))`` cells) which stays under this
 #: budget past 1e12 vectors at dim 64.
 _ROUTING_PLAN_MAX_BYTES = 256 << 20
 
@@ -1065,7 +1017,7 @@ def _centroid_routing_plan(
                 "At this corpus size the collect-and-broadcast router "
                 "needs a third routing level / graph router (see "
                 "ivf_cells_bounded docstring), or switch the cell dial "
-                "to ivf_cells_scaled (sqrt rule) which keeps the "
+                "to the sqrt rule (ceil(sqrt(n)) cells), which keeps the "
                 "centroid table sub-budget."
             )
         rows = sorted(cent.collect(), key=lambda r: r["centroid_id"])
@@ -1097,16 +1049,15 @@ def _nearest_cells_arrow(
     vec_col: str,
     nprobe: int,
     keep_vec: bool = False,
-    with_cos: bool = False,
     with_rank: bool = False,
     two_level: bool = False,
     coarse_probe: int = 2,
     plan=None,
 ) -> DataFrame:
     """Top-``nprobe`` nearest centroid cells per input row — the shared
-    routing kernel behind :func:`build_ivf_assignments`, the probe
-    phase of :func:`ivf_topk` / :func:`ivf_topk_from_index`, and the
-    self-kNN routing of :func:`ivf_self_topk_arrow`.
+    routing kernel behind the membership and probe phases of
+    :func:`ivf_topk` and the self-kNN routing of
+    :func:`ivf_self_topk_arrow`.
 
     The r1-r8 shape was ``crossJoin(broadcast(cent))`` + a
     ``row_number`` window: n x cells ROWS materialized and shuffled on
@@ -1120,9 +1071,9 @@ def _nearest_cells_arrow(
     DataFrame's ``_centroid_broadcast`` for caller-side destroy, the
     knn_self_topk_arrow discipline), dots come from the blocked
     left-fold-exact cosine kernel (_rounded_cos_mat: BLAS dots + the
-    boundary guard — bit-equal to _seq_dot_mat's fold), and only the
-    winning (row, cell)
-    pairs leave the kernel — zero shuffle, zero n x cells relation.
+    boundary guard — bit-equal to the sequential left fold), and only
+    the winning (row, cell) pairs leave the kernel — zero shuffle,
+    zero n x cells relation.
 
     ``two_level=True`` routes HIERARCHICALLY (VERDICT r9 #1): each row
     first ranks the ``ceil(sqrt(n_cells))`` coarse centroids (the
@@ -1162,16 +1113,14 @@ def _nearest_cells_arrow(
         )
     bc, n_cells, n_coarse, w_coarse, use_two_level = plan
     npb = int(nprobe)
-    # ~32 MB working set (the _seq_dot_mat accumulator is rows x width).
+    # ~32 MB working set (the cosine matrix is rows x width).
     # Width differs by path: flat = n_cells; two-level = n_coarse plus
     # the per-signature candidate axis (~coarse_probe * cells/coarse) —
     # budgeting the two-level path on the FLAT width would shrink
     # chunks ~cells/(3*sqrt(cells))-fold, fragmenting the branch-
     # signature groups into near-single-row matrices (per-group Python
-    # overhead swamps the dots at high cell counts). with_cos under
-    # two-level allocates a rows x n_cells gather buffer, so that
-    # combination keeps the flat budget.
-    if use_two_level and not with_cos:
+    # overhead swamps the dots at high cell counts).
+    if use_two_level:
         eff_width = n_coarse + int(coarse_probe) * max(
             1, -(-n_cells // n_coarse)
         )
@@ -1181,8 +1130,6 @@ def _nearest_cells_arrow(
     cent_block = max(1, min(n_cells, (4 << 20) // row_chunk))
 
     fields = [f"{id_name} long", "centroid_id long"]
-    if with_cos:
-        fields.append("cos_sim double")
     if with_rank:
         fields.append("probe_rank int")
     if keep_vec:
@@ -1192,7 +1139,7 @@ def _nearest_cells_arrow(
     def route(batches):
         cent_ids, cent_mat, cent_norms, members = bc.value
 
-        def emit(ids_chunk, vs_chunk, sel, cos_rows):
+        def emit(ids_chunk, vs_chunk, sel):
             # sel: (rows x <=npb) fine-centroid indices, -1 = padding
             valid = sel >= 0
             ridx = np.repeat(np.arange(sel.shape[0]), sel.shape[1])[
@@ -1203,8 +1150,6 @@ def _nearest_cells_arrow(
                 id_name: ids_chunk[ridx],
                 "centroid_id": cent_ids[cidx],
             }
-            if with_cos:
-                data["cos_sim"] = cos_rows[ridx, cidx]
             if with_rank:
                 ranks = np.broadcast_to(
                     np.arange(1, sel.shape[1] + 1, dtype=np.int32),
@@ -1232,7 +1177,7 @@ def _nearest_cells_arrow(
                         sel = np.argmax(cos, axis=1)[:, None]
                     else:
                         sel = np.argsort(-cos, axis=1, kind="stable")[:, :npb]
-                    yield emit(ids_all[s:e], vs_all[s:e], sel, cos)
+                    yield emit(ids_all[s:e], vs_all[s:e], sel)
                     continue
                 # two-level: rank coarse branches, then only their fine
                 # members. Rows sharing a branch SIGNATURE batch into
@@ -1249,11 +1194,6 @@ def _nearest_cells_arrow(
                 uniq, inv = np.unique(sig, axis=0, return_inverse=True)
                 inv = inv.ravel()  # numpy 2.1 returns (rows, 1) with axis=0
                 sel = np.full((e - s, npb), -1, dtype=np.int64)
-                cos_full = (
-                    np.full((e - s, n_cells), -2.0, dtype=np.float64)
-                    if with_cos
-                    else None
-                )
                 for g in range(len(uniq)):
                     rows_all = np.nonzero(inv == g)[0]
                     cand = np.concatenate([members[b] for b in uniq[g]])
@@ -1274,11 +1214,7 @@ def _nearest_cells_arrow(
                             -cos_g, axis=1, kind="stable"
                         )[:, :take]
                         sel[rows_g, :take] = cand[loc]
-                        if cos_full is not None:
-                            cos_full[
-                                np.repeat(rows_g, take), cand[loc].ravel()
-                            ] = np.take_along_axis(cos_g, loc, axis=1).ravel()
-                yield emit(ids_all[s:e], vs_all[s:e], sel, cos_full)
+                yield emit(ids_all[s:e], vs_all[s:e], sel)
 
     out = df.mapInPandas(route, out_schema)
     out = out.withColumn(
@@ -1286,33 +1222,6 @@ def _nearest_cells_arrow(
     ).withColumn(id_name, F.col(id_name).cast(id_type))
     out._centroid_broadcast = bc  # caller-side lifetime (see docstring)
     return out
-
-
-def build_ivf_assignments(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    two_level: bool = False,
-) -> DataFrame:
-    """IVF build: assign every corpus vector to its nearest centroid
-    (max cosine; centroid id breaks ties) — one Arrow routing pass
-    over the corpus (:func:`_nearest_cells_arrow`), no n x cells
-    relation, no shuffle. Output: (vec_id, centroid_id, cos_sim),
-    values bit-identical to the crossJoin + window shape it replaces.
-    ``two_level=True`` routes hierarchically (see
-    :func:`_nearest_cells_arrow`) — pair it with the
-    :func:`ivf_cells_bounded` dial when the cell count outgrows flat
-    routing; assignment then lands in the best fine cell of the top-2
-    coarse branches (the deployment's serving geometry)."""
-    c = _with_double_vec(corpus, vec_col, "cv").select(
-        F.col(id_col).alias("vec_id"), "cv"
-    )
-    return _nearest_cells_arrow(
-        c, "vec_id", "cv", centroids, centroid_id_col, vec_col,
-        nprobe=1, keep_vec=False, with_cos=True, two_level=two_level,
-    )
 
 
 def ivf_topk(
@@ -1333,8 +1242,8 @@ def ivf_topk(
     corpus. Output: (query_id, neighbor_id, cos_sim, rank).
 
     Candidate scoring is IN-KERNEL (round 9): members (one routing
-    pass, nprobe=1 — identical to :func:`build_ivf_assignments`) and
-    probers (nprobe cells per query) are unioned into ONE
+    pass, nprobe=1: each vector's nearest cell, centroid id breaking
+    ties) and probers (nprobe cells per query) are unioned into ONE
     centroid-keyed shuffle, and a ``groupBy(cell).applyInPandas``
     kernel computes the blocked left-fold dots per cell — the shuffle
     carries each vector nprobe(+1) times and only
@@ -1770,8 +1679,6 @@ def pq_topk(
 
     ``queries`` must be small (collected to build LUTs).
     """
-    from pyspark.sql.functions import pandas_udf
-
     books = np.asarray(codebooks)
     m, kk, dsub = books.shape
     qrows = (
@@ -1834,95 +1741,6 @@ def pq_topk(
     return rer.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
-
-
-def write_ivf_index(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the IVF index on disk: every corpus vector stored
-    WITH its double-precision embedding, parquet-partitioned by
-    assigned centroid — the build-once / serve-many ANN layout. A
-    serving query that probes ``nprobe`` cells then reads ONLY those
-    directories (partition pruning), i.e. nprobe/|cells| of the corpus
-    bytes, without any index service beside the file system. Rebuild
-    is a one-pass job; incremental batches append their own
-    assignments into the same partition scheme.
-    """
-    assigned = build_ivf_assignments(
-        corpus, centroids, id_col, vec_col, centroid_id_col
-    ).select("vec_id", "centroid_id")
-    vecs = _with_double_vec(corpus, vec_col, "cv").select(
-        F.col(id_col).alias("vec_id"), "cv"
-    )
-    assigned.join(vecs, "vec_id").write.partitionBy("centroid_id").mode(
-        mode
-    ).parquet(path)
-
-
-def ivf_topk_from_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Serve top-k from a :func:`write_ivf_index` layout. The probed
-    cell set (<= |queries| * nprobe ids — bounded driver state) is
-    collected and pushed as a STATIC partition filter, so the parquet
-    scan's ``PartitionFilters`` prunes every unprobed cell directory
-    before a single byte is read (asserted in tests). Results are
-    identical to the in-memory flat-routed :func:`ivf_topk` for the
-    same centroids (the build assigns by flat routing). At very large
-    query batches, skip the collect and let dynamic partition pruning
-    do the same from the broadcast join.
-    """
-    q = _with_double_vec(queries, vec_col, "qv").select(
-        F.col(id_col).alias("query_id"), "qv"
-    )
-    probes_raw = _nearest_cells_arrow(
-        q, "query_id", "qv", centroids, centroid_id_col, vec_col,
-        nprobe=nprobe, keep_vec=True,
-    )
-    probes = probes_raw.select("query_id", "qv", "centroid_id")
-    cells = sorted(
-        r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()
-    )
-    index = spark.read.parquet(index_path).filter(
-        F.col("centroid_id").isin(cells)
-    )
-    candidates = index.join(F.broadcast(probes), "centroid_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    out = (
-        candidates.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_cols(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cos_sim").desc(), F.col("neighbor_id")
-                )
-            ),
-        )
-        .filter(F.col("rank") <= k)
-    )
-    # the broadcast join above re-runs the routing pass at action time,
-    # so the handle must outlive the final action (ADVICE r10)
-    out._centroid_broadcast = probes_raw._centroid_broadcast
-    return out
 
 
 def int8_quantize_stats(
@@ -2041,7 +1859,7 @@ def semantic_dedup_trained(
         # rka < rkb self-JOIN whose pair relation carries TWO dim-sized
         # vectors per row — O(pop^2) rows x ~1 KB of Arrow traffic per
         # cluster (the 1000x run measured 683 s mostly serializing it);
-        # here the same pairwise rounded cosines come from _seq_dot_mat
+        # here the same pairwise rounded cosines come from _rounded_cos_mat
         # on the cluster's pop x dim matrix (bit-identical left-fold
         # dots, same floor rounding as cosine_arrow_udf), blocked to
         # the ~32 MB budget, and only (vid, dropped) rows leave the

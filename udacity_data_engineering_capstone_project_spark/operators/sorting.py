@@ -11,11 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def sort_rows(df: DataFrame, *cols, ascending=True) -> DataFrame:
-    """O1/O2: global sort by one or more keys."""
-    return df.orderBy(*cols, ascending=ascending)
-
-
 def top_k(df: DataFrame, k: int, *order_cols) -> DataFrame:
     """Top-k: orderBy + limit. ``order_cols`` carry their own
     direction (``col.desc()`` / ``col.asc()``); pass a unique

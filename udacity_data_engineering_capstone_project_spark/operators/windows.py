@@ -28,22 +28,6 @@ def rank_in_group(
     return df.withColumn(out_col, fn().over(w))
 
 
-def running_agg(
-    df: DataFrame,
-    partition_by: list[str],
-    order_by: list[Column],
-    agg_col: Column,
-    out_col: str,
-) -> DataFrame:
-    """Running aggregate over unbounded-preceding..current frame."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(out_col, agg_col.over(w))
-
-
 def sessionize(
     df: DataFrame,
     key: str,

@@ -29,7 +29,7 @@ from ..operators.cleaning import dedup, drop_columns, drop_null_rows, fill_nulls
 from ..operators.joins import asof_join, equi_join, salted_join, star_join
 from ..operators.sets import except_distinct, intersect_distinct, union_distinct
 from ..operators.sorting import top_k
-from ..operators.windows import rank_in_group, sessionize
+from ..operators.windows import rank_in_group
 from ..plans.quality import (
     nonempty_check,
     orphan_fk_check,

@@ -4,22 +4,11 @@ Consumed by ``__spark_entry__.py`` (the driver contract) and by
 ``bench.py``/tests. Every entry is (spark_fn, oracle_sql|None, note).
 
 ORDERING CONTRACT: the driver's per-round CORRECTNESS file records only
-the FIRST 50 registry entries, so insertion order is rotated each round
-to maximize driver-recorded coverage across rounds (VERDICT r1 #1):
-
-- round 1 recorded the 43 parity queries + the first 7 SQL queries;
-- round 2 recorded the new/changed queries + the LLM tier through
-  ``quality_filter_reasons`` (48 full green + 2 rows-only);
-- round 3 led with that round's 28 new/changed queries, then 22 of the
-  never-driver-recorded queries;
-- round 4 leads with the 16 queries STILL never driver-recorded after
-  r1+r2+r3 (VERDICT r3 #1 — the hand-kept rotation notes undercounted
-  these at 10; the true list is computed by ``tools/ledger.py``, which
-  unions every CORRECTNESS file against this registry and replaces
-  hand accounting), then round-4 new/changed queries, then re-records
-  of the oldest rows (round-1-only parity/SQL entries, oldest first).
-Every query not in the current window stays verified by
-``tools/oracle_check.py`` (run per-round, see NOTES.md).
+the FIRST 50 registry entries, so ``_WINDOW`` names those 50 in order;
+every other query follows in tier order (parity, SQL, LLM). Queries
+outside the window stay verified by ``tools/oracle_check.py``.
+``tools/ledger.py`` unions the CORRECTNESS files against this registry
+to pick the next window (oldest driver rows first).
 """
 
 from __future__ import annotations
@@ -30,763 +19,19 @@ from .queries_sql import SQL_QUERIES
 
 _MERGED: dict = {**PARITY_QUERIES, **SQL_QUERIES, **LLM_QUERIES}
 
-#: Round-3 window, in priority order (NOTES.md "Round-3 registry
-#: rotation plan"): (1) queries new to or changed in round 3 — each
-#: needs a fresh driver-recorded row; (2) the 32 queries NEVER
-#: driver-recorded in r1/r2 (14 pushed out of r2's window, 12
-#: SQL-tier, 6 demoted rows-only); (3) remaining slots re-record the
-#: most load-bearing round-2 entries.
-#:
-#: Round-4 window (``tools/ledger.py`` output, not hand accounting —
-#: VERDICT r3 #1: the hand-kept notes undercounted the never-recorded
-#: tier at 10; the true list was 16): (1) the 16 queries never
-#: driver-recorded across r1+r2+r3 — 10 full-oracle, then 6
-#: rows-only/diagnostic; (2) queries new to or changed in round 4;
-#: (3) re-records of the oldest rows (round-1-only entries).
-#: Round-5 window (built from ``python tools/ledger.py --ages`` at the
-#: start of round 5 — all 164 queries have driver rows after r4, so the
-#: window is (1) queries new to or changed in round 5, then (2) the
-#: oldest-recorded rows, last_round ascending / name tie-break: the 23
-#: round-1-only rows the r4 backfill couldn't fit, then the oldest
-#: round-2 rows alphabetically through ``jaccard_pairs_exact``.
-#: Round-6 window (built from ``python tools/ledger.py --ages`` at the
-#: start of round 6, per NOTES.md round-6 guidance and VERDICT r5 #4):
-#: (1) queries new to or changed in round 6; (2) the 40 rows whose only
-#: driver record is round 2 (alphabetical — the r2-only remainder the
-#: r5 head displaced); (3) remaining slots go to the oldest r3 rows.
-_NEW_OR_CHANGED_R6 = [
-    "tpch_q21_waiting",  # new: the last TPC-H shape, derived-dates CTE
-    "pagerank_near_dup",  # promoted: x1e12 fixed point, chained-CTE oracle
-    "trigram_search_indexed",  # new: persisted-index serving twin
-    "aqp_revenue_from_sample",  # new: materialized-sample estimator
-    "pipeline_observed_metrics",  # new: observe() scan metrics
-    "bitext_mining_pairs",  # new: cross-lingual margin mining
-    "bpe_train_merges",  # promoted: chained-CTE training-loop oracle
-    "semantic_dedup_flags",  # new: SemDeDup cluster-then-prune
-    "bucketed_join_colocated",  # new: exchange-free bucket-co-located SMJ
-    "zorder_box_serve",  # new: 2-D box served from the Z-ordered copy
-    "embedding_top_pc_power",  # new: integer power iteration, CTE replay
-    "incremental_join_agg",  # new: join-agg MV refresh by delta-join merge
-    "dpp_partitioned_join",  # new: runtime dynamic partition pruning
-    "join_size_estimate_sketch",  # new: sketch-based join cardinality
-    "schema_evolution_union",  # new: mergeSchema read across eras
-    "ann_truncated_dim_recall",  # new: Matryoshka truncation audit
-    "psi_price_drift",  # new: PSI drift gate between ingest eras
-    "leakage_safe_split",  # new: split by near-dup cluster, crossing audit
-    "copurchase_pairs",  # new: market-basket 2-itemset mining with lift
-    "random_walk_corpus",  # new: deterministic DeepWalk-style walks
-    "bitext_mining_ivf",  # new: linear-scale bitext mining via IVF cells
-    # (semantic_dedup_flags also changed this wave — corpus-scaled k,
-    # was pinned 8 — and already sits at the head from wave 2)
-    "khop_contamination_radius",  # new: Spark 4 recursive-CTE k-hop walk
-]
-_OLDEST_R6 = [
-    # last driver row r2 (age 3), alphabetical:
-    "canonical_docs",
-    "cohort_retention",
-    "corpus_split_stats",
-    "decontaminate_overlap",
-    "dedup_components",
-    "dedup_exact",
-    "doc_surprisal",
-    "embedding_near_dup",
-    "event_transitions",
-    "ewma_user_value",
-    "funnel_counts",
-    "fuzzy_name_pairs",
-    "gap_fill_daily",
-    "group_quantiles",
-    "iqr_outlier_orders",
-    "jaccard_pairs_capped",
-    "jaccard_pairs_exact",
-    "lang_id",
-    "lang_id_ngram",
-    "map_entries_pivot",
-    "minhash_band_sweep",
-    "mixture_sample_stats",
-    "near_dup_triangles",
-    "ntile_deciles",
-    "orders_drift_diff",
-    "pii_redaction_stats",
-    "pit_interval_join",
-    "pmi_collocations",
-    # (cms_token_estimates, containment_pairs_directed,
-    # bloom_prefilter_decontaminate and array_vector_stats displaced
-    # as pipeline_observed_metrics, bitext_mining_pairs, the promoted
-    # bpe_train_merges and semantic_dedup_flags joined the head; then
-    # ann_hard_negatives, ann_pq_recall, weighted_group_sample,
-    # weighted_doc_sample, upsert_user_snapshot, udtf_flatten_props,
-    # text_punct_stopword, stream_static_join, simhash_fingerprints,
-    # sequence_packing, scd2_user_status, repetition_scores,
-    # quality_filter_reasons and profile_orders as the
-    # third..seventh-wave
-    # bucketed_join_colocated, zorder_box_serve,
-    # embedding_top_pc_power, incremental_join_agg,
-    # dpp_partitioned_join, join_size_estimate_sketch,
-    # schema_evolution_union, ann_truncated_dim_recall,
-    # psi_price_drift, leakage_safe_split, copurchase_pairs,
-    # random_walk_corpus, bitext_mining_ivf and
-    # khop_contamination_radius joined it; the window stays exactly
-    # 50)
-]
-
-#: ---- Round-5 ordering (superseded; kept for provenance) ----
-_NEW_OR_CHANGED_R5 = [
-    # new queries (r5):
-    "hybrid_rrf_retrieval",
-    "token_entropy_quality",
-    "per_source_entropy_buckets",
-    "distinctive_terms_by_source",
-    "tpch_q2_mincost",
-    "tpch_q16_supplier_counts",
-    "tpch_q20_surplus",
-    "trigram_search_like",
-    "cluster_topic_terms",
-    "source_dup_overlap_matrix",
-    "int8_quant_error",
-    "variant_props_rollup",
-    "custom_pyds_scan",
-    "event_pattern_counts",
-    "aqp_revenue_estimate",
-    "join_key_skew_audit",
-    # promoted from rows-only to full chained-CTE replay oracles (r5):
-    "kmeans_assign",
-    "ivf_trained_recall",
-    # verification-guard fusion (VERDICT r4 #4) changed these plans:
-    "minhash_pairs",
-    "jaccard_pairs_prefix_filter",
-    "incremental_dedup_probe",
-    # tokenize-once-below-Generate fix (r5) changed these plans:
-    "bm25_search_topk",
-    "tfidf_doc_keywords",
-]
-_OLDEST_R5 = [
-    "cast_derive",
-    "daily_agg",
-    "date_dim",
-    "date_funcs",
-    "dedup_rows",
-    "distinct_counts",
-    "drop_columns",
-    "filter_compound",
-    "group_minmax_avg",
-    "join_inner_agg",
-    "join_left_agg",
-    "null_handling",
-    "order_gaps_surrogate",
-    "pivot_status",
-    "pruned_scan",
-    "range_join_tiers",
-    "rename_project",
-    "scalar_funcs",
-    "season_agg",
-    "spot_lookup",
-    "string_funcs",
-    "topk_orders",
-    "union_distinct_dates",
-    "ann_recall_sweep",
-    "ann_topk_bruteforce",
-    "ann_topk_ivf",
-    "asof_forward_tolerance",
-    "bm25_search_topk",
-    "canonical_docs",
-    "cohort_retention",
-    "corpus_split_stats",
-    # (embedding_near_dup / event_transitions / ewma_user_value / funnel_counts / fuzzy_name_pairs / gap_fill_daily /
-    # group_quantiles / iqr_outlier_orders / jaccard_pairs_capped /
-    # jaccard_pairs_exact slipped out of the 50-row window as new r5
-    # queries took its head; all stay verified by the full per-round
-    # oracle gate)
-]
-
-#: ---- Round-4 ordering (superseded; kept for provenance) ----
-_NEVER_RECORDED_R4 = [
-    # full-oracle tier (hash-match expected):
-    "tpch_q18_large",
-    "tpch_q19_bands",
-    "lateral_topk_per_nation",
-    "grouping_sets_orders",
-    "text_quality",
-    "mad_by_event_type",
-    "user_value_trend",
-    "incremental_user_totals",
-    "stream_dedup",
-    "stream_stream_join",
-    # rows-only/diagnostic tier (each pytest-pinned):
-    "stream_user_totals",
-    "kmeans_assign",
-    "ivf_trained_recall",
-    "shingle_df_hist",
-    "pagerank_near_dup",
-    "bpe_train_merges",
-]
-
-#: Queries new to or changed in round 4 — each needs a fresh
-#: driver-recorded row. Grown as the round progresses; the ledger
-#: script is the check that nothing falls through.
-_NEW_OR_CHANGED_R4 = [
-    "bpe_fertility",  # r3's one no_oracle row — see queries_llm for the fix
-    # ADVICE-r3 code changes (DIV word index; byte-aware broadcast guard):
-    "bitmap_distinct_users",
-    "bitmap_weekly_retention",
-    "stream_bitmap_distinct",
-    "minhash_pairs",
-    "jaccard_pairs_prefix_filter",
-    "incremental_dedup_probe",
-]
-
-#: Re-record backfill: round-1-only rows, oldest first (VERDICT r3 #6
-#: names tpch_q4/q7/q8/q11 + the windows family as most load-bearing).
-_RERECORD_R4 = [
-    "tpch_q4_exists",
-    "tpch_q7_volume",
-    "tpch_q8_share",
-    "tpch_q11_having",
-    "tpch_q17_scalar",
-    "window_topk_per_group",
-    "window_value_functions",
-    "window_distribution_orders",
-    "rolling_window_orders",
-    "rollup_flag_status",
-    "cube_status_priority",
-    "salted_join_priority_revenue",
-    "star_join_agg",
-    "quality_checks",
-    "tpch_q1",
-    "tpch_q3_sql",
-    "tpch_q5_sql",
-    "median_price",
-    "asof_join_events",
-    "json_extract_agg",
-    "approx_distinct_check",
-    "collect_sorted_names",
-    "full_outer_nation_balance",
-    "intersect_except_buyers",
-    "join_semi_anti",
-    "map_funcs",
-    "unpivot_status",
-    "season_agg",
-    "order_gaps_surrogate",
-    "date_funcs",
-    "scalar_funcs",
-    "string_funcs",
-    "group_minmax_avg",
-    "distinct_counts",
-]
-
-#: ---- Round-3 ordering (superseded; kept for provenance) ----
-_NEW_OR_CHANGED_R3 = [
-    # new in round 3, fourth wave:
-    "kmv_user_overlap",
-    "cross_doc_dup_spans",
-    "jaccard_pairs_prefix_filter",
-    "span_dedup_clean_text",
-    # new in round 3, third wave (fixed-size mergeable structures):
-    "bloom_prefilter_decontaminate",
-    "bitmap_distinct_users",
-    "embedding_covariance",
-    "stream_sessionize",
-    "histogram_quantile_rollup",
-    "bitmap_weekly_retention",
-    "doc_chunk_windows",
-    "epoch_shuffle_audit",
-    "stream_bitmap_distinct",
-    "stream_hourly_counts",  # gained a full oracle (watermark closure)
-    # new in round 3 (curation-tier additions):
-    "containment_pairs_directed",
-    "semantic_dedup_clusters",
-    "ann_hard_negatives",
-    "vocab_coverage_curve",
-    "domain_mixture_plan",
-    "bpe_fertility",
-    "soft_dedup_doc_weights",
-    "cms_token_estimates",
-    "doc_bigram_perplexity",
-    "repeated_ngram_spans",
-    "dsir_src0_importance",
-    "quality_linear_score",
-    # changed this round (see VERDICT r2 next-steps #2, #4, #5, #6):
-    "hll_sketch_rollup",  # + exact countDistinct companion column
-    "ann_pq_recall",  # + exact re-rank neighbor-id companion column
-]
-#: Changed in r3 but already full-green in r2 and result-identical
-#: (hint drop / null contract): re-record AFTER the never-recorded
-#: tier so the window stays exactly 50 first-record rows.
-_CHANGED_LOW_PRIORITY = [
-    "dedup_components",  # large-star rewrite: chain-of-1000 + union-find pytests
-    "doc_surprisal",
-    "ewma_user_value",
-]
-#: Never driver-recorded: pushed out of r2's window by late additions.
-_UNRECORDED_LLM = [
-    "text_profile_fused",
-    "token_stats_by_source",
-    "doc_fingerprint",
-    "subword_token_stats",
-    "winnow_fingerprints",
-    "multimodal_features",
-    "events_hourly",
-    "sessionize_events",
-    "events_sliding_window",
-    "events_trailing_hour",
-    "corpus_curation",
-    "stratified_doc_sample",
-    "heavy_hitter_tokens",
-    "array_vector_stats",
-]
-#: Never driver-recorded: SQL tier (r1 recorded only the first 7).
-_UNRECORDED_SQL = [
-    "tpch_q22_anti",
-    "tpch_q6_scan",
-    "tpch_q9_profit",
-    "tpch_q10_returns",
-    "tpch_q12_priority",
-    "tpch_q13_histogram",
-    "tpch_q14_promo",
-    "tpch_q15_top",
-    "tpch_q18_large",
-    "tpch_q19_bands",
-    "lateral_topk_per_nation",
-    "grouping_sets_orders",
-]
-#: Never driver-recorded: demoted rows-only/diagnostic entries (each
-#: pytest-pinned; the driver row is still worth having on record).
-_UNRECORDED_DEMOTED = [
-    "stream_user_totals",
-    "kmeans_assign",
-    "ivf_trained_recall",
-    "shingle_df_hist",
-    "pagerank_near_dup",  # dangling-mass fold-in also changed it (r3)
-    "bpe_train_merges",
-]
-#: Backfill: most load-bearing round-2 entries, re-recorded with the
-#: slots the 37 rows above leave free in the 50-row window.
-_RERECORD = [
-    "jaccard_pairs_capped",
-    "minhash_pairs",
-    "bm25_search_topk",
-    "incremental_dedup_probe",
-    "embedding_near_dup",
-    "sequence_packing",
-    "decontaminate_overlap",
-    "scd2_user_status",
-    "pit_interval_join",
-    "pii_redaction_stats",
-    "stream_static_join",
-    "jaccard_pairs_exact",
-    "dedup_exact",
-]
-
-_PRIORITY_R3 = [
-    *_NEW_OR_CHANGED_R3,
-    *_UNRECORDED_LLM,
-    *_UNRECORDED_SQL,
-    *_CHANGED_LOW_PRIORITY,
-    *_UNRECORDED_DEMOTED,
-    *_RERECORD,
-]
-
-#: Round-7 window (built from ``python tools/ledger.py --ages`` at the
-#: start of round 7 — after r6 the backlog is 12 r2-age rows + 45
-#: r3-age rows): (1) queries new to or changed in round 7; (2) ALL 12
-#: remaining rows whose last driver record is round 2 (this clears the
-#: r2 tier for good); (3) the oldest r3 rows alphabetically, filling
-#: the window to exactly 50.
-_NEW_OR_CHANGED_R7 = [
-    "minhash_pairs_indexed",  # new: persisted MinHash-LSH index serving twin
-    "stream_user_totals",  # PROMOTED: full oracle via drain==batch-groupBy
-    "lm_stupid_backoff_scores",  # new: held-out Stupid-Backoff LM scoring
-    "shard_plan_balance",  # new: snake-packed shard plan balance audit
-    "ann_hubness_audit",  # new: k-occurrence hubness histogram
-    "retrieval_agreement_rbo",  # new: BM25-vs-dense rank-biased overlap
-    "embedding_near_dup",  # changed: corpus-scaled SRP rows + scalar-r oracle
-    "jaccard_pairs_exact",  # changed plan: sizes ride the shingle stream
-    "jaccard_pairs_capped",  # changed plan: same jaccard_pairs rewrite
-    "containment_pairs_directed",  # changed plan: sizes in the pair agg
-    "minhash_pairs",  # changed: cache-blocked affine kernel
-    "aqp_revenue_estimate",  # changed: CI square through double (100x overflow)
-    "aqp_revenue_from_sample",  # changed: shares the CI fix
-    "join_size_estimate_sketch",  # changed: under-collect raise guard
-    "pipeline_observed_metrics",  # changed: NULL-group coalesce sentinel oracle
-    "pagerank_near_dup",  # changed: empty-edge guard (output unchanged)
-]
-_R2_TAIL_R7 = [
-    # last driver row r2 (age 5), alphabetical — the final r2 rows:
-    "profile_orders",
-    "quality_filter_reasons",
-    "repetition_scores",
-    "scd2_user_status",
-    "sequence_packing",
-    "simhash_fingerprints",
-    "stream_static_join",
-    "text_punct_stopword",
-    "udtf_flatten_props",
-    "upsert_user_snapshot",
-    "weighted_doc_sample",
-    "weighted_group_sample",
-]
-_OLDEST_R3_R7 = [
-    # last driver row r3 (age 4), alphabetical, filling to 50:
-    "ann_hard_negatives",
-    "ann_pq_recall",
-    "array_vector_stats",
-    "bloom_prefilter_decontaminate",
-    "cms_token_estimates",
-    # (containment_pairs_directed moved to the changed head)
-    "corpus_curation",
-    "cross_doc_dup_spans",
-    "doc_bigram_perplexity",
-    "doc_chunk_windows",
-    "doc_fingerprint",
-    "domain_mixture_plan",
-    "dsir_src0_importance",
-    "embedding_covariance",
-    "epoch_shuffle_audit",
-    "events_hourly",
-    "events_sliding_window",
-    "events_trailing_hour",
-    "heavy_hitter_tokens",
-    "histogram_quantile_rollup",
-    "hll_sketch_rollup",
-    "kmv_user_overlap",
-    "multimodal_features",
-    # (quality_linear_score, repeated_ngram_spans, semantic_dedup_clusters,
-    # sessionize_events, soft_dedup_doc_weights, span_dedup_clean_text,
-    # stratified_doc_sample, stream_hourly_counts, stream_sessionize and
-    # subword_token_stats displaced as the round's changed queries
-    # joined the head; the window stays exactly 50)
-]
-
-_seen_r7: set = set()
-_PRIORITY_R7 = [
-    n
-    for n in [*_NEW_OR_CHANGED_R7, *_R2_TAIL_R7, *_OLDEST_R3_R7]
-    if not (n in _seen_r7 or _seen_r7.add(n))
-]
-assert len(_PRIORITY_R7) == 50, len(_PRIORITY_R7)
-
-#: Round-8 window (built from ``python tools/ledger.py --ages`` at the
-#: start of round 8 — after r7 the backlog is 22 r3-age rows + 42
-#: r4-age rows): (1) queries new to or changed in round 8; (2) ALL 22
-#: remaining rows whose last driver record is round 3 (this clears the
-#: r3 tier for good, per VERDICT r7 #4); (3) the oldest r4 rows
-#: alphabetically, filling the window to exactly 50.
-_NEW_OR_CHANGED_R8 = [
-    "ann_hubness_audit_ivf",  # new: hubness over IVF self-kNN (deployment twin)
-    "ann_hubness_audit",  # changed: kernel ships matrix via sc.broadcast
-    "minhash_pairs_indexed",  # changed: probe validates _index_params + heals appends
-    "shard_plan_balance",  # changed: ranged persisted before offsets collect
-    "sequence_packing",  # changed: same persist fix (pack_sequences)
-]
-_R3_TAIL_R8 = [
-    # last driver row r3 (age 5), alphabetical — the final r3 rows:
-    "quality_linear_score",
-    "repeated_ngram_spans",
-    "semantic_dedup_clusters",
-    "sessionize_events",
-    "soft_dedup_doc_weights",
-    "span_dedup_clean_text",
-    "stratified_doc_sample",
-    "stream_hourly_counts",
-    "stream_sessionize",
-    "subword_token_stats",
-    "text_profile_fused",
-    "token_stats_by_source",
-    "tpch_q10_returns",
-    "tpch_q12_priority",
-    "tpch_q13_histogram",
-    "tpch_q14_promo",
-    "tpch_q15_top",
-    "tpch_q22_anti",
-    "tpch_q6_scan",
-    "tpch_q9_profit",
-    "vocab_coverage_curve",
-    "winnow_fingerprints",
-]
-_OLDEST_R4_R8 = [
-    # last driver row r4 (age 4), alphabetical, filling to 50:
-    "approx_distinct_check",
-    "asof_join_events",
-    "bitmap_distinct_users",
-    "bitmap_weekly_retention",
-    "bpe_fertility",
-    "collect_sorted_names",
-    "cube_status_priority",
-    "full_outer_nation_balance",
-    "grouping_sets_orders",
-    "incremental_user_totals",
-    "intersect_except_buyers",
-    "join_semi_anti",
-    "json_extract_agg",
-    "lateral_topk_per_nation",
-    "mad_by_event_type",
-    "map_funcs",
-    "median_price",
-    "quality_checks",
-    "rolling_window_orders",
-    "rollup_flag_status",
-    "salted_join_priority_revenue",
-    "shingle_df_hist",
-    "star_join_agg",
-]
-
-_seen: set = set()
-_PRIORITY_R8 = [
-    n
-    for n in [*_NEW_OR_CHANGED_R8, *_R3_TAIL_R8, *_OLDEST_R4_R8]
-    if not (n in _seen or _seen.add(n))
-]
-assert len(_PRIORITY_R8) == 50, len(_PRIORITY_R8)
-
-#: Round-9 window (built from ``python tools/ledger.py --ages`` at the
-#: start of round 9 — after r8 the backlog is 19 r4-age rows + 48
-#: r5-age rows): (1) queries changed in round 9 (the sqrt IVF/k-means
-#: dials, the Arrow cell router replacing the crossJoin+window routing,
-#: the left-fold dot kernels, the trigram index build/serve fixes);
-#: (2) ALL 19 remaining rows whose last driver record is round 4 (this
-#: clears the r4 tier for good, per VERDICT r8 #8); (3) the oldest r5
-#: rows alphabetically, filling the window to exactly 50.
-_NEW_OR_CHANGED_R9 = [
-    "semantic_dedup_flags",  # changed: k = ceil(sqrt(n)) + in-kernel pair phase
-    "ann_hubness_audit_ivf",  # changed: cells = ceil(sqrt(n)) + left-fold kernels
-    "bitext_mining_ivf",  # changed: sqrt cells + Arrow routing, hint-free probes
-    "ann_topk_ivf",  # changed: ivf_topk routes via _nearest_cells_arrow
-    "ann_recall_sweep",  # changed: same ivf_topk routing
-    "ivf_trained_recall",  # changed: same ivf_topk routing
-    "trigram_search_indexed",  # changed: keyed-repartition build, join-then-normalize serve
-    "ann_hubness_audit",  # changed: knn kernel left-fold dots + broadcast handle
-]
-_R4_TAIL_R9 = [
-    # last driver row r4 (age 5), alphabetical — the final r4 rows:
-    "stream_bitmap_distinct",
-    "stream_dedup",
-    "stream_stream_join",
-    "text_quality",
-    "tpch_q1",
-    "tpch_q11_having",
-    "tpch_q17_scalar",
-    "tpch_q18_large",
-    "tpch_q19_bands",
-    "tpch_q3_sql",
-    "tpch_q4_exists",
-    "tpch_q5_sql",
-    "tpch_q7_volume",
-    "tpch_q8_share",
-    "unpivot_status",
-    "user_value_trend",
-    "window_distribution_orders",
-    "window_topk_per_group",
-    "window_value_functions",
-]
-_OLDEST_R5_R9 = [
-    # last driver row r5 (age 4), alphabetical, filling to 50
-    # (ann_recall_sweep / ann_topk_ivf / ivf_trained_recall moved to
-    # the changed head):
-    "ann_topk_bruteforce",
-    "asof_forward_tolerance",
-    "bm25_search_topk",
-    "cast_derive",
-    "cluster_topic_terms",
-    "custom_pyds_scan",
-    "daily_agg",
-    "date_dim",
-    "date_funcs",
-    "dedup_rows",
-    "distinct_counts",
-    "distinctive_terms_by_source",
-    "drop_columns",
-    "event_pattern_counts",
-    "filter_compound",
-    "group_minmax_avg",
-    "hybrid_rrf_retrieval",
-    "incremental_dedup_probe",
-    "int8_quant_error",
-    "jaccard_pairs_prefix_filter",
-    "join_inner_agg",
-    "join_key_skew_audit",
-    "join_left_agg",
-]
-
-_seen_r9: set = set()
-_PRIORITY_R9 = [
-    n
-    for n in [*_NEW_OR_CHANGED_R9, *_R4_TAIL_R9, *_OLDEST_R5_R9]
-    if not (n in _seen_r9 or _seen_r9.add(n))
-]
-assert len(_PRIORITY_R9) == 50, len(_PRIORITY_R9)
-
-#: Round-10 window (built from ``python tools/ledger.py --ages`` at the
-#: start of round 10 — after r9 the backlog is 22 r5-age rows + 40
-#: r6-age rows): (1) queries new to or changed in round 10 (the
-#: two-level IVF router + bounded-population cell dial, the trigram
-#: append/compact/params discipline, the bucketed star-join twin);
-#: (2) ALL 22 remaining rows whose last driver record is round 5
-#: (clearing the r5 tier, per VERDICT r9 #7); (3) the oldest r6 rows
-#: alphabetically, filling the window to exactly 50.
-_NEW_OR_CHANGED_R10 = [
-    "ann_hubness_audit_ivf",  # changed: two-level router + cells = ceil(n/512)
-    "trigram_search_appended",  # new: probe-after-append serve (crash-safe fold)
-    "star_join_bucketed",  # new: exchange-free SMJ star twin
-    "trigram_search_indexed",  # changed: serve validates _index_params + heals
-    "bucketed_join_colocated",  # changed: shared bucketed tables widened
-    "ann_topk_ivf",  # changed: router ships centroids via sc.broadcast
-    "ann_recall_sweep",  # changed: same router
-    "ivf_trained_recall",  # changed: same router
-    "bitext_mining_ivf",  # changed: same router
-]
-_R5_TAIL_R10 = [
-    # last driver row r5 (age 5), alphabetical — the final r5 rows:
-    "kmeans_assign",
-    "null_handling",
-    "order_gaps_surrogate",
-    "per_source_entropy_buckets",
-    "pivot_status",
-    "pruned_scan",
-    "range_join_tiers",
-    "rename_project",
-    "scalar_funcs",
-    "season_agg",
-    "source_dup_overlap_matrix",
-    "spot_lookup",
-    "string_funcs",
-    "tfidf_doc_keywords",
-    "token_entropy_quality",
-    "topk_orders",
-    "tpch_q16_supplier_counts",
-    "tpch_q20_surplus",
-    "tpch_q2_mincost",
-    "trigram_search_like",
-    "union_distinct_dates",
-    "variant_props_rollup",
-]
-_OLDEST_R6_R10 = [
-    # last driver row r6 (age 4), alphabetical, filling to 50
-    # (bucketed_join_colocated moved to the changed head):
-    "ann_truncated_dim_recall",
-    "bitext_mining_pairs",
-    "bpe_train_merges",
-    "canonical_docs",
-    "cohort_retention",
-    "copurchase_pairs",
-    "corpus_split_stats",
-    "decontaminate_overlap",
-    "dedup_components",
-    "dedup_exact",
-    "doc_surprisal",
-    "dpp_partitioned_join",
-    "embedding_top_pc_power",
-    "event_transitions",
-    "ewma_user_value",
-    "funnel_counts",
-    "fuzzy_name_pairs",
-    "gap_fill_daily",
-    "group_quantiles",
-]
-
-_seen_r10: set = set()
-_PRIORITY_R10 = [
-    n
-    for n in [*_NEW_OR_CHANGED_R10, *_R5_TAIL_R10, *_OLDEST_R6_R10]
-    if not (n in _seen_r10 or _seen_r10.add(n))
-]
-assert len(_PRIORITY_R10) == 50, len(_PRIORITY_R10)
-
-#: ---- Round-11 window (VERDICT r10 next #6: new/changed rows, then
-#: ALL remaining r6-age rows — clearing the r6 tier — then the oldest
-#: r7 rows alphabetically to 50) ----
-_NEW_OR_CHANGED_R11 = [
-    # the two-level router + bounded-population dial adopted on every
-    # serving-path IVF row (VERDICT r10 missing #1 / next #3):
-    "ann_topk_ivf",  # changed: cells = ceil(n/512), two_level=True
-    "ann_recall_sweep",  # changed: same geometry (the self-audit row)
-    "ivf_trained_recall",  # changed: trained cells served two-level
-    "bitext_mining_ivf",  # changed: same geometry on the 1000x-scale row
-    "ann_hubness_audit_ivf",  # changed: shared routing plan + chunked suspect fallback
-    # maintenance-path discipline (ADVICE r10 all three + VERDICT #4):
-    "trigram_search_appended",  # changed: auto-compaction + no-junk postings
-    "trigram_search_indexed",  # changed: postings derivation length guard
-    "minhash_pairs_indexed",  # changed: writer-side heal-tolerant commit
-]
-_R6_TAIL_R11 = [
-    # ALL remaining rows whose last driver record is round 6 (age 5),
-    # alphabetical — clears the r6 tier:
-    "incremental_join_agg",
-    "iqr_outlier_orders",
-    "khop_contamination_radius",
-    "lang_id",
-    "lang_id_ngram",
-    "leakage_safe_split",
-    "map_entries_pivot",
-    "minhash_band_sweep",
-    "mixture_sample_stats",
-    "near_dup_triangles",
-    "ntile_deciles",
-    "orders_drift_diff",
-    "pii_redaction_stats",
-    "pit_interval_join",
-    "pmi_collocations",
-    "psi_price_drift",
-    "random_walk_corpus",
-    "schema_evolution_union",
-    "tpch_q21_waiting",
-    "zorder_box_serve",
-]
-_OLDEST_R7_R11 = [
-    # last driver row r7 (age 4), alphabetical, filling to 50:
-    "ann_hard_negatives",
-    "ann_pq_recall",
-    "aqp_revenue_estimate",
-    "aqp_revenue_from_sample",
-    "array_vector_stats",
-    "bloom_prefilter_decontaminate",
-    "cms_token_estimates",
-    "containment_pairs_directed",
-    "corpus_curation",
-    "cross_doc_dup_spans",
-    "doc_bigram_perplexity",
-    "doc_chunk_windows",
-    "doc_fingerprint",
-    "domain_mixture_plan",
-    "dsir_src0_importance",
-    "embedding_covariance",
-    "embedding_near_dup",
-    "epoch_shuffle_audit",
-    "events_hourly",
-    "events_sliding_window",
-    "events_trailing_hour",
-    "heavy_hitter_tokens",  # also the r10 perf watch item
-]
-
-_seen_r11: set = set()
-_PRIORITY_R11 = [
-    n
-    for n in [*_NEW_OR_CHANGED_R11, *_R6_TAIL_R11, *_OLDEST_R7_R11]
-    if not (n in _seen_r11 or _seen_r11.add(n))
-]
-assert len(_PRIORITY_R11) == 50, len(_PRIORITY_R11)
-
-#: ---- Round-12 window (VERDICT r11 next #6: new/changed rows, then
-#: ALL 24 remaining r7-age rows — clearing the r7 tier — then the
-#: oldest r8 rows alphabetically to 50) ----
-_NEW_OR_CHANGED_R12 = [
-    # routing-plan budget guard (VERDICT r11 #3) + broadcast carry for
-    # the harness destroy hook (ADVICE r11 #3) change the executed
-    # path of every serving-path IVF row:
+#: The round-12 window: rows changed in round 12 (the IVF serving path
+#: and the index maintenance path), then every row last recorded in
+#: round 7, then the oldest round-8 rows alphabetically. The windows of
+#: rounds 3-11 and the reasoning behind each are in git history.
+_WINDOW = [
     "ann_topk_ivf",
     "ann_recall_sweep",
     "ivf_trained_recall",
     "bitext_mining_ivf",
     "ann_hubness_audit_ivf",
-    # heal-loop concurrent-executor tolerance (ADVICE r11 #1) +
-    # crossing-dir-scoped auto-compaction (ADVICE r11 #2 / VERDICT #4)
-    # change the maintenance/probe paths:
     "trigram_search_appended",
     "trigram_search_indexed",
     "minhash_pairs_indexed",
-]
-_R7_TAIL_R12 = [
-    # ALL remaining rows whose last driver record is round 7 (age 5),
-    # alphabetical — clears the r7 tier:
     "histogram_quantile_rollup",
     "hll_sketch_rollup",
     "jaccard_pairs_capped",
@@ -811,9 +56,6 @@ _R7_TAIL_R12 = [
     "upsert_user_snapshot",
     "weighted_doc_sample",
     "weighted_group_sample",
-]
-_OLDEST_R8_R12 = [
-    # last driver row r8 (age 4), alphabetical, filling to 50:
     "approx_distinct_check",
     "asof_join_events",
     "bitmap_distinct_users",
@@ -833,24 +75,9 @@ _OLDEST_R8_R12 = [
     "median_price",
     "quality_checks",
 ]
+assert len(_WINDOW) == len(set(_WINDOW)) == 50, len(_WINDOW)
 
-_seen_r12: set = set()
-_PRIORITY_R12 = [
-    n
-    for n in [*_NEW_OR_CHANGED_R12, *_R7_TAIL_R12, *_OLDEST_R8_R12]
-    if not (n in _seen_r12 or _seen_r12.add(n))
-]
-assert len(_PRIORITY_R12) == 50, len(_PRIORITY_R12)
-
-#: ---- Round-6 ordering (superseded; kept for provenance) ----
-_seen_r6: set = set()
-_PRIORITY_R6 = [
-    n
-    for n in [*_NEW_OR_CHANGED_R6, *_OLDEST_R6]
-    if not (n in _seen_r6 or _seen_r6.add(n))
-]
-
-ALL_QUERIES: dict = {n: _MERGED[n] for n in _PRIORITY_R12}
+ALL_QUERIES: dict = {n: _MERGED[n] for n in _WINDOW}
 ALL_QUERIES.update(_MERGED)  # everything else, tier order, after the window
 
 assert len(ALL_QUERIES) == len(_MERGED), "priority list references unknown query"

@@ -1,5 +1,4 @@
 from .readers import (  # noqa: F401
-    TPCH_TABLES,
     from_records,
     parse_sas_labels,
     read_csv,

@@ -26,21 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-#: Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
-TPCH_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S1: columnar parquet scan, schema from footer metadata.
 

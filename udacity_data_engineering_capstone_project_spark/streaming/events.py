@@ -391,59 +391,3 @@ def run_bitmap_distinct_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` —
-    the Spark 4 successor to applyInPandasWithState (typed state
-    variables, timers, TTL, RocksDB-backed): the semantics twin of
-    :func:`stateful_user_totals` on the modern API.
-
-    ENVIRONMENT-GATED: the TransformWithStateInPySpark driver worker
-    needs ``google.protobuf`` (state-server protocol), which this
-    container does not ship (verified: the streaming Python runner
-    crashes with ImportError at init, round 5). The operator raises a
-    clear error when the dependency is missing; the pytest twin skips.
-    The legacy-API twin stays the registry entry meanwhile.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:  # pragma: no cover - env-specific
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which "
-            "this environment does not provide; use "
-            "stateful_user_totals (applyInPandasWithState) instead"
-        ) from e
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle):
-            self.state = handle.getValueState("tot", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (0, 0.0)
-            if self.state.exists():
-                n, total = self.state.get()
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self.state.update((n, total))
-            yield pd.DataFrame(
-                [{"user_id": key[0], "n_events": n, "total_value": total}]
-            )
-
-        def close(self):
-            pass
-
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _Totals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
