@@ -28,8 +28,6 @@ PENDING = {
     "write_orc",
     "write_parquet_incremental",
     "write_range_sorted",
-    "compact_parquet",
-    "targeted_delete",
     "upsert_latest_per_user",
     "incremental_ingest",
     "decode_image",
@@ -39,9 +37,7 @@ PENDING = {
     "pca_project",
 }
 
-#: The one module allowed to swap files crash-safely. Two PENDING
-#: definitions, ``compact_parquet`` and ``targeted_delete``, still carry
-#: a swap of their own.
+#: The one module allowed to swap files crash-safely.
 SWAP_MODULE = PACKAGE / "sources" / "index_store.py"
 
 
@@ -138,7 +134,6 @@ def test_crash_safe_swaps_live_in_index_store():
         for path in sorted(PACKAGE.rglob("*.py"))
         if path != SWAP_MODULE
         for line, owner in _swap_calls(ast.parse(path.read_text()))
-        if owner not in PENDING
     ]
     assert stray == []
     assert list(_swap_calls(ast.parse(SWAP_MODULE.read_text())))

@@ -2176,9 +2176,9 @@ def test_minhash_compact_heal_closes_duplicate_window(spark, sf_dir, tmp_path):
 
 
 def test_minhash_probe_eager_unpersists_intermediates(spark, sf_dir, tmp_path):
-    """Continuous-serving mode (ADVICE r7): eager=True materializes the
-    result and releases the four probe intermediates, so a serving
-    loop doesn't accumulate cached blocks batch over batch."""
+    """Continuous serving (ADVICE r7): a loop probes each batch inside
+    its own resource scope, and closing the scope releases every probe
+    intermediate, so blocks do not accumulate batch over batch."""
     from pyspark.sql import functions as F
 
     from udacity_data_engineering_capstone_project_spark.functions.hashing import (
@@ -2189,6 +2189,7 @@ def test_minhash_probe_eager_unpersists_intermediates(spark, sf_dir, tmp_path):
         write_minhash_index,
     )
     from udacity_data_engineering_capstone_project_spark.plans.queries_parity import _t
+    from udacity_data_engineering_capstone_project_spark.session import resource_scope
 
     docs = _t(spark, sf_dir, "documents")
     b = F.expr(spark_hex_to_long("md5(CAST(doc_id AS STRING))", 7)) % 100
@@ -2196,33 +2197,18 @@ def test_minhash_probe_eager_unpersists_intermediates(spark, sf_dir, tmp_path):
     path = str(tmp_path / "mh_eager")
     write_minhash_index(index_docs, path)
 
-    spark.catalog.clearCache()
-    lazy = _mh_pairs(minhash_probe_indexed(spark, path, batch, "doc_id", "text"))
-    spark.catalog.clearCache()
-    # snapshot cached-RDD ids BEFORE the eager call: the assertion must
-    # judge only blocks THIS call created — counting the whole session
-    # made the test hostage to other tests' async clearCache turnaround
-    # (the r8 in-suite flake: passes in isolation, fails whenever the
-    # shared session's cleaner lags, which is GC-timing, not load)
-    import time as _time
-
+    with resource_scope():
+        lazy = _mh_pairs(minhash_probe_indexed(spark, path, batch, "doc_id", "text"))
+    # snapshot cached-RDD ids BEFORE the served batch: the assertion must
+    # judge only blocks THIS batch created, not other tests' leftovers
     jsc = spark.sparkContext._jsc.sc()
     before = {x.id() for x in jsc.getRDDStorageInfo()}
-    served = minhash_probe_indexed(
-        spark, path, batch, "doc_id", "text", eager=True
-    )
-    assert _mh_pairs(served) == lazy and lazy
-    # only the returned (persisted) result may still hold storage among
-    # the NEW blocks; unpersist is ASYNC, so poll a generous deadline
-    deadline = _time.monotonic() + 120.0
+    with resource_scope():
+        served = _mh_pairs(minhash_probe_indexed(spark, path, batch, "doc_id", "text"))
+        assert [x for x in jsc.getRDDStorageInfo() if x.id() not in before]
+    assert served == lazy and lazy
     new_cached = [x for x in jsc.getRDDStorageInfo() if x.id() not in before]
-    while len(new_cached) > 1 and _time.monotonic() < deadline:
-        _time.sleep(0.5)
-        new_cached = [
-            x for x in jsc.getRDDStorageInfo() if x.id() not in before
-        ]
-    assert len(new_cached) <= 1, [str(x) for x in new_cached]
-    served.unpersist()
+    assert new_cached == [], [str(x) for x in new_cached]
 
 
 def test_affine_minhash_blocked_matches_one_liner():
@@ -2369,9 +2355,9 @@ def test_routing_plan_refuses_over_budget_centroid_collect(
 
 
 def test_destroy_routing_broadcast_is_idempotent(spark, sf_dir):
-    """The harness post-action hook (ADVICE r11): a query that carries
-    a _centroid_broadcast handle gets it destroyed exactly once; a
-    handle-less DataFrame is a no-op; a second call is a no-op."""
+    """The harness post-action hook (ADVICE r11): what a query built
+    outside any resource scope holds is released exactly once; a second
+    call, for this or any other DataFrame, is a no-op."""
     from udacity_data_engineering_capstone_project_spark.operators.similarity import (
         destroy_routing_broadcast,
     )
@@ -2430,24 +2416,26 @@ def test_two_level_routing_with_all_branches_probed_equals_flat(spark, sf_dir):
 
 def test_nearest_cells_router_exposes_broadcast_handle(spark, sf_dir):
     """The routing kernel must ship centroids via sc.broadcast (not
-    closure capture — VERDICT r9 wrong #2) and expose the handle for
-    caller-side destroy, the knn_self_topk_arrow discipline."""
+    closure capture — VERDICT r9 wrong #2), held in the caller's
+    resource scope, which destroys it on close."""
+    from pyspark import Broadcast
+
     from udacity_data_engineering_capstone_project_spark.operators.similarity import (
         ivf_topk,
     )
     from udacity_data_engineering_capstone_project_spark.plans.queries_parity import _t
+    from udacity_data_engineering_capstone_project_spark.session import resource_scope
 
     emb = _t(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    out = ivf_topk(emb.filter(F.col("vec_id") < 20), emb, cents)
-    bc = getattr(out, "_centroid_broadcast", None)
-    assert bc is not None
-    ids, mat, norms, members = bc.value
-    assert len(ids) == 8 and mat.shape[0] == 8 and len(norms) == 8
-    assert out.count() > 0
-    bc.destroy()
+    with resource_scope() as scope:
+        out = ivf_topk(emb.filter(F.col("vec_id") < 20), emb, cents)
+        (bc,) = [x for x in scope.held if isinstance(x, Broadcast)]
+        ids, mat, norms, members = bc.value
+        assert len(ids) == 8 and mat.shape[0] == 8 and len(norms) == 8
+        assert out.count() > 0
 
 
 def test_minhash_auto_compact_rewrites_only_crossing_dirs(spark, tmp_path):

@@ -13,6 +13,7 @@ from udacity_data_engineering_capstone_project_spark.plans.quality import (
     unique_key_check,
     unique_keys_check,
 )
+from udacity_data_engineering_capstone_project_spark.session import ROOT_SCOPE
 from udacity_data_engineering_capstone_project_spark.sources.readers import (
     from_records,
     parse_sas_labels,
@@ -156,10 +157,9 @@ def test_missing_observations_fall_back_to_written_counts(spark, tmp_path, monke
 
 def test_report_collect_jobs_and_no_state_left(spark, tmp_path):
     spark.catalog.clearCache()
-    # checkpoints that earlier tests' operators left to the ContextCleaner
-    # would otherwise vanish at its next GC-driven sweep, mid-test
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(True)
+    # checkpoints that earlier tests' operators left in the root scope
+    # would otherwise vanish at the ContextCleaner's next GC, mid-test
+    ROOT_SCOPE.release()
     jsc = spark.sparkContext._jsc.sc()
     held = lambda: {i.id() for i in jsc.getRDDStorageInfo()}  # noqa: E731
     before = held()

@@ -564,20 +564,22 @@ def test_embedding_covariance_merge_is_jvm_side(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_kmv_sketch_filters_before_window_sort(spark):
+def test_kmv_sketch_filters_before_window_sort(spark, sf_dir):
     """The KMV scale path must (a) broadcast the per-group threshold
     table, (b) apply the hash filter BEFORE the row_number window sort
     — so the per-group sort only ever sees the ~margin*k survivor
-    hashes, not every distinct hash. Since r13 the sketch table is
-    localCheckpoint'ed (its two consumers otherwise recompute the
-    per-event md5 scan), so the sketch's plan is asserted on the
-    ``_kmv_sketch_df`` testability handle, not the returned plan."""
-    from udacity_data_engineering_capstone_project_spark.plans.registry import (
-        query_fns,
+    hashes, not every distinct hash. Since r13 the query localCheckpoints
+    the sketch table (its two consumers otherwise recompute the
+    per-event md5 scan), so the sketch is built here with the query's
+    own dials and its plan asserted directly."""
+    from udacity_data_engineering_capstone_project_spark.operators.aggregates import (
+        kmv_sketch,
     )
+    from udacity_data_engineering_capstone_project_spark.plans.queries_parity import _t
 
-    out = query_fns()["kmv_user_overlap"](spark, "/root/testdata/sf0.001")
-    plan = out._kmv_sketch_df._jdf.queryExecution().executedPlan().toString()
+    events = _t(spark, sf_dir, "events")
+    sketch = kmv_sketch(events, "event_type", "user_id", k=64, nchars=13)
+    plan = sketch._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     # threshold filter present (h < thr comparison survives to the
     # physical plan as a join-output filter below the window's Sort)

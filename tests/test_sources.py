@@ -130,47 +130,6 @@ def test_jsonl_roundtrip(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        compact_parquet,
-    )
-
-    path = str(tmp_path / "frag")
-    spark.range(0, 10000).repartition(50).write.parquet(path)
-    import glob
-
-    assert len(glob.glob(f"{path}/*.parquet")) == 50
-    n = compact_parquet(spark, path, target_file_mb=256)
-    assert n == 1
-    assert len(glob.glob(f"{path}/*.parquet")) == 1
-    assert spark.read.parquet(path).count() == 10000
-
-
-def test_compact_parquet_preserves_partitioning(spark, tmp_path):
-    """A Hive-partitioned dataset stays partitioned (and its old copy
-    survives until the swap completes) through compaction."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        compact_parquet,
-    )
-
-    path = str(tmp_path / "parts")
-    df = spark.range(0, 1000).withColumn("bucket", F.col("id") % 4)
-    df.repartition(10).write.partitionBy("bucket").parquet(path)
-    assert len(glob.glob(f"{path}/bucket=*/")) == 4
-    compact_parquet(spark, path, target_file_mb=256)
-    # layout preserved: still 4 partition dirs, fewer files inside
-    assert len(glob.glob(f"{path}/bucket=*/")) == 4
-    assert not glob.glob(f"{path}/*.old") and not glob.glob(f"{path}.old")
-    back = spark.read.parquet(path)
-    assert back.count() == 1000
-    assert set(back.columns) == {"id", "bucket"}
-    assert back.groupBy().agg(F.countDistinct("bucket").alias("n")).collect()[0].n == 4
-
-
 def test_incremental_write_replaces_only_touched_partition(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -386,249 +345,3 @@ def test_hashrange_pyds_partitions_and_values(spark):
     assert sorted(rows) == list(range(257))
     for i in (0, 1, 100, 256):
         assert rows[i] == _hash14(i)
-
-
-def test_targeted_delete_rewrites_only_affected_files(spark, tmp_path):
-    """Copy-on-write deletion: only part-files containing a target key
-    are rewritten; rows gone, everything else byte-identical."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        targeted_delete,
-    )
-
-    path = str(tmp_path / "docs")
-    # 8 files, keys clustered so targets live in exactly 2 files
-    df = spark.range(0, 800).select(F.col("id").alias("doc_id"))
-    df.repartitionByRange(8, "doc_id").sortWithinPartitions(
-        "doc_id"
-    ).write.parquet(path)
-    before = {
-        f: os.path.getmtime(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.startswith("part-")
-    }
-    targets = spark.createDataFrame([(5,), (7,), (205,)], "doc_id long")
-
-    stats = targeted_delete(spark, path, targets, "doc_id")
-    assert stats["rows_deleted"] == 3
-    assert stats["files_rewritten"] == 2
-    assert stats["files_total"] == 8
-
-    after = spark.read.parquet(path)
-    assert after.count() == 797
-    assert after.filter(F.col("doc_id").isin([5, 7, 205])).count() == 0
-    # the 6 untouched files are still there, untouched
-    survivors = [
-        f
-        for f in os.listdir(path)
-        if f.startswith("part-")
-    ]
-    assert len(survivors) == 6
-    for f in survivors:
-        assert before[f] == os.path.getmtime(os.path.join(path, f))
-
-    # idempotent: re-running deletes nothing and rewrites nothing
-    stats2 = targeted_delete(spark, path, targets, "doc_id")
-    assert stats2["rows_deleted"] == 0 and stats2["files_rewritten"] == 0
-
-
-def test_targeted_delete_string_keys(spark, tmp_path):
-    """String doc-ids must match on their native type — the ADVICE r6
-    regression: casting both sides to long nulled every string key and
-    the takedown silently no-opped with rows_deleted=0."""
-    from pyspark.sql import functions as F
-
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        targeted_delete,
-    )
-
-    path = str(tmp_path / "sdocs")
-    df = spark.range(0, 100).select(
-        F.concat(F.lit("doc-"), F.col("id")).alias("doc_id")
-    )
-    df.repartition(4).write.parquet(path)
-    targets = spark.createDataFrame([("doc-5",), ("doc-77",)], "doc_id string")
-
-    stats = targeted_delete(spark, path, targets, "doc_id")
-    assert stats["rows_deleted"] == 2
-    after = spark.read.parquet(path)
-    assert after.count() == 98
-    assert after.filter(F.col("doc_id").isin(["doc-5", "doc-77"])).count() == 0
-
-
-def test_targeted_delete_uncastable_keys_raise(spark, tmp_path):
-    """Target keys that null out under the cast to the dataset's key
-    type must raise, never silently delete nothing."""
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        targeted_delete,
-    )
-
-    path = str(tmp_path / "ldocs")
-    spark.range(0, 50).select(F.col("id").alias("doc_id")).write.parquet(path)
-    targets = spark.createDataFrame([("not-a-number",)], "doc_id string")
-    with _pytest.raises(ValueError, match="do not cast"):
-        targeted_delete(spark, path, targets, "doc_id")
-
-
-def test_targeted_delete_manifest_heals_duplicate_window(spark, tmp_path):
-    """A crash between moving rewritten parts in and deleting the
-    originals duplicates kept rows; the pending-delete manifest written
-    at the commit point lets the next call heal before reading."""
-    import glob
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        targeted_delete,
-    )
-
-    path = str(tmp_path / "hdocs")
-    df = spark.range(0, 200).select(F.col("id").alias("doc_id"))
-    df.repartitionByRange(4, "doc_id").write.parquet(path)
-    # simulate the torn state: manually run a delete, then RESTORE one
-    # original alongside its rewrite and re-create its manifest entry
-    parts_before = sorted(
-        f for f in os.listdir(path) if f.startswith("part-")
-    )
-    victim = os.path.join(path, parts_before[0])
-    backup = str(tmp_path / "victim.bak")  # outside the dataset dir
-    import shutil
-
-    shutil.copy(victim, backup)
-    targets = spark.createDataFrame([(1,)], "doc_id long")
-    stats = targeted_delete(spark, path, targets, "doc_id")
-    assert stats["rows_deleted"] == 1
-    # tear: original back in place (duplicating its kept rows), with a
-    # manifest pointing at it — exactly the mid-swap crash state
-    shutil.copy(backup, victim)
-    with open(os.path.join(path, "_pending_delete_test.json"), "w") as fh:
-        json.dump([victim], fh)
-    assert spark.read.parquet(path).count() > 199  # duplicates visible raw
-
-    stats2 = targeted_delete(
-        spark, path, spark.createDataFrame([(2,)], "doc_id long"), "doc_id"
-    )
-    assert stats2["rows_deleted"] == 1
-    assert not glob.glob(os.path.join(path, "_pending_delete_*.json"))
-    after = spark.read.parquet(path)
-    assert after.count() == 198  # healed: no duplicates, both keys gone
-    assert after.filter(F.col("doc_id").isin([1, 2])).count() == 0
-    os.remove(backup)
-
-
-def test_targeted_delete_manifest_heals_loss_window(spark, tmp_path):
-    """The worse tear: manifest committed but rewritten parts still in
-    the Spark-invisible _rewrite_* staging dir and originals still in
-    place. A delete-first heal would remove the originals while the
-    kept rows stay stranded invisible — silent loss. The heal loop
-    must replay the moves FIRST, then the deletions."""
-    import glob
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        targeted_delete,
-    )
-
-    path = str(tmp_path / "ldocs")
-    df = spark.range(0, 200).select(F.col("id").alias("doc_id"))
-    df.repartitionByRange(4, "doc_id").write.parquet(path)
-    parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
-    victim = os.path.join(path, parts[0])
-    victim_keys = {
-        r["doc_id"]
-        for r in spark.read.parquet(victim).select("doc_id").collect()
-    }
-    target_key = min(victim_keys)
-    # stage the rewrite (victim minus the target) exactly as a crashed
-    # call would have left it: parts inside _rewrite_*, not yet moved
-    staging_src = str(tmp_path / "stage_src")
-    (
-        spark.read.parquet(victim)
-        .filter(F.col("doc_id") != target_key)
-        .coalesce(1)
-        .write.parquet(staging_src)
-    )
-    tmp_out = os.path.join(path, "_rewrite_tearloss")
-    os.makedirs(tmp_out)
-    staged_name = next(
-        f for f in os.listdir(staging_src) if f.startswith("part-")
-    )
-    os.replace(
-        os.path.join(staging_src, staged_name),
-        os.path.join(tmp_out, staged_name),
-    )
-    manifest = {
-        "moves": [
-            [
-                os.path.join(tmp_out, staged_name),
-                os.path.join(path, f"deleted-tearloss-{staged_name}"),
-            ]
-        ],
-        "delete": [victim],
-        "tmp_dir": tmp_out,
-    }
-    with open(os.path.join(path, "_pending_delete_tear.json"), "w") as fh:
-        json.dump(manifest, fh)
-    # the torn state is invisible-but-recoverable: raw read still shows
-    # the original (duplicate-free, pre-delete) data
-    assert spark.read.parquet(path).count() == 200
-
-    other_key = 199 if target_key != 199 else 198
-    stats = targeted_delete(
-        spark,
-        path,
-        spark.createDataFrame([(other_key,)], "doc_id long"),
-        "doc_id",
-    )
-    assert stats["rows_deleted"] == 1
-    assert not glob.glob(os.path.join(path, "_pending_delete_*"))
-    assert not glob.glob(os.path.join(path, "_rewrite_*"))
-    after = spark.read.parquet(path)
-    # both the healed delete and the new one applied; nothing stranded
-    assert after.count() == 198
-    assert (
-        after.filter(F.col("doc_id").isin([target_key, other_key])).count()
-        == 0
-    )
-
-
-def test_targeted_delete_cleans_orphan_staging(spark, tmp_path):
-    """A crash BEFORE the manifest commit leaves only garbage: a
-    _rewrite_* dir and possibly a half-written .json.tmp manifest.
-    Originals are intact, so the next call removes both and proceeds."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        targeted_delete,
-    )
-
-    path = str(tmp_path / "odocs")
-    df = spark.range(0, 100).select(F.col("id").alias("doc_id"))
-    df.repartitionByRange(2, "doc_id").write.parquet(path)
-    os.makedirs(os.path.join(path, "_rewrite_orphan"))
-    with open(
-        os.path.join(path, "_pending_delete_x.json.tmp"), "w"
-    ) as fh:
-        fh.write('{"moves": [')  # torn mid-write
-    stats = targeted_delete(
-        spark, path, spark.createDataFrame([(5,)], "doc_id long"), "doc_id"
-    )
-    assert stats["rows_deleted"] == 1
-    assert not glob.glob(os.path.join(path, "_rewrite_*"))
-    assert not glob.glob(os.path.join(path, "_pending_delete_*"))
-    assert spark.read.parquet(path).count() == 99

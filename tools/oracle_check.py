@@ -101,9 +101,9 @@ def main() -> int:
             print(f"[FAIL-spark] {name}: {str(e)[:300]}")
             continue
         finally:
-            # post-action hook (ADVICE r11): release any routing-plan
-            # centroid broadcast the query attached to its DataFrame —
-            # a 208-query gate otherwise accumulates one per IVF call
+            # post-action hook (ADVICE r11): release the broadcasts,
+            # persists and checkpoints the query took in the root scope —
+            # a 208-query gate otherwise accumulates them query by query
             if q_df is not None:
                 destroy_routing_broadcast(q_df)
         spark_t = time.time() - t0

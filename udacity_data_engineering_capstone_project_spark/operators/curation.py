@@ -22,6 +22,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions.hashing import spark_hex_to_long
 from ..functions.textnorm import tokens_col
+from ..session import hold
 from .dedup import hashed_shingle_table
 
 
@@ -112,11 +113,11 @@ def pack_sequences(
     # broadcast offsets were computed from (partial sampling / heavy
     # ties at scale), silently corrupting global offsets. The cache
     # pins one boundary draw for both jobs; blocks are LRU-evictable.
-    ranged = df.repartitionByRange(num_partitions, F.col(id_col)).select(
+    ranged = hold(df.repartitionByRange(num_partitions, F.col(id_col)).select(
         F.col(id_col).alias("id"),
         F.col(tok_col).alias("n_tokens"),
         F.spark_partition_id().alias("__pid"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK))
     totals = {
         r["__pid"]: r["t"]
         for r in ranged.groupBy("__pid")
@@ -681,7 +682,7 @@ def bloom_decontaminate(
             # CacheManager, so the cache-substitution trap below cannot
             # fire. Non-reliable storage (executor loss = job restart)
             # — production multi-tenant runs keep ``materialize_dir``.
-            train_sh = train_sh.localCheckpoint(eager=True)
+            train_sh = hold(train_sh.localCheckpoint(eager=True))
         elif materialize_dir is not None:
             train_sh.write.mode("overwrite").parquet(materialize_dir)
             train_sh = train.sparkSession.read.parquet(materialize_dir)
@@ -696,7 +697,7 @@ def bloom_decontaminate(
     # is persisted: caching shared-lineage subtrees (train_sh/bench_h)
     # would cache-substitute into OTHER queries' plans in a shared
     # session and knock their dim joins off the broadcast path.
-    cand = bloom_member_keys(train_sh, bloom, "h", m_bits, k).persist()
+    cand = hold(bloom_member_keys(train_sh, bloom, "h", m_bits, k).persist())
     cand_sh = train_sh.join(F.broadcast(cand), "h")
     sizes = train_sh.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     n_cand = cand_sh.groupBy("doc").agg(F.count("*").alias("n_candidates"))
@@ -758,13 +759,13 @@ def shard_snake_plan(
     # pack_sequences: one range-boundary draw must serve both the
     # offsets job and the final job, or broadcast offsets can mismatch
     # the second job's partitioning (sampled boundaries, n_tokens ties).
-    ranged = df.select(
+    ranged = hold(df.select(
         F.col(id_col).alias("id"), F.col(tok_col).alias("n_tokens")
     ).repartitionByRange(
         num_partitions, F.col("n_tokens").desc(), F.col("id")
     ).select(
         "id", "n_tokens", F.spark_partition_id().alias("__pid")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK))
     counts = {
         r["__pid"]: r["c"]
         for r in ranged.groupBy("__pid").agg(F.count("*").alias("c")).collect()

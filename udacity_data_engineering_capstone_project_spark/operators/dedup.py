@@ -42,6 +42,7 @@ from ..functions.hashing import (
     spark_hex_to_long,
 )
 from ..functions.textnorm import tokens_col
+from ..session import hold, resource_scope
 from ..session import observed_metrics as _observed_totals
 from ..sources.index_store import IndexStore, Table, read_stamp
 
@@ -218,7 +219,7 @@ def jaccard_pairs(
         # one narrow (doc, array) row per doc feeds the self-join (x2);
         # exploding from the persisted sets is cheap, re-tokenizing the
         # corpus per subtree is not.
-        sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
+        sets = hold(sets.persist(StorageLevel.MEMORY_AND_DISK))
     # set SIZES ride the shingle stream (+8 B/row) instead of joining
     # back afterwards: the r7 100x run measured the old shape spending
     # ~80 of 105 s re-shuffling the 113M-row sharing-pairs relation
@@ -293,7 +294,7 @@ def containment_pairs(
             .groupBy("doc")
             .agg(F.collect_list("h").alias("hs"))  # already distinct per doc
         )
-    sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
+    sets = hold(sets.persist(StorageLevel.MEMORY_AND_DISK))
     shingles = sets.select(
         "doc", F.size("hs").cast("long").alias("n_sh"), F.explode("hs").alias("h")
     )
@@ -569,10 +570,9 @@ def _verify_pairs(
     the sliver is pulled to the driver with Arrow, broadcast once as
     flat arrays (sorted ids, offsets, lengths, digests) and only the
     16-byte id pairs stream through :func:`_pair_intersect_kernel`; the
-    handle rides the result as ``_centroid_broadcast`` and sits in
-    ``_ROUTING_BC_REGISTRY`` so the bench and oracle post-action hook
-    releases it, and ``_verify_sets_df`` keeps the sliver (its pruned
-    scan is no longer in the result's plan) for plan guards. Otherwise,
+    handle is held in the caller's :func:`session.resource_scope`, and
+    ``_verify_sets_df`` keeps the sliver (its pruned scan is no longer
+    in the result's plan) for plan guards. Otherwise,
     and always for ``path="join"`` (the self-joins), both slices are
     joined onto the candidates and :func:`_inter_size_udf` counts the
     intersections; the slices are broadcast-hinted exactly when the
@@ -608,13 +608,7 @@ def _verify_pairs(
         )
         offsets = np.concatenate(([0], np.cumsum(lens)[:-1])).astype(np.int64)
         sc = candidates.sparkSession.sparkContext
-        bcv = sc.broadcast((docs, offsets, lens, flat))
-        # registered session-level too, so the post-action hook releases the
-        # handle even if a wrapper .select()s the attribute away; local
-        # import — similarity does not import dedup
-        from .similarity import _ROUTING_BC_REGISTRY
-
-        _ROUTING_BC_REGISTRY.append(bcv)
+        bcv = hold(sc.broadcast((docs, offsets, lens, flat)))
         # the candidate cache is AQE-coalesced to ~1 partition; spread
         # the kernel at ~4k pairs per task, at most one task per core
         n_parts = max(1, min(sc.defaultParallelism, -(-int(n_rows) // 4096)))
@@ -626,10 +620,9 @@ def _verify_pairs(
                 f"{a_col} long, {b_col} long, inter_size long, union_size long",
             )
         )
-        out._centroid_broadcast = bcv
         out._verify_sets_df = sliver
         return out
-    b_sets.persist(StorageLevel.MEMORY_AND_DISK)
+    hold(b_sets.persist(StorageLevel.MEMORY_AND_DISK))
     sa, sb = a_sets.alias("sa"), b_sets.alias("sb")
     if within:
         sa, sb = F.broadcast(sa), F.broadcast(sb)
@@ -671,8 +664,8 @@ def _self_join_verify(
     caches the verify reuses. Only 16-byte rows shuffle in it; the id
     hint must precede the first shuffle of wide rows, which is why the
     count is taken before the slice is built."""
-    candidates = candidates.persist(StorageLevel.MEMORY_AND_DISK)
-    cand_ids = (
+    candidates = hold(candidates.persist(StorageLevel.MEMORY_AND_DISK))
+    cand_ids = hold(
         candidates.select(F.col("doc_a").alias("doc"))
         .unionByName(candidates.select(F.col("doc_b").alias("doc")))
         .distinct()
@@ -727,7 +720,7 @@ def jaccard_pairs_prefix(
     from pyspark.sql import Window
 
     if persist:
-        sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
+        sets = hold(sets.persist(StorageLevel.MEMORY_AND_DISK))
     exploded = sets.select("doc", F.explode("hs").alias("h"))
     # df via count-over-window rather than groupBy+join-back: one
     # digest-keyed exchange instead of two (the aggregate is
@@ -841,8 +834,9 @@ def minhash_lsh_pairs(
     """
     # (doc, digest-set) rows: reused by band keys and verification.
     # Persisted ONCE, one narrow (long, array<long>) row per doc.
-    sets = shingle_sets(df, id_col, text_col, n, hash_family).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sets = hold(
+        shingle_sets(df, id_col, text_col, n, hash_family)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
     # Signatures + band keys in ONE Arrow-batched pandas_udf over the
@@ -858,9 +852,9 @@ def minhash_lsh_pairs(
     # sets being cached makes a re-run cheap-ish, but the signature UDF
     # itself (the dominant per-doc cost) would still run once per side
     # without this. Rows are (long, long).
-    bands_df = sets.select(
+    bands_df = hold(sets.select(
         "doc", F.explode(band_keys("hs")).alias("band_key")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK))
     x = bands_df.alias("x")
     y = bands_df.alias("y")
     candidates = (
@@ -924,12 +918,12 @@ def minhash_lsh_pairs_against(
 
     obs_idx = Observation("idx_sets_totals")
     obs_bat = Observation("bat_sets_totals")
-    idx_sets = (
+    idx_sets = hold(
         shingle_sets(index_df, id_col, text_col, n)
         .observe(obs_idx, *_set_totals())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    bat_sets = (
+    bat_sets = hold(
         shingle_sets(batch_df, id_col, text_col, n)
         .observe(obs_bat, *_set_totals())
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -940,7 +934,7 @@ def minhash_lsh_pairs_against(
     ).alias("b")
     if n_batch * bands <= broadcast_max_rows:
         bat_keys = F.broadcast(bat_keys)
-    candidates = (
+    candidates = hold(
         idx_keys.alias("i")
         .join(
             bat_keys,
@@ -1072,27 +1066,27 @@ def _write_minhash_tables(
     and the append's staging share this one definition. Returns the
     batch's stamped stats (docs and digests)."""
     band_keys = _minhash_band_keys_udf(n_hashes, bands)
-    sets = shingle_sets(docs, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     postings, doc_sets = MINHASH_STORE.tables
-    # At 100 TB the repartition counts become
-    # max(n_parts, data_bytes / target_file_bytes).
-    postings.write(
-        sets.select("doc", F.explode(band_keys("hs")).alias("band_key"))
-        .withColumn("bp", F.pmod(F.col("band_key"), F.lit(n_band_parts)).cast("int")),
-        root, mode, n_band_parts,
-    )
-    doc_sets.write(
-        sets.withColumn("dp", F.pmod(F.xxhash64("doc"), F.lit(n_doc_parts)).cast("int")),
-        root, mode, n_doc_parts,
-    )
-    # whole-index digest-set totals, stamped beside the dials: the
-    # probe's free byte bound (see minhash_probe_indexed). One narrow
-    # agg over the still-persisted sets — write-time cost, amortized;
-    # it also tells an append whether it was empty.
-    st = sets.select(*_set_totals()).first()
-    sets.unpersist()
+    with resource_scope():
+        sets = hold(
+            shingle_sets(docs, id_col, text_col, n)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        # At 100 TB the repartition counts become
+        # max(n_parts, data_bytes / target_file_bytes).
+        bp = F.pmod(F.col("band_key"), F.lit(n_band_parts)).cast("int")
+        postings.write(
+            sets.select("doc", F.explode(band_keys("hs")).alias("band_key"))
+            .withColumn("bp", bp),
+            root, mode, n_band_parts,
+        )
+        dp = F.pmod(F.xxhash64("doc"), F.lit(n_doc_parts)).cast("int")
+        doc_sets.write(sets.withColumn("dp", dp), root, mode, n_doc_parts)
+        # whole-index digest-set totals, stamped beside the dials: the
+        # probe's free byte bound (see minhash_probe_indexed). One narrow
+        # agg over the still-persisted sets — write-time cost, amortized;
+        # it also tells an append whether it was empty.
+        st = sets.select(*_set_totals()).first()
     return {"sets_n_docs": int(st["n"]), "sets_tot_digests": int(st["tot"])}
 
 
@@ -1224,7 +1218,6 @@ def minhash_probe_indexed(
     max_literal_keys: int = 50_000,
     broadcast_max_rows: int = _BROADCAST_MAX_ROWS,
     broadcast_max_bytes: int = _BROADCAST_MAX_BYTES,
-    eager: bool = False,
 ) -> DataFrame:
     """Probe a new batch against a :func:`write_minhash_index` layout —
     answers identical to :func:`minhash_lsh_pairs_against` (same
@@ -1250,15 +1243,11 @@ def minhash_probe_indexed(
     silently misses pairs otherwise) and heals any interrupted
     :func:`append_minhash_index` swap before reading.
 
-    ``eager=True`` is the CONTINUOUS-SERVING mode (ADVICE r7): the
-    result is materialized (persisted + counted) and the four probe
-    intermediates are unpersisted before returning, so a loop probing
-    thousands of batches doesn't accumulate cached blocks until
-    executor memory/disk pressure degrades steady-state serving. The
-    caller unpersists the returned DataFrame when done with the batch.
-    With the default ``eager=False`` (one-shot plans, the registry
-    query) intermediates stay cached until LRU eviction, as all
-    one-shot operators here do.
+    The probe's persists and its verify broadcast are held in the
+    caller's :func:`session.resource_scope`. A loop serving thousands of
+    batches (ADVICE r7) opens one scope per batch, so cached blocks do
+    not accumulate until executor memory or disk pressure degrades
+    steady-state serving.
     """
     MINHASH_STORE.open(
         index_path,
@@ -1271,14 +1260,14 @@ def minhash_probe_indexed(
     # observe node (r13): the batch digest totals the byte gate needs
     # ride the cache-fill job as accumulator metrics — no extra scan
     obs_bat = Observation("bat_sets_totals")
-    bat_sets = (
+    bat_sets = hold(
         shingle_sets(batch_df, id_col, text_col, n)
         .observe(obs_bat, *_set_totals())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    bat_keys = bat_sets.select(
+    bat_keys = hold(bat_sets.select(
         "doc", F.explode(band_keys_udf("hs")).alias("band_key")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK))
     # collect WITHOUT the distinct(): the batch is |batch| x bands
     # long rows (driver-bounded by the same contract that collects the
     # keys at all); deduping 8-byte longs in Python is free while the
@@ -1299,7 +1288,7 @@ def minhash_probe_indexed(
         # 4.6 s of pure plan-BUILD time at 7.8k keys (the whole serve
         # was 6.5 s); the parsed string is ~0.1 s for the same plan
         idx = idx.filter(F.expr(f"band_key IN ({','.join(map(str, keys))})"))
-    candidates = (
+    candidates = hold(
         idx.alias("i")
         .join(F.broadcast(bat_keys.alias("b")), F.col("i.band_key") == F.col("b.band_key"))
         .select(
@@ -1344,21 +1333,13 @@ def minhash_probe_indexed(
         idx_ids, n_cand, broadcast_max_rows,
     )
     bat_ids = candidates.select(F.col("new_doc").alias("doc")).distinct()
-    result = _verify_pairs(
+    return _verify_pairs(
         candidates,
         _trim_sets(bat_sets, bat_ids, n_cand, broadcast_max_rows),
         idx_f,
         "new_doc", "index_doc", threshold_num, threshold_den, n_cand,
         bytes_ub, "kernel", broadcast_max_rows, broadcast_max_bytes,
     )
-    if eager:
-        result = result.persist(StorageLevel.MEMORY_AND_DISK)
-        result.count()
-        # idx_f is persisted only on the join path; unpersisting an
-        # uncached frame is a no-op
-        for cached in (bat_sets, bat_keys, candidates, idx_f):
-            cached.unpersist()
-    return result
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFrame:
@@ -1443,12 +1424,12 @@ def pagerank_fixedpoint(
     rank ~ x1e12 fixed point.
     """
     num, den = damping_num, damping_den
-    e = (
+    e = hold(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    nodes = (
+    nodes = hold(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -1465,9 +1446,9 @@ def pagerank_fixedpoint(
         )
     deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
     base = scale // n_nodes
-    ranks = nodes.select(
+    ranks = hold(nodes.select(
         "node", F.lit(base).cast("long").alias("rank")
-    ).localCheckpoint()
+    ).localCheckpoint())
     for _ in range(iters):
         per_src = ranks.join(deg, ranks.node == deg.src, "inner").select(
             F.col("node").alias("s"),
@@ -1481,7 +1462,7 @@ def pagerank_fixedpoint(
         dangling = ranks.join(deg, ranks.node == deg.src, "left_anti").agg(
             F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dangling_m")
         )
-        ranks = (
+        ranks = hold(
             nodes.join(contribs, nodes.node == F.col("node2"), "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -1603,7 +1584,7 @@ def connected_components(
 
     Output: (doc, component) for every doc appearing in ``pairs``.
     """
-    edges = (
+    edges = hold(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -1617,7 +1598,7 @@ def connected_components(
     )
     cur = edges
     for _ in range(max_iter):
-        nxt = _small_star(_large_star(cur)).localCheckpoint()
+        nxt = hold(_small_star(_large_star(cur)).localCheckpoint())
         unchanged = (
             nxt.count() == cur.count()
             and nxt.exceptAll(cur).limit(1).count() == 0

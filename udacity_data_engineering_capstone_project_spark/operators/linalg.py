@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import hold
+
 _PARTIAL_SCHEMA = "n long, s array<long>, o array<long>"
 
 
@@ -70,7 +72,7 @@ def embedding_moments(
     p = df.select(vec_col).mapInPandas(partials, _PARTIAL_SCHEMA)
     # the partial set is tiny (one row per Arrow batch) but feeds three
     # aggregations — persist so the scan+quantize pass runs once
-    p = p.persist()
+    p = hold(p.persist())
     sxy = (
         p.select(F.posexplode("o").alias("idx", "v"))
         .groupBy("idx")

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textnorm import tokens_col
+from ..session import hold
 from ..sources.index_store import IndexStore, Table
 from ..sources.readers import from_records
 
@@ -128,9 +129,7 @@ def bm25_topk(
     # regex CPU — interleaved A/B: min 1.41 -> 1.33 s at sf0.1).
     # localCheckpoint, not persist: no CacheManager registration, so
     # the shared-lineage cache-substitution trap cannot fire.
-    base = _doc_token_arrays(docs, id_col, text_col).localCheckpoint(
-        eager=True
-    )
+    base = hold(_doc_token_arrays(docs, id_col, text_col).localCheckpoint(eager=True))
     exploded = base.select(
         "doc",
         F.size("toks").alias("dl"),

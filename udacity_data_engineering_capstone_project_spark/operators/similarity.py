@@ -29,6 +29,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions.hashing import srp_planes
 from ..functions.vectors import cosine_cols, to_double_array
+from ..session import ROOT_SCOPE, hold, resource_scope
 
 
 def _with_double_vec(df: DataFrame, vec_col: str, out: str) -> DataFrame:
@@ -73,12 +74,9 @@ def brute_force_topk(
     row-identical (oracle hashes unchanged).
 
     The query matrix ships via ``SparkContext.broadcast`` (the
-    knn_self_topk_arrow discipline); the handle is attached to the
-    returned DataFrame as ``_centroid_broadcast`` AND registered in
-    the session-level routing-broadcast registry (ADVICE r12: wrapping
-    queries often ``.select()`` the result, stripping the attribute —
-    the registry lets ``destroy_routing_broadcast`` release the handle
-    regardless).
+    knn_self_topk_arrow discipline), held in the caller's
+    :func:`session.resource_scope`: closing it destroys the handle,
+    however the caller wrapped the result.
 
     Guards (ADVICE r12): the collect itself is bounded by
     ``spark.driver.maxResultSize`` (1 GiB default — a clear Spark
@@ -111,8 +109,7 @@ def brute_force_topk(
             "the full matrix — route queries through the IVF serving "
             "path instead"
         )
-    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat))
-    _ROUTING_BC_REGISTRY.append(bc)
+    bc = hold(corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat)))
     kk, chunk_cap = int(k), int(query_chunk)
 
     def partials(batches):
@@ -141,12 +138,10 @@ def brute_force_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    out = (
+    return (
         part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-    out._centroid_broadcast = bc  # harness post-action hook releases it
-    return out
 
 
 def cosine_arrow_udf():
@@ -286,13 +281,10 @@ def knn_self_topk_arrow(
     registry query). Broadcast, not closure capture, so the matrix is
     shipped once per executor instead of re-pickled into every
     stage's task binary if the kernel feeds multiple actions
-    (VERDICT r7 finding #2). Broadcast LIFETIME is caller-side, like
-    minhash_probe_indexed's eager mode: the handle is exposed as the
-    returned DataFrame's ``_corpus_broadcast`` attribute — a serving
-    loop calling this kernel repeatedly should
-    ``df._corpus_broadcast.destroy()`` after consuming each result,
-    or up-to-100 MB broadcasts accumulate until Python GC reaps the
-    closure (ADVICE r8). One-shot plans may ignore it. Output:
+    (VERDICT r7 finding #2). The broadcast is held in the caller's
+    :func:`session.resource_scope`: a serving loop calling this kernel
+    repeatedly opens one scope per call, or up-to-100 MB broadcasts
+    accumulate until the scope closes (ADVICE r8). Output:
     (query_id, neighbor_id, cos_sim, rank).
     """
     rows = corpus.select(
@@ -308,10 +300,7 @@ def knn_self_topk_arrow(
     mat_l = np.array([r["v"] for r in rows], dtype=np.float64)
     # corpus-side norms once, in the sequential-cumsum order
     c_norms_l = np.sqrt(np.cumsum(mat_l * mat_l, axis=1)[:, -1])
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        (ids_l, mat_l, c_norms_l)
-    )
-    _ROUTING_BC_REGISTRY.append(bc)
+    bc = hold(corpus.sparkSession.sparkContext.broadcast((ids_l, mat_l, c_norms_l)))
     kk, chunk_cap = int(k), int(query_chunk)
 
     def topk_batches(batches):
@@ -342,12 +331,10 @@ def knn_self_topk_arrow(
     src = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    out = src.mapInPandas(
+    return src.mapInPandas(
         topk_batches,
         "query_id long, neighbor_id long, cos_sim double, rank int",
     )
-    out._corpus_broadcast = bc  # caller-side lifetime, see docstring
-    return out
 
 
 def ivf_self_topk_arrow(
@@ -421,11 +408,10 @@ def ivf_self_topk_arrow(
     src = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    routed_raw = _nearest_cells_arrow(
+    routed = _nearest_cells_arrow(
         src, "id", "v", centroids, centroid_id_col, vec_col,
         nprobe=npb, keep_vec=True, with_rank=True, two_level=two_level,
-    )
-    routed = routed_raw.select(
+    ).select(
         F.col("centroid_id").cast("long").alias("cell"),
         F.col("id").cast("long").alias("id"),
         "v",
@@ -470,13 +456,9 @@ def ivf_self_topk_arrow(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    out = per_cell.withColumn("rank", F.row_number().over(w)).filter(
+    return per_cell.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= kk
     )
-    # propagate the routing broadcast's handle through the .select()
-    # that would otherwise drop it (ADVICE r10: caller-side destroy)
-    out._centroid_broadcast = routed_raw._centroid_broadcast
-    return out
 
 
 def ivf_cells_bounded(n: int, pop: int = 512, min_cells: int = 8) -> int:
@@ -604,9 +586,9 @@ def embedding_near_dup(
     # without the persist, the Arrow sign-bit UDF (and the corpus scan
     # feeding it) would run once per side, doubling the dominant cost
     # at scale. Rows are (long, long) — tiny.
-    keyed = c.select(
+    keyed = hold(c.select(
         "vid", F.explode(band_keys("cv")).alias("band_key")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK))
     x = keyed.alias("x")
     y = keyed.alias("y")
     candidates = (
@@ -631,8 +613,8 @@ def embedding_near_dup(
     # hint-free: the semi-join and both verification joins become
     # vid-keyed shuffles — linear, just not exchange-free. The dedup
     # operators' _bc discipline, applied here.
-    candidates = candidates.persist(StorageLevel.MEMORY_AND_DISK)
-    ids = (
+    candidates = hold(candidates.persist(StorageLevel.MEMORY_AND_DISK))
+    ids = hold(
         candidates.select(F.col("id_a").alias("vid"))
         .unionByName(candidates.select(F.col("id_b").alias("vid")))
         .distinct()
@@ -646,9 +628,7 @@ def embedding_near_dup(
     def _bc(d):
         return F.broadcast(d) if n_ids <= id_bound else d
 
-    cf = c.join(_bc(ids), "vid", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    cf = hold(c.join(_bc(ids), "vid", "left_semi").persist(StorageLevel.MEMORY_AND_DISK))
     # Exact-cosine verification as ONE vectorized Arrow kernel, not the
     # interpreted zip_with/aggregate fold (numpy batch math is ~100x
     # cheaper per element); cosine_arrow_udf is nondeterministic since
@@ -794,9 +774,9 @@ def semantic_dedup(
     assignment) is the known failure mode — at 100 TB, cap cluster
     size upstream by splitting on a secondary SRP band key.
     """
-    c = _with_double_vec(corpus, vec_col, "cv").select(
+    c = hold(_with_double_vec(corpus, vec_col, "cv").select(
         F.col(id_col).alias("vid"), F.col(cluster_col).alias("cl"), "cv"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK))
     cos_r_arrow = cosine_arrow_udf()
     a = c.alias("a")
     b = c.alias("b")
@@ -924,52 +904,14 @@ def _two_level_plan(
 _ROUTING_PLAN_MAX_BYTES = 256 << 20
 
 
-#: Session-level registry of live routing/query-matrix broadcasts
-#: (ADVICE r12): wrapping queries often ``.select()`` a kernel's
-#: result, stripping the ``_centroid_broadcast`` attribute and turning
-#: the attribute-based destroy into a no-op — the handle then leaked
-#: until GC. Every kernel that ships a ``SparkContext.broadcast``
-#: registers it here too, and the harness hook drains the registry.
-_ROUTING_BC_REGISTRY: list = []
-
-
 def destroy_routing_broadcast(df) -> bool:
-    """Release the centroid/query-matrix broadcasts created while
-    building ``df``'s plan — the caller-side half of the lifetime
-    contract every IVF kernel documents. Call AFTER the final action
-    on ``df``; destroying earlier makes any re-execution of the plan
-    fail. Harness discipline (ADVICE r11): bench.py destroys after
-    each timed iteration and tools/oracle_check.py after each compare,
-    so long harness sessions no longer accumulate one broadcast per
-    kernel call.
-
-    Destroys the DataFrame-attached ``_centroid_broadcast`` (if any)
-    AND drains the session-level registry (ADVICE r12: ``.select()``
-    wrappers strip the attribute). Draining destroys EVERY routing
-    broadcast registered since the last call, so callers must not
-    hold other not-yet-executed kernel plans across the hook — the
-    bench/oracle per-query cadence never does. Returns True if any
-    handle was destroyed (idempotent)."""
-    destroyed = False
-    bc = getattr(df, "_centroid_broadcast", None)
-    if bc is not None:
-        try:
-            bc.destroy()
-            destroyed = True
-        finally:
-            df._centroid_broadcast = None
-    seen = {id(bc)} if bc is not None else set()
-    while _ROUTING_BC_REGISTRY:
-        handle = _ROUTING_BC_REGISTRY.pop()
-        if id(handle) in seen:
-            continue
-        seen.add(id(handle))
-        try:
-            handle.destroy()
-            destroyed = True
-        except Exception:
-            pass  # already destroyed by an attribute-based release
-    return destroyed
+    """Release :data:`session.ROOT_SCOPE`: what the plans built outside
+    any open :func:`session.resource_scope` hold. The harness calls it
+    after a query's final action (bench.py after each timed iteration,
+    tools/oracle_check.py after each compare); ``df`` is not read. A
+    caller holding other plans open builds them in a scope of their
+    own, which this leaves alone. Returns True if anything was held."""
+    return ROOT_SCOPE.release()
 
 
 def _centroid_routing_plan(
@@ -986,9 +928,9 @@ def _centroid_routing_plan(
     AND probers against the same centroids; building the plan once
     halves its broadcast count (ADVICE r10: two broadcasts per call
     accumulated over long sessions). Returns ``(bc, n_cells, n_coarse,
-    w_coarse, use_two_level)``; ``bc`` is the broadcast handle —
-    callers own its lifetime (destroy after the final action, the
-    knn_self_topk_arrow discipline).
+    w_coarse, use_two_level)``; ``bc`` is the broadcast handle, held in
+    the caller's :func:`session.resource_scope` (released with it, after
+    the final action of every plan that routes through it).
 
     Refuses (ValueError) a centroid table whose collected matrix would
     exceed :data:`_ROUTING_PLAN_MAX_BYTES` — a clear error at plan
@@ -997,13 +939,14 @@ def _centroid_routing_plan(
     The pre-check is one tiny agg over the centroid table (count +
     max vector length); the table is persisted across check + collect
     so its lineage — often a full k-means or groupBy — computes
-    exactly once, as before the guard existed."""
-    cent = (
-        _with_double_vec(centroids, vec_col, "uv")
-        .select(F.col(centroid_id_col).alias("centroid_id"), "uv")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
+    exactly once, as before the guard existed, in a scope of its own
+    that closes before the plan returns."""
+    with resource_scope():
+        cent = hold(
+            _with_double_vec(centroids, vec_col, "uv")
+            .select(F.col(centroid_id_col).alias("centroid_id"), "uv")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
         stats = cent.agg(
             F.count(F.lit(1)).alias("n"), F.max(F.size("uv")).alias("dim")
         ).first()
@@ -1021,8 +964,6 @@ def _centroid_routing_plan(
                 "centroid table sub-budget."
             )
         rows = sorted(cent.collect(), key=lambda r: r["centroid_id"])
-    finally:
-        cent.unpersist()
     cent_ids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
     cent_mat = np.array([r["uv"] for r in rows], dtype=np.float64)
     cent_norms = np.sqrt(np.cumsum(cent_mat * cent_mat, axis=1)[:, -1])
@@ -1033,10 +974,9 @@ def _centroid_routing_plan(
         w_coarse = min(int(coarse_probe), n_coarse)
     else:
         n_coarse, branch_members, w_coarse = 0, None, 0
-    bc = centroids.sparkSession.sparkContext.broadcast(
+    bc = hold(centroids.sparkSession.sparkContext.broadcast(
         (cent_ids, cent_mat, cent_norms, branch_members)
-    )
-    _ROUTING_BC_REGISTRY.append(bc)
+    ))
     return bc, n_cells, n_coarse, w_coarse, use_two_level
 
 
@@ -1067,9 +1007,9 @@ def _nearest_cells_arrow(
     dots). Here routing is one ``mapInPandas`` pass: centroids ship
     once per executor via ``SparkContext.broadcast`` (closure capture
     would re-pickle the matrix into every stage's task binary —
-    VERDICT r9 wrong #2; the handle is exposed as the returned
-    DataFrame's ``_centroid_broadcast`` for caller-side destroy, the
-    knn_self_topk_arrow discipline), dots come from the blocked
+    VERDICT r9 wrong #2; the handle is held in the caller's
+    :func:`session.resource_scope`, the knn_self_topk_arrow
+    discipline), dots come from the blocked
     left-fold-exact cosine kernel (_rounded_cos_mat: BLAS dots + the
     boundary guard — bit-equal to the sequential left fold), and only
     the winning (row, cell) pairs leave the kernel — zero shuffle,
@@ -1216,12 +1156,9 @@ def _nearest_cells_arrow(
                         sel[rows_g, :take] = cand[loc]
                 yield emit(ids_all[s:e], vs_all[s:e], sel)
 
-    out = df.mapInPandas(route, out_schema)
-    out = out.withColumn(
+    return df.mapInPandas(route, out_schema).withColumn(
         "centroid_id", F.col("centroid_id").cast(cid_type)
     ).withColumn(id_name, F.col(id_name).cast(id_type))
-    out._centroid_broadcast = bc  # caller-side lifetime (see docstring)
-    return out
 
 
 def ivf_topk(
@@ -1276,8 +1213,8 @@ def ivf_topk(
     :func:`_centroid_routing_plan` so repeated searches against the
     SAME centroids (a recall sweep, a serving loop) collect + broadcast
     them once instead of per call; it must have been built from these
-    centroids with this ``two_level`` — the caller owns the broadcast
-    handle's lifetime."""
+    centroids with this ``two_level``, and its broadcast lives as long
+    as the scope it was built in."""
     q = _with_double_vec(queries, vec_col, "qv").select(
         F.col(id_col).alias("query_id"), "qv"
     )
@@ -1320,14 +1257,12 @@ def ivf_topk(
     )
     q_id_type = dict(queries.dtypes)[id_col]
     c_id_type = dict(corpus.dtypes)[id_col]
-    out = (
+    return (
         per_cell.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .withColumn("query_id", F.col("query_id").cast(q_id_type))
         .withColumn("neighbor_id", F.col("neighbor_id").cast(c_id_type))
     )
-    out._centroid_broadcast = plan[0]  # caller-side lifetime (ADVICE r10)
-    return out
 
 
 def _make_cell_topk_qc(kk: int):
@@ -1502,7 +1437,7 @@ def kmeans_cosine(
     """
     from pyspark.sql.functions import pandas_udf
 
-    c = (
+    c = hold(
         _with_double_vec(corpus, vec_col, "cv")
         .select(F.col(id_col).alias("vid"), "cv")
         .persist(StorageLevel.MEMORY_AND_DISK)

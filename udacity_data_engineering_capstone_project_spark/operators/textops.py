@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import spark_hex_to_long
 from ..functions.textnorm import tokens_col
+from ..session import hold, resource_scope
 from ..sources.readers import from_records
 
 #: Marker stopwords per language for the n-gram-free language-ID
@@ -505,7 +506,8 @@ def train_bpe_merges(
     argmax with deterministic (count desc, pair asc) tie-break
     (a 1-row driver collect), and an Arrow-batched merge-apply over
     only the words that contain the winning pair. ``localCheckpoint``
-    per round bounds lineage. Driver state is O(n_merges) rows.
+    per round bounds lineage, in a scope that closes before the table
+    returns. Driver state is O(n_merges) rows.
 
     Deterministic end to end (integer counts, total tie order), so the
     learned table is reproducible on any cluster layout — pinned by a
@@ -515,60 +517,59 @@ def train_bpe_merges(
     """
     from pyspark.sql.functions import pandas_udf
 
-    words = (
-        df.select(F.explode(tokens_col(text_col)).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    syms = words.select(
-        "cnt", F.split("w", "").alias("s")
-    ).localCheckpoint()
-
-    pair_expr = F.expr(
-        "transform(sequence(0, size(s) - 2), i -> struct(s[i] AS a, s[i+1] AS b))"
-    )
-    merges: list = []
-    for rank in range(n_merges):
-        pairs = (
-            syms.filter(F.size("s") >= 2)  # sequence(0,-1) counts DOWN
-            .select("cnt", F.explode(pair_expr).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").alias("n"))
+    with resource_scope():
+        words = (
+            df.select(F.explode(tokens_col(text_col)).alias("w"))
+            .filter(F.col("w") != "")
+            .groupBy("w")
+            .agg(F.count("*").alias("cnt"))
         )
-        top = pairs.orderBy(F.col("n").desc(), "a", "b").limit(1).collect()
-        if not top or top[0].n < min_count:
-            break
-        a, b, n = top[0].a, top[0].b, int(top[0].n)
-        merges.append((rank, a, b, n))
+        syms = hold(words.select("cnt", F.split("w", "").alias("s")).localCheckpoint())
 
-        def make_apply(a: str, b: str):
-            ab = a + b
+        pair_expr = F.expr(
+            "transform(sequence(0, size(s) - 2), i -> struct(s[i] AS a, s[i+1] AS b))"
+        )
+        merges: list = []
+        for rank in range(n_merges):
+            pairs = (
+                syms.filter(F.size("s") >= 2)  # sequence(0,-1) counts DOWN
+                .select("cnt", F.explode(pair_expr).alias("p"))
+                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+                .agg(F.sum("cnt").alias("n"))
+            )
+            top = pairs.orderBy(F.col("n").desc(), "a", "b").limit(1).collect()
+            if not top or top[0].n < min_count:
+                break
+            a, b, n = top[0].a, top[0].b, int(top[0].n)
+            merges.append((rank, a, b, n))
 
-            @pandas_udf("array<string>")
-            def apply_merge(col: pd.Series) -> pd.Series:
-                out = []
-                for lst in col:
-                    lst = list(lst)
-                    if a not in lst:
-                        out.append(lst)
-                        continue
-                    res, i, L = [], 0, len(lst)
-                    while i < L:
-                        if i < L - 1 and lst[i] == a and lst[i + 1] == b:
-                            res.append(ab)
-                            i += 2
-                        else:
-                            res.append(lst[i])
-                            i += 1
-                    out.append(res)
-                return pd.Series(out)
+            def make_apply(a: str, b: str):
+                ab = a + b
 
-            return apply_merge
+                @pandas_udf("array<string>")
+                def apply_merge(col: pd.Series) -> pd.Series:
+                    out = []
+                    for lst in col:
+                        lst = list(lst)
+                        if a not in lst:
+                            out.append(lst)
+                            continue
+                        res, i, L = [], 0, len(lst)
+                        while i < L:
+                            if i < L - 1 and lst[i] == a and lst[i + 1] == b:
+                                res.append(ab)
+                                i += 2
+                            else:
+                                res.append(lst[i])
+                                i += 1
+                        out.append(res)
+                    return pd.Series(out)
 
-        syms = syms.select(
-            "cnt", make_apply(a, b)("s").alias("s")
-        ).localCheckpoint()
+                return apply_merge
+
+            syms = hold(
+                syms.select("cnt", make_apply(a, b)("s").alias("s")).localCheckpoint()
+            )
     return merges
 
 
@@ -723,13 +724,14 @@ def cooccurrence_pmi(
     # persisted: feeds BOTH the df aggregate and the capped pair join —
     # without it the corpus tokenize/explode (the dominant cost) runs
     # twice.
-    pres = (
+    pres = hold(
         df.select(
             F.col(id_col).alias("doc"),
             F.explode(F.array_distinct(tokens_col(text_col))).alias("token"),
         )
         .filter(F.col("token") != "")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     dfreq = pres.groupBy("token").agg(F.count("*").alias("df"))
     # top-M cut as orderBy+limit (TakeOrderedAndProject: per-partition
     # M-heaps), never a global-window row_number over the vocabulary
@@ -1075,9 +1077,9 @@ def log_odds_distinctive(
     # whole upstream (explode, or the k-means assignment UDF in the
     # cluster-grouped caller) re-executes once per consumer (plan audit
     # round 5: py=6 evals on cluster_topic_terms before this)
-    sc = tokens.groupBy(group_col, "token").agg(
+    sc = hold(tokens.groupBy(group_col, "token").agg(
         F.count("*").alias("y_s")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK))
     tot_s = sc.groupBy(group_col).agg(F.sum("y_s").alias("n_s"))
     tot_w = sc.groupBy("token").agg(F.sum("y_s").alias("y_all"))
     scalars = sc.select(

@@ -20,8 +20,10 @@ Scale notes:
   oracle-free production path (~30% cheaper; pair output identical,
   see operators/dedup._digest_expr).
 - survivor frames are persisted at the two stage boundaries whose
-  subtrees later stages re-read (post-near-dup, post-PII) — at 100 TB
-  these become parquet checkpoints between jobs, not memory caches.
+  subtrees later stages re-read (post-near-dup, post-PII), held like
+  every stage's resources in the caller's ``session.resource_scope``
+  — at 100 TB these become parquet checkpoints between jobs, not
+  memory caches.
 - the report is a union of per-stage 1-row aggregates: one extra scan
   per audited stage, bounded output.
 """
@@ -47,6 +49,7 @@ from ..operators.dedup import (
     minhash_lsh_pairs,
 )
 from ..operators.textops import quality_score
+from ..session import hold
 from ..sources.readers import read_table
 
 
@@ -117,7 +120,7 @@ def curate_corpus(
     drop = comp.filter(F.col("doc") != F.col("component")).select(
         F.col("doc").alias("doc_id")
     )
-    near_kept = exact_kept.join(drop, "doc_id", "left_anti").persist()
+    near_kept = hold(exact_kept.join(drop, "doc_id", "left_anti").persist())
     audits.append(_audit("near_dedup", 3, near_kept))
 
     # 4. benchmark decontamination (eval split = md5 bucket >= 90 of
@@ -146,9 +149,9 @@ def curate_corpus(
     }  # bounded driver state: one row per source
     total_planned = sum(quotas.values()) or 1
     weights = {s: q / total_planned for s, q in quotas.items()}
-    mixed = mixture_sample(
+    mixed = hold(mixture_sample(
         redacted, weights, total=total_planned, domain_col="source"
-    ).persist()
+    ).persist())
     audits.append(_audit("mixture", 6, mixed))
 
     # 7. sequence packing layout at seq_len

@@ -55,6 +55,7 @@ from ..operators.textops import (
     winnow_fingerprints,
 )
 from ..operators.windows import sessionize
+from ..session import hold
 from ..sources.readers import from_records
 from .queries_parity import EVENTS_US, _t
 
@@ -1174,17 +1175,12 @@ def ann_recall_sweep(spark, sf_dir):
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
-    out = u.crossJoin(truth_cnt).select(
+    return u.crossJoin(truth_cnt).select(
         "nprobe",
         "n_hits",
         "n_truth",
         F.expr("(n_hits * 1000) div n_truth").alias("recall_x1000"),
     )
-    # carry the SHARED routing broadcast on the returned DataFrame so
-    # the harness post-action hook can destroy it (ADVICE r11: the
-    # handle was lost after .select(), leaking one broadcast per call)
-    out._centroid_broadcast = plan[0]
-    return out
 
 
 def _ivf_sweep_ctes(np_: int) -> str:
@@ -1526,17 +1522,16 @@ def ivf_trained_recall(spark, sf_dir):
     assigned = kmeans_cosine(emb, k=8, iters=3, init="kmeans++")
     cents = centroid_table(emb, assigned)
     queries = emb.filter(F.col("vec_id") < 20)
-    approx_raw = ivf_topk(
+    approx = ivf_topk(
         queries, emb, cents, k=5, nprobe=2, two_level=True
-    )
-    approx = approx_raw.select("query_id", "neighbor_id")
+    ).select("query_id", "neighbor_id")
     exact = brute_force_topk(queries, emb, k=5).select("query_id", "neighbor_id")
     hit_n = (
         exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
         .groupBy("query_id")
         .agg(F.count("*").alias("n_hit"))
     )
-    out = (
+    return (
         exact.groupBy("query_id")
         .agg(F.count("*").alias("n_exact"))
         .join(hit_n, "query_id", "left")
@@ -1548,9 +1543,6 @@ def ivf_trained_recall(spark, sf_dir):
             .alias("recall_x100"),
         )
     )
-    # carry the routing broadcast for the harness destroy hook
-    out._centroid_broadcast = getattr(approx_raw, "_centroid_broadcast", None)
-    return out
 
 
 def ann_pq_recall(spark, sf_dir):
@@ -5102,8 +5094,10 @@ def kmv_user_overlap(spark, sf_dir):
     # persist: no CacheManager registration, no cache substitution
     # into other queries' plans. Interleaved A/B at sf0.1: min
     # 1.70->1.58 s, p25 2.02->1.74 s.
-    sk_plan = kmv_sketch(e, "event_type", "user_id", k=K, nchars=NCH)
-    sk = sk_plan.localCheckpoint(eager=True)
+    sk = hold(
+        kmv_sketch(e, "event_type", "user_id", k=K, nchars=NCH)
+        .localCheckpoint(eager=True)
+    )
     per = (
         sk.groupBy("g")
         .agg(F.max("rn").alias("n_sk"), F.max("h").alias("kth"))
@@ -5203,11 +5197,6 @@ def kmv_user_overlap(spark, sf_dir):
         )
         .orderBy("type_a", "type_b")
     )
-    # testability hook (the _verify_sets_df precedent): the sketch's
-    # scale-shape plan (broadcast thr join, pre-window h < thr filter)
-    # was materialized by the localCheckpoint above and no longer
-    # appears in the returned plan — the plan guard asserts it here
-    out._kmv_sketch_df = sk_plan
     return out
 
 
@@ -6009,7 +5998,7 @@ def source_dup_overlap_matrix(spark, sf_dir):
     # persisted: referenced by the self-join (twice) and the counts
     # (twice) — without it the shingle fingerprint aggregation runs 4x
     # (plan audit round 5: 13 shuffles before this)
-    sd = (
+    sd = hold(
         docs.select("doc_id", "source")
         .join(fp, "doc_id")
         .select("source", F.col("min_shingle_fp").alias("fp"))
@@ -6637,7 +6626,7 @@ def bitext_mining_pairs(spark, sf_dir):
         F.col("rank").alias("rn"),
     )
     x1e4 = lambda col: F.floor(col * 1e4 + F.lit(0.5)).cast("bigint")  # noqa: E731
-    out = (
+    return (
         top2.groupBy("src_doc")
         .agg(
             F.max(F.when(F.col("rn") == 1, F.col("tgt_doc"))).alias("tgt_doc"),
@@ -6649,8 +6638,6 @@ def bitext_mining_pairs(spark, sf_dir):
         )
         .select("src_doc", "tgt_doc", "cos_sim", "margin_x1e4")
     )
-    out._centroid_broadcast = bf._centroid_broadcast
-    return out
 
 
 _COS_BT = sql_round_fixed("list_cosine_similarity(q.qv, c.cv)", 4)
@@ -7265,13 +7252,13 @@ def join_size_estimate_sketch(spark, sf_dir):
     # persist so each data-scale aggregation runs once (the
     # persisted-subtree discipline from the log-odds fix; fan tables
     # are |keys|-sized, sketches are k-sized)
-    fa = fan_table(
-        _t(spark, sf_dir, "events").select("user_id"), "user_id"
-    ).persist()
-    fb = fan_table(
-        _t(spark, sf_dir, "orders").select("o_custkey"), "o_custkey"
-    ).persist()
-    ska, skb = keyed_sketch(fa).persist(), keyed_sketch(fb).persist()
+    fa = hold(
+        fan_table(_t(spark, sf_dir, "events").select("user_id"), "user_id").persist()
+    )
+    fb = hold(
+        fan_table(_t(spark, sf_dir, "orders").select("o_custkey"), "o_custkey").persist()
+    )
+    ska, skb = hold(keyed_sketch(fa).persist()), hold(keyed_sketch(fb).persist())
 
     def summary(sk, side):
         return sk.agg(F.max("rn").alias("n_sk"), F.max("h").alias("kth")).select(
@@ -7476,9 +7463,9 @@ def ann_truncated_dim_recall(spark, sf_dir):
     # corpus/query scans — persist them once (ann_recall_sweep's
     # stateless-per-point shape predates the persisted-subtree
     # discipline; at 100 TB re-scanning the corpus per dim is the bug)
-    emb = _t(spark, sf_dir, "embeddings").persist()
-    queries = emb.filter(F.col("vec_id") < 20).persist()
-    exact = (
+    emb = hold(_t(spark, sf_dir, "embeddings").persist())
+    queries = hold(emb.filter(F.col("vec_id") < 20).persist())
+    exact = hold(
         brute_force_topk(queries, emb, "vec_id", "embedding", k=5)
         .select("query_id", "neighbor_id")
         .persist()  # consumed by three hit-joins + the truth count
@@ -7652,7 +7639,7 @@ def leakage_safe_split(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     sets = shingle_sets(_t(spark, sf_dir, "documents"), "doc_id", "text", n=3)
-    prs = jaccard_pairs(sets, threshold_num=3, threshold_den=5).persist()
+    prs = hold(jaccard_pairs(sets, threshold_num=3, threshold_den=5).persist())
     comp = connected_components(prs)
     clustered = docs.join(
         comp, docs.doc_id == comp.doc, "left"
@@ -7665,11 +7652,11 @@ def leakage_safe_split(spark, sf_dir):
             F.expr(spark_hex_to_long(f"md5(CAST({col} AS STRING))", 7)) % 10
         )
 
-    assigned = clustered.select(
+    assigned = hold(clustered.select(
         "doc_id",
         (bucket("cluster") < 8).cast("int").alias("in_train_cluster"),
         (bucket("doc_id") < 8).cast("int").alias("in_train_naive"),
-    ).persist()
+    ).persist())
 
     def strategy_row(flag_col, name):
         counts = assigned.agg(
@@ -7872,9 +7859,9 @@ def random_walk_corpus(spark, sf_dir):
         )
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    edges = edges.unionByName(
+    edges = hold(edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    ).persist())
     walks = edges.select("src").distinct().select(
         F.col("src").alias("start"),
         F.col("src").alias("cur"),
@@ -7979,18 +7966,20 @@ def bitext_mining_ivf(spark, sf_dir):
         .join(emb, docs.doc_id == emb.vec_id)
         .select("vec_id", "embedding")
     )
-    en = (
+    # feeds the cell count, the assignment, and the rank
+    en = hold(
         docs.filter(F.col("lang") == "en")
         .join(emb, docs.doc_id == emb.vec_id)
         .select("vec_id", "embedding")
-    ).persist()  # feeds the cell count, the assignment, and the rank
+        .persist()
+    )
     n_cells = ivf_cells_bounded(en.count())
     cents = emb.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
     top2 = ivf_topk(de, en, cents, k=2, nprobe=2, two_level=True)
     x1e4 = lambda col: F.floor(col * 1e4 + F.lit(0.5)).cast("bigint")  # noqa: E731
-    out = (
+    return (
         top2.groupBy("query_id")
         .agg(
             F.max(F.when(F.col("rank") == 1, F.col("neighbor_id"))).alias(
@@ -8009,9 +7998,6 @@ def bitext_mining_ivf(spark, sf_dir):
             "margin_x1e4",
         )
     )
-    # carry the routing broadcast for the harness destroy hook
-    out._centroid_broadcast = getattr(top2, "_centroid_broadcast", None)
-    return out
 
 
 ORACLE_BITEXT_IVF = f"""
@@ -8084,11 +8070,11 @@ def khop_contamination_radius(spark, sf_dir):
     identical UNION ALL + bound + MIN semantics."""
     from ..operators.dedup import jaccard_pairs as _jp
 
-    prs = _jp(
+    prs = hold(_jp(
         shingle_sets(_t(spark, sf_dir, "documents"), "doc_id", "text", n=3),
         threshold_num=3,
         threshold_den=5,
-    ).select("doc_a", "doc_b").persist()
+    ).select("doc_a", "doc_b").persist())
     # persisted BEFORE the view: the recursive plan references the
     # edge view from both union branches, the seed scan, AND every
     # recursion level — unpersisted, each reference re-mines the
@@ -8181,7 +8167,7 @@ def lm_stupid_backoff_scores(spark, sf_dir):
     n_tri, sb_score_x1e6)."""
     docs = _t(spark, sf_dir, "documents")
     b = F.expr(spark_hex_to_long("md5(CAST(doc_id AS STRING))", 7)) % 100
-    toks = (
+    toks = hold(
         docs.select(
             "doc_id", tokens_col("text").alias("toks"), b.alias("bkt")
         )
@@ -8210,8 +8196,8 @@ def lm_stupid_backoff_scores(spark, sf_dir):
     uni_train = train.select(F.explode("toks").alias("w"))
 
     c3 = tri(train).groupBy("w1", "w2", "w3").agg(F.count("*").alias("c3"))
-    c2 = bi_train.groupBy("w1", "w2").agg(F.count("*").alias("c2")).persist()
-    c1 = uni_train.groupBy("w").agg(F.count("*").alias("c1")).persist()
+    c2 = hold(bi_train.groupBy("w1", "w2").agg(F.count("*").alias("c2")).persist())
+    c1 = hold(uni_train.groupBy("w").agg(F.count("*").alias("c1")).persist())
     n_tok = uni_train.agg(F.count("*").cast("long").alias("N"))
 
     pos = tri(toks.filter(F.col("bkt") >= 90))
@@ -8490,12 +8476,9 @@ def ann_hubness_audit_ivf(spark, sf_dir):
         .join(occ, "vec_id", "left")
         .select(F.coalesce("k_occ", F.lit(0)).cast("long").alias("k_occurrence"))
     )
-    out = per_vec.groupBy("k_occurrence").agg(
+    return per_vec.groupBy("k_occurrence").agg(
         F.count("*").cast("long").alias("n_vectors")
     )
-    # carry the routing broadcast for the harness destroy hook
-    out._centroid_broadcast = getattr(top5, "_centroid_broadcast", None)
-    return out
 
 
 ORACLE_ANN_HUBNESS_IVF = f"""

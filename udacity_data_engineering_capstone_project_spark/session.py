@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and the lifetime of driver-side resources.
 
 Replaces the reference's config-file/env-var bootstrap (reference
 ``etl.py:15-33``, ``config.cfg``) with a builder-first factory: AQE on,
@@ -11,8 +11,12 @@ and shuffle partitions sized to the local core count rather than the
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark import Broadcast
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -175,3 +179,72 @@ def observed_metrics(obs) -> dict | None:
         return CPickleSerializer().loads(utils.toPyRow(row.get())).asDict()
     except Exception:
         return None
+
+
+class ResourceScope:
+    """The broadcasts, persisted frames and local checkpoints that
+    :func:`hold` registered while this scope was the innermost open
+    one. A checkpoint is held by its RDD id only, so the garbage
+    collector still frees the blocks of a frame nothing references
+    (an iterative operator's earlier rounds) before the scope closes."""
+
+    def __init__(self) -> None:
+        self.held: list = []
+
+    def release(self) -> bool:
+        """Destroy the held broadcasts, unpersist the held frames and
+        checkpoint RDDs; True if anything was held. Releasing what is
+        already released is a no-op. ``list.pop`` is atomic, so threads
+        holding into the root scope while it is released lose nothing."""
+        released = False
+        while True:
+            try:
+                x = self.held.pop()
+            except IndexError:
+                return released
+            released = True
+            try:
+                if isinstance(x, Broadcast):
+                    x.destroy()
+                elif isinstance(x, DataFrame):
+                    x.unpersist()
+                else:
+                    jsc, rdd_id = x
+                    rdd = jsc.getPersistentRDDs().get(rdd_id)
+                    if rdd is not None:
+                        rdd.unpersist(False)
+            except (Py4JError, OSError):
+                pass  # destroyed or stopped elsewhere: nothing left to free
+
+
+#: Holds what is taken while no :func:`resource_scope` is open; the
+#: harness releases it after each query's final action.
+ROOT_SCOPE = ResourceScope()
+_OPEN: ContextVar = ContextVar("resource_scope", default=ROOT_SCOPE)
+
+
+@contextmanager
+def resource_scope():
+    """Open a scope: everything :func:`hold` registers inside it, and
+    nothing else, is released when the block exits. Re-executing a plan
+    that used a released broadcast or checkpoint raises; one that read a
+    released persist recomputes it."""
+    scope = ResourceScope()
+    token = _OPEN.set(scope)
+    try:
+        yield scope
+    finally:
+        _OPEN.reset(token)
+        scope.release()
+
+
+def hold(x):
+    """Register ``x`` -- a ``Broadcast``, a persisted DataFrame or a
+    ``localCheckpoint`` result -- in the innermost open scope, and
+    return it."""
+    if isinstance(x, DataFrame) and not x.is_cached:
+        rdd = x._jdf.queryExecution().analyzed().rdd()
+        _OPEN.get().held.append((x.sparkSession.sparkContext._jsc, rdd.id()))
+    else:
+        _OPEN.get().held.append(x)
+    return x

@@ -114,76 +114,6 @@ def write_jsonl(
     writer.json(path)
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_mb: int = 256,
-) -> int:
-    """Small-file compaction: rewrite a parquet dataset into files of
-    ~``target_file_mb`` each. The 100 TB hygiene op — streaming
-    ingests and over-partitioned writes leave thousands of KB-sized
-    files whose per-file open/footer cost dominates scans. Sizing is
-    estimated from the CURRENT on-disk bytes (compressed), then the
-    data is rewritten through a single coalesce-style repartition.
-    Returns the number of output files.
-
-    A Hive-partitioned input (``col=val`` directories) is rewritten
-    with the SAME ``partitionBy`` layout — partition columns stay
-    directory-encoded, and ``n_files`` becomes files-per-partition.
-
-    Crash-safe swap: the rewrite lands at ``path + '.compact'``, the
-    old dataset is renamed aside to ``path + '.old'``, the rewrite is
-    renamed into place, and only then is ``.old`` deleted — at no
-    point is ``path`` the only copy missing. (At scale use a
-    transactional table format; the rename dance keeps the demo
-    self-contained and never loses data to a mid-swap crash.)
-    """
-    import math
-    import os
-    import re
-    import shutil
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-
-    # Detect Hive partition columns from the directory layout so the
-    # rewrite preserves it (else partition cols silently become data
-    # cols and the dataset layout changes under the caller).
-    part_cols: list[str] = []
-    probe = path
-    while True:
-        subdirs = [
-            d
-            for d in os.listdir(probe)
-            if os.path.isdir(os.path.join(probe, d))
-            and re.fullmatch(r"[^=]+=[^=]*", d)
-        ]
-        if not subdirs:
-            break
-        part_cols.append(subdirs[0].split("=", 1)[0])
-        probe = os.path.join(probe, subdirs[0])
-
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".compact"
-    writer = df.repartition(n_files, *part_cols) if part_cols else df.repartition(n_files)
-    w = writer.write.mode("overwrite")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.parquet(tmp)
-
-    old = path.rstrip("/") + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)  # old data set aside, still intact
-    os.rename(tmp, path)  # rewrite becomes live
-    shutil.rmtree(old)  # only now is the original deleted
-    return n_files
-
-
 def write_parquet_incremental(
     df: DataFrame,
     path: str,
@@ -284,172 +214,3 @@ def write_zordered(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def targeted_delete(
-    spark,
-    path: str,
-    targets: DataFrame,
-    key_col: str,
-) -> dict:
-    """Right-to-be-forgotten / takedown deletion over an immutable
-    parquet dataset: remove every row whose ``key_col`` appears in
-    ``targets`` by rewriting ONLY the part-files that actually contain
-    a target row — the copy-on-write shape transactional table formats
-    (Delta/Iceberg/Hudi) use, self-contained here on plain parquet.
-
-    Why not ``read -> filter -> overwrite``: at 100 TB that rewrites
-    the entire dataset to delete a handful of rows. Deletes cluster
-    (a user's docs, one ingest batch), so the affected-file set is a
-    sliver; everything else is untouched bytes.
-
-    Dataflow: one pruned scan of (key, input_file_name) semi-joined to
-    the broadcast target keys yields the affected file list (driver
-    state: file PATHS only, bounded by the file count); those files
-    are re-read as their own dataset, anti-joined on the key, and
-    rewritten into fresh uniquely-named part-files; only then are the
-    old files deleted.
-
-    Crash-safety contract: the commit point is one atomic rename of a
-    manifest recording the WHOLE swap — the (src, dst) move of every
-    rewritten part out of the Spark-invisible ``_rewrite_*`` staging
-    dir AND the originals to delete. The manifest is written to a
-    ``.tmp`` name, fsync'd, then ``os.replace``'d into
-    ``_pending_delete_*.json`` (so a torn write can never leave a
-    parseable-but-wrong or truncated manifest behind).
-    - Crash BEFORE the manifest rename: nothing changed — originals
-      intact, staged parts invisible; the next call garbage-collects
-      orphan ``_rewrite_*`` dirs and re-running the delete is a no-op
-      duplicate of work, never a correctness event.
-    - Crash AFTER the rename (mid-moves or mid-deletes): the next
-      call's heal loop replays the manifest in order — moves FIRST
-      (``os.replace`` is idempotent: already-moved parts are skipped),
-      THEN the original deletions — before anything reads the dataset.
-      Kept rows are therefore never stranded invisible while their
-      originals get deleted: the dataset is never missing rows it
-      shouldn't be, in any window.
-
-    Keys are matched on the dataset column's NATIVE type: the targets'
-    key is cast to it and the cast is validated — any target key the
-    cast nulls out (e.g. a non-numeric string against a long column)
-    raises instead of silently matching nothing.
-
-    Returns {"files_total", "files_rewritten", "rows_deleted"}.
-    """
-    import glob
-    import json
-    import os
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    import shutil
-
-    # Heal any interrupted prior delete BEFORE reading: replay each
-    # manifest's moves first (stranded staged parts become visible),
-    # THEN its original-file deletions — so neither the lost-rows nor
-    # the duplicate-rows window can surface to this or a later reader.
-    for manifest in glob.glob(os.path.join(path, "_pending_delete_*.json")):
-        with open(manifest) as fh:
-            m = json.load(fh)
-        if isinstance(m, list):  # legacy delete-only manifest shape
-            moves, deletes, tmp_dir = [], m, None
-        else:
-            moves, deletes, tmp_dir = m["moves"], m["delete"], m.get("tmp_dir")
-        for src, dst in moves:
-            if os.path.exists(src):
-                os.replace(src, dst)
-        for local in deletes:
-            if os.path.exists(local):
-                os.remove(local)
-        if tmp_dir:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-        os.remove(manifest)
-    # Orphans from a crash before the commit rename: half-written
-    # manifests and staging dirs no (processed) manifest references.
-    # Originals are still intact in that window, so both are garbage.
-    for stray in glob.glob(os.path.join(path, "_pending_delete_*.json.tmp")):
-        os.remove(stray)
-    for stray in glob.glob(os.path.join(path, "_rewrite_*")):
-        shutil.rmtree(stray, ignore_errors=True)
-
-    base = spark.read.parquet(path)
-    key_type = base.schema[key_col].dataType
-    t_cast = targets.select(
-        F.col(key_col).alias("__k_raw"),
-        # try_cast: under ANSI mode a plain cast would throw a raw
-        # NumberFormatException mid-job; we want the validated raise
-        F.col(key_col).try_cast(key_type).alias("__k"),
-    ).distinct()
-    n_lost = t_cast.filter(
-        F.col("__k").isNull() & F.col("__k_raw").isNotNull()
-    ).count()
-    if n_lost:
-        raise ValueError(
-            f"targeted_delete: {n_lost} target key(s) do not cast to the "
-            f"dataset's {key_col} type {key_type.simpleString()}; refusing "
-            "to silently no-op a takedown."
-        )
-    t = F.broadcast(t_cast.select("__k").distinct())
-    tagged = base.select(
-        F.col(key_col).alias("__k"),
-        F.input_file_name().alias("__file"),
-    )
-    hit = tagged.join(t, "__k")
-    affected = [r["__file"] for r in hit.select("__file").distinct().collect()]
-    n_deleted = hit.count()
-    all_files = [
-        r["__file"]
-        for r in tagged.select("__file").distinct().collect()
-    ]
-    if not affected:
-        return {
-            "files_total": len(all_files),
-            "files_rewritten": 0,
-            "rows_deleted": 0,
-        }
-
-    kept = (
-        spark.read.parquet(*affected)
-        .join(t, F.col(key_col) == F.col("__k"), "left_anti")
-    )
-    tmp_out = os.path.join(path, f"_rewrite_{uuid.uuid4().hex[:12]}")
-    kept.write.mode("overwrite").parquet(tmp_out)
-    affected_local = [f.replace("file://", "") for f in affected]
-    # Plan the whole swap up front with destination names fixed NOW, so
-    # a replay after a crash lands the same files in the same places.
-    moves = [
-        (
-            os.path.join(tmp_out, name),
-            os.path.join(path, f"deleted-{uuid.uuid4().hex[:8]}-{name}"),
-        )
-        for name in sorted(os.listdir(tmp_out))
-        if name.startswith("part-")
-    ]
-    # Commit point: the full swap plan (moves + originals-to-delete)
-    # goes durable in ONE atomic rename — temp write + fsync +
-    # os.replace — before any part moves. The heal loop above replays
-    # it to completion (moves first, then deletes) after any crash.
-    manifest_path = os.path.join(
-        path, f"_pending_delete_{uuid.uuid4().hex[:12]}.json"
-    )
-    with open(manifest_path + ".tmp", "w") as fh:
-        json.dump(
-            {"moves": moves, "delete": affected_local, "tmp_dir": tmp_out}, fh
-        )
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(manifest_path + ".tmp", manifest_path)
-    # move rewritten parts up beside the survivors, then drop originals
-    for src, dst in moves:
-        os.replace(src, dst)
-    for local in affected_local:
-        if os.path.exists(local):
-            os.remove(local)
-    shutil.rmtree(tmp_out, ignore_errors=True)
-    os.remove(manifest_path)
-    return {
-        "files_total": len(all_files),
-        "files_rewritten": len(affected),
-        "rows_deleted": int(n_deleted),
-    }
