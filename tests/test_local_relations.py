@@ -97,11 +97,10 @@ def test_pipeline_report_scans_no_python_rdd(spark, tmp_path):
     [
         lambda spark: model.build_visa_dim(spark),
         lambda spark: model.build_mode_dim(spark, LABELS),
-        lambda spark: model.build_addr_dim(spark, LABELS),
         lambda spark: model.build_port_dim(spark, LABELS),
         lambda spark: model.build_country_codes(spark, LABELS),
     ],
-    ids=["visa", "mode", "addr", "port", "country_codes"],
+    ids=["visa", "mode", "port", "country_codes"],
 )
 def test_label_dims_scan_no_python_rdd(spark, build):
     df = build(spark)

@@ -47,7 +47,6 @@ def dims(spark):
     return {
         "visa": model.build_visa_dim(spark),
         "mode": model.build_mode_dim(spark, LABELS),
-        "addr": model.build_addr_dim(spark, LABELS),
         "port": model.build_port_dim(spark, LABELS),
         "codes": model.build_country_codes(spark, LABELS),
     }
@@ -92,7 +91,7 @@ def test_country_dim_left_join_keeps_unmatched(spark, dims):
     assert rows[582].average_temperature is None  # left join keeps mexico
 
 
-def test_demographics_pivot_and_surrogate(spark, dims):
+def test_demographics_pivot_and_surrogate(spark):
     header = (
         "City string, State string, `Median Age` string, `Male Population` string, "
         "`Female Population` string, `Total Population` string, "
@@ -104,17 +103,41 @@ def test_demographics_pivot_and_surrogate(spark, dims):
             ("Anchorage", "Alaska", "32.5", "150", "140", "290", "20", "30", "2.5", "AK", "White", "200"),
             ("Anchorage", "Alaska", "32.5", "150", "140", "290", "20", "30", "2.5", "AK", "Asian", "50"),
             ("New York", "New York", "36.0", "400", "420", "820", "40", "300", "2.2", "NY", "White", "500"),
+            # no city: dropped, as the reference's inner join drops it
+            (None, "Alaska", "30.0", "10", "10", "20", "1", "2", "2.0", "AK", "White", "7"),
+            # a race with no column: ignored
+            ("Anchorage", "Alaska", "32.5", "150", "140", "290", "20", "30", "2.5", "AK", "Other", "9"),
         ],
         header,
     )
-    dim = model.build_demographics_dim(demo, dims["addr"])
+    dim = model.build_demographics_dim(demo)
     rows = {(r.state_code, r.city): r for r in dim.collect()}
+    assert set(rows) == {("AK", "Anchorage"), ("NY", "New York")}
     anc = rows[("AK", "Anchorage")]
     assert anc.white == 200 and anc.asian == 50
     assert anc.black_or_african_american == 0  # fill(0) for missing race
+    assert anc.american_indian_and_alaska_native == anc.hispanic_or_latino == 0
     assert anc.median_age == 32.5 and anc.total_population == 290
     ids = [r.id for r in dim.collect()]
     assert len(ids) == len(set(ids))  # surrogate key unique
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in dim.schema] == [
+        ("state_code", "string", True),
+        ("state", "string", True),
+        ("city", "string", True),
+        ("median_age", "double", True),
+        ("male_population", "int", True),
+        ("female_population", "int", True),
+        ("total_population", "int", True),
+        ("number_of_veterans", "int", True),
+        ("foreign_born", "int", True),
+        ("average_household_size", "double", True),
+        ("american_indian_and_alaska_native", "bigint", True),
+        ("asian", "bigint", True),
+        ("black_or_african_american", "bigint", True),
+        ("hispanic_or_latino", "bigint", True),
+        ("white", "bigint", True),
+        ("id", "bigint", False),
+    ]
 
 
 @pytest.fixture(scope="module")

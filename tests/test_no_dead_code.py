@@ -22,11 +22,8 @@ ALLOWED = {
 #: that check only it (ROADMAP item 3). Shrink this set; never grow it.
 PENDING = {
     "read_jsonl",
-    "read_orc",
     "read_parquet_evolved",
     "write_jsonl",
-    "write_orc",
-    "write_parquet_incremental",
     "write_range_sorted",
     "upsert_latest_per_user",
     "incremental_ingest",

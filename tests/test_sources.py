@@ -1,15 +1,10 @@
-"""Sources: SAS label parsing, CSV/in-memory readers, partition guard."""
-
-import warnings
+"""Sources: SAS label parsing, CSV/in-memory readers, write layouts."""
 
 from udacity_data_engineering_capstone_project_spark.sources.readers import (
     from_records,
     parse_sas_labels,
     read_csv,
     read_table,
-)
-from udacity_data_engineering_capstone_project_spark.sources.writers import (
-    write_parquet,
 )
 
 LABELS = """
@@ -46,20 +41,6 @@ def test_events_read_converts_nanos(spark, sf_dir):
     df = read_table(spark, sf_dir, "events")
     assert df.schema["ts"].dataType.simpleString() == "timestamp"
     assert df.count() == 1000
-
-
-def test_partition_guard_warns(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    # needs a non-partition column: partitioning by every column is disallowed
-    df = spark.range(100).withColumnRenamed("id", "k").withColumn("payload", F.lit(0))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        write_parquet(
-            df, str(tmp_path / "out"), partition_by=["k"],
-            max_partitions=10, check_cardinality=True,
-        )
-    assert any("100 directories" in str(x.message) for x in w)
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
@@ -130,26 +111,6 @@ def test_jsonl_roundtrip(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_incremental_write_replaces_only_touched_partition(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        write_parquet_incremental,
-    )
-
-    path = str(tmp_path / "inc")
-    full = spark.createDataFrame(
-        [("2024-01-01", 1), ("2024-01-01", 2), ("2024-01-02", 3)], "day string, v int"
-    )
-    write_parquet_incremental(full, path, ["day"])
-    # re-load day 2 only, with different content
-    day2 = spark.createDataFrame([("2024-01-02", 99)], "day string, v int")
-    write_parquet_incremental(day2, path, ["day"])
-    # partition-value inference turns the day strings into dates
-    got = {(str(r.day), r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {("2024-01-01", 1), ("2024-01-01", 2), ("2024-01-02", 99)}
-
-
 def test_range_sorted_write_gives_disjoint_file_ranges(spark, tmp_path):
     import glob
 
@@ -175,32 +136,6 @@ def test_range_sorted_write_gives_disjoint_file_ranges(spark, tmp_path):
     assert len(ranges) == 4
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 < lo2  # file ranges are disjoint -> min/max skipping works
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    from udacity_data_engineering_capstone_project_spark.sources.readers import (
-        read_orc,
-        read_table,
-    )
-    from udacity_data_engineering_capstone_project_spark.sources.writers import write_orc
-
-    src = read_table(spark, sf_dir, "nation")
-    path = str(tmp_path / "nation_orc")
-    write_orc(src, path)
-    back = read_orc(spark, path)
-    assert back.schema == src.schema
-    assert sorted(r.n_nationkey for r in back.collect()) == sorted(
-        r.n_nationkey for r in src.collect()
-    )
-    # predicate reaches the ORC scan
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.filter("n_nationkey = 3").explain("formatted")
-    assert "PushedFilters" in buf.getvalue()
-    assert "n_nationkey" in buf.getvalue().split("PushedFilters")[1][:200]
 
 
 def test_zorder_value_interleaves_bits(spark):

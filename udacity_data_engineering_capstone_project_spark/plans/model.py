@@ -16,6 +16,9 @@ reference are deliberate modernizations (SURVEY.md §4.3/§7.4/§7.5):
 - ``median_age`` keeps its real name (the reference enshrines a
   ``maiden_age`` typo, etl.py:195).
 - Aggregate aliases are set inside ``agg`` — no 13-way rename chains.
+- No dim does work its output does not need: demographics is one
+  aggregation, not two joined; ``i94addr ⟕ demographics`` (etl.py:204)
+  is not reproduced; nothing is deduped or sorted only to be written.
 """
 
 from __future__ import annotations
@@ -71,14 +74,8 @@ TEMPERATURES_CSV_SCHEMA = (
     "City string, Country string, Latitude string, Longitude string"
 )
 
-#: Pivot columns for the race counts (etl.py:182-190; FIXTURES.md §3).
-RACE_VALUES = [
-    "American Indian and Alaska Native",
-    "Asian",
-    "Black or African-American",
-    "Hispanic or Latino",
-    "White",
-]
+#: Race values counted per city -> their columns (etl.py:182-190;
+#: FIXTURES.md §3); other values are not counted.
 RACE_COL_NAMES = {
     "American Indian and Alaska Native": "american_indian_and_alaska_native",
     "Asian": "asian",
@@ -101,41 +98,28 @@ def build_mode_dim(spark: SparkSession, labels_text: str) -> DataFrame:
     return from_records(spark, pairs, "id int, mode string")
 
 
-def build_addr_dim(spark: SparkSession, labels_text: str) -> DataFrame:
-    """i94addr state lookup (etl.py:309-327): ``i94addrl`` block,
-    deduped, nulls dropped."""
-    pairs = list(parse_sas_labels(labels_text, "i94addrl").items())
-    return (
-        from_records(spark, pairs, "code string, state string")
-        .dropna()
-        .dropDuplicates()
-    )
-
-
 def build_port_dim(spark: SparkSession, labels_text: str) -> DataFrame:
     """dim_I94port (etl.py:330-359): ``i94prtl`` labels are
     ``"PORT NAME, ST"`` — split on the last comma into port + state
-    code, trim both, dedup/dropna."""
+    code, trim both, dropna (the parsed codes are unique and stripped)."""
     pairs = list(parse_sas_labels(labels_text, "i94prtl").items())
     df = from_records(spark, pairs, "code string, label string")
     port_split = F.split(F.col("label"), ", ")
-    return (
-        df.select(
-            F.trim(F.col("code")).alias("code"),
-            F.trim(port_split.getItem(0)).alias("port"),
-            F.trim(F.element_at(port_split, -1)).alias("state_code"),
-        )
-        .dropna()
-        .dropDuplicates()
-    )
+    return df.select(
+        "code",
+        F.trim(port_split.getItem(0)).alias("port"),
+        F.trim(F.element_at(port_split, -1)).alias("state_code"),
+    ).dropna()
 
 
 def build_country_codes(spark: SparkSession, labels_text: str) -> DataFrame:
     """Country-code lookup (etl.py:279-306): ``i94cntyl`` block, with
     the reference's cleansing — drop labels containing
     'country'/'invalid'/'not show' (case-insensitive) and repair code
-    582 to 'MEXICO' (etl.py:299-300)."""
-    pairs = [(int(k), v) for k, v in parse_sas_labels(labels_text, "i94cntyl").items()]
+    582 to 'MEXICO' (etl.py:299-300). Pairs that the int cast makes
+    equal ("01", "1") are deduped on the driver."""
+    labels = parse_sas_labels(labels_text, "i94cntyl").items()
+    pairs = list(dict.fromkeys((int(k), v) for k, v in labels))
     df = from_records(spark, pairs, "code int, country string")
     lc = F.lower(F.col("country"))
     return (
@@ -147,7 +131,6 @@ def build_country_codes(spark: SparkSession, labels_text: str) -> DataFrame:
             F.when(F.col("code") == 582, "MEXICO").otherwise(F.col("country")),
         )
         .dropna()
-        .dropDuplicates()
     )
 
 
@@ -176,14 +159,19 @@ def build_country_dim(
     )
 
 
-def build_demographics_dim(demographics: DataFrame, addr_dim: DataFrame) -> DataFrame:
+def build_demographics_dim(demographics: DataFrame) -> DataFrame:
     """dim_Demographics (etl.py:138-222): rename CSV headers, cast
-    numerics, collapse to one row per (state, city) — ``max`` of the
-    per-city-constant columns instead of nondeterministic ``first`` —
-    inner-join the race pivot, fill missing race counts with 0, left
-    join the state lookup, and add a ``row_number`` surrogate key
-    (stable, unlike ``monotonically_increasing_id``; SURVEY.md §7.4)."""
-    df = demographics.withColumnsRenamed(DEMOGRAPHICS_RENAMES)
+    numerics, drop rows without state or city (the reference's inner
+    join drops them) and collapse to one row per (state, city) in one
+    aggregation: ``max`` of the per-city-constant columns instead of
+    nondeterministic ``first``, and per race the sum of its counts (0
+    if none) in place of the pivot joined back. A ``row_number``
+    surrogate key is stable, unlike ``monotonically_increasing_id``
+    (SURVEY.md §7.4). The reference's state lookup keeps states with no
+    city (SURVEY.md J2); joined onto the cities it adds nothing."""
+    df = demographics.withColumnsRenamed(DEMOGRAPHICS_RENAMES).dropna(
+        subset=["state", "city"]
+    )
     df = df.withColumns(
         {
             "median_age": F.col("median_age").cast("double"),
@@ -196,31 +184,31 @@ def build_demographics_dim(demographics: DataFrame, addr_dim: DataFrame) -> Data
             "count": F.col("count").cast("int"),
         }
     )
-    fixed = df.groupBy("state", "city").agg(
-        F.max("median_age").alias("median_age"),
-        F.max("male_population").alias("male_population"),
-        F.max("female_population").alias("female_population"),
-        F.max("total_population").alias("total_population"),
-        F.max("number_of_veterans").alias("number_of_veterans"),
-        F.max("foreign_born").alias("foreign_born"),
-        F.max("average_household_size").alias("average_household_size"),
-        F.max("state_code").alias("state_code"),
-    )
-    pivoted = (
-        df.groupBy("state", "city").pivot("race", RACE_VALUES).sum("count")
-    )
-    for src, dst in RACE_COL_NAMES.items():
-        pivoted = pivoted.withColumnRenamed(src, dst)
-    joined = fixed.join(pivoted, ["state", "city"], "inner").na.fill(
-        0, list(RACE_COL_NAMES.values())
-    )
-    with_states = joined.join(
-        F.broadcast(addr_dim.select(F.col("code").alias("state_code"))),
-        "state_code",
-        "left",
+    races = [
+        F.sum(F.when(F.col("race") == race, F.col("count"))).alias(name)
+        for race, name in RACE_COL_NAMES.items()
+    ]
+    cities = (
+        df.groupBy("state", "city")
+        .agg(
+            F.max("state_code").alias("state_code"),
+            F.max("median_age").alias("median_age"),
+            F.max("male_population").alias("male_population"),
+            F.max("female_population").alias("female_population"),
+            F.max("total_population").alias("total_population"),
+            F.max("number_of_veterans").alias("number_of_veterans"),
+            F.max("foreign_born").alias("foreign_born"),
+            F.max("average_household_size").alias("average_household_size"),
+            *races,
+        )
+        .na.fill(0, list(RACE_COL_NAMES.values()))
     )
     w = Window.orderBy("state_code", "city")
-    return with_states.withColumn("id", F.row_number().over(w).cast("long"))
+    return cities.select(
+        "state_code",
+        *(c for c in cities.columns if c != "state_code"),
+        F.row_number().over(w).cast("long").alias("id"),
+    )
 
 
 def build_fact(i94: DataFrame) -> DataFrame:
@@ -258,7 +246,7 @@ def build_date_dim(fact: DataFrame) -> DataFrame:
         F.col("arrdate").cast("int").alias("sasdate"),
         sas_to_date(F.col("arrdate")).alias("isodate"),
     )
-    return date_attrs(df, "isodate").orderBy("isodate")
+    return date_attrs(df, "isodate")
 
 
 def build_airport_dim(airports: DataFrame) -> DataFrame:

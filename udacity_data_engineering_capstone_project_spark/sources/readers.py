@@ -134,14 +134,6 @@ def read_jsonl(spark: SparkSession, path: str, schema: str | None = None):
     return reader.json(path)
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC reader (native vectorized scan, same pushdown surface as
-    parquet: predicate pushdown, column pruning, min/max stripe
-    skipping). ORC parity matters for lakes that standardized on Hive:
-    the engine treats it as a drop-in columnar scan."""
-    return spark.read.orc(path)
-
-
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
     """Schema-evolution-tolerant parquet read: ``mergeSchema`` unions
     the footers of every file, so batches written before a column

@@ -3,45 +3,22 @@
 The reference partitions some outputs by near-unique keys (``sasdate``
 -> 187 dirs is fine; ``ident`` -> 55,075 dirs is a small-files
 explosion, SURVEY.md §4.3). We keep the idea — write-side partitioning
-for read-time pruning — and guard against pathological keys.
+for read-time pruning — and leave the choice of a bounded key to the
+caller (``plans/pipeline.py`` says which keys it uses and why).
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
-
-#: Refuse-by-default threshold for distinct partition values. At 100 TB a
-#: partition column with >10k values produces millions of small files.
-MAX_PARTITIONS_GUARD = 10_000
 
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    max_partitions: int = MAX_PARTITIONS_GUARD,
-    check_cardinality: bool = False,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """S6-S8: parquet sink, optionally hash-partitioned by column(s).
-
-    ``check_cardinality=True`` counts distinct partition keys first and
-    warns (but still writes) past ``max_partitions`` — an explicit,
-    opt-in version of the check the reference lacked when it partitioned
-    airports by ``ident`` (55,075 dirs).
-    """
-    writer = df.write.mode(mode)
+    """S6-S8: parquet sink (overwrite), optionally hash-partitioned by
+    column(s)."""
+    writer = df.write.mode("overwrite")
     if partition_by:
-        if check_cardinality:
-            n = df.select(*partition_by).distinct().count()
-            if n > max_partitions:
-                warnings.warn(
-                    f"partitioning {path} by {partition_by} creates {n} "
-                    f"directories (> {max_partitions}); consider a coarser key",
-                    stacklevel=2,
-                )
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
@@ -114,24 +91,6 @@ def write_jsonl(
     writer.json(path)
 
 
-def write_parquet_incremental(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-) -> None:
-    """Dynamic partition overwrite: replace ONLY the partitions present
-    in ``df``, leaving the rest of the dataset untouched — the
-    incremental-ETL write mode (daily loads replace yesterday's
-    partition without rewriting years of history; a full static
-    overwrite at 100 TB would drop the whole table first)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
 def write_range_sorted(
     df: DataFrame,
     path: str,
@@ -152,21 +111,6 @@ def write_range_sorted(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    compression: str = "zlib",
-) -> None:
-    """ORC sink — columnar alternative for Hive-standardized lakes;
-    same partitioned-layout rules as :func:`write_parquet`."""
-    writer = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
 
 
 def zorder_value(c1, c2, bits: int = 16):
