@@ -357,7 +357,7 @@ def test_one_job_compaction_matches_per_dir_shape(
 
     _compact_per_dir(spark, old_table, part_col, key, str(tmp_path / "staged"))
     stats = _compact_partition_dirs(
-        spark, new_root, new_table, part_col, part_type, key, 1, None
+        spark, new_root, index_store.Table(table, part_col, part_type, key), 1, None
     )
     assert stats["dirs_compacted"] == len(compacted) > 0
 

@@ -149,10 +149,12 @@ def _file_bytes(store, path):
 
 
 #: Spark jobs per operation, at most, on a 400-doc base with 10-doc
-#: batches (``local[4]``, 4 shuffle partitions).
+#: batches (``local[4]``, 4 shuffle partitions). The serve and probe
+#: plans read the index through ``Table.read`` at no plan-time job; the
+#: trigram serve's one job collects the patterns.
 JOB_PINS = {
-    "trigram": {"build": 3, "append": 3, "append_compact": 6, "empty": 3, "serve_plan": 3},
-    "minhash": {"build": 7, "append": 7, "append_compact": 12, "empty": 5, "serve_plan": 12},
+    "trigram": {"build": 3, "append": 3, "append_compact": 6, "empty": 3, "serve_plan": 1},
+    "minhash": {"build": 7, "append": 7, "append_compact": 12, "empty": 5, "serve_plan": 10},
 }
 
 
@@ -195,6 +197,29 @@ def test_store_operation_job_counts(spark, tmp_path, kind):
     _, got["serve_plan"] = _jobs(spark, plan)
     over = {op: (n, JOB_PINS[kind][op]) for op, n in got.items() if n > JOB_PINS[kind][op]}
     assert not over, (got, over)
+
+
+def test_table_read_lists_only_existing_dirs_at_zero_jobs(spark, tmp_path):
+    """``Table.read`` opens only the named dirs that exist, keeps the
+    partition column at its stored type (``01`` stays a string) and
+    plans at zero jobs; naming no existing dir gives an empty frame of
+    the same schema."""
+    table = index_store.Table("t", "p", "string", "k")
+    root = str(tmp_path)
+    table.write(
+        spark.createDataFrame([(1, "01"), (2, "02"), (3, "10")], "k long, p string"),
+        root, "overwrite",
+    )
+    reads, jobs = _jobs(
+        spark, lambda: [table.read(spark, root, v) for v in (None, ["10", "01", "99"], ["99"])]
+    )
+    assert jobs == 0
+    every, some, none = reads
+    assert every.schema == some.schema == none.schema
+    assert every.schema.simpleString() == "struct<k:bigint,p:string>"
+    assert sorted(map(tuple, every.collect())) == [(1, "01"), (2, "02"), (3, "10")]
+    assert sorted(map(tuple, some.collect())) == [(1, "01"), (3, "10")]
+    assert none.collect() == []
 
 
 @pytest.mark.parametrize("kind", ["trigram", "minhash"])

@@ -89,28 +89,6 @@ def test_salted_join_equals_plain_join(spark):
     )
 
 
-def test_jsonl_roundtrip(spark, sf_dir, tmp_path):
-    from udacity_data_engineering_capstone_project_spark.sources.readers import (
-        read_jsonl,
-        read_table,
-    )
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        write_jsonl,
-    )
-
-    docs = read_table(spark, sf_dir, "documents").limit(50)
-    path = str(tmp_path / "docs.jsonl")
-    write_jsonl(docs, path)
-    back = read_jsonl(
-        spark, path,
-        schema="doc_id long, text string, lang string, source string, n_chars long",
-    )
-    assert back.count() == 50
-    a = {r.doc_id: r.text for r in docs.collect()}
-    b = {r.doc_id: r.text for r in back.collect()}
-    assert a == b
-
-
 def test_range_sorted_write_gives_disjoint_file_ranges(spark, tmp_path):
     import glob
 
@@ -224,10 +202,6 @@ def test_jsonl_malformed_rows_quarantined_not_fatal(spark, tmp_path):
     """Dirty-ingest discipline: malformed JSON lines must land in
     _corrupt_record (PERMISSIVE) for quarantine instead of killing a
     100 TB job; clean rows parse normally alongside them."""
-    from udacity_data_engineering_capstone_project_spark.sources.readers import (
-        read_jsonl,
-    )
-
     from pyspark.sql import functions as F
 
     p = tmp_path / "dirty.jsonl"
@@ -237,9 +211,11 @@ def test_jsonl_malformed_rows_quarantined_not_fatal(spark, tmp_path):
         '{"id": 2, "v": "b"}\n'
         '{"id": "not-an-int", "v": "c"}\n'
     )
-    df = read_jsonl(
-        spark, str(p), "id long, v string, _corrupt_record string"
-    ).cache()  # cache: corrupt-record queries need the full row context
+    df = (
+        spark.read.schema("id long, v string, _corrupt_record string")
+        .json(str(p))
+        .cache()
+    )  # cache: corrupt-record queries need the full row context
     good = df.filter(F.col("_corrupt_record").isNull())
     bad = df.filter(F.col("_corrupt_record").isNotNull())
     assert {(r.id, r.v) for r in good.collect()} == {(1, "a"), (2, "b")}

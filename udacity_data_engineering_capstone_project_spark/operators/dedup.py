@@ -1224,15 +1224,16 @@ def minhash_probe_indexed(
     signatures, banding and exact verification), but the index corpus
     is NEVER re-shingled, re-hashed or shuffled: the batch's band keys
     (|batch| x bands values, collected driver-side — the batch is the
-    small side by definition) become a STATIC ``bp`` partition filter
-    plus a pushed ``band_key IN`` scan filter on the postings table, so
-    candidate generation reads O(matched postings); verification reads
-    only the ``dp`` directories holding candidate index docs. Serving
-    cost scales with the batch and its match count, not the corpus.
+    small side by definition) name the ``bp`` dirs the postings read
+    lists (``Table.read``: no other dir is opened, and no plan-time job
+    runs) plus a pushed ``band_key IN`` scan filter, so candidate
+    generation reads O(matched postings); verification reads only the
+    ``dp`` directories holding candidate index docs. Serving cost
+    scales with the batch and its match count, not the corpus.
 
     Batches whose distinct band-key count exceeds ``max_literal_keys``
-    keep the partition-literal pruning but skip the IN-list (a plan
-    with 100k+ literals stalls optimization) and join band keys
+    keep the dir pruning but skip the IN-list (a plan with 100k+
+    literals stalls optimization) and join band keys
     broadcast-side instead — same answers, I/O degrades to the probed
     directories. Ids must be disjoint across index and batch (enforced
     by the caller's split). Output: (new_doc, index_doc, inter_size,
@@ -1275,14 +1276,13 @@ def minhash_probe_indexed(
     keys = sorted({r.band_key for r in bat_keys.select("band_key").collect()})
     parts = sorted({k % n_band_parts for k in keys})
 
-    idx = spark.read.parquet(index_path + "/postings").filter(
-        F.col("bp").isin(parts)
-    )
-    if not keys:
-        # empty batch (every doc below the shingle length floor):
-        # "IN ()" would be a parse error — prune everything instead
-        idx = idx.filter(F.lit(False))
-    elif len(keys) <= max_literal_keys:
+    # the read opens only the probed dirs; the partition filter keeps
+    # that pruning visible in the plan. An empty batch (every doc below
+    # the shingle length floor) probes no dir, so the read is an empty
+    # relation and no "IN ()" is parsed
+    postings, doc_sets = MINHASH_STORE.tables
+    idx = postings.read(spark, index_path, parts).filter(F.col("bp").isin(parts))
+    if 0 < len(keys) <= max_literal_keys:
         # ONE SQL-parsed IN expression, not Column.isin(*keys): isin
         # materializes each literal through a py4j call — measured
         # 4.6 s of pure plan-BUILD time at 7.8k keys (the whole serve
@@ -1323,11 +1323,11 @@ def minhash_probe_indexed(
         else None
     )
     # verification sets: only the dp directories holding candidate
-    # index docs are opened (<= n_doc_parts literal values), then the
+    # index docs are read (<= n_doc_parts dirs), then the
     # candidate-id semi-join trims to exactly the needed rows
     idx_ids = candidates.select(F.col("index_doc").alias("doc")).distinct()
     idx_f = _trim_sets(
-        spark.read.parquet(index_path + "/sets")
+        doc_sets.read(spark, index_path, dps)
         .filter(F.col("dp").isin(dps))
         .select("doc", "hs"),
         idx_ids, n_cand, broadcast_max_rows,

@@ -604,10 +604,12 @@ def trigram_match_indexed(
     full-scan LIKE oracle; the trigram prune is lossless for literal
     patterns), but the corpus-sized explode is gone: the probe's
     trigram prefixes (<= 62 per pattern, collected driver-side from
-    the PATTERN list only) become a STATIC ``tri_p2`` partition filter
-    — unprobed directories are never opened — and the exact ``tri IN``
-    list is pushed into the parquet scan of the survivors. Serving
-    I/O is O(postings of the probed trigrams), not O(corpus).
+    the PATTERN list only) name the ``tri_p2`` dirs the read lists
+    (``Table.read``: unprobed directories are never opened, and no
+    plan-time job runs; the same prefixes stay a partition filter, so
+    the plan shows the pruning) and the exact ``tri IN`` list is pushed
+    into the parquet scan of the survivors. Serving I/O is O(postings of
+    the probed trigrams), not O(corpus).
 
     The bitmap-AND candidate check is the same one-int64-row-per-
     (pattern, doc) shape as the query-time path; exact ``instr``
@@ -679,7 +681,7 @@ def trigram_match_indexed(
     )
 
     idx = (
-        spark.read.parquet(index_path)
+        _TRIGRAM_TABLE.read(spark, index_path, p2_list)
         .filter(F.col("tri_p2").isin(p2_list))
         .filter(F.col("tri").isin(tri_list))
         .select("doc", "tri")

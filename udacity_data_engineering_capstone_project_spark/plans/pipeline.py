@@ -31,11 +31,22 @@ Differences from the reference, all deliberate (SURVEY.md §4.3):
 - one task writes each dim (``coalesce(1)``, no extra job; one file per
   directory), as every dim is small at any scale; nothing is sorted
   before a write, and the demographics dim is not joined to the state
-  lookup (``model`` says why).
+  lookup (``model`` says why);
+- the writes run concurrently, one thread per independent chain, where
+  the reference ran them one after another (SURVEY.md I5). Only the
+  date dim waits for another write: it reads the written fact. While
+  one write is analysed, planned and code-generated on the driver,
+  another's jobs use the task slots. Every write's jobs keep the
+  caller's job group, and anything a write holds lands in the caller's
+  ``resource_scope``.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from contextvars import copy_context
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,50 +85,71 @@ def run_pipeline(
     )
     temps = read_csv(spark, temperatures_csv, schema=model.TEMPERATURES_CSV_SCHEMA)
 
-    # a KB label file, a few thousand cities, a date domain: one task each
-    visa = model.build_visa_dim(spark).coalesce(1)
-    mode = model.build_mode_dim(spark, labels_text).coalesce(1)
-    port = model.build_port_dim(spark, labels_text).coalesce(1)
-    codes = model.build_country_codes(spark, labels_text)
-    country = model.build_country_dim(codes, temps).coalesce(1)
-    demographics = model.build_demographics_dim(demos).coalesce(1)
+    rows = F.count(F.lit(1)).alias("rows")
+    observed = {
+        "fact_i94": [rows],
+        "dim_country": [rows, F.count(F.when(_bad_country(), 1)).alias("bad")],
+        "dim_demographics": [rows],
+        "dim_date": [rows],
+    }
+    observations = {table: Observation() for table in observed}
 
-    observations: dict[str, Observation] = {}
-
-    def write(df: DataFrame, table: str, partition_by=None, observe=()) -> DataFrame:
-        """Write ``df`` (observing ``observe`` metrics on the write) and
-        return the written table, read back with ``df``'s schema."""
+    def write(df: DataFrame, table: str, partition_by=None) -> DataFrame:
+        """Write ``df`` (observing the table's ``observed`` metrics on the
+        write) and return the written table, read back with ``df``'s
+        schema."""
         path = f"{output_dir}/{table}.parquet"
         out = df
-        if observe:
-            observations[table] = Observation()
-            out = df.observe(observations[table], *observe)
+        if table in observations:
+            out = df.observe(observations[table], *observed[table])
         write_parquet(out, path, partition_by=partition_by)
         return spark.read.schema(df.schema).parquet(path)
 
-    rows = F.count(F.lit(1)).alias("rows")
-    fact_w = write(model.build_fact(i94), "fact_i94", observe=[rows])
-    date_dim = (
-        model.build_date_dim(fact_w).withColumn("part_year", F.col("year")).coalesce(1)
-    )
-    visa_w = write(visa, "dim_i94visa", partition_by=["id"])
-    mode_w = write(mode, "dim_i94mode", partition_by=["id"])
-    port_w = write(port, "dim_i94port", partition_by=["state_code"])
-    country_w = write(
-        country, "dim_country",
-        observe=[rows, F.count(F.when(_bad_country(), 1)).alias("bad")],
-    )
-    demographics_w = write(
-        demographics, "dim_demographics", partition_by=["state_code"], observe=[rows]
-    )
-    date_w = write(date_dim, "dim_date", partition_by=["part_year"], observe=[rows])
+    # one chain per independent write; the date dim reads the written fact.
+    # Each dim is a KB label file, a few thousand cities or a date
+    # domain: one task writes each (coalesce(1))
+    def fact_then_date():
+        fact_w = write(model.build_fact(i94), "fact_i94")
+        date_dim = model.build_date_dim(fact_w).withColumn("part_year", F.col("year"))
+        return fact_w, write(date_dim.coalesce(1), "dim_date", partition_by=["part_year"])
+
+    def country():
+        codes = model.build_country_codes(spark, labels_text)
+        return write(model.build_country_dim(codes, temps).coalesce(1), "dim_country")
+
+    chains = [
+        fact_then_date,
+        lambda: write(model.build_visa_dim(spark).coalesce(1), "dim_i94visa", ["id"]),
+        lambda: write(
+            model.build_mode_dim(spark, labels_text).coalesce(1), "dim_i94mode", ["id"]
+        ),
+        lambda: write(
+            model.build_port_dim(spark, labels_text).coalesce(1),
+            "dim_i94port", ["state_code"],
+        ),
+        country,
+        lambda: write(
+            model.build_demographics_dim(demos).coalesce(1),
+            "dim_demographics", ["state_code"],
+        ),
+    ]
     if airports_csv is not None:
         # partitioned by airport type (a handful of values), NOT by the
         # near-unique ident the reference used (55k dirs, ipynb cell 77)
-        airport = model.build_airport_dim(read_csv(spark, airports_csv))
-        write_parquet(
-            airport, f"{output_dir}/dim_airport.parquet", partition_by=["type"]
-        )
+        chains.append(lambda: write_parquet(
+            model.build_airport_dim(read_csv(spark, airports_csv)),
+            f"{output_dir}/dim_airport.parquet", partition_by=["type"],
+        ))
+    # each chain runs with the caller's job group (local properties) and
+    # resource scope (context); results are read in a fixed order, so a
+    # failed write raises its own error once every write has finished
+    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        futures = [
+            pool.submit(copy_context().run, inheritable_thread_target(spark)(chain))
+            for chain in chains
+        ]
+        results = [f.result() for f in futures]
+    (fact_w, date_w), visa_w, mode_w, port_w, country_w, demographics_w = results[:6]
 
     observed_rows, fallbacks = [], []
     for name, table, written, metric in [

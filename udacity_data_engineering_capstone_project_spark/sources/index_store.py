@@ -69,7 +69,11 @@ import time
 import uuid
 from typing import Callable, NamedTuple
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from .readers import from_records
 
 #: filename of the stamp; the underscore prefix keeps it invisible to
 #: parquet directory readers.
@@ -143,6 +147,37 @@ class Table(NamedTuple):
             .mode(mode)
             .parquet(self.dir(root))
         )
+
+    def read(self, spark, root: str, values=None) -> DataFrame:
+        """This table under ``root``, at zero plan-time jobs: only the
+        ``<part_col>=<v>`` dirs of ``values`` (their names after the
+        ``=``) that exist, every dir when None, listed on the driver and
+        read with ``basePath`` and an explicit schema: one footer's
+        columns plus ``part_col`` as its stored ``part_type``.
+        Re-inferring the type from dir names would turn ``tri_p2=01``
+        into ``tri_p2=1``, and a plain read lists every dir and runs a
+        schema-inference job. Call it after :meth:`IndexStore.open` has
+        healed any interrupted swap, so no committed dir is missed. No
+        existing dir gives an empty frame of the same schema. Spark
+        lists more than 32 dirs (``parallelPartitionDiscovery.threshold``)
+        in a job of its own."""
+        table = self.dir(root)
+        if values is None:
+            dirs = sorted(glob.glob(os.path.join(table, f"{self.part_col}=*")))
+        else:
+            dirs = [os.path.join(table, f"{self.part_col}={v}") for v in sorted(set(values))]
+        dirs = [d for d in dirs if os.path.isdir(d)]
+        # a footer from the first read dir, else from any dir of the table
+        where = dirs[0] if dirs else os.path.join(table, f"{self.part_col}=*")
+        footer = next(glob.iglob(os.path.join(where, "*.parquet")), None)
+        if footer is None:
+            raise FileNotFoundError(f"no parquet file under {where}")
+        schema = from_arrow_schema(pq.read_schema(footer)).add(
+            self.part_col, self.part_type
+        )
+        if not dirs:
+            return from_records(spark, [], schema)
+        return spark.read.schema(schema).option("basePath", table).parquet(*dirs)
 
 
 class IndexStore(NamedTuple):
@@ -274,10 +309,7 @@ class IndexStore(NamedTuple):
         "files_after"}."""
         _heal_pending_appends(path)
         passes = [
-            _compact_partition_dirs(
-                spark, path, t.dir(path), t.part_col, t.part_type, t.key,
-                small_file_threshold, only_dirs,
-            )
+            _compact_partition_dirs(spark, path, t, small_file_threshold, only_dirs)
             for t in self.tables
         ]
         return {k: sum(p[k] for p in passes) for k in passes[0]}
@@ -381,27 +413,23 @@ def _crossing_dirs(moves, threshold: int) -> list[str]:
 
 
 def _compact_partition_dirs(
-    spark, root, table, part_col, part_type, key, small_file_threshold, only_dirs
+    spark, root: str, t: Table, small_file_threshold, only_dirs
 ) -> dict:
-    """Rewrite every ``part_col=`` dir of the partitioned index table
-    ``table`` (under the index dir ``root``) holding more than
-    ``small_file_threshold`` files — only those in ``only_dirs`` when
-    given — into ONE file sorted on ``key``: one partitioned write and
-    one manifest for the whole pass, not a job per dir. The files are listed on the driver
-    and read at once with ``basePath`` and an explicit schema (their
-    footer's columns plus ``part_col`` as its stored ``part_type``):
-    re-inferring the type from dir names would turn ``tri_p2=01`` into
-    ``tri_p2=1``. ``repartition(part_col)`` puts each dir in one task,
-    so the write leaves one sorted file per dir (under AQE the
-    shuffle's map stage is a job of its own). All moves and deletions
-    commit under one manifest, so after a crash every dir of the pass
-    is fully old or fully new; unselected dirs are never touched, and a
-    pass with nothing to do runs no job.
+    """Rewrite every dir of the index table ``t`` (under the index dir
+    ``root``) holding more than ``small_file_threshold`` files — only
+    those in ``only_dirs`` when given — into ONE file sorted on
+    ``t.key``: one partitioned write and one manifest for the whole
+    pass, not a job per dir. The files are listed on the driver and the
+    selected dirs read at once through :meth:`Table.read`, which keeps
+    the partition column at its stored type. ``repartition(part_col)``
+    puts each dir in one task, so the write leaves one sorted file per
+    dir (under AQE the shuffle's map stage is a job of its own). All
+    moves and deletions commit under one manifest, so after a crash
+    every dir of the pass is fully old or fully new; unselected dirs are
+    never touched, and a pass with nothing to do runs no job.
 
     Returns {"dirs_compacted", "files_before", "files_after"}."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
+    table, part_col = t.dir(root), t.part_col
     only = None if only_dirs is None else {os.path.normpath(d) for d in only_dirs}
     picked = {}
     files_before = files_after = 0
@@ -421,14 +449,11 @@ def _compact_partition_dirs(
         return {**stats, "files_after": files_after}
 
     old = [f for fs in picked.values() for f in fs]
-    schema = from_arrow_schema(pq.read_schema(old[0])).add(part_col, part_type)
     tag, tmp = _open_staging(root)
     (
-        spark.read.schema(schema)
-        .option("basePath", table)
-        .parquet(*old)
+        t.read(spark, root, [d.split("=", 1)[1] for d in picked])
         .repartition(part_col)
-        .sortWithinPartitions(part_col, key)
+        .sortWithinPartitions(part_col, t.key)
         .write.partitionBy(part_col)
         .mode("overwrite")
         .parquet(os.path.join(tmp, "staged"))

@@ -121,19 +121,6 @@ def parse_sas_labels(text: str, marker: str) -> dict[str, str]:
     return out
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: str | None = None):
-    """JSON-lines reader — the interchange format of LLM corpus
-    pipelines. Pass an explicit ``schema`` (DDL string) in production:
-    schema inference costs a FULL extra pass over the data (at 100 TB,
-    a second 100 TB scan) and can widen types on dirty rows. Malformed
-    lines land in ``_corrupt_record`` (PERMISSIVE mode) instead of
-    failing the job."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
     """Schema-evolution-tolerant parquet read: ``mergeSchema`` unions
     the footers of every file, so batches written before a column

@@ -76,21 +76,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compression: str | None = "gzip",
-) -> None:
-    """JSON-lines sink (one JSON object per line, optionally gzipped
-    per part-file — splittable formats beat one giant .gz at scale;
-    prefer zstd where the cluster has the codec)."""
-    writer = df.write.mode(mode)
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
-
-
 def write_range_sorted(
     df: DataFrame,
     path: str,
