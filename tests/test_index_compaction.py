@@ -4,8 +4,7 @@ Both ``compact_*_index`` functions rewrite every over-threshold partition
 dir of a table in one Spark job and commit the pass under one manifest
 (``sources.index_store._compact_partition_dirs``). These tests pin the job
 count, the partition-value round trip, the crash behaviour of the
-one-manifest pass, the layout against the per-dir shape it replaced, and
-the stamped totals of ``write_minhash_index(mode="append")``.
+one-manifest pass and the layout against the per-dir shape it replaced.
 """
 
 import glob
@@ -32,7 +31,6 @@ from udacity_data_engineering_capstone_project_spark.operators.retrieval import 
 from udacity_data_engineering_capstone_project_spark.sources import index_store
 from udacity_data_engineering_capstone_project_spark.sources.index_store import (
     _compact_partition_dirs,
-    read_stamp as _read_minhash_params,
 )
 
 #: Texts with digits, so numeric prefix dirs such as ``tri_p2=01`` and
@@ -123,31 +121,6 @@ def _jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_write_minhash_index_append_mode_sums_stamped_totals(spark, tmp_path):
-    """An overwrite build followed by a ``mode="append"`` build stamps
-    the sum of both batches' digest totals, not the last batch's alone
-    (the probe's byte gate trusts them as a whole-index bound)."""
-    a, b = _mh_docs(spark, range(12)), _mh_docs(spark, range(50, 58))
-    stamp = {}
-    for name, part in (("a", a), ("b", b)):
-        write_minhash_index(part, str(tmp_path / name), **MH_DIALS)
-        stamp[name] = _read_minhash_params(str(tmp_path / name))
-
-    path = str(tmp_path / "ab")
-    write_minhash_index(a, path, **MH_DIALS)
-    write_minhash_index(b, path, mode="append", **MH_DIALS)
-    got = _read_minhash_params(path)
-    for k in ("sets_n_docs", "sets_tot_digests"):
-        assert got[k] == stamp["a"][k] + stamp["b"][k] > stamp["a"][k], k
-
-    # a stamp without totals (a migrated pre-totals index) stays
-    # without: summing onto an unknown base would undercount
-    pre = {k: v for k, v in got.items() if not k.startswith("sets_")}
-    index_store.write_stamp(path, pre)
-    write_minhash_index(b, path, mode="append", **MH_DIALS)
-    assert _read_minhash_params(path) == pre
 
 
 def test_trigram_compaction_keeps_numeric_prefix_dirs(spark, digit_corpus, tmp_path):

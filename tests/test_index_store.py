@@ -67,9 +67,7 @@ STORES = {
     "trigram": Store(
         tables=(("", "tri_p2"),),
         stats=(),
-        build=lambda docs, path, mode="overwrite": write_trigram_index(
-            docs, path, mode=mode
-        ),
+        build=write_trigram_index,
         append=lambda docs, path, **kw: append_trigram_index(docs, path, **kw),
         compact=lambda spark, path, **kw: compact_trigram_index(spark, path, **kw),
         migrate=stamp_trigram_params,
@@ -78,9 +76,7 @@ STORES = {
     "minhash": Store(
         tables=(("postings", "bp"), ("sets", "dp")),
         stats=("sets_n_docs", "sets_tot_digests"),
-        build=lambda docs, path, mode="overwrite": write_minhash_index(
-            docs, path, mode=mode, **MH_DIALS
-        ),
+        build=lambda docs, path: write_minhash_index(docs, path, **MH_DIALS),
         append=lambda docs, path, **kw: append_minhash_index(
             docs, path, **kw, **MH_DIALS
         ),
@@ -208,7 +204,7 @@ def test_table_read_lists_only_existing_dirs_at_zero_jobs(spark, tmp_path):
     root = str(tmp_path)
     table.write(
         spark.createDataFrame([(1, "01"), (2, "02"), (3, "10")], "k long, p string"),
-        root, "overwrite",
+        root,
     )
     reads, jobs = _jobs(
         spark, lambda: [table.read(spark, root, v) for v in (None, ["10", "01", "99"], ["99"])]
@@ -224,9 +220,9 @@ def test_table_read_lists_only_existing_dirs_at_zero_jobs(spark, tmp_path):
 
 @pytest.mark.parametrize("kind", ["trigram", "minhash"])
 def test_stamp_merge_rule(spark, tmp_path, kind):
-    """An overwrite sets the stamped stats, an append (a ``mode="append"``
-    build or an ``append_*_index``) sums them, and a stamp without
-    stats stays without. The dials are stamped unchanged throughout."""
+    """A build sets the stamped stats, an ``append_*_index`` sums them,
+    and a stamp without stats stays without. The dials are stamped
+    unchanged throughout."""
     store = STORES[kind]
     parts = [_texts(range(i * 20, i * 20 + 12), i) for i in range(3)]
     a, b, c = (_docs(spark, p) for p in parts)
@@ -241,15 +237,13 @@ def test_stamp_merge_rule(spark, tmp_path, kind):
     store.build(a, path)
     store.build(b, path)  # overwrite: the stats are b's own
     assert index_store.read_stamp(path) == alone["b"]
-    store.build(a, path, mode="append")
     store.append(c, path, auto_compact_threshold=None)
     got = index_store.read_stamp(path)
     assert {k: v for k, v in got.items() if k not in store.stats} == dials
     for k in store.stats:
-        assert got[k] == alone["a"][k] + alone["b"][k] + alone["c"][k], k
+        assert got[k] == alone["b"][k] + alone["c"][k], k
 
     index_store.write_stamp(path, dials)
-    store.build(a, path, mode="append")
     store.append(_docs(spark, _texts(range(90, 95), 9)), path, auto_compact_threshold=None)
     assert index_store.read_stamp(path) == dials
 

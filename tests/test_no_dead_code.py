@@ -21,8 +21,6 @@ ALLOWED = {
 #: Reached from tests only and still to be deleted, each with the tests
 #: that check only it (ROADMAP item 3). Shrink this set; never grow it.
 PENDING = {
-    "read_parquet_evolved",
-    "write_range_sorted",
     "upsert_latest_per_user",
     "incremental_ingest",
     "decode_image",

@@ -1,6 +1,6 @@
 """The pipeline's quality report checks what was written: planted faults
 in the inputs show up with their exact metric, the report's collect is
-a handful of jobs, and the pipeline holds no persisted state after."""
+3 jobs, and the pipeline holds no persisted state after."""
 
 import threading
 import uuid
@@ -10,8 +10,11 @@ from pyspark.sql import functions as F
 from udacity_data_engineering_capstone_project_spark.plans import model
 from udacity_data_engineering_capstone_project_spark.plans.pipeline import run_pipeline
 from udacity_data_engineering_capstone_project_spark.plans.quality import (
+    Checked,
+    nonempty_check,
+    predicate_absent_check,
+    tables_check,
     unique_key_check,
-    unique_keys_check,
 )
 from udacity_data_engineering_capstone_project_spark.session import ROOT_SCOPE
 from udacity_data_engineering_capstone_project_spark.sources.readers import (
@@ -93,29 +96,38 @@ def test_null_keys_group_as_in_group_by(spark, tmp_path):
     assert _failing(rows) == {"fact_pk_unique": (1, 0)}
 
 
-def test_unique_keys_check_matches_unique_key_check(spark):
-    """The one-shuffle check reports what the per-table check does,
-    composite null keys and an empty table included."""
+def test_tables_check_matches_per_table_checks(spark):
+    """The one-shuffle check reports what the per-table checks do,
+    composite null keys, an empty table and a bad predicate included."""
     pairs = spark.createDataFrame(
-        [("a", "x"), ("a", "x"), ("a", None), (None, "x"), (None, None),
-         (None, None), (None, None)],
+        [("a", "x"), ("a", "x"), ("a", None), (None, "a"), (None, "x"),
+         (None, None), (None, None), (None, None)],
         "s string, c string",
     )
     ids = spark.createDataFrame([(1,), (2,), (None,), (2,)], "id int")
     empty = ids.filter(F.lit(False))
+    bad = F.col("id") > 1  # null for the null id: not a bad row
     tables = [
-        (pairs, ["s", "c"], "pairs"),
-        (pairs, ["s"], "pairs_s"),
-        (ids, ["id"], "ids"),
-        (empty, ["id"], "empty"),
+        Checked(pairs, ["s", "c"], "pairs", "pairs_nonempty"),
+        Checked(pairs, ["s"], "pairs_s"),
+        Checked(ids, ["id"], "ids", "ids_nonempty", (bad, "ids_bad")),
+        Checked(empty, ["id"], "empty", "empty_nonempty", (bad, "empty_bad")),
     ]
-    got = {r.check_name: (r.metric, r.passed) for r in unique_keys_check(tables).collect()}
-    want = {
-        name: tuple(unique_key_check(df, keys, name).first()[1:])
-        for df, keys, name in tables
-    }
+    got = {r.check_name: (r.metric, r.passed) for r in tables_check(tables).collect()}
+    want = {}
+    for t in tables:
+        checks = [unique_key_check(t.df, t.keys, t.unique)]
+        if t.nonempty:
+            checks.append(nonempty_check(t.df, t.nonempty))
+        if t.bad:
+            checks.append(predicate_absent_check(t.df, *t.bad))
+        for c in checks:
+            r = c.first()
+            want[r.check_name] = (r.metric, r.passed)
     assert got == want == {
-        "pairs": (3, 0), "pairs_s": (5, 0), "ids": (1, 0), "empty": (0, 1),
+        "pairs": (3, 0), "pairs_nonempty": (8, 1), "pairs_s": (6, 0),
+        "ids": (1, 0), "ids_nonempty": (4, 1), "ids_bad": (2, 0),
+        "empty": (0, 1), "empty_nonempty": (0, 0), "empty_bad": (0, 1),
     }
 
 
@@ -138,23 +150,6 @@ def test_no_airline_gives_empty_fact_in_bounded_time(spark, tmp_path):
     }
 
 
-def test_missing_observations_fall_back_to_written_counts(spark, tmp_path, monkeypatch):
-    """When a write's observed metrics never arrive, the report counts
-    the written tables instead, with the same metrics."""
-    import udacity_data_engineering_capstone_project_spark.plans.pipeline as pipeline
-
-    monkeypatch.setattr(model, "build_country_codes", _unfiltered_codes)
-    monkeypatch.setattr(pipeline, "observed_metrics", lambda obs: None)
-    rows = _report(_run(spark, tmp_path, I94_ROWS))
-    assert _failing(rows) == {"country_cleansing_persisted": (3, 0)}
-    assert {k: v for k, v in rows.items() if k.endswith("_nonempty")} == {
-        "fact_nonempty": (2, 1),
-        "date_nonempty": (4, 1),
-        "country_nonempty": (6, 1),
-        "demographics_nonempty": (1, 1),
-    }
-
-
 def test_report_collect_jobs_and_no_state_left(spark, tmp_path):
     spark.catalog.clearCache()
     # checkpoints that earlier tests' operators left in the root scope
@@ -172,6 +167,7 @@ def test_report_collect_jobs_and_no_state_left(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not _failing(rows)
-    # a report of per-table checks over recomputed lineages ran 27 jobs
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    # the one aggregation's shuffle and result stages; a report of
+    # per-table checks over recomputed lineages ran 27 jobs
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
     assert held() == before

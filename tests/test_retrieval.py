@@ -213,43 +213,6 @@ def test_trigram_index_serves_same_answers_with_partition_pruning(
     assert "PushedFilters" in flat and "In(tri" in flat
 
 
-def test_trigram_index_incremental_append(spark, tmp_path):
-    """The build supports incremental batches: a second batch appended
-    into the same partition scheme serves the UNION corpus correctly
-    (the 100 TB ingest story — no full rebuild per batch)."""
-    from udacity_data_engineering_capstone_project_spark.operators.retrieval import (
-        trigram_match,
-        trigram_match_indexed,
-        write_trigram_index,
-    )
-
-    batch1 = spark.createDataFrame(
-        [(1, "the quick brown fox"), (2, "slow red fox")],
-        "doc_id long, text string",
-    )
-    batch2 = spark.createDataFrame(
-        [(3, "quick red dogs"), (4, "brown fox again")],
-        "doc_id long, text string",
-    )
-    pats = spark.createDataFrame(
-        [(1, "brown fox"), (2, "red")], "pattern_id int, pattern string"
-    )
-    path = str(tmp_path / "tri_incr")
-    write_trigram_index(batch1, path)
-    write_trigram_index(batch2, path, mode="append")
-
-    union = batch1.unionByName(batch2)
-    got = {
-        (r.pattern_id, r.doc_id)
-        for r in trigram_match_indexed(spark, path, union, pats).collect()
-    }
-    want = {
-        (r.pattern_id, r.doc_id)
-        for r in trigram_match(union, pats).collect()
-    }
-    assert got == want and (1, 4) in got and (2, 3) in got
-
-
 def _tri_corpus(spark):
     docs = spark.createDataFrame(
         [

@@ -89,33 +89,6 @@ def test_salted_join_equals_plain_join(spark):
     )
 
 
-def test_range_sorted_write_gives_disjoint_file_ranges(spark, tmp_path):
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from udacity_data_engineering_capstone_project_spark.sources.writers import (
-        write_range_sorted,
-    )
-
-    path = str(tmp_path / "sorted")
-    df = spark.range(0, 10000).withColumnRenamed("id", "k")
-    write_range_sorted(df, path, "k", n_files=4)
-    ranges = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        stats = md.row_group(0).column(0).statistics
-        lo, hi = stats.min, stats.max
-        for rg in range(md.num_row_groups):
-            s = md.row_group(rg).column(0).statistics
-            lo, hi = min(lo, s.min), max(hi, s.max)
-        ranges.append((lo, hi))
-    ranges.sort()
-    assert len(ranges) == 4
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2  # file ranges are disjoint -> min/max skipping works
-
-
 def test_zorder_value_interleaves_bits(spark):
     from pyspark.sql import functions as F
 
@@ -178,24 +151,6 @@ def test_zordered_write_skips_on_both_dims(spark, sf_dir, tmp_path):
     avg_ok = sum(r.ok_span for r in per_file) / len(per_file)
     assert avg_pk < 0.7 * 1023
     assert avg_ok < 0.7 * 1023
-
-
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    from udacity_data_engineering_capstone_project_spark.sources.readers import (
-        read_parquet_evolved,
-    )
-
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id long, v string").write.mode(
-        "append"
-    ).parquet(path)
-    # later batch gains a column
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, v string, score double"
-    ).write.mode("append").parquet(path)
-
-    got = {r.id: (r.v, r.score) for r in read_parquet_evolved(spark, path).collect()}
-    assert got == {1: ("a", None), 2: ("b", 9.5)}
 
 
 def test_jsonl_malformed_rows_quarantined_not_fatal(spark, tmp_path):

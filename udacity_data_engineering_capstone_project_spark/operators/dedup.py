@@ -44,7 +44,7 @@ from ..functions.hashing import (
 from ..functions.textnorm import tokens_col
 from ..session import hold, resource_scope
 from ..session import observed_metrics as _observed_totals
-from ..sources.index_store import IndexStore, Table, read_stamp
+from ..sources.index_store import IndexStore, Table, read_stamp, write_stamp
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -985,7 +985,6 @@ def write_minhash_index(
     bands: int = 16,
     n_band_parts: int = 64,
     n_doc_parts: int = 32,
-    mode: str = "overwrite",
 ) -> None:
     """Materialize the MinHash-LSH dedup index on disk — the 100 TB
     deployment shape for CONTINUOUS-INGESTION near-dup detection
@@ -1022,17 +1021,14 @@ def write_minhash_index(
     with different dials than the build would otherwise silently
     return wrong or empty pairs (wrong bp/dp pruning, different band
     keys): a silent-miss trap on a dedup/compliance-adjacent path
-    (ADVICE r7). ``mode="append"`` sums the batch's totals onto the
-    stamp (the store's merge rule, :mod:`..sources.index_store`).
+    (ADVICE r7).
     """
     stats = _write_minhash_tables(
-        docs, path, mode, id_col, text_col, n, n_hashes, bands,
-        n_band_parts, n_doc_parts,
+        docs, path, id_col, text_col, n, n_hashes, bands, n_band_parts,
+        n_doc_parts,
     )
-    MINHASH_STORE.stamp(
-        path, _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
-        stats, mode,
-    )
+    dials = _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts)
+    write_stamp(path, {**dials, **stats})
 
 
 #: the MinHash index's tables: postings by band-key bucket, digest sets
@@ -1058,8 +1054,7 @@ def _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts) -> dict:
 
 
 def _write_minhash_tables(
-    docs, root, mode, id_col, text_col, n, n_hashes, bands, n_band_parts,
-    n_doc_parts,
+    docs, root, id_col, text_col, n, n_hashes, bands, n_band_parts, n_doc_parts,
 ) -> dict:
     """Shingle ``docs`` and write the ``postings/`` and ``sets/`` tables
     of the :func:`write_minhash_index` layout under ``root``; the build
@@ -1078,10 +1073,10 @@ def _write_minhash_tables(
         postings.write(
             sets.select("doc", F.explode(band_keys("hs")).alias("band_key"))
             .withColumn("bp", bp),
-            root, mode, n_band_parts,
+            root, n_band_parts,
         )
         dp = F.pmod(F.xxhash64("doc"), F.lit(n_doc_parts)).cast("int")
-        doc_sets.write(sets.withColumn("dp", dp), root, mode, n_doc_parts)
+        doc_sets.write(sets.withColumn("dp", dp), root, n_doc_parts)
         # whole-index digest-set totals, stamped beside the dials: the
         # probe's free byte bound (see minhash_probe_indexed). One narrow
         # agg over the still-persisted sets — write-time cost, amortized;
@@ -1152,8 +1147,8 @@ def append_minhash_index(
         path,
         _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
         lambda root: _write_minhash_tables(
-            docs, root, "overwrite", id_col, text_col, n, n_hashes, bands,
-            n_band_parts, n_doc_parts,
+            docs, root, id_col, text_col, n, n_hashes, bands, n_band_parts,
+            n_doc_parts,
         ),
         # a batch whose texts all shingle to nothing is a true no-op
         lambda stats: stats["sets_n_docs"] > 0,

@@ -7,17 +7,14 @@ them as partitioned parquet, and returns the data-quality report as a
 DataFrame (structured, not printed).
 
 Every check runs on what was written, never on a recomputed lineage:
-- the four ``nonempty`` row counts and the country-cleansing count ride
-  on the writes as ``DataFrame.observe`` metrics (no extra job); the
-  report carries them as literal rows. A write whose metrics never
-  arrive (its subtree was folded away, e.g. an empty fact table) is
-  checked by a lazy count over the written table instead;
-- the seven key checks are one lazy aggregation over the written
-  parquet (``quality.unique_keys_check``), each table read with its
-  known schema. Collecting the report runs that aggregation's shuffle
-  and result stages only: 3 jobs on 100k generated I94 rows at
-  ``local[4]``, where per-table checks over the recomputed lineages
-  ran 27.
+each write reads its table back with the known schema, and the twelve
+checks (four ``nonempty``, seven key checks and the country cleansing)
+are one lazy aggregation over those tables (``quality.tables_check``).
+Collecting the report runs that aggregation's shuffle and result
+stages only: 3 jobs on 100k generated I94 rows at ``local[4]``, where
+per-table checks over the recomputed lineages ran 27. The report waits
+on no listener event, so an empty table (e.g. an empty fact) reports
+its zero counts like any other.
 
 Differences from the reference, all deliberate (SURVEY.md §4.3):
 - the inputs are read with explicit schemas (``model.I94_SCHEMA`` and
@@ -47,20 +44,13 @@ from concurrent.futures import ThreadPoolExecutor
 from contextvars import copy_context
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import observed_metrics
-from ..sources.readers import from_records, read_csv
+from ..sources.readers import read_csv
 from ..sources.writers import write_parquet
 from . import model
-from .quality import (
-    REPORT_SCHEMA,
-    nonempty_check,
-    predicate_absent_check,
-    quality_suite,
-    unique_keys_check,
-)
+from .quality import Checked, tables_check
 
 
 def _bad_country() -> Column:
@@ -85,24 +75,11 @@ def run_pipeline(
     )
     temps = read_csv(spark, temperatures_csv, schema=model.TEMPERATURES_CSV_SCHEMA)
 
-    rows = F.count(F.lit(1)).alias("rows")
-    observed = {
-        "fact_i94": [rows],
-        "dim_country": [rows, F.count(F.when(_bad_country(), 1)).alias("bad")],
-        "dim_demographics": [rows],
-        "dim_date": [rows],
-    }
-    observations = {table: Observation() for table in observed}
-
     def write(df: DataFrame, table: str, partition_by=None) -> DataFrame:
-        """Write ``df`` (observing the table's ``observed`` metrics on the
-        write) and return the written table, read back with ``df``'s
-        schema."""
+        """Write ``df`` and return the written table, read back with
+        ``df``'s schema."""
         path = f"{output_dir}/{table}.parquet"
-        out = df
-        if table in observations:
-            out = df.observe(observations[table], *observed[table])
-        write_parquet(out, path, partition_by=partition_by)
+        write_parquet(df, path, partition_by=partition_by)
         return spark.read.schema(df.schema).parquet(path)
 
     # one chain per independent write; the date dim reads the written fact.
@@ -151,37 +128,20 @@ def run_pipeline(
         results = [f.result() for f in futures]
     (fact_w, date_w), visa_w, mode_w, port_w, country_w, demographics_w = results[:6]
 
-    observed_rows, fallbacks = [], []
-    for name, table, written, metric in [
-        ("fact_nonempty", "fact_i94", fact_w, "rows"),
-        ("date_nonempty", "dim_date", date_w, "rows"),
-        ("country_nonempty", "dim_country", country_w, "rows"),
-        ("demographics_nonempty", "dim_demographics", demographics_w, "rows"),
-        ("country_cleansing_persisted", "dim_country", country_w, "bad"),
-    ]:
-        got = observed_metrics(observations[table])
-        if got is None:
-            # never guess: count what was written
-            fallbacks.append(
-                nonempty_check(written, name)
-                if metric == "rows"
-                else predicate_absent_check(written, _bad_country(), name)
-            )
-        else:
-            n = int(got[metric])
-            observed_rows.append((name, n, int(n > 0 if metric == "rows" else n == 0)))
-
-    keys = unique_keys_check(
+    return tables_check(
         [
-            (fact_w, ["cicid"], "fact_pk_unique"),
-            (date_w, ["sasdate"], "date_pk_unique"),
-            (country_w, ["code"], "country_pk_unique"),
-            (port_w, ["code"], "port_pk_unique"),
-            (mode_w, ["id"], "mode_pk_unique"),
-            (visa_w, ["id"], "visa_pk_unique"),
-            (demographics_w, ["state", "city"], "demographics_composite_unique"),
+            Checked(fact_w, ["cicid"], "fact_pk_unique", "fact_nonempty"),
+            Checked(date_w, ["sasdate"], "date_pk_unique", "date_nonempty"),
+            Checked(
+                country_w, ["code"], "country_pk_unique", "country_nonempty",
+                (_bad_country(), "country_cleansing_persisted"),
+            ),
+            Checked(port_w, ["code"], "port_pk_unique"),
+            Checked(mode_w, ["id"], "mode_pk_unique"),
+            Checked(visa_w, ["id"], "visa_pk_unique"),
+            Checked(
+                demographics_w, ["state", "city"], "demographics_composite_unique",
+                "demographics_nonempty",
+            ),
         ]
-    )
-    return quality_suite(
-        [from_records(spark, observed_rows, REPORT_SCHEMA), *fallbacks, keys]
     )

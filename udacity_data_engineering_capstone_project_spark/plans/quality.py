@@ -7,7 +7,8 @@ one-row DataFrame ``(check_name, metric, passed)`` — checks compose
 into a suite with ``unionByName``, and the suite itself is a queryable
 table (no print-scraping). A suite of per-DataFrame checks still runs
 each check's own lineage and shuffle when collected: one or more jobs
-per check. ``unique_keys_check`` runs many key checks over one shuffle.
+per check. ``tables_check`` runs all three kinds over many tables in
+one shuffle, reading each table once.
 
 ``metric`` is the violation count (0 = healthy) except for
 ``nonempty`` where it is the row count. ``passed`` is 0/1 int for
@@ -17,16 +18,12 @@ engine-portable hashing.
 from __future__ import annotations
 
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.readers import from_records
-
-
-#: The report's schema, for check rows computed outside Spark (e.g. from
-#: metrics observed on a write).
-REPORT_SCHEMA = "check_name string, metric long, passed int"
 
 
 def _result(name: str, metric: Column, passed: Column) -> list[Column]:
@@ -58,43 +55,67 @@ def unique_key_check(df: DataFrame, key_cols: list[str], name: str) -> DataFrame
     return grouped.agg(*_result(name, dups, dups == 0))
 
 
-def unique_keys_check(tables: list[tuple[DataFrame, list[str], str]]) -> DataFrame:
-    """Check 2 over many ``(df, key_cols, name)`` tables, with the keys
-    shuffled once: one row per check, with ``unique_key_check``'s metric
-    and null semantics. Every table's key becomes one JSON string and
-    the union is grouped by ``(check_name, key)``; ``to_json`` omits
-    null fields, so keys equal up to their nulls group together, as
-    GROUP BY groups nulls. A zero-duplicate row per name keeps checks
-    over empty tables in the report."""
+class Checked(NamedTuple):
+    """One table of :func:`tables_check` and the names of its checks."""
+
+    df: DataFrame
+    keys: list[str]
+    unique: str  # check 2's name
+    nonempty: str | None = None  # check 1's name, if it runs
+    bad: tuple[Column, str] | None = None  # check 3's predicate and name
+
+
+def tables_check(tables: list[Checked]) -> DataFrame:
+    """Checks 1-3 over many tables with the keys shuffled once: one row
+    per named check, with the metric and pass rule of
+    ``nonempty_check``, ``unique_key_check`` and
+    ``predicate_absent_check``. Every table's key becomes one JSON
+    string, and the union is grouped by ``(table, key)`` into each
+    key's row count ``n`` and its bad rows; ``to_json`` omits null
+    fields, so keys equal up to their nulls group together, as GROUP BY
+    groups nulls. Grouping by table then sums ``n - 1`` (duplicates),
+    ``n`` (rows) and the bad rows. A zero row per table keeps checks
+    over empty tables in the report. The check names are mapped in the
+    last projection: a joined name lookup would add a broadcast job."""
     keyed = reduce(
         DataFrame.unionByName,
         [
-            df.select(
-                F.lit(name).alias("check_name"),
-                F.to_json(F.struct(*keys)).alias("key"),
+            t.df.select(
+                F.lit(i).alias("t"),
+                F.to_json(F.struct(*t.keys)).alias("key"),
+                (F.when(t.bad[0], 1) if t.bad else F.lit(None)).cast("int").alias("bad"),
             )
-            for df, keys, name in tables
+            for i, t in enumerate(tables)
         ],
     )
+    n = F.count("*")
     zeros = from_records(
-        tables[0][0].sparkSession,
-        [(name, 0) for _, _, name in tables],
-        "check_name string, dups long",
+        tables[0].df.sparkSession,
+        [(i, 0, 0, 0) for i in range(len(tables))],
+        "t int, dups long, rows long, bad long",
     )
-    dups = F.col("dups")
-    return (
-        keyed.groupBy("check_name", "key")
-        .agg((F.count("*") - 1).alias("dups"))
+    totals = (
+        keyed.groupBy("t", "key")
+        .agg((n - 1).alias("dups"), n.alias("rows"), F.count("bad").alias("bad"))
         .drop("key")
         .unionByName(zeros)
-        .groupBy("check_name")
-        .agg(F.sum("dups").alias("dups"))
-        .select(
-            "check_name",
-            dups.cast("long").alias("metric"),
-            (dups == 0).cast("int").alias("passed"),
-        )
+        .groupBy("t")
+        .agg(*(F.sum(c).alias(c) for c in ("dups", "rows", "bad")))
     )
+    dups, rows, bad = F.col("dups"), F.col("rows"), F.col("bad")
+
+    def checks(t: Checked) -> Column:
+        named = [(t.unique, dups, dups == 0)]
+        if t.nonempty:
+            named.append((t.nonempty, rows, rows > 0))
+        if t.bad:
+            named.append((t.bad[1], bad, bad == 0))
+        return F.array(*(F.struct(*_result(*c)) for c in named))
+
+    by_table = F.create_map(
+        *(x for i, t in enumerate(tables) for x in (F.lit(i), checks(t)))
+    )
+    return totals.select(F.inline(F.element_at(by_table, F.col("t"))))
 
 
 def predicate_absent_check(df: DataFrame, bad: Column, name: str) -> DataFrame:

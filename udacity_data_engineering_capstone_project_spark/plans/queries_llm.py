@@ -80,6 +80,29 @@ def _scratch_dir(prefix: str) -> str:
     return d
 
 
+#: per-process build-once artifacts: (query, sf_dir) -> what its build
+#: returned (an on-disk path, or the bucketed tables' names)
+_BUILT: dict = {}
+
+
+def _built_once(query: str, sf_dir: str, prefix: str, build, fresh=None):
+    """The artifact ``query`` serves from at ``sf_dir``, built on the
+    first call per process: ``build(scratch, timed)`` writes it under a
+    fresh :func:`_scratch_dir` and wraps in ``timed`` exactly the
+    statements whose seconds ``BUILD_COSTS`` records under the query's
+    name. Later calls serve the cached artifact, so repeated calls
+    (bench iterations, test reruns) measure SERVING, the deployment
+    number; ``fresh(artifact)`` false rebuilds it."""
+    from .build_costs import recording
+
+    got = _BUILT.get((query, sf_dir))
+    if got is None or (fresh is not None and not fresh(got)):
+        got = _BUILT[query, sf_dir] = build(
+            _scratch_dir(prefix), recording(query, sf_dir)
+        )
+    return got
+
+
 # --------------------------------------------------------------------------
 # shared oracle SQL fragments (DuckDB dialect)
 
@@ -3736,27 +3759,17 @@ WHERE (ba.b >= 90) <> (bb.b >= 90)
 """
 
 
-#: per-process build cache: sf_dir -> on-disk MinHash index path (the
-#: trigram-index convention, queries_llm.py:_TRIGRAM_INDEX_CACHE — the
-#: build is the amortized one-time cost; repeated calls measure
-#: SERVING, the deployment number; build cost recorded separately by
-#: tools/scale_probe_minhash_index.py and bench.py's build_s field).
-_MINHASH_INDEX_CACHE: dict = {}
-
-
 def _minhash_index_path(spark, sf_dir: str) -> str:
-    path = _MINHASH_INDEX_CACHE.get(sf_dir)
-    if path is None:
+    def build(scratch, timed):
         from ..operators.dedup import write_minhash_index
-        from .build_costs import recording
 
         docs = _t(spark, sf_dir, "documents")
         b = F.expr(spark_hex_to_long("md5(CAST(doc_id AS STRING))", 7)) % 100
-        path = _scratch_dir("minhash_index_") + "/idx"
-        with recording("minhash_pairs_indexed", sf_dir):
-            write_minhash_index(docs.filter(b < 90), path)
-        _MINHASH_INDEX_CACHE[sf_dir] = path
-    return path
+        with timed:
+            write_minhash_index(docs.filter(b < 90), scratch + "/idx")
+        return scratch + "/idx"
+
+    return _built_once("minhash_pairs_indexed", sf_dir, "minhash_index_", build)
 
 
 def minhash_pairs_indexed(spark, sf_dir):
@@ -5808,26 +5821,15 @@ TRIGRAM_INDEXED_PATTERNS = [
     (3, "batch window"),
 ]
 
-#: per-process build cache: sf_dir -> on-disk index path. The build is
-#: the amortized one-time cost of the serve-many deployment; caching it
-#: per process makes repeated calls (bench iterations, test reruns)
-#: measure SERVING, which is the number that matters — documented in
-#: bench notes and SCALE.md, and the build cost is recorded separately
-#: by tools/scale_probe_trigram.py.
-_TRIGRAM_INDEX_CACHE: dict = {}
-
-
 def _trigram_index_path(spark, sf_dir: str) -> str:
-    path = _TRIGRAM_INDEX_CACHE.get(sf_dir)
-    if path is None:
+    def build(scratch, timed):
         from ..operators.retrieval import write_trigram_index
-        from .build_costs import recording
 
-        path = _scratch_dir("trigram_index_") + "/postings"
-        with recording("trigram_search_indexed", sf_dir):
-            write_trigram_index(_t(spark, sf_dir, "documents"), path)
-        _TRIGRAM_INDEX_CACHE[sf_dir] = path
-    return path
+        with timed:
+            write_trigram_index(_t(spark, sf_dir, "documents"), scratch + "/postings")
+        return scratch + "/postings"
+
+    return _built_once("trigram_search_indexed", sf_dir, "trigram_index_", build)
 
 
 def trigram_search_indexed(spark, sf_dir):
@@ -5868,9 +5870,6 @@ LLM_QUERIES["trigram_search_indexed"] = (
 )
 
 
-_TRIGRAM_APPEND_INDEX_CACHE: dict = {}
-
-
 def _trigram_appended_index_path(spark, sf_dir: str) -> str:
     """Build-on-80% + append-20% cache for the probe-after-append row:
     the INDEX CONTENT ends up identical to a full build (append folds
@@ -5878,21 +5877,20 @@ def _trigram_appended_index_path(spark, sf_dir: str) -> str:
     ``app-*`` files behind the crash-safe manifest path — what the
     serve validates, heals and reads (VERDICT r9 #3)."""
 
-    path = _TRIGRAM_APPEND_INDEX_CACHE.get(sf_dir)
-    if path is None:
+    def build(scratch, timed):
         from ..operators.retrieval import (
             append_trigram_index,
             write_trigram_index,
         )
-        from .build_costs import recording
 
         docs = _t(spark, sf_dir, "documents")
-        path = _scratch_dir("trigram_index_app_") + "/postings"
-        with recording("trigram_search_appended", sf_dir):
+        path = scratch + "/postings"
+        with timed:
             write_trigram_index(docs.filter(F.col("doc_id") % 5 != 0), path)
             append_trigram_index(docs.filter(F.col("doc_id") % 5 == 0), path)
-        _TRIGRAM_APPEND_INDEX_CACHE[sf_dir] = path
-    return path
+        return path
+
+    return _built_once("trigram_search_appended", sf_dir, "trigram_index_app_", build)
 
 
 def trigram_search_appended(spark, sf_dir):
@@ -6379,10 +6377,6 @@ LLM_QUERIES["aqp_revenue_estimate"] = (
 )
 
 
-#: per-process materialized-sample cache: sf_dir -> parquet path
-_AQP_SAMPLE_CACHE: dict = {}
-
-
 def aqp_revenue_from_sample(spark, sf_dir):
     """The BlinkDB deployment shape of aqp_revenue_estimate (VERDICT
     r5 next-steps #6): the deterministic 1% md5-rank sample is WRITTEN
@@ -6395,10 +6389,7 @@ def aqp_revenue_from_sample(spark, sf_dir):
     the sample is a pure function of the data, so estimating from the
     materialized copy is bit-equal to filtering inline."""
 
-    path = _AQP_SAMPLE_CACHE.get(sf_dir)
-    if path is None:
-        from .build_costs import recording
-
+    def build(scratch, timed):
         li = _t(spark, sf_dir, "lineitem")
         h = F.expr(
             spark_hex_to_long(
@@ -6407,8 +6398,8 @@ def aqp_revenue_from_sample(spark, sf_dir):
                 8,
             )
         )
-        path = _scratch_dir("aqp_sample_") + "/lineitem_s1pct"
-        with recording("aqp_revenue_from_sample", sf_dir):
+        path = scratch + "/lineitem_s1pct"
+        with timed:
             li.filter(h % 100 == 0).select(
                 "l_returnflag",
                 (
@@ -6418,7 +6409,9 @@ def aqp_revenue_from_sample(spark, sf_dir):
                     )
                 ).alias("rev_x1e4"),
             ).write.mode("overwrite").parquet(path)
-        _AQP_SAMPLE_CACHE[sf_dir] = path
+        return path
+
+    path = _built_once("aqp_revenue_from_sample", sf_dir, "aqp_sample_", build)
     return _aqp_estimate_over(spark.read.parquet(path))
 
 
@@ -6684,16 +6677,12 @@ LLM_QUERIES["bitext_mining_pairs"] = (
 # (bucketed co-located join, Z-order box serving) + the fully-replayable
 # dominant-principal-direction power iteration.
 
-#: per-process bucketed-table build cache: sf_dir -> (lineitem, orders)
-#: catalog table names. Build-once/serve-many, same split as the
-#: trigram and IVF indexes: the write-side shuffle is paid once, every
-#: later join is exchange-free; bench iterations measure SERVING.
-_BUCKETED_TABLES_CACHE: dict = {}
-
-
 def _bucketed_tables(spark, sf_dir: str):
-    names = _BUCKETED_TABLES_CACHE.get(sf_dir)
-    if names is None or not all(spark.catalog.tableExists(t) for t in names):
+    """The (lineitem, orders) bucketed catalog tables: the write-side
+    shuffle is paid once, every later join is exchange-free. Rebuilt
+    when the session's catalog lost them."""
+
+    def build(base, timed):
         import hashlib
 
         from ..sources.writers import write_bucketed
@@ -6704,7 +6693,6 @@ def _bucketed_tables(spark, sf_dir: str):
         # table's warehouse dir outlives the in-memory catalog, so a
         # new process would hit LOCATION_ALREADY_EXISTS (caught by the
         # vanilla-session driver smoke).
-        base = _scratch_dir("bucketed_tables_")
         li = _t(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_quantity", "l_extendedprice", "l_discount"
         )
@@ -6715,10 +6703,8 @@ def _bucketed_tables(spark, sf_dir: str):
         # 32 buckets 1.9 s, 240 buckets 5.5 s — target ~2M rows per
         # bucket, floor 8 (SCALE.md round-6 layout section). Both
         # tables must share the count for co-location.
-        from .build_costs import recording
-
         n_buckets = max(8, min(256, li.count() // 2_000_000))
-        with recording("bucketed_join_colocated", sf_dir):
+        with timed:
             write_bucketed(
                 li,
                 lt,
@@ -6737,8 +6723,12 @@ def _bucketed_tables(spark, sf_dir: str):
                 sort_by="o_orderkey",
                 path=f"{base}/{ot}",
             )
-        _BUCKETED_TABLES_CACHE[sf_dir] = names = (lt, ot)
-    return names
+        return lt, ot
+
+    return _built_once(
+        "bucketed_join_colocated", sf_dir, "bucketed_tables_", build,
+        fresh=lambda names: all(spark.catalog.tableExists(t) for t in names),
+    )
 
 
 def bucketed_join_colocated(spark, sf_dir):
@@ -6840,21 +6830,16 @@ LLM_QUERIES["star_join_bucketed"] = (
 )
 
 
-#: per-process Z-ordered layout cache: sf_dir -> parquet path.
-_ZORDER_LAYOUT_CACHE: dict = {}
-
 #: The served 2-D box (absolute keys, valid at every fixture sf).
 _ZBOX = (40, 90, 3, 12)
 
 
 def _zorder_layout_path(spark, sf_dir: str) -> str:
-    path = _ZORDER_LAYOUT_CACHE.get(sf_dir)
-    if path is None:
+    def build(scratch, timed):
         from ..sources.writers import write_zordered
-        from .build_costs import recording
 
-        path = _scratch_dir("zorder_lineitem_") + "/lineitem_z"
-        with recording("zorder_box_serve", sf_dir):
+        path = scratch + "/lineitem_z"
+        with timed:
             write_zordered(
                 _t(spark, sf_dir, "lineitem").select(
                     "l_partkey", "l_suppkey", "l_returnflag", "l_quantity"
@@ -6865,8 +6850,9 @@ def _zorder_layout_path(spark, sf_dir: str) -> str:
                 n_files=16,
                 bits=16,
             )
-        _ZORDER_LAYOUT_CACHE[sf_dir] = path
-    return path
+        return path
+
+    return _built_once("zorder_box_serve", sf_dir, "zorder_lineitem_", build)
 
 
 def zorder_box_serve(spark, sf_dir):
@@ -7096,25 +7082,21 @@ LLM_QUERIES["incremental_join_agg"] = (
 )
 
 
-#: per-process month-partitioned orders layout: sf_dir -> parquet path
-_DPP_ORDERS_CACHE: dict = {}
-
-
 def _dpp_orders_path(spark, sf_dir: str) -> str:
-    path = _DPP_ORDERS_CACHE.get(sf_dir)
-    if path is None:
-        from .build_costs import recording
+    """The month-partitioned orders layout."""
 
-        path = _scratch_dir("dpp_orders_") + "/orders_by_month"
-        with recording("dpp_partitioned_join", sf_dir):
+    def build(scratch, timed):
+        path = scratch + "/orders_by_month"
+        with timed:
             (
                 _t(spark, sf_dir, "orders")
                 .withColumn("om", F.date_format("o_orderdate", "yyyy-MM"))
                 .write.partitionBy("om")
                 .parquet(path)
             )
-        _DPP_ORDERS_CACHE[sf_dir] = path
-    return path
+        return path
+
+    return _built_once("dpp_partitioned_join", sf_dir, "dpp_orders_", build)
 
 
 def dpp_partitioned_join(spark, sf_dir):
@@ -7369,16 +7351,12 @@ LLM_QUERIES["join_size_estimate_sketch"] = (
 )
 
 
-#: per-process schema-evolved dataset: sf_dir -> parquet path
-_EVOLVED_ORDERS_CACHE: dict = {}
-
-
 def _evolved_orders_path(spark, sf_dir: str) -> str:
-    path = _EVOLVED_ORDERS_CACHE.get(sf_dir)
-    if path is None:
-        from .build_costs import recording
+    """The schema-evolved orders dataset: two eras, the later with one
+    more column."""
 
-        path = _scratch_dir("evolved_orders_") + "/orders_evolved"
+    def build(scratch, timed):
+        path = scratch + "/orders_evolved"
         o = _t(spark, sf_dir, "orders")
         old = o.filter(F.col("o_orderdate") < "1997-01-01").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -7386,11 +7364,12 @@ def _evolved_orders_path(spark, sf_dir: str) -> str:
         new = o.filter(F.col("o_orderdate") >= "1997-01-01").select(
             "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
         )
-        with recording("schema_evolution_union", sf_dir):
+        with timed:
             old.write.parquet(f"{path}/batch=old")
             new.write.parquet(f"{path}/batch=new")
-        _EVOLVED_ORDERS_CACHE[sf_dir] = path
-    return path
+        return path
+
+    return _built_once("schema_evolution_union", sf_dir, "evolved_orders_", build)
 
 
 def schema_evolution_union(spark, sf_dir):

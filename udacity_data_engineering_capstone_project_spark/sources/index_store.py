@@ -13,13 +13,14 @@ as an upper bound. Each index module describes its tables as
 Stamp
 -----
 The stamp is written durably (temp write + fsync + ``os.replace``, so
-a torn write never leaves a parseable-but-wrong file) and merged by
-one rule for every write mode: an overwrite sets the stats, an append
-sums them onto the stamp, and a stamp without stats stays without (an
-index migrated from before the stats existed: summing onto an unknown
-base would undercount). An append writes its summed stats BEFORE its
-commit, so a crash in between overcounts (conservative: the probe then
-at worst measures its sliver itself), never undercounts.
+a torn write never leaves a parseable-but-wrong file). A build
+overwrites the index and sets the stats; an append (the one append
+path, :meth:`IndexStore.append`) sums them onto the stamp, and a stamp
+without stats stays without (an index migrated from before the stats
+existed: summing onto an unknown base would undercount). An append
+writes its summed stats BEFORE its commit, so a crash in between
+overcounts (conservative: the probe then at worst measures its sliver
+itself), never undercounts.
 
 Staged swap, heal order
 -----------------------
@@ -104,11 +105,9 @@ def write_stamp(path: str, params: dict) -> None:
     os.replace(dst + ".tmp", dst)
 
 
-def _merged_stats(prev: dict | None, stats: dict) -> dict:
-    """The stamped stats after writing a batch with ``stats`` onto the
-    ``prev`` stamp (None: the batch is the whole index)."""
-    if prev is None:
-        return dict(stats)
+def _merged_stats(prev: dict, stats: dict) -> dict:
+    """The stamped stats after appending a batch with ``stats`` onto the
+    ``prev`` stamp."""
     if any(k not in prev for k in stats):
         return {}
     return {k: int(prev[k]) + v for k, v in stats.items()}
@@ -125,7 +124,7 @@ class Table(NamedTuple):
     def dir(self, root: str) -> str:
         return os.path.join(root, self.rel) if self.rel else root
 
-    def write(self, df: DataFrame, root: str, mode: str, n_parts=None) -> None:
+    def write(self, df: DataFrame, root: str, n_parts=None) -> None:
         """Write ``df`` as this table under ``root``. Repartitioning on
         the partition column BEFORE the partitioned write puts each dir
         in one task, so a write leaves about one file per dir; without
@@ -144,7 +143,7 @@ class Table(NamedTuple):
         (
             parts.sortWithinPartitions(self.part_col, self.key)
             .write.partitionBy(self.part_col)
-            .mode(mode)
+            .mode("overwrite")
             .parquet(self.dir(root))
         )
 
@@ -216,14 +215,6 @@ class IndexStore(NamedTuple):
         self.check(path, dials, caller)
         _heal_pending_appends(path)
 
-    def stamp(self, path: str, dials: dict, stats: dict, mode: str) -> None:
-        """Stamp ``dials`` and the merged ``stats`` after a build wrote
-        its tables in ``mode`` (or an append staged a batch)."""
-        prev = read_stamp(path) if mode == "append" else None
-        params = {**(prev or {}), **dials, **_merged_stats(prev, stats)}
-        if params != prev:
-            write_stamp(path, params)
-
     def migrate(self, path: str, dials: dict) -> None:
         """Stamp an index built before the stamp existed. Refuses to
         overwrite a stamp: a mismatch there is a real error."""
@@ -292,7 +283,10 @@ class IndexStore(NamedTuple):
                 )
             shutil.rmtree(tmp, ignore_errors=True)
             return counts, False
-        self.stamp(path, dials, stats, "append")
+        prev = read_stamp(path)
+        params = {**prev, **dials, **_merged_stats(prev, stats)}
+        if params != prev:
+            write_stamp(path, params)
         _commit_staging(path, tag, tmp, moves)
         if auto_compact_threshold is None:
             return counts, False

@@ -120,12 +120,3 @@ def parse_sas_labels(text: str, marker: str) -> dict[str, str]:
             out[code] = label
     return out
 
-
-def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution-tolerant parquet read: ``mergeSchema`` unions
-    the footers of every file, so batches written before a column
-    existed read as nulls next to batches written after — the
-    append-only landing zone contract. Costs a footer read per file at
-    planning (not a data scan); on stable-schema 100 TB reads leave it
-    off and take the first footer."""
-    return spark.read.option("mergeSchema", "true").parquet(path)

@@ -76,28 +76,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_range_sorted(
-    df: DataFrame,
-    path: str,
-    sort_col: str,
-    n_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Range-partitioned, within-file-sorted parquet: rows are range-
-    split on ``sort_col`` across files and sorted inside each, so
-    every file (and row group) covers a DISJOINT narrow range of the
-    column. Point/range filters then skip whole files via parquet
-    min/max stats — the poor man's clustering index, and the single
-    highest-leverage layout choice for a 100 TB time- or key-ordered
-    scan pattern."""
-    (
-        df.repartitionByRange(n_files, sort_col)
-        .sortWithinPartitions(sort_col)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def zorder_value(c1, c2, bits: int = 16):
     """Morton (Z-order) value of two non-negative int columns: their
     low ``bits`` bits interleaved into one long. Rows close in Z-value
@@ -131,7 +109,7 @@ def write_zordered(
 ) -> None:
     """Z-order-clustered parquet: range-split + sort on the Morton
     value of (col1, col2), so point/range filters on EITHER column
-    skip most files via footer min/max — :func:`write_range_sorted`
+    skip most files via footer min/max — a range-sorted layout
     generalized to two dimensions. One extra range shuffle at write
     time buys every later scan its skipping."""
     z = zorder_value(df[col1], df[col2], bits)
