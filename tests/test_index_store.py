@@ -1,14 +1,15 @@
 """The index store under the persisted MinHash and trigram indexes.
 
-``sources.index_store`` owns the stamp, the staged append and the
-compaction of both indexes. These tests pin the Spark job count of each
-store operation on an index-ingest-shaped corpus and check the store's
-contract once per index: the stamp merge rule, the migration's refusal
-to overwrite a stamp, and the two crash cases of a compaction pass.
+``sources.index_store`` is the only writer of both indexes: the build,
+the append and the compaction, one staged swap under the last two, and
+the stamp. These tests pin the Spark job count of each store operation
+on an index-ingest-shaped corpus and check the store's contract once
+per index: the stamp merge rule, a torn rebuild that leaves no stamp,
+a rebuild over an interrupted swap, and the two crash cases of a
+compaction pass.
 """
 
 import glob
-import json
 import os
 import uuid
 from typing import Callable, NamedTuple
@@ -20,13 +21,11 @@ from udacity_data_engineering_capstone_project_spark.operators.dedup import (
     append_minhash_index,
     compact_minhash_index,
     minhash_probe_indexed,
-    stamp_minhash_params,
     write_minhash_index,
 )
 from udacity_data_engineering_capstone_project_spark.operators.retrieval import (
     append_trigram_index,
     compact_trigram_index,
-    stamp_trigram_params,
     trigram_match_indexed,
     write_trigram_index,
 )
@@ -45,7 +44,6 @@ class Store(NamedTuple):
     build: Callable
     append: Callable
     compact: Callable
-    migrate: Callable
     serve: Callable  # (spark, path, corpus docs, probe batch) -> answer set
 
 
@@ -70,7 +68,6 @@ STORES = {
         build=write_trigram_index,
         append=lambda docs, path, **kw: append_trigram_index(docs, path, **kw),
         compact=lambda spark, path, **kw: compact_trigram_index(spark, path, **kw),
-        migrate=stamp_trigram_params,
         serve=_tri_serve,
     ),
     "minhash": Store(
@@ -81,7 +78,6 @@ STORES = {
             docs, path, **kw, **MH_DIALS
         ),
         compact=lambda spark, path, **kw: compact_minhash_index(spark, path, **kw),
-        migrate=lambda path: stamp_minhash_params(path, **MH_DIALS),
         serve=_mh_serve,
     ),
 }
@@ -220,9 +216,8 @@ def test_table_read_lists_only_existing_dirs_at_zero_jobs(spark, tmp_path):
 
 @pytest.mark.parametrize("kind", ["trigram", "minhash"])
 def test_stamp_merge_rule(spark, tmp_path, kind):
-    """A build sets the stamped stats, an ``append_*_index`` sums them,
-    and a stamp without stats stays without. The dials are stamped
-    unchanged throughout."""
+    """A build sets the stamped stats and an ``append_*_index`` sums
+    them. The dials are stamped unchanged throughout."""
     store = STORES[kind]
     parts = [_texts(range(i * 20, i * 20 + 12), i) for i in range(3)]
     a, b, c = (_docs(spark, p) for p in parts)
@@ -243,36 +238,56 @@ def test_stamp_merge_rule(spark, tmp_path, kind):
     for k in store.stats:
         assert got[k] == alone["b"][k] + alone["c"][k], k
 
-    index_store.write_stamp(path, dials)
-    store.append(_docs(spark, _texts(range(90, 95), 9)), path, auto_compact_threshold=None)
-    assert index_store.read_stamp(path) == dials
+
+@pytest.mark.parametrize("kind", ["trigram", "minhash"])
+def test_torn_rebuild_leaves_no_stamp(spark, tmp_path, monkeypatch, kind):
+    """A rebuild that dies before its first table write leaves no stamp,
+    so the serve or probe refuses the index instead of trusting the old
+    build's stamp over whatever the rebuild left behind."""
+    store = STORES[kind]
+    path = str(tmp_path / "idx")
+    texts = _texts(range(40), 0)
+    docs = _docs(spark, texts)
+    store.build(docs, path)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("simulated crash before the first table write")
+
+    monkeypatch.setattr(index_store.Table, "write", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        store.build(docs, path)
+    monkeypatch.undo()
+    with pytest.raises(FileNotFoundError, match=index_store.PARAMS_FILE):
+        store.serve(spark, path, docs, _probe_batch(spark, texts))
 
 
 @pytest.mark.parametrize("kind", ["trigram", "minhash"])
-def test_stamp_params_refuses_to_overwrite(spark, tmp_path, kind):
-    """``stamp_*_params`` migrates an unstamped index (dials only, no
-    stats) and refuses to overwrite an existing stamp or to stamp a dir
-    that is no index layout."""
+def test_rebuild_drops_interrupted_swap(spark, tmp_path, monkeypatch, kind):
+    """A rebuild over an index whose append crashed after its manifest
+    commit drops that manifest, so the next serve's heal does not move
+    the old batch into the new tables: the rebuilt index holds no
+    ``app-`` file and answers as a fresh build."""
     store = STORES[kind]
-    path = str(tmp_path / "idx")
-    store.build(_docs(spark, _texts(range(12), 0)), path)
-    stamp = os.path.join(path, index_store.PARAMS_FILE)
-    with open(stamp, "rb") as fh:
-        before = fh.read()
-    with pytest.raises(FileExistsError, match="already has"):
-        store.migrate(path)
-    with open(stamp, "rb") as fh:
-        assert fh.read() == before
+    path, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
+    texts = _texts(range(40), 0)
+    docs, batch = _docs(spark, texts), _probe_batch(spark, texts)
+    store.build(docs, path)
 
-    os.remove(stamp)
-    store.migrate(path)
-    want = {k: v for k, v in json.loads(before).items() if k not in store.stats}
-    assert index_store.read_stamp(path) == want
+    def crash(*args, **kwargs):
+        raise RuntimeError("simulated crash after the manifest commit")
 
-    empty = tmp_path / "not_an_index"
-    empty.mkdir()
-    with pytest.raises(FileNotFoundError, match="not a"):
-        store.migrate(str(empty))
+    monkeypatch.setattr(index_store, "_commit_manifest_swap", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        store.append(batch, path, auto_compact_threshold=None)
+    monkeypatch.undo()
+    assert glob.glob(os.path.join(path, "_pending_append_*.json"))
+
+    store.build(docs, path)
+    store.build(docs, fresh)
+    assert store.serve(spark, path, docs, batch) == store.serve(spark, fresh, docs, batch)
+    assert not [f for files in _all_dirs(store, path).values() for f in files if f.startswith("app-")]
+    assert not glob.glob(os.path.join(path, "_pending_append_*"))
+    assert not glob.glob(os.path.join(path, "_append_*"))
 
 
 def _appended(spark, store, path):

@@ -1,12 +1,10 @@
-"""Distributed second moments / PCA (operators/linalg.py)."""
+"""Distributed second moments, Gram matrix and power iteration (operators/linalg.py)."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from udacity_data_engineering_capstone_project_spark.operators.linalg import (
-    covariance_matrix,
     embedding_moments,
-    pca_project,
 )
 
 
@@ -36,33 +34,6 @@ def test_moments_partition_invariant(spark, sf_dir):
     a = embedding_moments(emb.repartition(1)).orderBy("i", "j").collect()
     b = embedding_moments(emb.repartition(7)).orderBy("i", "j").collect()
     assert a == b
-
-
-def test_covariance_matrix_matches_numpy(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _, _, q = _numpy_quantized(spark, sf_dir)
-    got = covariance_matrix(emb)
-    want = np.cov(q.T, bias=True) / 1e10
-    assert np.abs(got - want).max() < 1e-12
-
-
-def test_pca_projection_matches_numpy(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    ids, v, q = _numpy_quantized(spark, sf_dir)
-    cov = np.cov(q.T, bias=True) / 1e10
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1]
-    p = pca_project(emb, n_components=2).toPandas().set_index("vec_id")
-    mean = q.mean(axis=0) / 1e5
-    for ci, k in enumerate(order[:2], start=1):
-        vk = vecs[:, k]
-        if abs(vk.min()) > abs(vk.max()):
-            vk = -vk
-        want = (v - mean) @ vk
-        got = p.loc[ids, f"pc{ci}"].to_numpy()
-        assert np.abs(want - got).max() < 1e-9
-    # top component explains more variance than the second
-    assert p["pc1"].var() > p["pc2"].var()
 
 
 def test_moments_single_python_stage(spark, sf_dir):

@@ -14,8 +14,6 @@ PACKAGE = ROOT / "udacity_data_engineering_capstone_project_spark"
 ALLOWED = {
     "build_star_query": "reference J4 (ipynb cell 82 in SURVEY.md): the star join as one query",
     "curate_corpus": "the north star's composition test: every curation stage in one session",
-    "stamp_minhash_params": "the recovery path the unstamped-index error in index_store names",
-    "stamp_trigram_params": "the recovery path the unstamped-index error in index_store names",
 }
 
 #: Reached from tests only and still to be deleted, each with the tests
@@ -26,8 +24,6 @@ PENDING = {
     "decode_image",
     "_fake_decode_pixels",
     "frame_sample",
-    "covariance_matrix",
-    "pca_project",
 }
 
 #: The one module allowed to swap files crash-safely.

@@ -89,6 +89,35 @@ def test_closing_one_scope_leaves_another_plans_broadcasts(spark, sf_dir):
         b.collect()
 
 
+def test_append_leaves_a_probes_cache_of_the_same_batch(spark, tmp_path):
+    """A MinHash probe and then an append of the same batch share one
+    cached digest-set plan: the append reads it but leaves it to the
+    probe's scope, so every frame the probe cached stays cached."""
+    from udacity_data_engineering_capstone_project_spark.operators.dedup import (
+        append_minhash_index,
+        minhash_probe_indexed,
+        write_minhash_index,
+    )
+    from udacity_data_engineering_capstone_project_spark.session import resource_scope
+
+    def docs(ids):
+        return from_records(
+            spark,
+            [(i, f"doc {i} on topic {i % 3} with shared words {i * 7}") for i in ids],
+            "doc_id long, text string",
+        )
+
+    dials = {"n_band_parts": 4, "n_doc_parts": 2}
+    path = str(tmp_path / "mh")
+    write_minhash_index(docs(range(20)), path, **dials)
+    batch = docs(range(100, 105))
+    with resource_scope():
+        minhash_probe_indexed(spark, path, batch, **dials)
+        probed = _held_rdds(spark)
+        append_minhash_index(batch, path, auto_compact_threshold=None, **dials)
+        assert probed <= _held_rdds(spark)
+
+
 def _checkpointing_plans(spark, sf_dir):
     """Builders of three plans that localCheckpoint while they build."""
     fns = query_fns()

@@ -315,8 +315,7 @@ def test_trigram_append_heal_replays_torn_swap(spark, tmp_path):
 def test_trigram_index_params_validated(spark, tmp_path):
     """Serve/append against a layout whose stamp mismatches (or is
     missing) must raise — a probe under a different normalization
-    silently misses matches. stamp_trigram_params migrates pre-stamp
-    layouts and refuses to overwrite an existing stamp."""
+    silently misses matches."""
     import json
     import os
 
@@ -324,7 +323,6 @@ def test_trigram_index_params_validated(spark, tmp_path):
 
     from udacity_data_engineering_capstone_project_spark.operators.retrieval import (
         append_trigram_index,
-        stamp_trigram_params,
         trigram_match_indexed,
         write_trigram_index,
     )
@@ -333,9 +331,6 @@ def test_trigram_index_params_validated(spark, tmp_path):
     path = str(tmp_path / "tri_params")
     write_trigram_index(docs, path)
     stamp = os.path.join(path, "_index_params.json")
-
-    with pytest.raises(FileExistsError, match="already has"):
-        stamp_trigram_params(path)
 
     with open(stamp) as fh:
         params = json.load(fh)
@@ -350,9 +345,6 @@ def test_trigram_index_params_validated(spark, tmp_path):
     os.remove(stamp)
     with pytest.raises(FileNotFoundError, match="_index_params.json"):
         trigram_match_indexed(spark, path, docs, pats)
-    stamp_trigram_params(path)  # the documented migration
-    got = _tri_matches(spark, path, docs, pats)
-    assert len(got) > 0
 
 
 def test_trigram_compact_preserves_answers_and_drops_files(spark, tmp_path):

@@ -5,20 +5,23 @@ on DuckDB at the given scale factor, then compares row count, column
 names, and an order-insensitive value hash (columns sorted by name,
 rows sorted by their string form). Exit code 1 if anything mismatches.
 
-Usage: python tools/oracle_check.py [sf_dir] [query ...]
+Usage: python tools/oracle_check.py SF_DIR [NAME ...]
+       python tools/oracle_check.py SF_DIR --only NAME ...
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -55,11 +58,18 @@ def value_hash(df: pd.DataFrame) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    import os
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Compare every query on Spark with its DuckDB oracle."
+    )
+    ap.add_argument("sf_dir", help="directory holding the <table>.parquet files")
+    ap.add_argument("names", nargs="*", metavar="NAME", help="queries to check (default: all)")
+    ap.add_argument("--only", nargs="+", default=[], metavar="NAME", help="same as NAME ...")
+    args = ap.parse_args(argv)
+    if not os.path.isdir(args.sf_dir):
+        ap.error(f"no data directory {args.sf_dir!r}")
+    sf_dir = args.sf_dir
+    only = set(args.names) | set(args.only)
 
     import __spark_entry__ as entry_mod
     from udacity_data_engineering_capstone_project_spark.session import get_spark

@@ -44,7 +44,7 @@ from ..functions.hashing import (
 from ..functions.textnorm import tokens_col
 from ..session import hold, resource_scope
 from ..session import observed_metrics as _observed_totals
-from ..sources.index_store import IndexStore, Table, read_stamp, write_stamp
+from ..sources.index_store import IndexStore, Table
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1021,14 +1021,18 @@ def write_minhash_index(
     with different dials than the build would otherwise silently
     return wrong or empty pairs (wrong bp/dp pruning, different band
     keys): a silent-miss trap on a dedup/compliance-adjacent path
-    (ADVICE r7).
+    (ADVICE r7). The store's build drops the old stamp before its first
+    write, so a rebuild torn midway is refused, not served under the
+    old dials.
     """
-    stats = _write_minhash_tables(
-        docs, path, id_col, text_col, n, n_hashes, bands, n_band_parts,
-        n_doc_parts,
+    MINHASH_STORE.build(
+        path,
+        _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
+        lambda root: _write_minhash_tables(
+            docs, root, id_col, text_col, n, n_hashes, bands, n_band_parts,
+            n_doc_parts,
+        ),
     )
-    dials = _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts)
-    write_stamp(path, {**dials, **stats})
 
 
 #: the MinHash index's tables: postings by band-key bucket, digest sets
@@ -1063,10 +1067,11 @@ def _write_minhash_tables(
     band_keys = _minhash_band_keys_udf(n_hashes, bands)
     postings, doc_sets = MINHASH_STORE.tables
     with resource_scope():
-        sets = hold(
-            shingle_sets(docs, id_col, text_col, n)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        sets = shingle_sets(docs, id_col, text_col, n)
+        # a cache of the same plan (a probe of this batch) is read, and
+        # left to the scope that took it
+        if sets.storageLevel == StorageLevel.NONE:
+            sets = hold(sets.persist(StorageLevel.MEMORY_AND_DISK))
         # At 100 TB the repartition counts become
         # max(n_parts, data_bytes / target_file_bytes).
         bp = F.pmod(F.col("band_key"), F.lit(n_band_parts)).cast("int")
@@ -1083,27 +1088,6 @@ def _write_minhash_tables(
         # it also tells an append whether it was empty.
         st = sets.select(*_set_totals()).first()
     return {"sets_n_docs": int(st["n"]), "sets_tot_digests": int(st["tot"])}
-
-
-def stamp_minhash_params(
-    path: str,
-    n: int = 3,
-    n_hashes: int = 64,
-    bands: int = 16,
-    n_band_parts: int = 64,
-    n_doc_parts: int = 32,
-) -> None:
-    """One-time migration for an index built BEFORE the dials were
-    persisted (pre-``_index_params.json``): explicitly stamp the dials
-    the index was built with, so probes/appends validate against them
-    instead of raising FileNotFoundError and forcing a full rebuild
-    (ADVICE r8). Refuses to overwrite an existing stamp — a mismatch
-    there is a real error, not a migration. The caller owns the claim
-    that these ARE the build dials; a wrong stamp reintroduces exactly
-    the silent-miss the validation exists to prevent."""
-    MINHASH_STORE.migrate(
-        path, _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts)
-    )
 
 
 def append_minhash_index(
@@ -1143,7 +1127,7 @@ def append_minhash_index(
 
     Returns {"postings_files", "sets_files", "auto_compacted"}.
     """
-    (n_post, n_sets), auto_compacted = MINHASH_STORE.append(
+    (n_post, n_sets), crossing = MINHASH_STORE.append(
         path,
         _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
         lambda root: _write_minhash_tables(
@@ -1152,15 +1136,16 @@ def append_minhash_index(
         ),
         # a batch whose texts all shingle to nothing is a true no-op
         lambda stats: stats["sets_n_docs"] > 0,
-        lambda dirs: compact_minhash_index(
-            docs.sparkSession, path, small_file_threshold=1, only_dirs=dirs
-        ),
         auto_compact_threshold,
     )
+    if crossing:
+        compact_minhash_index(
+            docs.sparkSession, path, small_file_threshold=1, only_dirs=crossing
+        )
     return {
         "postings_files": n_post,
         "sets_files": n_sets,
-        "auto_compacted": auto_compacted,
+        "auto_compacted": bool(crossing),
     }
 
 
@@ -1245,30 +1230,30 @@ def minhash_probe_indexed(
     not accumulate until executor memory or disk pressure degrades
     steady-state serving.
     """
-    MINHASH_STORE.open(
+    stamped = MINHASH_STORE.open(
         index_path,
         _minhash_dials(n, n_hashes, bands, n_band_parts, n_doc_parts),
         "minhash_probe_indexed",
     )
-    from pyspark.sql import Observation
-
     band_keys_udf = _minhash_band_keys_udf(n_hashes, bands)
-    # observe node (r13): the batch digest totals the byte gate needs
-    # ride the cache-fill job as accumulator metrics — no extra scan
-    obs_bat = Observation("bat_sets_totals")
     bat_sets = hold(
         shingle_sets(batch_df, id_col, text_col, n)
-        .observe(obs_bat, *_set_totals())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     bat_keys = hold(bat_sets.select(
-        "doc", F.explode(band_keys_udf("hs")).alias("band_key")
+        "doc",
+        F.size("hs").alias("n_hs"),
+        F.explode(band_keys_udf("hs")).alias("band_key"),
     ).persist(StorageLevel.MEMORY_AND_DISK))
     # collect WITHOUT the distinct(): the batch is |batch| x bands
-    # long rows (driver-bounded by the same contract that collects the
-    # keys at all); deduping 8-byte longs in Python is free while the
-    # distinct() added an exchange + a second stage to this job
-    keys = sorted({r.band_key for r in bat_keys.select("band_key").collect()})
+    # rows (driver-bounded by the same contract that collects the keys
+    # at all); deduping 8-byte longs in Python is free while the
+    # distinct() added an exchange + a second stage to this job. Every
+    # batch doc has a non-empty set and so ``bands`` rows here, so the
+    # same rows give the batch's digest totals
+    rows = bat_keys.collect()
+    keys = sorted({r.band_key for r in rows})
+    n_hs = {r.doc: r.n_hs for r in rows}
     parts = sorted({k % n_band_parts for k in keys})
 
     # the read opens only the probed dirs; the partition filter keeps
@@ -1293,8 +1278,7 @@ def minhash_probe_indexed(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # ONE driver action fills the candidates cache AND returns the
-    # candidate count plus the candidate dp partition list; the batch
-    # side's digest totals arrive as observed metrics of the same job
+    # candidate count plus the candidate dp partition list
     stats = candidates.agg(
         F.count("*").alias("n_cand"),
         F.collect_set(
@@ -1303,19 +1287,12 @@ def minhash_probe_indexed(
     ).first()
     n_cand = int(stats["n_cand"])
     dps = sorted(stats["dps"])
-    bat_tot = _observed_totals(obs_bat)
-    # the byte gate's bound: the build stamps whole-index digest totals,
-    # and with the batch's totals they bound any sliver from above, so
-    # a fitting bound skips the sliver-size job (~0.7 s per serve at
-    # sf0.1); a stamp without totals leaves the gate to measure
-    stamped = read_stamp(index_path) or {}
-    bytes_ub = (
-        _set_bytes(
-            stamped["sets_n_docs"] + bat_tot["n"],
-            stamped["sets_tot_digests"] + bat_tot["tot"],
-        )
-        if bat_tot is not None and {"sets_n_docs", "sets_tot_digests"} <= stamped.keys()
-        else None
+    # the byte gate's bound: the stamp's whole-index digest totals and
+    # the batch's bound any sliver from above, so a fitting bound skips
+    # the sliver-size job (~0.7 s per serve at sf0.1)
+    bytes_ub = _set_bytes(
+        stamped["sets_n_docs"] + len(n_hs),
+        stamped["sets_tot_digests"] + sum(n_hs.values()),
     )
     # verification sets: only the dp directories holding candidate
     # index docs are read (<= n_doc_parts dirs), then the

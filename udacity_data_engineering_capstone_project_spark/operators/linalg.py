@@ -122,20 +122,6 @@ def embedding_moments(
     )
 
 
-def covariance_matrix(
-    df: DataFrame, vec_col: str = "embedding", dim: int = 64, scale: int = 100_000
-) -> np.ndarray:
-    """Materialize :func:`embedding_moments` as a dense (dim, dim)
-    numpy covariance matrix. Driver state is d^2 doubles — bounded,
-    independent of row count."""
-    rows = embedding_moments(df, vec_col, dim, scale).collect()
-    cov = np.zeros((dim, dim))
-    for r in rows:
-        cov[r.i, r.j] = r.cov
-        cov[r.j, r.i] = r.cov
-    return cov
-
-
 def gram_matrix_int(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -188,10 +174,11 @@ def power_iteration_dominant(
 ) -> list[int]:
     """Dominant principal direction (top right-singular vector of the
     uncentered data matrix) by ALL-INTEGER power iteration over the
-    exact Gram matrix — the oracle-replayable twin of
-    :func:`pca_project`'s ``numpy.linalg.eigh`` (an eigendecomposition
-    cannot be replayed relationally; a fixed-count integer iteration
-    can, the pagerank_fixedpoint / Lloyd-replay recipe).
+    exact Gram matrix — the oracle-replayable form of a PCA's top
+    component, which ``numpy.linalg.eigh`` would give on the driver (an
+    eigendecomposition cannot be replayed relationally; a fixed-count
+    integer iteration can, the pagerank_fixedpoint / Lloyd-replay
+    recipe).
 
     The data-sized work is ONE distributed pass
     (:func:`gram_matrix_int`); the driver then holds d^2 longs —
@@ -229,58 +216,3 @@ def power_iteration_dominant(
         d0 = max(abs(x) for x in w) // v_scale + 1
         v = [trunc_div(x, d0) for x in w]
     return v
-
-
-def pca_project(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_components: int = 2,
-    scale: int = 100_000,
-) -> DataFrame:
-    """Distributed PCA projection: covariance via one distributed pass
-    (:func:`covariance_matrix`), eigendecomposition of the tiny d x d
-    matrix on the driver (`numpy.linalg.eigh` — d^2 state, never data-
-    sized), then a fully distributed projection of every row onto the
-    top ``n_components`` eigenvectors using JVM-side array HOFs (no
-    second Python stage).
-
-    Eigenvector sign is normalized (largest-magnitude component made
-    positive) so the output is deterministic. Means are subtracted via
-    broadcast literals. Returns (id, pc1 .. pcK) doubles.
-    """
-    rows = embedding_moments(df, vec_col, dim, scale).collect()
-    n = rows[0].n
-    mean = np.zeros(dim)
-    cov = np.zeros((dim, dim))
-    for r in rows:
-        cov[r.i, r.j] = r.cov
-        cov[r.j, r.i] = r.cov
-        mean[r.i] = r.sx / (n * scale)
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:n_components]
-    comps = []
-    for k in order:
-        v = vecs[:, k]
-        if abs(v.min()) > abs(v.max()):
-            v = -v
-        comps.append(v)
-    cols = [F.col(id_col)]
-    centered = F.zip_with(
-        F.col(vec_col).cast("array<double>"),
-        F.array(*[F.lit(float(m)) for m in mean]),
-        lambda a, b: a - b,
-    )
-    for ci, v in enumerate(comps, start=1):
-        proj = F.aggregate(
-            F.zip_with(
-                centered,
-                F.array(*[F.lit(float(x)) for x in v]),
-                lambda a, b: a * b,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        cols.append(proj.alias(f"pc{ci}"))
-    return df.select(*cols)

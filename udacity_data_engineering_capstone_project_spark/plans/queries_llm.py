@@ -55,7 +55,7 @@ from ..operators.textops import (
     winnow_fingerprints,
 )
 from ..operators.windows import sessionize
-from ..session import hold
+from ..session import hold, observed_metrics
 from ..sources.readers import from_records
 from .queries_parity import EVENTS_US, _t
 
@@ -4716,10 +4716,10 @@ def embedding_covariance(spark, sf_dir):
     quantized to fixed-point, each Arrow batch reduces to a single
     (n, sum[d], outer[d^2]) partial via numpy ``Q.T @ Q``, and the
     merge shuffles O(#batches * d^2) tiny rows — never O(rows). The
-    upper-triangle output (i, j, n, sx, sy, sxy, cov) feeds PCA
-    (operators.linalg.pca_project, pytest-pinned against numpy);
-    integer sums make the result independent of partitioning and
-    engine, so the oracle hash-matches bit-for-bit."""
+    output is the upper triangle (i, j, n, sx, sy, sxy, cov), pinned
+    against numpy in tests/test_linalg.py; integer sums make the
+    result independent of partitioning and engine, so the oracle
+    hash-matches bit-for-bit."""
     from ..operators.linalg import embedding_moments
 
     return embedding_moments(
@@ -6527,7 +6527,13 @@ def pipeline_observed_metrics(spark, sf_dir):
         .agg(F.count("*").alias("n"))
     )
     rows = work.collect()  # bounded: |returnflag| groups; triggers the pass
-    m = obs.get
+    # the bounded read: ``obs.get`` can block forever in PySpark 4.1
+    m = observed_metrics(obs)
+    if m is None:
+        raise RuntimeError(
+            "pipeline_observed_metrics: the scan's observed metrics did not "
+            "arrive after the action that ran it"
+        )
     return from_records(
         spark,
         [
@@ -6911,7 +6917,7 @@ def embedding_top_pc_power(spark, sf_dir):
     """Dominant principal direction of the embedding table by
     ALL-INTEGER power iteration (operators/linalg.power_iteration_
     dominant) — the corpus-geometry summary (dominant topic/style
-    axis) that pca_project computes with numpy.linalg.eigh, here in a
+    axis) that a PCA computes with numpy.linalg.eigh, here in a
     form a relational engine can replay EXACTLY: quantize to int
     (floor(x*1000 + 0.5)), one distributed pass builds the exact int64
     Gram matrix (the only data-sized work — d^2-key sum, mergeable

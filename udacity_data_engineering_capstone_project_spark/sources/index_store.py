@@ -8,23 +8,29 @@ agree with (a probe under other dials silently misses matches) and,
 for the MinHash index, whole-index totals the probe's byte gate trusts
 as an upper bound. Each index module describes its tables as
 :class:`Table` rows, derives its postings, and hands both to an
-:class:`IndexStore`, which owns everything below.
+:class:`IndexStore`, the only code that writes an index: one path per
+operation, :meth:`IndexStore.build`, :meth:`IndexStore.append` and
+:meth:`IndexStore.compact`.
 
 Stamp
 -----
 The stamp is written durably (temp write + fsync + ``os.replace``, so
-a torn write never leaves a parseable-but-wrong file). A build
-overwrites the index and sets the stats; an append (the one append
-path, :meth:`IndexStore.append`) sums them onto the stamp, and a stamp
-without stats stays without (an index migrated from before the stats
-existed: summing onto an unknown base would undercount). An append
-writes its summed stats BEFORE its commit, so a crash in between
-overcounts (conservative: the probe then at worst measures its sliver
-itself), never undercounts.
+a torn write never leaves a parseable-but-wrong file), and only by a
+build or an append, so every stamp carries its kind's stats. A build
+removes the old stamp before its first table write and stamps the
+dials and the stats after its last, so a torn rebuild leaves an
+unstamped index that every probe and append refuses, never an old
+stamp over new tables. It also drops the manifest and staging dir of
+any interrupted swap before that write, so no heal replays an old
+batch into the new tables. An append sums its batch's stats onto the
+stamp BEFORE its commit, so a crash in between overcounts
+(conservative: the probe then at worst measures its sliver itself),
+never undercounts.
 
 Staged swap, heal order
 -----------------------
-An append or a compaction pass writes into a Spark-invisible
+An append and a compaction pass go through one staged swap
+(:func:`_staged_swap`). It writes into a Spark-invisible
 ``_append_<tag>`` staging dir whose ``.inprogress`` marker is written
 before any staging write. It then records every move (and, for a
 compaction, every replaced small file) in ONE fsync'd, atomically
@@ -41,21 +47,22 @@ never referenced.
 
 Concurrency: one writer, many probes
 ------------------------------------
-ONE writer (append or compaction) at a time per index; probes may run
-beside it. A probe's heal may replay the manifest the writer just
-committed, so every executor of a manifest tolerates finding a step
-already done (a moved source, a deleted file, a removed manifest) and
-all of them converge on the same layout. The heal loop's garbage
-collection of staging dirs respects a live writer: a dir is an orphan
-only if it has no marker (a crash before the marker) or if every file
-under it has been silent for :data:`_APPEND_GC_GRACE_S`. Liveness is
-the NEWEST mtime under the dir, not the marker's: a staging write that
-outlives the grace window keeps producing part files, and judging by
-the marker alone would sweep it mid-write. Two writers racing one
-index are outside the contract, as for any single-writer table format
-without a lock service. Compaction DELETES the files it replaced, so a
-probe that planned its scan before the swap can see a vanished file;
-appends alone are purely additive. An ingest loop that enables
+ONE writer (build, append or compaction) at a time per index; probes
+may run beside an append or a compaction. A probe's heal may replay
+the manifest the writer just committed, so every executor of a
+manifest tolerates finding a step already done (a moved source, a
+deleted file, a removed manifest) and all of them converge on the same
+layout. The heal loop's garbage collection of staging dirs respects a
+live writer: a dir is an orphan only if it has no marker (a crash
+before the marker) or if every file under it has been silent for
+:data:`_APPEND_GC_GRACE_S`. Liveness is the NEWEST mtime under the
+dir, not the marker's: a staging write that outlives the grace window
+keeps producing part files, and judging by the marker alone would
+sweep it mid-write. Two writers racing one index are outside the
+contract, as for any single-writer table format without a lock
+service. Compaction DELETES the files it replaced, so a probe that
+planned its scan before the swap can see a vanished file; appends
+alone are purely additive. An ingest loop that enables
 auto-compaction accepts that window, the same one any manual
 compaction opens; probes re-plan on their next call.
 """
@@ -103,14 +110,6 @@ def write_stamp(path: str, params: dict) -> None:
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(dst + ".tmp", dst)
-
-
-def _merged_stats(prev: dict, stats: dict) -> dict:
-    """The stamped stats after appending a batch with ``stats`` onto the
-    ``prev`` stamp."""
-    if any(k not in prev for k in stats):
-        return {}
-    return {k: int(prev[k]) + v for k, v in stats.items()}
 
 
 class Table(NamedTuple):
@@ -180,23 +179,22 @@ class Table(NamedTuple):
 
 
 class IndexStore(NamedTuple):
-    """The store of one index kind: its name (``write_<name>_index``,
-    ``stamp_<name>_params``) and its tables."""
+    """The store of one index kind: its name (``write_<name>_index``)
+    and its tables."""
 
     name: str
     tables: tuple[Table, ...]
 
-    def check(self, path: str, dials: dict, caller: str) -> None:
-        """Check ``dials`` against the stamp; raise on a mismatch or a
-        missing stamp instead of letting ``caller`` silently miss
-        matches."""
+    def check(self, path: str, dials: dict, caller: str) -> dict:
+        """Check ``dials`` against the stamp and return the stamp; raise
+        on a mismatch or a missing stamp instead of letting ``caller``
+        silently miss matches."""
         built = read_stamp(path)
         if built is None:
             raise FileNotFoundError(
                 f"{caller}: no {PARAMS_FILE} under {path} — not a "
-                f"write_{self.name}_index layout, or built before the dials "
-                "were persisted; if you know the build dials, migrate with "
-                f"stamp_{self.name}_params(path, ...) instead of rebuilding"
+                f"write_{self.name}_index layout, or a build that did not "
+                "finish; rebuild the index"
             )
         mismatched = {
             k: (built.get(k), v) for k, v in dials.items() if built.get(k) != v
@@ -208,30 +206,29 @@ class IndexStore(NamedTuple):
                 "with mismatched dials silently misses matches; pass the "
                 "build's dials or rebuild the index"
             )
+        return built
 
-    def open(self, path: str, dials: dict, caller: str) -> None:
+    def open(self, path: str, dials: dict, caller: str) -> dict:
         """Check the stamp, then heal any interrupted swap: what every
-        probe, serve and append does before it reads the index."""
-        self.check(path, dials, caller)
+        probe, serve and append does before it reads the index. Returns
+        the stamp."""
+        built = self.check(path, dials, caller)
         _heal_pending_appends(path)
+        return built
 
-    def migrate(self, path: str, dials: dict) -> None:
-        """Stamp an index built before the stamp existed. Refuses to
-        overwrite a stamp: a mismatch there is a real error."""
-        caller = f"stamp_{self.name}_params"
-        if os.path.exists(os.path.join(path, PARAMS_FILE)):
-            raise FileExistsError(
-                f"{caller}: {path} already has {PARAMS_FILE}; this helper "
-                "only migrates pre-stamp indexes (delete the file first if "
-                "you really mean to re-stamp)"
-            )
-        first = self.tables[0]
-        if not glob.glob(os.path.join(first.dir(path), f"{first.part_col}=*")):
-            raise FileNotFoundError(
-                f"{caller}: {path} is not a {self.name} index layout (no "
-                f"{os.path.join(first.rel, first.part_col)}= partition dirs)"
-            )
-        write_stamp(path, dials)
+    def build(self, path: str, dials: dict, stage: Callable[[str], dict | None]) -> None:
+        """Write the index at ``path`` afresh: ``stage(path)`` writes
+        (overwrites) its tables and returns its stats (None: it has
+        none), stamped beside ``dials``. The old stamp, then any
+        manifest and staging dir of an interrupted swap, go before the
+        first table write (see the module docstring)."""
+        for pattern in (PARAMS_FILE, "_pending_append_*", "_append_*"):
+            for stale in glob.glob(os.path.join(path, pattern)):
+                if os.path.isdir(stale):
+                    shutil.rmtree(stale)
+                else:
+                    os.remove(stale)
+        write_stamp(path, {**dials, **(stage(path) or {})})
 
     def append(
         self,
@@ -239,63 +236,45 @@ class IndexStore(NamedTuple):
         dials: dict,
         stage: Callable[[str], dict | None],
         derived_any: Callable[[dict], bool],
-        compact: Callable[[list], object],
         auto_compact_threshold: int | None,
-    ) -> tuple[list[int], bool]:
+    ) -> tuple[list[int], list[str]]:
         """Fold a batch into the index by the staged swap.
         ``stage(root)`` writes the batch's tables under ``root`` and
         returns its stats (None: it has none); ``derived_any(stats)``
-        says whether the batch derived any rows at all; ``compact(dirs)``
-        compacts the dirs that reached ``auto_compact_threshold`` files
-        (None: never). Returns (files appended per table, whether it
-        compacted)."""
+        says whether the batch derived any rows at all. Returns (files
+        appended per table, the dirs the batch touched that now hold
+        ``auto_compact_threshold`` files or more, for the caller to
+        compact; none when the threshold is None)."""
         caller = f"append_{self.name}_index"
-        self.open(path, dials, caller)
-        tag, tmp = _open_staging(path)
-        staged = os.path.join(tmp, "staged")
-        stats = stage(staged) or {}
-        # destination names are fixed NOW (a replay lands the same files
-        # in the same places); the batch tag keeps batches from colliding
-        moves, counts = [], []
-        for t in self.tables:
-            srcs = sorted(
-                glob.glob(os.path.join(t.dir(staged), f"{t.part_col}=*", "part-*.parquet"))
-            )
-            counts.append(len(srcs))
-            for src in srcs:
-                part_dir = os.path.basename(os.path.dirname(src))
-                name = f"app-{tag}-{os.path.basename(src)}"
-                moves.append((src, os.path.join(t.dir(path), part_dir, name)))
-        if not os.path.exists(os.path.join(tmp, ".inprogress")):
-            raise RuntimeError(
-                f"{caller}: staging dir {tmp} was swept while this append "
-                "was writing — the batch was NOT appended; retry. "
-                "Maintenance contract is one writer per index."
-            )
-        if not moves:
-            # a batch that derives no rows (every text too short) is a
-            # true no-op; one that does but staged nothing was lost
-            if derived_any(stats):
-                raise RuntimeError(
-                    f"{caller}: batch with a non-empty derivation staged "
-                    f"zero files under {tmp} — refusing the success-shaped "
-                    "empty commit"
-                )
-            shutil.rmtree(tmp, ignore_errors=True)
-            return counts, False
-        prev = read_stamp(path)
-        params = {**prev, **dials, **_merged_stats(prev, stats)}
-        if params != prev:
-            write_stamp(path, params)
-        _commit_staging(path, tag, tmp, moves)
+        prev = self.open(path, dials, caller)
+
+        def stamp(stats, moves):
+            stats = stats or {}
+            if not moves:
+                # a batch that derives no rows (every text too short) is a
+                # true no-op; one that does but staged nothing was lost
+                if derived_any(stats):
+                    raise RuntimeError(
+                        f"{caller}: batch with a non-empty derivation staged "
+                        f"zero files under {path} — refusing the "
+                        "success-shaped empty commit"
+                    )
+                return None
+            if stats:
+                write_stamp(path, {**prev, **{k: prev[k] + v for k, v in stats.items()}})
+            return ()
+
+        moves = _staged_swap(path, self.tables, "app", stage, stamp)
+        counts = [len(ms) for ms in moves]
         if auto_compact_threshold is None:
-            return counts, False
-        # only the touched dirs that crossed the threshold: the trigger
-        # costs O(crossing dirs), never a whole-index rewrite
-        crossing = _crossing_dirs(moves, auto_compact_threshold)
-        if crossing:
-            compact(crossing)
-        return counts, bool(crossing)
+            return counts, []
+        # only the touched dirs that crossed the threshold: counting them
+        # costs O(batch dirs), and compacting them never rewrites the index
+        touched = sorted({os.path.dirname(dst) for ms in moves for _, dst in ms})
+        return counts, [
+            d for d in touched
+            if len(glob.glob(os.path.join(d, "*.parquet"))) >= auto_compact_threshold
+        ]
 
     def compact(self, spark, path: str, small_file_threshold: int, only_dirs) -> dict:
         """Heal, then one :func:`_compact_partition_dirs` pass per table.
@@ -369,16 +348,47 @@ def _commit_manifest_swap(manifest_path: str, moves, delete=()) -> None:
         pass
 
 
-def _open_staging(root: str) -> tuple[str, str]:
-    """Create a Spark-invisible ``_append_<tag>`` staging dir under the
-    index root, its ``.inprogress`` marker written BEFORE any staging
-    write. Returns (tag, staging dir)."""
+def _staged_swap(root: str, tables, prefix: str, stage, before_commit) -> list[list]:
+    """The one staged swap of an append and a compaction pass under the
+    index dir ``root``. Opens a marked staging dir; ``stage(staged)``
+    writes ``tables`` under ``staged``; each staged part file is named
+    for its destination, ``<prefix>-<tag>-<part>`` in the same dir of
+    the live table. A staging dir swept while it was written commits
+    nothing. ``before_commit(staged's result, moves)`` then returns the
+    files the swap replaces, or None to drop the staging and commit
+    nothing; otherwise one manifest commits the moves and deletions.
+    Returns the moves per table."""
     tag = uuid.uuid4().hex[:12]
     tmp = os.path.join(root, f"_append_{tag}")
     os.makedirs(tmp, exist_ok=True)
     with open(os.path.join(tmp, ".inprogress"), "w") as fh:
         fh.write(tag)
-    return tag, tmp
+    staged = os.path.join(tmp, "staged")
+    out = stage(staged)
+    # destination names are fixed NOW (a replay lands the same files in
+    # the same places); the tag keeps swaps from colliding
+    moves = [
+        [
+            (src, os.path.join(t.dir(root), os.path.basename(os.path.dirname(src)),
+                               f"{prefix}-{tag}-{os.path.basename(src)}"))
+            for src in sorted(
+                glob.glob(os.path.join(t.dir(staged), f"{t.part_col}=*", "part-*.parquet"))
+            )
+        ]
+        for t in tables
+    ]
+    if not os.path.exists(os.path.join(tmp, ".inprogress")):
+        raise RuntimeError(
+            f"staging dir {tmp} was swept while it was written: nothing "
+            "committed, retry (one writer per index)"
+        )
+    landed = [m for ms in moves for m in ms]
+    delete = before_commit(out, landed)
+    if delete is None:
+        shutil.rmtree(tmp, ignore_errors=True)
+    else:
+        _commit_staging(root, tag, tmp, landed, delete)
+    return moves
 
 
 def _commit_staging(root: str, tag: str, tmp: str, moves, delete=()) -> None:
@@ -395,39 +405,26 @@ def _commit_staging(root: str, tag: str, tmp: str, moves, delete=()) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _crossing_dirs(moves, threshold: int) -> list[str]:
-    """The dirs an append's moves landed in that now hold >=
-    ``threshold`` files: O(batch dirs) to count, never O(index)."""
-    touched = {os.path.dirname(dst) for _, dst in moves}
-    return [
-        d
-        for d in sorted(touched)
-        if len(glob.glob(os.path.join(d, "*.parquet"))) >= int(threshold)
-    ]
-
-
 def _compact_partition_dirs(
     spark, root: str, t: Table, small_file_threshold, only_dirs
 ) -> dict:
     """Rewrite every dir of the index table ``t`` (under the index dir
     ``root``) holding more than ``small_file_threshold`` files — only
     those in ``only_dirs`` when given — into ONE file sorted on
-    ``t.key``: one partitioned write and one manifest for the whole
-    pass, not a job per dir. The files are listed on the driver and the
-    selected dirs read at once through :meth:`Table.read`, which keeps
-    the partition column at its stored type. ``repartition(part_col)``
-    puts each dir in one task, so the write leaves one sorted file per
-    dir (under AQE the shuffle's map stage is a job of its own). All
-    moves and deletions commit under one manifest, so after a crash
-    every dir of the pass is fully old or fully new; unselected dirs are
-    never touched, and a pass with nothing to do runs no job.
+    ``t.key``: one :meth:`Table.write` of the selected dirs, read at
+    once through :meth:`Table.read` (which keeps the partition column
+    at its stored type), committed by one :func:`_staged_swap`, not a
+    job per dir. The write's repartition on the partition column puts
+    each dir in one task, so it leaves one sorted file per dir (under
+    AQE the shuffle's map stage is a job of its own). After a crash
+    every dir of the pass is fully old or fully new; unselected dirs
+    are never touched, and a pass with nothing to do runs no job.
 
     Returns {"dirs_compacted", "files_before", "files_after"}."""
-    table, part_col = t.dir(root), t.part_col
     only = None if only_dirs is None else {os.path.normpath(d) for d in only_dirs}
     picked = {}
     files_before = files_after = 0
-    for part_dir in sorted(glob.glob(os.path.join(table, f"{part_col}=*"))):
+    for part_dir in sorted(glob.glob(os.path.join(t.dir(root), f"{t.part_col}=*"))):
         if not os.path.isdir(part_dir):
             continue
         if only is not None and os.path.normpath(part_dir) not in only:
@@ -442,30 +439,21 @@ def _compact_partition_dirs(
     if not picked:
         return {**stats, "files_after": files_after}
 
-    old = [f for fs in picked.values() for f in fs]
-    tag, tmp = _open_staging(root)
-    (
-        t.read(spark, root, [d.split("=", 1)[1] for d in picked])
-        .repartition(part_col)
-        .sortWithinPartitions(part_col, t.key)
-        .write.partitionBy(part_col)
-        .mode("overwrite")
-        .parquet(os.path.join(tmp, "staged"))
+    def replaced(_out, moves):
+        for _src, dst in moves:
+            part_dir = os.path.basename(os.path.dirname(dst))
+            if part_dir not in picked:
+                raise RuntimeError(
+                    f"compaction of {t.dir(root)} staged {part_dir!r}, not a "
+                    "selected dir (partition values did not round-trip); "
+                    "nothing committed"
+                )
+        return [f for fs in picked.values() for f in fs]
+
+    values = [d.split("=", 1)[1] for d in picked]
+    (moves,) = _staged_swap(
+        root, (t,), "compact",
+        lambda staged: t.write(t.read(spark, root, values), staged),
+        replaced,
     )
-    moves = []
-    for src in sorted(glob.glob(os.path.join(tmp, "staged", "*", "part-*.parquet"))):
-        part_dir = os.path.basename(os.path.dirname(src))
-        if part_dir not in picked:
-            raise RuntimeError(
-                f"compaction of {table} staged {part_dir!r}, not a selected "
-                "dir (partition values did not round-trip); nothing committed"
-            )
-        name = f"compact-{tag}-{os.path.basename(src)}"
-        moves.append((src, os.path.join(table, part_dir, name)))
-    if not os.path.exists(os.path.join(tmp, ".inprogress")):
-        raise RuntimeError(
-            f"compaction of {table}: staging dir {tmp} was swept mid-write; "
-            "nothing committed, retry (one writer per index)"
-        )
-    _commit_staging(root, tag, tmp, moves, delete=old)
     return {**stats, "files_after": files_after + len(moves)}
