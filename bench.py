@@ -169,6 +169,29 @@ def _measure_canary() -> float:
     return min(timeit.timeit(lambda: _a @ _a, number=10) for _ in range(3))
 
 
+def _jvm_counters(spark) -> tuple[int, int]:
+    """The driver JVM's total loaded classes and total JIT compile ms."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return (
+        mf.getClassLoadingMXBean().getTotalLoadedClassCount(),
+        mf.getCompilationMXBean().getTotalCompilationTime(),
+    )
+
+
+def _jvm_archive(spark) -> str:
+    """Whether the driver JVM mapped a class-data-sharing archive,
+    recorded one, or ran without one, from its own argument list (see
+    ``session.get_spark``). A recording run starts slower and spends
+    more JIT time than a mapped one."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    for arg in mf.getRuntimeMXBean().getInputArguments():
+        if arg.startswith("-XX:SharedArchiveFile="):
+            return "mapped"
+        if arg.startswith("-XX:ArchiveClassesAtExit="):
+            return "recorded"
+    return "none"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # optional subset (comma-separated query names) for targeted
@@ -228,6 +251,7 @@ def main() -> None:
 
     spark = get_spark("bench")
     fns = query_fns()
+    jvm_start = _jvm_counters(spark)
 
     # JMH-style warm-up outside the timed region: one un-timed
     # iteration of every headline query at the target SF. First-run
@@ -334,6 +358,8 @@ def main() -> None:
             file=sys.stderr,
         )
 
+    jvm_end = _jvm_counters(spark)
+
     # End-of-run canary: steal that starts MID-RUN is invisible to the
     # pre-JVM reading (observed round 6: a canary-1.15 run carried a
     # multi-minute steal episode that tripled three adjacent queries;
@@ -411,6 +437,9 @@ def main() -> None:
                 "cpu_canary_end_s": round(canary_end, 3),
                 "cpu_canary_quiet_ref": CANARY_QUIET_REF,
                 "canary_warning": canary_warning,
+                "jvm_archive": _jvm_archive(spark),
+                "jvm_classes_loaded": [jvm_start[0], jvm_end[0]],
+                "jvm_jit_ms": [jvm_start[1], jvm_end[1]],
             },
             f,
             indent=1,

@@ -100,27 +100,6 @@ def test_stateful_user_totals_matches_batch(spark, sf_dir):
         assert abs(gtot - tot) <= 1  # incremental vs batch float sum order
 
 
-def test_foreach_batch_upsert_latest_per_user(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from udacity_data_engineering_capstone_project_spark.streaming.events import (
-        read_events_stream,
-        upsert_latest_per_user,
-    )
-
-    got = upsert_latest_per_user(
-        spark, read_events_stream(spark, sf_dir), str(tmp_path / "latest")
-    )
-    # batch twin: argmax (ts, event_id) per user
-    batch = read_table(spark, sf_dir, "events")
-    expect = batch.groupBy("user_id").agg(
-        F.expr("max_by(event_id, struct(ts, event_id))").alias("event_id")
-    )
-    g = {(r.user_id, r.event_id) for r in got.select("user_id", "event_id").collect()}
-    e = {(r.user_id, r.event_id) for r in expect.collect()}
-    assert g == e and len(g) > 0
-
-
 def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """Kill a running query mid-stream, restart from the checkpoint,
     and assert exactly-once sink output: the checkpointed source offset
@@ -218,34 +197,6 @@ def test_stateful_recovery_resumes_counts(spark, tmp_path):
         .collect()
     }
     assert final == {"a": 10, "b": 10}  # resumed, not reset
-
-
-def test_incremental_ingest_exactly_once(spark, tmp_path):
-    from udacity_data_engineering_capstone_project_spark.streaming.events import (
-        incremental_ingest,
-    )
-
-    src = str(tmp_path / "src")
-    dest = str(tmp_path / "dest")
-    ckpt = str(tmp_path / "ckpt")
-
-    spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string").write.mode(
-        "append"
-    ).parquet(src)
-    incremental_ingest(spark, src, dest, ckpt)
-    assert spark.read.parquet(dest).count() == 2
-
-    # re-run with no new files: exactly-once, nothing duplicated
-    incremental_ingest(spark, src, dest, ckpt)
-    assert spark.read.parquet(dest).count() == 2
-
-    # new file lands; only it is processed on the next run
-    spark.createDataFrame([(3, "c")], "id long, v string").write.mode(
-        "append"
-    ).parquet(src)
-    incremental_ingest(spark, src, dest, ckpt)
-    got = sorted(r.id for r in spark.read.parquet(dest).collect())
-    assert got == [1, 2, 3]
 
 
 def test_watermark_closure_oracles_have_no_boundary_sessions(spark, sf_dir):

@@ -3,9 +3,7 @@
 Vanilla parquet lacks MERGE INTO (Delta/Iceberg territory), but the
 relational core of an upsert — new rows win over old rows on a key,
 latest-wins within the new batch — is a pure DataFrame expression:
-tag-union + one ranked window per key. The streaming twin
-(streaming/events.upsert_latest_per_user) applies the same merge per
-micro-batch with generation-swapped storage.
+tag-union + one ranked window per key.
 """
 
 from __future__ import annotations

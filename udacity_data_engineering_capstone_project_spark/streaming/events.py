@@ -166,52 +166,6 @@ def stream_static_enrich(
     return events.join(broadcast(dim), on, "inner")
 
 
-def upsert_latest_per_user(
-    spark: SparkSession, events: DataFrame, target_dir: str
-) -> DataFrame:
-    """foreachBatch upsert sink: maintain a parquet table of each
-    user's latest event, merged micro-batch by micro-batch.
-
-    Vanilla parquet has no MERGE INTO (that's Delta/Iceberg territory),
-    and overwriting a path while reading it races — so each batch
-    writes a new generation directory ``gen=<k>`` (read gen k-1, merge,
-    write gen k; the swap is atomic at directory granularity and old
-    generations remain readable mid-write). Keys are totally ordered by
-    (ts, event_id) so the merge is deterministic under ties. State per
-    key is one row; table size is O(|users|), not O(events).
-
-    Returns the final generation as a DataFrame.
-    """
-    from pyspark.sql import Window
-
-    def latest(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        return df.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
-
-    state = {"gen": -1}
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch_latest = latest(batch_df)
-        if state["gen"] >= 0:
-            prev = spark.read.parquet(f"{target_dir}/gen={state['gen']}")
-            merged = latest(prev.unionByName(batch_latest))
-        else:
-            merged = batch_latest
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{target_dir}/gen={state['gen'] + 1}"
-        )
-        state["gen"] += 1
-
-    q = events.writeStream.foreachBatch(upsert).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(f"{target_dir}/gen={state['gen']}")
-
-
 def run_to_completion(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
     """Drive a streaming DataFrame over its (finite) file source to
     completion via a memory sink and return the materialized result.
@@ -313,32 +267,6 @@ def run_user_totals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("s.total_value") * 100 + F.lit(0.5)).alias("total_value_x100"),
         F.expr("timestamp_micros(s.last_us)").alias("last_ts"),
     )
-
-
-def incremental_ingest(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Incremental file ingestion with ``trigger(availableNow=True)``:
-    process every source file not yet recorded in the checkpoint, write
-    it to a parquet sink transactionally, then STOP — the
-    run-as-a-scheduled-job streaming mode. Re-running after new files
-    land processes ONLY the new files (checkpointed file log), and the
-    file-sink commit log makes the output exactly-once: a re-run
-    without new input writes nothing. This is the 100 TB landing-zone
-    pattern — continuous semantics, batch-shaped resource usage."""
-    schema = spark.read.parquet(src_dir).schema
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", dest_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def bitmap_daily_distinct_stream(events: DataFrame) -> DataFrame:
