@@ -178,20 +178,6 @@ def _jvm_counters(spark) -> tuple[int, int]:
     )
 
 
-def _jvm_archive(spark) -> str:
-    """Whether the driver JVM mapped a class-data-sharing archive,
-    recorded one, or ran without one, from its own argument list (see
-    ``session.get_spark``). A recording run starts slower and spends
-    more JIT time than a mapped one."""
-    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-    for arg in mf.getRuntimeMXBean().getInputArguments():
-        if arg.startswith("-XX:SharedArchiveFile="):
-            return "mapped"
-        if arg.startswith("-XX:ArchiveClassesAtExit="):
-            return "recorded"
-    return "none"
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # optional subset (comma-separated query names) for targeted
@@ -247,9 +233,9 @@ def main() -> None:
         destroy_routing_broadcast,
     )
     from udacity_data_engineering_capstone_project_spark.plans.registry import query_fns
-    from udacity_data_engineering_capstone_project_spark.session import get_spark
+    from udacity_data_engineering_capstone_project_spark import session
 
-    spark = get_spark("bench")
+    spark = session.get_spark("bench")
     fns = query_fns()
     jvm_start = _jvm_counters(spark)
 
@@ -437,7 +423,9 @@ def main() -> None:
                 "cpu_canary_end_s": round(canary_end, 3),
                 "cpu_canary_quiet_ref": CANARY_QUIET_REF,
                 "canary_warning": canary_warning,
-                "jvm_archive": _jvm_archive(spark),
+                # mapped, recorded (dumped at exit) or none: a mapped run
+                # starts faster and loads and compiles less than the others
+                "jvm_archive": session.DRIVER_ARCHIVE,
                 "jvm_classes_loaded": [jvm_start[0], jvm_end[0]],
                 "jvm_jit_ms": [jvm_start[1], jvm_end[1]],
             },

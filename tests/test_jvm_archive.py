@@ -1,9 +1,9 @@
 """The driver JVM's class-data-sharing archive (``session.get_spark``):
-the first session records it and promotes it whole, later sessions map
-it, and a process that gets no archive launches as it would without
-one. Each JVM runs in a child process with its own ``XDG_CACHE_HOME``."""
+the first session lists its classes and the dump at its exit is
+promoted whole, later sessions map it, and a process that gets no
+archive launches as it would without one. Each JVM runs in a child
+process with its own ``XDG_CACHE_HOME``."""
 
-import glob
 import json
 import os
 import signal
@@ -22,15 +22,16 @@ ROOT = Path(__file__).resolve().parent.parent
 #: last stdout line, what the JVM reports about itself.
 SESSION = """
 import json, os, sys
-from udacity_data_engineering_capstone_project_spark.session import get_spark
-spark = get_spark("cds", cpus=2, shuffle_partitions=2, driver_memory=sys.argv[1],
-                  extra_conf=json.loads(sys.argv[2]))
+from udacity_data_engineering_capstone_project_spark import session
+spark = session.get_spark("cds", cpus=2, shuffle_partitions=2, driver_memory=sys.argv[1],
+                          extra_conf=json.loads(sys.argv[2]))
 spark.range(3).count()
 jvm = spark.sparkContext._jvm
 print(json.dumps({
     "args": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
     "probe": spark.conf.get("spark.graft.probe", None),
     "conf_dir": os.environ.get("SPARK_CONF_DIR"),
+    "archive": session.DRIVER_ARCHIVE,
 }), flush=True)
 """
 
@@ -41,82 +42,108 @@ def _env(cache, **extra):
     return env
 
 
-def _session(cache, memory="4g", conf=None, **env):
-    out = subprocess.run(
+def _start(cache, memory="4g", conf=None, **env):
+    return subprocess.Popen(
         [sys.executable, "-c", SESSION, memory, json.dumps(conf or {})],
         env=_env(cache, **env),
-        capture_output=True,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
         text=True,
-        timeout=120,
     )
-    assert out.returncode == 0, out.stderr[-2000:]
-    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def _report(child):
+    out, err = child.communicate(timeout=240)
+    assert child.returncode == 0, err[-2000:]
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def _session(cache, memory="4g", conf=None, **env):
+    return _report(_start(cache, memory, conf, **env))
 
 
 def _archives(cache):
-    return sorted(Path(p).name for p in glob.glob(f"{cache}/spark-graft/jvm/*.*"))
+    return sorted(p.name for p in (cache / "spark-graft" / "jvm").glob("*.*"))
 
 
-def _top_classes(log):
-    """Classes the JVM reports it loaded from the dynamic archive."""
-    return sum("source: shared objects file (top)" in ln for ln in open(log))
-
-
-def test_first_session_records_and_the_second_maps(tmp_path):
-    cache = tmp_path / "cache"
-    first = _session(cache)
-    assert any(a.startswith("-XX:ArchiveClassesAtExit=") for a in first["args"])
-    assert first["conf_dir"] is None  # the launch alone saw the empty conf dir
-    (jsa,) = _archives(cache)  # promoted, no .part left
-    assert jsa.endswith(".jsa")
-
-    log = tmp_path / "class-load.log"
-    second = _session(
-        cache, conf={"spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={log}"}
+def _shared_spark_classes(log):
+    """Spark classes the JVM reports it took from a shared archive: the
+    JDK's own archive holds none."""
+    return sum(
+        "org.apache.spark." in ln and "source: shared objects file" in ln for ln in open(log)
     )
-    assert f"-XX:SharedArchiveFile={cache}/spark-graft/jvm/{jsa}" in second["args"]
-    assert _top_classes(log) > 1000
-    assert _archives(cache) == [jsa]
 
 
-KILLED_DUMP = """
-import atexit, sys
-from pyspark import SparkContext
-from udacity_data_engineering_capstone_project_spark.session import get_spark
-# registered first, so it runs after the archive promotion's own handler
-atexit.register(lambda: print("exit", SparkContext._gateway.proc.returncode, flush=True))
-get_spark("cds", cpus=2, shuffle_partitions=2, driver_memory="4g").range(3).count()
-print("jvm", SparkContext._gateway.proc.pid, flush=True)
-"""
+def _kill_dump(cache):
+    """SIGKILL the ``java -Xshare:dump`` writing into ``cache`` as soon
+    as it runs."""
+    deadline = time.monotonic() + 120
+    while time.monotonic() < deadline:
+        for pid in filter(str.isdigit, os.listdir("/proc")):
+            try:
+                cmd = Path(f"/proc/{pid}/cmdline").read_bytes().split(b"\0")
+            except OSError:
+                continue
+            if b"-Xshare:dump" in cmd and any(str(cache).encode() in c for c in cmd):
+                os.kill(int(pid), signal.SIGKILL)
+                return
+        time.sleep(0.01)
+    raise AssertionError("no dump started")
+
+
+def test_first_session_records_and_the_second_maps_per_oops_mode(tmp_path):
+    home = _find_spark_home()
+    key = session._archive_key
+    assert key(home, {}, "4g") == key(home, {}, "2g") == key(home, {}, "31g")
+    assert key(home, {}, "4g") != key(home, {}, "48g") == key(home, {}, "32g")
+
+    small, large = tmp_path / "small", tmp_path / "large"
+    jvm = small / "spark-graft" / "jvm"
+    jvm.mkdir(parents=True)
+    (jvm / "0000000000000000.jsa").write_text("")  # unused for 60 days
+    (jvm / "1111111111111111.jsa").write_text("")  # another key, in use
+    old = time.time() - 60 * 24 * 3600
+    os.utime(jvm / "0000000000000000.jsa", (old, old))
+
+    # both compressed-oops modes record at once: each exit runs its dump
+    firsts = [_report(c) for c in (_start(small, "4g"), _start(large, "48g"))]
+    for first in firsts:
+        assert any(a.startswith("-XX:DumpLoadedClassList=") for a in first["args"])
+        assert first["archive"] == "recorded"
+        assert first["conf_dir"] is None  # the launch alone saw the empty conf dir
+    (jsa,) = _archives(large)  # promoted; no .part or .classlist left
+    assert jsa.endswith(".jsa")
+    assert _archives(small) == ["1111111111111111.jsa", f"{key(home, {}, '4g')}.jsa"]
+
+    for cache, memory in ((small, "4g"), (large, "48g")):
+        opts = f"-Xlog:cds=info:file={cache}.cds -Xlog:class+load=info:file={cache}.cl"
+        got = _session(cache, memory, conf={"spark.driver.extraJavaOptions": opts})
+        final = f"{cache}/spark-graft/jvm/{key(home, {}, memory)}.jsa"
+        assert f"-XX:SharedArchiveFile={final}" in got["args"]
+        assert got["archive"] == "mapped"
+        assert "CDS will be disabled" not in Path(f"{cache}.cds").read_text()
+        assert _shared_spark_classes(f"{cache}.cl") > 1000
 
 
 def test_a_dump_killed_midway_is_never_mapped(tmp_path):
     cache = tmp_path / "cache"
-    child = subprocess.Popen(
-        [sys.executable, "-c", KILLED_DUMP],
-        env=_env(cache),
-        stdout=subprocess.PIPE,
-        stderr=subprocess.DEVNULL,
-        text=True,
-    )
-    pid = next(int(ln.split()[1]) for ln in child.stdout if ln.startswith("jvm "))
-    # the child now exits: its JVM dumps into <key>.<pid>.part; kill it there
-    deadline = time.monotonic() + 60
-    while not glob.glob(f"{cache}/spark-graft/jvm/*.part"):
-        assert time.monotonic() < deadline, "no dump started"
-        time.sleep(0.005)
-    os.kill(pid, signal.SIGKILL)
-    rest = child.stdout.read().splitlines()
-    assert [ln for ln in rest if ln.startswith("exit ")] == [f"exit {-signal.SIGKILL}"]
-    assert child.wait(timeout=60) == 0
-    (part,) = _archives(cache)
-    assert part.endswith(f".{child.pid}.part")  # nothing under the final name
+    child = _start(cache)
+    _kill_dump(cache)
+    assert _report(child)["archive"] == "recorded"
+    assert _archives(cache) == []  # nothing under the final name, nothing left over
 
-    # the next session launches (recording afresh) and removes the
-    # stray .part of the dead process
-    after = _session(cache)
-    assert any(a.startswith("-XX:ArchiveClassesAtExit=") for a in after["args"])
-    assert part not in _archives(cache)
+    # what a process killed during its dump leaves behind: its .part and
+    # class list. The next session starts (recording afresh) and deletes them.
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    jvm = cache / "spark-graft" / "jvm"
+    for suffix in ("part", "classlist"):
+        (jvm / f"feedfacefeedface.{gone.pid}.{suffix}").write_bytes(b"\0" * 4096)
+    child = _start(cache)
+    _kill_dump(cache)
+    after = _report(child)
+    assert any(a.startswith("-XX:DumpLoadedClassList=") for a in after["args"])
+    assert _archives(cache) == []
 
 
 def test_a_real_spark_conf_dir_gets_no_archive(tmp_path):
@@ -128,22 +155,6 @@ def test_a_real_spark_conf_dir_gets_no_archive(tmp_path):
     assert not any(a.startswith(session._CDS_OPTIONS + ("-Xlog:cds",)) for a in got["args"])
     assert got["conf_dir"] == str(conf_dir)
     assert not cache.exists()
-
-
-def test_heaps_either_side_of_32g_get_their_own_archive(tmp_path):
-    home = _find_spark_home()
-    key = session._archive_key
-    assert key(home, {}, "4g") == key(home, {}, "2g") == key(home, {}, "31g")
-    assert key(home, {}, "4g") != key(home, {}, "48g") == key(home, {}, "32g")
-
-    cache, log = tmp_path / "cache", tmp_path / "cds.log"
-    _session(cache, memory="48g")
-    (jsa,) = _archives(cache)
-    opts = f"-Xlog:cds=info:file={log} -Xlog:class+load=info:file={tmp_path}/cl.log"
-    got = _session(cache, memory="48g", conf={"spark.driver.extraJavaOptions": opts})
-    assert f"-XX:SharedArchiveFile={cache}/spark-graft/jvm/{jsa}" in got["args"]
-    assert "CDS will be disabled" not in log.read_text()
-    assert _top_classes(tmp_path / "cl.log") > 1000
 
 
 NO_ARCHIVE = """

@@ -4,7 +4,7 @@ function or class is reached from package code, ``tools/``,
 file swaps (``os.fsync``, ``os.replace``, ``os.rename``) live in one
 place, ``sources/index_store.py``, apart from the one rename that
 publishes the driver JVM's recorded class-data-sharing archive
-(``session._promote_archive``). Both are source scans; no Spark."""
+(``session._record_archive``). Both are source scans; no Spark."""
 
 import ast
 from pathlib import Path
@@ -31,7 +31,7 @@ SWAP_MODULE = PACKAGE / "sources" / "index_store.py"
 #: The one swap outside it: a JVM's archive is renamed into place whole
 #: after the JVM that wrote it exited cleanly (a torn one crashes the
 #: next JVM). It is not index data and shares nothing with the store.
-ARCHIVE_PROMOTION = (PACKAGE.relative_to(ROOT) / "session.py", "_promote_archive")
+ARCHIVE_PROMOTION = (PACKAGE.relative_to(ROOT) / "session.py", "_record_archive")
 
 
 def _code_files():

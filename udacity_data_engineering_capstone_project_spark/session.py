@@ -7,22 +7,29 @@ UTC-naive timestamps), Arrow enabled for the pandas interchange path,
 and shuffle partitions sized to the local core count rather than the
 200 default.
 
-A driver JVM that :func:`get_spark` launches starts from a dynamic
+A driver JVM that :func:`get_spark` launches starts from a static
 class-data-sharing (CDS) archive, the JVM's pre-parsed classes mapped
 from a file, which cuts a cold session start from about 3.0 to 1.6 s
-at 4 cores. The first session without a matching archive records one
-(``-XX:ArchiveClassesAtExit``: 140-200 MB, a start about 1 s slower and
-about 4 s more at JVM exit), and later sessions map it
-(``-XX:SharedArchiveFile``).
+at 4 cores. The first session without a matching archive runs as it
+would without one, except that its JVM lists the classes it loads
+(``-XX:DumpLoadedClassList``, about 0.07 s of a 3 s start). At
+interpreter exit, after that JVM is gone, a separate ``java
+-Xshare:dump`` turns the list into the archive (about 160 MB; 19 s and
+0.9 GB at 4 cores, once per key), and later sessions map it
+(``-XX:SharedArchiveFile``). Recording with
+``-XX:ArchiveClassesAtExit`` instead slowed the recording session
+itself: ``star_etl`` ``setup_s`` 3.2 -> 4.4 s.
 
 - **Where.** ``$XDG_CACHE_HOME/spark-graft/jvm/``, or
   ``~/.cache/spark-graft/jvm/`` when the variable is unset; never
   inside the checkout. Clear it with ``rm -r ~/.cache/spark-graft/jvm``.
+  Mapping an archive touches it; promoting a new one deletes archives of
+  other keys untouched for ``_STALE_S``.
 - **Key.** A hash of the ``java`` binary's realpath and its ``release``
   file, the ``$SPARK_HOME/jars`` listing (name, size, mtime),
   ``spark.jars``, ``spark.driver.extraClassPath``, ``PYSPARK_SUBMIT_ARGS``
   and whether the heap is under 32 GiB: the JVM rejects an archive
-  recorded under the other compressed-oops mode (tests run 4g heaps,
+  dumped under the other compressed-oops mode (tests run 4g heaps,
   perfbench 2g, ``bench.py`` 48g).
 - **Off** when no JVM is launched (an existing gateway), when the caller
   passes its own CDS option, when Spark's conf dir holds real config
@@ -34,10 +41,11 @@ about 4 s more at JVM exit), and later sessions map it
   missing), and the launch alone sees ``SPARK_CONF_DIR`` pointed at an
   empty dir in the cache.
 - **Promotion.** A truncated archive crashes the JVM that maps it
-  (SIGBUS), so a recording JVM writes ``<key>.<pid>.part`` and only
-  the process that launched it renames that to ``<key>.jsa``, at exit,
-  after the JVM exited with status 0. Sessions map only the renamed
-  file; a later start deletes ``.part`` files whose process is gone.
+  (SIGBUS), so the dump writes ``<key>.<pid>.part`` and the process that
+  ran it renames that to ``<key>.jsa`` only after both its driver JVM
+  and the dump exited with status 0. Sessions map only the renamed
+  file; a later start deletes ``.part`` and ``.classlist`` files whose
+  process is gone.
 """
 
 from __future__ import annotations
@@ -49,7 +57,8 @@ import json
 import os
 import shutil
 import subprocess
-from contextlib import contextmanager
+import time
+from contextlib import contextmanager, suppress
 from contextvars import ContextVar
 
 from py4j.protocol import Py4JError
@@ -150,14 +159,25 @@ def get_spark(
     return spark
 
 
-#: Longest wait, in s, at interpreter exit for a recording driver JVM
-#: to finish its archive dump (about 4 s for 150 MB at 4 cores).
-_DUMP_WAIT_S = 60
+#: Longest wait, in s, at interpreter exit for the driver JVM to exit.
+_EXIT_WAIT_S = 60
+#: Longest run, in s, of the archive dump (19 s for 13k classes at 4
+#: cores: ``-Xshare:dump`` runs without the JIT).
+_DUMP_WAIT_S = 180
+#: Promoting an archive deletes those of other keys untouched this long.
+_STALE_S = 30 * 24 * 3600
 #: A caller passing any of these manages class-data sharing itself.
-_CDS_OPTIONS = ("-XX:SharedArchiveFile", "-XX:ArchiveClassesAtExit", "-Xshare")
+_CDS_OPTIONS = (
+    "-XX:SharedArchiveFile", "-XX:ArchiveClassesAtExit", "-XX:DumpLoadedClassList", "-Xshare"
+)
 #: Spark's launcher puts these on the driver classpath: a conf dir there
 #: fails the dump, and the key does not cover what they list.
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+
+#: What the driver JVM this process launched does with an archive:
+#: "mapped", "recorded" (it lists its classes for a dump at exit), or
+#: "none" (no archive, or no JVM launched here).
+DRIVER_ARCHIVE = "none"
 
 
 def _heap_bytes(size: str) -> int:
@@ -206,31 +226,55 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-def _promote_archive(proc, part: str, final: str) -> None:
-    """At interpreter exit: end the recording JVM (it exits when its
-    stdin closes) and publish its archive only if it exited with 0. A
-    JVM killed mid-dump leaves a truncated ``.part``, which nothing maps.
-    A context still running is stopped first, as the JVM's shutdown hook
-    would stop it, so that its accumulator server does not see the JVM
-    vanish while this process waits."""
+def _record_archive(
+    proc, classlist: str, final: str, java: str, classpath: str, coops: bool
+) -> None:
+    """At interpreter exit: end the driver JVM (it exits when its stdin
+    closes), dump the classes it listed into ``<key>.<pid>.part`` with a
+    separate ``java -Xshare:dump``, and publish that as ``final`` only if
+    both exited with 0. A dump killed midway is never renamed, and its
+    truncated ``.part`` is deleted. No dump runs when another process
+    published ``final`` meanwhile. A context still running is stopped
+    first, as the JVM's shutdown hook would stop it, so that its
+    accumulator server does not see the JVM vanish while this process
+    waits."""
     from pyspark import SparkContext
 
     if SparkContext._active_spark_context is not None:
         SparkContext._active_spark_context.stop()
     if proc.stdin is not None:
         proc.stdin.close()
+    part = f"{final[:-4]}.{os.getpid()}.part"
+    # the dump's own heap only has to keep the archive's compressed-oops mode
+    heap = ["-Xmx1g", "-XX:+UseCompressedOops"] if coops else ["-XX:-UseCompressedOops"]
     try:
-        code = proc.wait(timeout=_DUMP_WAIT_S)
-    except subprocess.TimeoutExpired:
-        return  # still dumping: a later start deletes the .part
-    if code == 0 and os.path.exists(part):
+        if proc.wait(timeout=_EXIT_WAIT_S) != 0 or os.path.exists(final):
+            return
+        dump = subprocess.run(
+            [java, "-Xshare:dump", f"-XX:SharedClassListFile={classlist}",
+             f"-XX:SharedArchiveFile={part}", *heap, "-XX:-UsePerfData", "-Xlog:all=off",
+             "-cp", classpath],
+            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, timeout=_DUMP_WAIT_S,
+        )
+        if dump.returncode != 0:
+            return
         os.replace(part, final)
+        for other in glob.glob(os.path.join(os.path.dirname(final), "*.jsa")):
+            if other != final and os.path.getmtime(other) < time.time() - _STALE_S:
+                os.remove(other)
+    except (OSError, subprocess.TimeoutExpired):
+        pass  # no archive this time; the next session records again
+    finally:
+        for f in (part, classlist):
+            if os.path.exists(f):
+                os.remove(f)
 
 
 def _archive_plan(conf: dict, driver_memory: str):
-    """``(option, part, final)`` for the driver JVM about to be launched:
-    map ``final`` (``part`` None), or record into ``part`` for promotion
-    to ``final``. None when it gets no archive (see the module docstring)."""
+    """``(option, classlist, final)`` for the driver JVM about to be
+    launched: map ``final`` (``classlist`` None), or list its classes
+    into ``classlist`` for a dump to ``final`` at exit. None when it gets
+    no archive (see the module docstring)."""
     from pyspark import SparkContext
     from pyspark.find_spark_home import _find_spark_home
 
@@ -258,17 +302,20 @@ def _archive_plan(conf: dict, driver_memory: str):
         if os.listdir(empty_conf) or not os.access(root, os.W_OK):
             return None
         key = _archive_key(spark_home, conf, driver_memory)
-        for stray in glob.glob(os.path.join(root, "*.*.part")):
-            pid = stray.rsplit(".", 2)[1]
+        # <key>.<pid>.part and <key>.<pid>.classlist of a process now gone
+        for stray in glob.glob(os.path.join(root, "*.*.*")):
+            pid = os.path.basename(stray).split(".")[1]
             if pid.isdigit() and not _pid_alive(int(pid)):
                 os.remove(stray)
+        final = os.path.join(root, key + ".jsa")
+        if os.path.exists(final):
+            with suppress(OSError):  # another user's archive maps all the same
+                os.utime(final)  # in use: not stale
+            return f"-XX:SharedArchiveFile={final}", None, final
     except (OSError, ValueError):
         return None  # an unusable cache or memory string
-    final = os.path.join(root, key + ".jsa")
-    if os.path.exists(final):
-        return f"-XX:SharedArchiveFile={final}", None, final
-    part = os.path.join(root, f"{key}.{os.getpid()}.part")
-    return f"-XX:ArchiveClassesAtExit={part}", part, final
+    classlist = os.path.join(root, f"{key}.{os.getpid()}.classlist")
+    return f"-XX:DumpLoadedClassList={classlist}", classlist, final
 
 
 @contextmanager
@@ -277,13 +324,14 @@ def _class_data_sharing(conf: dict, driver_memory: str):
     the CDS options in front) for a driver JVM launched inside the
     block, with ``SPARK_CONF_DIR`` pointed at the cache's empty conf
     dir; or None, changing nothing, when it gets no archive."""
+    global DRIVER_ARCHIVE
     from pyspark import SparkContext
 
     plan = _archive_plan(conf, driver_memory)
     if plan is None:
         yield None
         return
-    option, part, final = plan
+    option, classlist, final = plan
     saved = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = os.path.join(os.path.dirname(final), "conf")
     try:
@@ -295,8 +343,18 @@ def _class_data_sharing(conf: dict, driver_memory: str):
         else:
             os.environ["SPARK_CONF_DIR"] = saved
     proc = getattr(SparkContext._gateway, "proc", None)
-    if part is not None and proc is not None:
-        atexit.register(_promote_archive, proc, part, final)
+    if proc is None:
+        return
+    if classlist is None:
+        DRIVER_ARCHIVE = "mapped"
+        return
+    DRIVER_ARCHIVE = "recorded"
+    # the dump runs the JVM the driver ran, on the classpath it ran with
+    system = SparkContext._jvm.java.lang.System
+    java = os.path.join(system.getProperty("java.home"), "bin", "java")
+    classpath = system.getProperty("java.class.path")
+    coops = _heap_bytes(driver_memory) < 32 << 30
+    atexit.register(_record_archive, proc, classlist, final, java, classpath, coops)
 
 
 def prep_session(spark: SparkSession) -> SparkSession:
